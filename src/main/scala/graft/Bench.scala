@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every registry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -20,29 +18,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.acid.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the UI is off, so the SQLAdaptiveExecutionUpdate events AQE
-      // posts per plan update have no consumer — but their 'formatted'
-      // explain string (spark.sql.ui.explainMode default) is still
-      // built EAGERLY on the driver at every stage materialization,
-      // measured ~20% of wall on multi-commit MV lifecycles (driver
-      // thread dumps: AdaptiveSparkPlanExec.onUpdatePlan ->
-      // QueryExecution.explainString). 'simple' keeps the event (and
-      // any attached listener working) at a fraction of the cost.
-      .config("spark.sql.ui.explainMode", "simple")
-      // no-fork local FS (see Engine.localFsImpl: chmod/ls forks
-      // removed; env-overridable)
-      .config("spark.hadoop.fs.file.impl", graft.Engine.localFsImpl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        graft.Engine.localAbsFsImpl)
-      .getOrCreate()
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/codegen warmup on the smallest query so per-query numbers

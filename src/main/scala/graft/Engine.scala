@@ -51,7 +51,7 @@ object Engine {
     s
   }
 
-  /** file:// implementations for the session builders: without the
+  /** file:// implementations for the session factory: without the
     * libhadoop native library (absent here, and in most containers)
     * Hadoop's local FS FORKS a `chmod` per create/mkdirs (measured
     * 9 ms / 4 ms per call) and an `ls` per first permission read —
@@ -80,10 +80,10 @@ object Engine {
     * oracle agrees. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // nanosAsLong is set at session build time (Engine.session, Bench,
-    // Verify) — every session reaching here already carries it, and a
-    // per-read session-global conf mutation would be a surprising side
-    // effect of a read API
+    // nanosAsLong is set at session build time (Engine.session, the
+    // one session factory) — every session reaching here already
+    // carries it, and a per-read session-global conf mutation would be
+    // a surprising side effect of a read API
     if (name == "events") normalizeEventTs(spark.read.parquet(path))
     else spark.read.parquet(path)
   }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement aid: dumps `explain("formatted")` for
   * every (selected) registry query to <outDir>/<name>_<suffix>.txt so
   * plan-shape claims (Exchange count, join strategy, PushedFilters)
@@ -14,29 +12,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.acid.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the UI is off, so the SQLAdaptiveExecutionUpdate events AQE
-      // posts per plan update have no consumer — but their 'formatted'
-      // explain string (spark.sql.ui.explainMode default) is still
-      // built EAGERLY on the driver at every stage materialization,
-      // measured ~20% of wall on multi-commit MV lifecycles (driver
-      // thread dumps: AdaptiveSparkPlanExec.onUpdatePlan ->
-      // QueryExecution.explainString). 'simple' keeps the event (and
-      // any attached listener working) at a fraction of the cost.
-      .config("spark.sql.ui.explainMode", "simple")
-      // no-fork local FS (see Engine.localFsImpl: chmod/ls forks
-      // removed; env-overridable)
-      .config("spark.hadoop.fs.file.impl", graft.Engine.localFsImpl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        graft.Engine.localAbsFsImpl)
-      .getOrCreate()
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     SparkEntry.selectedRegistry.foreach { case (name, q) =>

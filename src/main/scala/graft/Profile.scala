@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement aid: runs ONE registry key and prints
   * every Spark job it launched (job id, duration, first stage name /
@@ -17,29 +16,7 @@ object Profile {
     val sfDir = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.acid.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the UI is off, so the SQLAdaptiveExecutionUpdate events AQE
-      // posts per plan update have no consumer — but their 'formatted'
-      // explain string (spark.sql.ui.explainMode default) is still
-      // built EAGERLY on the driver at every stage materialization,
-      // measured ~20% of wall on multi-commit MV lifecycles (driver
-      // thread dumps: AdaptiveSparkPlanExec.onUpdatePlan ->
-      // QueryExecution.explainString). 'simple' keeps the event (and
-      // any attached listener working) at a fraction of the cost.
-      .config("spark.sql.ui.explainMode", "simple")
-      // no-fork local FS (see Engine.localFsImpl: chmod/ls forks
-      // removed; env-overridable)
-      .config("spark.hadoop.fs.file.impl", graft.Engine.localFsImpl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        graft.Engine.localAbsFsImpl)
-      .getOrCreate()
+    val spark = Engine.session(cpus)
     // measurement aid: A/B a conf change without editing the session
     // builders — SPARK_GRAFT_CONF="k=v;k=v" applied on top
     sys.env.get("SPARK_GRAFT_CONF").foreach(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,29 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.acid.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the UI is off, so the SQLAdaptiveExecutionUpdate events AQE
-      // posts per plan update have no consumer — but their 'formatted'
-      // explain string (spark.sql.ui.explainMode default) is still
-      // built EAGERLY on the driver at every stage materialization,
-      // measured ~20% of wall on multi-commit MV lifecycles (driver
-      // thread dumps: AdaptiveSparkPlanExec.onUpdatePlan ->
-      // QueryExecution.explainString). 'simple' keeps the event (and
-      // any attached listener working) at a fraction of the cost.
-      .config("spark.sql.ui.explainMode", "simple")
-      // no-fork local FS (see Engine.localFsImpl: chmod/ls forks
-      // removed; env-overridable)
-      .config("spark.hadoop.fs.file.impl", graft.Engine.localFsImpl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        graft.Engine.localAbsFsImpl)
-      .getOrCreate()
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // a narrowed run leaves a marker file so its partial artifacts can
@@ -40,11 +17,23 @@ object Verify {
         s"to ${SparkEntry.selectedRegistry.size} of ${SparkEntry.registry.size} queries")
       Files.writeString(Paths.get(s"$outDir/_filtered.txt"), f)
     }
+    // the dump files keep INT96 timestamps, which DuckDB reads as naive
+    // TIMESTAMP like the oracle's; the session's TIMESTAMP_MICROS
+    // (UTC-adjusted) would read back as TIMESTAMPTZ and render with an
+    // offset. Only the dump write switches (on the result's own
+    // session — streaming keys hand back a cloned one): every engine
+    // write inside a query keeps the session's writer config.
+    val tsKey = "spark.sql.parquet.outputTimestampType"
     SparkEntry.selectedRegistry.foreach { case (name, q) =>
       val fn = q.impl
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        val conf = df.sparkSession.conf
+        val engineTs = conf.get(tsKey)
+        conf.set(tsKey, "INT96")
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally conf.set(tsKey, engineTs)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -1223,10 +1223,10 @@ private[acid] final class GraftAggScan(root: String, version: Long,
 
 /** One bin-packed input split: files (or file ranges) sharing one
   * partition-column layout, plus the pre-decoded partition row and a
-  * per-file sorted deletion-vector mask (empty = no masked rows). */
+  * per-file row-ordinal deletion mask (empty = no masked rows). */
 private[acid] final case class GraftInputPartition(
     files: Seq[PartitionedFile], layout: Seq[String],
-    masks: Seq[VersionedTable.DvMask] = Nil) extends InputPartition
+    masks: Seq[GraftBitmap] = Nil) extends InputPartition
 
 /** Single-column top-n pushed into planning: prune files wholly past
   * the cutoff value that already covers `n` rows in sort order. */
@@ -1342,7 +1342,7 @@ private[acid] final class GraftScan(root: String, version: Long,
   /** Resolved deletion-vector masks for the surviving files (empty on
     * a table with no outstanding MoR deletes — the common case, which
     * keeps the columnar fast path). */
-  @transient private lazy val dvMasks: Map[String, VersionedTable.DvMask] =
+  @transient private lazy val dvMasks: Map[String, GraftBitmap] =
     inst.resolveDvs(state.dvs, prunedFiles)
       .filter(_._2.nonEmpty)
 
@@ -1627,7 +1627,7 @@ private[acid] final class GraftScan(root: String, version: Long,
           GraftTableSource.partValueInternal(pairs(phys(f.name)), f.dataType))
           .toArray[Any])
         val st = statuses(rel)
-        val mask = dvMasks.getOrElse(rel, VersionedTable.DvMask.empty)
+        val mask = dvMasks.getOrElse(rel, GraftBitmap.empty)
         (0L until st.getLen by math.max(1L, maxSplit)).map { off =>
           (PartitionedFile(partRow, SparkPath.fromPath(st.getPath), off,
             math.min(maxSplit, st.getLen - off), Array.empty,
@@ -1637,7 +1637,7 @@ private[acid] final class GraftScan(root: String, version: Long,
       // first-fit bin-pack (descending) up to maxSplit per partition —
       // the same shape FileSourceScan's FilePartition packing produces
       val bins = scala.collection.mutable.ArrayBuffer
-        .empty[(scala.collection.mutable.ArrayBuffer[(PartitionedFile, VersionedTable.DvMask)], Long)]
+        .empty[(scala.collection.mutable.ArrayBuffer[(PartitionedFile, GraftBitmap)], Long)]
       chunks.sortBy(-_._1.length).foreach { pf =>
         bins.indexWhere(_._2 + pf._1.length <= maxSplit) match {
           case -1 => bins += ((scala.collection.mutable.ArrayBuffer(pf), pf._1.length))
@@ -1651,13 +1651,11 @@ private[acid] final class GraftScan(root: String, version: Long,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val fmt = new ParquetFileFormat
+    // masks filter by the parquet-generated row index (requested via
+    // the reader's temporary metadata column — filled by both the
+    // vectorized and row-based readers, file-absolute even across
+    // splits)
     val masked = dvMasks.nonEmpty
-    // legacy id sidecars filter by obj_id; positional sidecars by the
-    // parquet-generated row index (requested via the reader's
-    // temporary metadata column — filled by both the vectorized and
-    // row-based readers, file-absolute even across splits)
-    val idMasked = dvMasks.values.exists(_.ids.nonEmpty)
-    val posMasked = dvMasks.values.exists(_.pos.nonEmpty)
     val layouts = prunedFiles.map(r =>
       GraftTableSource.partPairs(r).map(_._1)).distinct.map { layout =>
       // the reader plans in PHYSICAL namespace end-to-end (file columns
@@ -1669,14 +1667,7 @@ private[acid] final class GraftScan(root: String, version: Long,
         required.filter(f => layout.contains(phys(f.name))).map(physF))
       var fileSchema = StructType(
         required.filterNot(f => layout.contains(phys(f.name))).map(physF))
-      // merge-on-read masks filter by obj_id: inject it into the file
-      // read when column pruning dropped it (projected away again by
-      // the required-order projection below). Rare state by design —
-      // compaction materializes masks and restores the clean path
-      if (idMasked && !fileSchema.fieldNames.contains("obj_id") &&
-          !layout.contains("obj_id"))
-        fileSchema = StructType(fileSchema :+ tableSchema("obj_id"))
-      if (posMasked)
+      if (masked)
         fileSchema = StructType(fileSchema :+ StructField(
           ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
       val physical = StructType(fileSchema ++ partFields)
@@ -1707,11 +1698,9 @@ private[acid] final class GraftScan(root: String, version: Long,
         Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
         spark.sessionState.newHadoopConf())
       val order = required.map(f => physical.fieldIndex(phys(f.name))).toArray
-      val idIdx = if (idMasked) physical.fieldIndex("obj_id") else -1
-      val riIdx = if (posMasked) physical.fieldIndex(
+      val riIdx = if (masked) physical.fieldIndex(
         ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME) else -1
-      layout -> GraftLayoutReader(reader, physical, order, columnar,
-        idIdx, riIdx)
+      layout -> GraftLayoutReader(reader, physical, order, columnar, riIdx)
     }.toMap
     new GraftReaderFactory(layouts)
   }
@@ -1720,7 +1709,7 @@ private[acid] final class GraftScan(root: String, version: Long,
 private[acid] final case class GraftLayoutReader(
     reader: PartitionedFile => Iterator[InternalRow],
     physical: StructType, order: Array[Int], columnar: Boolean,
-    idIdx: Int = -1, riIdx: Int = -1)
+    riIdx: Int = -1)
 
 private[acid] final class GraftReaderFactory(
     layouts: Map[Seq[String], GraftLayoutReader])
@@ -1744,23 +1733,18 @@ private[acid] final class GraftReaderFactory(
     // fires ahead of the match
     val masks =
       if (gp.masks.nonEmpty) gp.masks
-      else gp.files.map(_ => VersionedTable.DvMask.empty)
+      else gp.files.map(_ => GraftBitmap.empty)
     val rows: Iterator[InternalRow] =
       gp.files.iterator.zip(masks.iterator).flatMap { case (f, mask) =>
         val fileRows = lr.reader(f).asInstanceOf[Iterator[Any]].flatMap {
           case b: ColumnarBatch => b.rowIterator().asScala
           case row: InternalRow => Iterator.single(row)
         }
-        // merge-on-read mask: drop this file's deleted rows — legacy
-        // sidecars by obj_id (sorted array + binary search, point-
-        // delete sized), positional sidecars by row ordinal (bitmap
-        // word test — O(bitmap) shipped per task, never O(ids))
+        // merge-on-read mask: drop this file's deleted rows by row
+        // ordinal (bitmap word test — O(bitmap) shipped per task,
+        // never O(ids))
         if (mask.isEmpty) fileRows
-        else fileRows.filter { r =>
-          (lr.idIdx < 0 || mask.ids.isEmpty ||
-            java.util.Arrays.binarySearch(mask.ids, r.getLong(lr.idIdx)) < 0) &&
-          (lr.riIdx < 0 || !mask.pos.contains(r.getLong(lr.riIdx)))
-        }
+        else fileRows.filter(r => !mask.contains(r.getLong(lr.riIdx)))
       }.map(proj)
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _

@@ -127,7 +127,7 @@ private[acid] object ChangeFeedSource {
     // RPC on an object store, and a bursty commit range adds files ×
     // versions of them (the serial walk was the planner bottleneck)
     val specs = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, String, Option[VersionedTable.DvMask])]
+      .empty[(String, Long, String, Option[GraftBitmap])]
     // dv state rolls FORWARD beside the walk (seeded by one
     // O(checkpointInterval) replay at `lo`), so a range dense with MoR
     // commits costs O(range) manifest reads, not O(range × interval) —
@@ -186,14 +186,11 @@ private[acid] object ChangeFeedSource {
               val cur = inst.resolveDvs(Map(f -> list), Seq(f))(f)
               val pre = prior.get(f).filter(_.nonEmpty)
                 .map(l => inst.resolveDvs(Map(f -> l), Seq(f))(f))
-                .getOrElse(VersionedTable.DvMask.empty)
-              val newIds = cur.ids.filter(id =>
-                java.util.Arrays.binarySearch(pre.ids, id) < 0)
-              val newPos = GraftBitmap(cur.pos.iterator
-                .filterNot(pre.pos.contains).toSeq)
-              if (newIds.nonEmpty || newPos.nonEmpty)
-                specs += ((f, v, "delete",
-                  Some(VersionedTable.DvMask(newIds, newPos))))
+                .getOrElse(GraftBitmap.empty)
+              val newPos = GraftBitmap(cur.iterator
+                .filterNot(pre.contains).toSeq)
+              if (newPos.nonEmpty)
+                specs += ((f, v, "delete", Some(newPos)))
             }
           }
         }
@@ -248,8 +245,8 @@ private[acid] object ChangeFeedSource {
     // reader plans physical and the order projection restores logical
     // positions (names never reach the output rows)
     def phys(n: String) = ren.getOrElse(n, n)
-    def needRi(p: CdfPartition) = p.keep.exists(_.pos.nonEmpty)
-    val layouts = planned.map(p => (p.layout, needRi(p), p.cdc)).distinct
+    val layouts = planned.map(p => (p.layout, p.keep.isDefined, p.cdc))
+      .distinct
       .map { case (layout, ri, isCdc) =>
         val partFields = (if (isCdc) Nil
           else layout.map(k =>
@@ -294,13 +291,10 @@ private[acid] object ChangeFeedSource {
         val order = schema.map(f =>
           if (MetaCols(f.name)) physical.fieldIndex(f.name)
           else physical.fieldIndex(phys(f.name))).toArray
-        val idIdx =
-          if (physical.fieldNames.contains("obj_id"))
-            physical.fieldIndex("obj_id") else -1
         val riIdx = if (ri) physical.fieldIndex(
           ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME) else -1
         (layout, ri, isCdc) ->
-          CdfLayoutReader(reader, physical, order, idIdx, riIdx)
+          CdfLayoutReader(reader, physical, order, riIdx)
       }.toMap
     new CdfReaderFactory(layouts)
   }
@@ -374,12 +368,12 @@ private[acid] final case class VersionOffset(v: Long) extends Offset {
   * cdc side files — they physicalize every column). */
 private[acid] final case class CdfPartition(
     file: PartitionedFile, layout: Seq[String],
-    keep: Option[VersionedTable.DvMask] = None,
+    keep: Option[GraftBitmap] = None,
     cdc: Boolean = false) extends InputPartition
 
 private[acid] final case class CdfLayoutReader(
     reader: PartitionedFile => Iterator[InternalRow],
-    physical: StructType, order: Array[Int], idIdx: Int, riIdx: Int)
+    physical: StructType, order: Array[Int], riIdx: Int)
 
 private[acid] final class ChangeFeedStream(schema: StructType, root: String,
     startingVersion: Long, ignoreChanges: Boolean,
@@ -471,8 +465,7 @@ private[acid] final class CdfReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val cp = p.asInstanceOf[CdfPartition]
-    val needRi = cp.keep.exists(_.pos.nonEmpty)
-    val lr = layouts((cp.layout, needRi, cp.cdc))
+    val lr = layouts((cp.layout, cp.keep.isDefined, cp.cdc))
     // the prepared reader may hand back vectorized ColumnarBatches
     // disguised as InternalRow (the FileScanRDD contract) — unwrap;
     // then reorder physical (file ++ partition) columns to the source
@@ -481,14 +474,9 @@ private[acid] final class CdfReaderFactory(
       BoundReference(i, lr.physical(i).dataType, nullable = true)
         .asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression]))
     val raw: Iterator[InternalRow] = readerRows(lr, cp.file)
-    // delete partitions KEEP only the newly-masked rows (legacy
-    // sidecars match by obj_id, positional by row ordinal)
+    // delete partitions KEEP only the newly-masked row ordinals
     val kept = cp.keep match {
-      case Some(mask) => raw.filter { r =>
-        (lr.idIdx >= 0 && mask.ids.nonEmpty &&
-          java.util.Arrays.binarySearch(mask.ids, r.getLong(lr.idIdx)) >= 0) ||
-        (lr.riIdx >= 0 && mask.pos.contains(r.getLong(lr.riIdx)))
-      }
+      case Some(mask) => raw.filter(r => mask.contains(r.getLong(lr.riIdx)))
       case None => raw
     }
     val rows = kept.map(proj)

@@ -1,9 +1,9 @@
 package graft.acid
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, Predicate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.ExpressionColumn
 import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Row-ordinal membership test against a positional deletion vector:
@@ -25,7 +25,7 @@ case class PositionMasked(left: Expression, right: Expression)
     if (left.dataType == BinaryType && right.dataType == LongType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_pos_masked expects (BINARY, BIGINT), " +
+      s"$prettyName expects (BINARY, BIGINT), " +
       s"got (${left.dataType}, ${right.dataType})")
   }
 
@@ -49,11 +49,7 @@ case class PositionMasked(left: Expression, right: Expression)
 
 object DvExpressions {
   /** Column predicate: is `ordinal` a member of `bitmap`? */
-  def posMasked(spark: SparkSession, bitmap: GraftBitmap, ordinal: Column)
-      : Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pos_masked", exprs => PositionMasked(exprs(0), exprs(1)),
-      "built-in")
-    call_function("graft_pos_masked", lit(bitmap.serialize()), ordinal)
-  }
+  def posMasked(bitmap: GraftBitmap, ordinal: Column): Column =
+    ExpressionColumn(PositionMasked(Literal(bitmap.serialize()),
+      ExpressionColumn.expression(ordinal)))
 }

@@ -178,6 +178,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     partCols.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c not in schema"))
+    VersionedTable.requireInFileObjId(partCols)
     // CREATE TABLE ... TBLPROPERTIES ('cluster_by' = 'c1,c2'): ingest
     // clustering from the first insert (see [[setClustering]])
     val clusterCols = Option(properties.get("cluster_by")).toSeq
@@ -396,8 +397,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       // would re-fold the snapshot into the populated view)
       if (MaterializedAggView.isViewRoot(fs, newPath)) {
         MaterializedAggView.migrateWatermarks(spark, oldPath, newPath)
-        val mv = MaterializedAggView.openFromDef(spark, newPath,
-          resolveSource = openInstance)
+        val mv = MaterializedAggView.openFromDef(spark, newPath)
         (mv.source +: mv.dimJoins.map(_.dim)).foreach(t =>
           MaterializedAggView.moveRegistration(t, oldPath, newPath))
       }
@@ -493,6 +493,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       .fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
     cols.foreach(c => require(schemaCols.contains(c),
       s"partition column $c not in table schema"))
+    VersionedTable.requireInFileObjId(cols)
     writeCatalogSpec(ident, cols,
       readClusterBy(ident).map(_.split(',').toSeq).getOrElse(Nil),
       readUniqueIds(ident),
@@ -750,8 +751,7 @@ private[acid] final class VacuumProcedure(cat: GraftCatalog)
     val degraded = inst.pooledMap(
         MaterializedAggView.registeredViews(inst)) { vr =>
       try {
-        val mv = MaterializedAggView.openFromDef(spark, vr,
-          resolveSource = cat.openInstance)
+        val mv = MaterializedAggView.openFromDef(spark, vr)
         // a table can feed the same view as fact AND dimension
         // (self-join star): any matching role below the horizon counts
         val wms = (if (new Path(mv.source.root).toString == canon)
@@ -897,8 +897,7 @@ private[acid] final class RefreshMvProcedure(cat: GraftCatalog)
       .comment("dotted name of a view created by create_mv").build())
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val mv = MaterializedAggView.openFromDef(SparkSession.active,
-      cat.pathFor(input.getUTF8String(0).toString).toString,
-      resolveSource = cat.openInstance)
+      cat.pathFor(input.getUTF8String(0).toString).toString)
     val v = mv.refresh()
     java.util.Collections.singletonList[Scan](
       new MetricScan("refreshed_to_version", v)).iterator()
@@ -951,8 +950,7 @@ private[acid] final class MvStatusProcedure(cat: GraftCatalog)
       .comment("dotted name of a view created by create_mv").build())
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val mv = MaterializedAggView.openFromDef(SparkSession.active,
-      cat.pathFor(input.getUTF8String(0).toString).toString,
-      resolveSource = cat.openInstance)
+      cat.pathFor(input.getUTF8String(0).toString).toString)
     def csv(xs: Seq[String]) = if (xs.isEmpty) null else xs.mkString(",")
     java.util.Collections.singletonList[Scan](new InfoScan(Seq(
       "group_by" -> csv(mv.groupCols),
@@ -1017,8 +1015,7 @@ private[acid] final class ListMvsProcedure(cat: GraftCatalog)
     val rows = inst.pooledMap(
         MaterializedAggView.registeredViews(inst)) { vr =>
       try {
-        val mv = MaterializedAggView.openFromDef(spark, vr,
-          resolveSource = cat.openInstance)
+        val mv = MaterializedAggView.openFromDef(spark, vr)
         // one row per ROLE: a self-join star feeds the same view as
         // fact and dimension, and each role carries its own watermark
         val roles: Seq[(String, Long, Long)] =
@@ -1232,7 +1229,7 @@ private[acid] final class DropMvProcedure(cat: GraftCatalog)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val name = input.getUTF8String(0).toString
     val dropped = MaterializedAggView.dropView(SparkSession.active,
-      cat.pathFor(name).toString, resolveSource = cat.openInstance)
+      cat.pathFor(name).toString)
     if (!dropped) throw new NoSuchElementException(s"no view $name")
     java.util.Collections.singletonList[Scan](
       new MetricScan("dropped", 1L)).iterator()

@@ -105,24 +105,20 @@ final class MaterializedAggView private (
     // OWNING RELATION, captured at create: refresh re-resolves them to
     // that relation's head logical names, so renaming a view column in
     // the fact OR a dimension neither breaks the refresh nor (worse)
-    // folds pre-rename rows into the NULL group. None = legacy
-    // definition; the stored logical names are assumed still current
-    // and their physicals derived from the head.
-    groupPhys0: Option[Seq[String]], sumPhys0: Option[Seq[String]],
-    minPhys0: Option[Seq[String]], maxPhys0: Option[Seq[String]],
+    // folds pre-rename rows into the NULL group
+    groupPhys: Seq[String], sumPhys: Seq[String],
+    minPhys: Seq[String], maxPhys: Seq[String],
     // owning relation per group/sum column (0 = fact, i >= 1 =
-    // dimJoins(i-1)); None = legacy definition, resolved by schema
-    // membership (fact first) at refresh
-    groupRel0: Option[Seq[Int]], sumRel0: Option[Seq[Int]],
+    // dimJoins(i-1))
+    groupRels: Seq[Int], sumRels: Seq[Int],
     // fixed physical names of the join keys (fact side aligned with
-    // dimJoins; dim side one per dim); None = legacy, assumed current
-    factKeyPhys0: Option[Seq[String]], dimKeyPhys0: Option[Seq[String]],
+    // dimJoins; dim side one per dim)
+    factKeyPhys: Seq[String], dimKeyPhys: Seq[String],
     // approximate-distinct columns: `ndv_<c>` stores a DataSketches
     // HLL sketch per group (binary). Inserts UNION in (mergeable);
     // a net-removed value marks the group for a targeted recompute —
     // sketches cannot subtract. Plain (fact-only) views only.
-    val ndvCols: Seq[String] = Nil,
-    ndvPhys0: Option[Seq[String]] = None) {
+    val ndvCols: Seq[String], ndvPhys: Seq[String]) {
 
   /** First dimension, if any — compatibility accessor for the
     * single-dim surface (mv_status, older callers). */
@@ -209,38 +205,24 @@ final class MaterializedAggView private (
         .map(f => st.renames.getOrElse(f.name, f.name) -> f.name).toMap
     }
     /** Owning relation index per view column (0 = fact). */
-    val relOf: Map[String, Int] = (groupRel0, sumRel0) match {
-      case (Some(gr), Some(sr)) =>
-        (groupCols.zip(gr) ++ sumCols.zip(sr)).toMap
-      case _ =>
-        // legacy single-dim definition: fact membership decides
-        val fc = dimJoins.head.factCols
-        (groupCols ++ sumCols).map(c =>
-          c -> (if (fc(c)) 0 else 1)).toMap
-    }
+    val relOf: Map[String, Int] =
+      (groupCols.zip(groupRels) ++ sumCols.zip(sumRels)).toMap
     private def resolve1(orig: String, phys: String, r: Int): String =
       headMaps(r).getOrElse(phys, throw new IllegalStateException(
         s"view column '$orig' (physical '$phys') no longer exists in " +
         s"${if (r == 0) "the fact table" else s"dimension ${r - 1}"} " +
         "at its head; drop and rebuild the view"))
-    // create-time physical name per view column (legacy: the stored
-    // logical IS the physical — pre-rename dims could not rename)
-    private val colPhys: Map[String, String] = (groupPhys0, sumPhys0) match {
-      case (Some(gp), Some(sp)) =>
-        (groupCols.zip(gp) ++ sumCols.zip(sp)).toMap
-      case _ => (groupCols ++ sumCols).map(c => c -> c).toMap
-    }
+    // create-time physical name per view column
+    private val colPhys: Map[String, String] =
+      (groupCols.zip(groupPhys) ++ sumCols.zip(sumPhys)).toMap
     /** Head logical name per view column. */
     val colNow: Map[String, String] = (groupCols ++ sumCols).distinct
       .map(c => c -> resolve1(c, colPhys(c), relOf(c))).toMap
     /** (factKeyHeadName, dimKeyHeadName) per dim. */
     val keyNow: Seq[(String, String)] = dimJoins.zipWithIndex.map {
       case (dj, i) =>
-        val fkP = factKeyPhys0.map(_(i)).getOrElse(
-          states(0).renames.getOrElse(dj.factKey, dj.factKey))
-        val dkP = dimKeyPhys0.map(_(i)).getOrElse(
-          states(i + 1).renames.getOrElse(dj.dimKey, dj.dimKey))
-        (resolve1(dj.factKey, fkP, 0), resolve1(dj.dimKey, dkP, i + 1))
+        (resolve1(dj.factKey, factKeyPhys(i), 0),
+          resolve1(dj.dimKey, dimKeyPhys(i), i + 1))
     }
     /** Project relation `r`'s head-named rows down to its owned view
       * columns + its join keys, spelled with their CREATE-TIME names,
@@ -352,22 +334,21 @@ final class MaterializedAggView private (
       val headPhysToLogical =
         org.apache.spark.sql.types.StructType.fromDDL(stH.ddl).fields
           .map(f => stH.renames.getOrElse(f.name, f.name) -> f.name).toMap
-      def resolve(phys: Option[Seq[String]], logical: Seq[String]) =
-        phys.getOrElse(logical.map(l => stH.renames.getOrElse(l, l)))
-          .zip(logical).map { case (p, orig) =>
-            headPhysToLogical.getOrElse(p, throw new IllegalStateException(
-              s"view column '$orig' (physical '$p') no longer exists in " +
-              s"the source at v$head; drop and rebuild the view")) -> orig
-          }
+      def resolve(phys: Seq[String], logical: Seq[String]) =
+        phys.zip(logical).map { case (p, orig) =>
+          headPhysToLogical.getOrElse(p, throw new IllegalStateException(
+            s"view column '$orig' (physical '$p') no longer exists in " +
+            s"the source at v$head; drop and rebuild the view")) -> orig
+        }
       // join views bind ALL columns by logical name (dim columns have
       // no fact-side physical identity); rename resilience applies to
       // plain views only — forcing these in a join view would throw on
       // dim-side names, so they stay lazy
-      lazy val gNow = resolve(groupPhys0, groupCols)
-      lazy val sNow = resolve(sumPhys0, sumCols)
-      lazy val mNow = resolve(minPhys0, minCols)
-      lazy val xNow = resolve(maxPhys0, maxCols)
-      lazy val nNow = resolve(ndvPhys0, ndvCols)
+      lazy val gNow = resolve(groupPhys, groupCols)
+      lazy val sNow = resolve(sumPhys, sumCols)
+      lazy val mNow = resolve(minPhys, minCols)
+      lazy val xNow = resolve(maxPhys, maxCols)
+      lazy val nNow = resolve(ndvPhys, ndvCols)
       // rebuild triggers: the interval's pre-images may be reclaimed
       // (vacuum horizon, or a FileNotFound already surfaced below), or
       // the catch-up interval is long enough that a bounded-plan
@@ -864,52 +845,6 @@ object MaterializedAggView {
     false
   }
 
-  /** Best-effort resolver for view SOURCE specs when no catalog handle
-    * is in scope (the streaming sink's refresh-on-epoch): path specs
-    * open directly; dotted names re-instantiate each GraftCatalog
-    * registered in the active session's conf and try them in turn. */
-  private[acid] def sessionResolver(spark: SparkSession): String => Instance =
-    spec =>
-      if (spec.contains('/')) VersionedTable.open(spark, spec)
-      else {
-        val all = spark.conf.getAll
-        val names = all.collect {
-          case (k, v) if k.startsWith("spark.sql.catalog.") &&
-              !k.stripPrefix("spark.sql.catalog.").contains('.') &&
-              v == classOf[GraftCatalog].getName =>
-            k.stripPrefix("spark.sql.catalog.")
-        }.toSeq
-        val resolved = names.flatMap { n =>
-          try {
-            val c = new GraftCatalog
-            val opts = all.collect {
-              case (k, v) if k.startsWith(s"spark.sql.catalog.$n.") =>
-                k.stripPrefix(s"spark.sql.catalog.$n.") -> v
-            }
-            c.initialize(n,
-              new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-                scala.jdk.CollectionConverters.MapHasAsJava(opts.toMap)
-                  .asJava))
-            Some(n -> c.openInstance(spec))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
-        // legacy fallback only (defs since path binding carry
-        // sourcePath): NEVER guess between catalogs — conf map order
-        // is arbitrary, and a which-answers-first pick silently binds
-        // the wrong table when two warehouses know the same name
-        val distinctRoots = resolved
-          .map { case (_, i) =>
-            new org.apache.hadoop.fs.Path(i.root).toString }.distinct
-        if (distinctRoots.size > 1) throw new IllegalArgumentException(
-          s"view source '$spec' is ambiguous: catalogs " +
-          s"${resolved.map(_._1).mkString(", ")} all resolve it " +
-          "(recreate the view to bind it by path)")
-        resolved.headOption.map(_._2).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot resolve view source '$spec': no registered graft " +
-            "catalog knows it"))
-      }
-
   /** One dimension side of a JOIN view: `view = fact JOIN dim ON
     * fact.factKey = dim.dimKey`, stackable — a star view joins the
     * fact against SEVERAL dims (`create(..., dimJoins = Seq(...))`),
@@ -918,11 +853,10 @@ object MaterializedAggView {
     * all relations (see [[MaterializedAggView.refresh]]); view
     * columns and join keys bind by create-time PHYSICAL identity on
     * every side, so renames anywhere are transparent and a dropped
-    * column breaks the view loudly. `factCols` caches the fact
-    * schema's field names for legacy side resolution; `dimSpec` is
-    * the persisted source spec of the dimension. */
+    * column breaks the view loudly. `dimSpec` is the persisted source
+    * spec of the dimension. */
   final case class DimJoin(dim: Instance, factKey: String, dimKey: String,
-      factCols: Set[String] = Set.empty, dimSpec: String = "")
+      dimSpec: String = "")
 
   /** Best-effort dependent-view registry under a SOURCE table's root
     * (`_mv_registry.json`): [[create]] registers the new view's root
@@ -1064,10 +998,9 @@ object MaterializedAggView {
     * definition no longer opens is still dropped — its registry
     * entries then surface as notes in `list_mvs` until re-written).
     * Returns false if the view root didn't exist. */
-  def dropView(spark: SparkSession, viewRoot: String,
-      resolveSource: String => Instance = null): Boolean = {
+  def dropView(spark: SparkSession, viewRoot: String): Boolean = {
     try {
-      val mv = openFromDef(spark, viewRoot, resolveSource)
+      val mv = openFromDef(spark, viewRoot)
       (mv.source +: mv.dimJoins.map(_.dim))
         .foreach(t => deregisterView(t, viewRoot))
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -1083,103 +1016,64 @@ object MaterializedAggView {
   }
 
   /** Definition side file under the view root — written ONCE at create
-    * (the definition is immutable), so `open(viewRoot)` and the SQL
+    * (the definition is immutable), so [[openFromDef]] and the SQL
     * `CALL system.refresh_mv` need no re-specification. `source` is
     * the creating surface's spec: an absolute table root (API create)
-    * or a dotted catalog name (SQL create_mv) — dotted names cannot
-    * contain '/', which is how [[openFromDef]] tells them apart. */
+    * or a dotted catalog name (SQL create_mv), kept for display and
+    * catalog operations; opening binds by the recorded paths. */
   private val DefFile = "_mv.json"
 
   private def esc(s: String) = s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
   }
-  private def writeDef(view: Instance, source: String,
-      groupCols: Seq[String], sumCols: Seq[String],
-      minCols: Seq[String], maxCols: Seq[String],
-      where: Option[String],
-      groupPhys: Seq[String], sumPhys: Seq[String],
-      minPhys: Seq[String], maxPhys: Seq[String],
-      dims: Seq[(String, String, String)] = Nil,
-      groupRels: Seq[Int] = Nil, sumRels: Seq[Int] = Nil,
-      factKeyPhys: Seq[String] = Nil,
-      dimKeyPhys: Seq[String] = Nil,
-      sourcePath: String = "",
-      dimPaths: Seq[String] = Nil,
-      ndvCols: Seq[String] = Nil,
-      ndvPhys: Seq[String] = Nil): Unit = {
+  private def writeDef(view: Instance, d: MvDef): Unit = {
     def arr(xs: Seq[String]) =
       s"[${xs.map(c => "\"" + esc(c) + "\"").mkString(",")}]"
-    val json = s"""{"source":"${esc(source)}",""" +
+    val json = s"""{"source":"${esc(d.source)}",""" +
       // the AUTHORITATIVE binding: `source`/`dimSources` may be dotted
       // catalog names (display + catalog ops), but two registered
       // catalogs can both resolve the same dotted name — opening binds
       // by the physical root recorded at create time, never by a
       // which-catalog-answers-first guess
-      (if (sourcePath.isEmpty) ""
-       else s""""sourcePath":"${esc(sourcePath)}",""") +
-      s""""groupCols":${arr(groupCols)},""" +
-      s""""sumCols":${arr(sumCols)},""" +
-      s""""minCols":${arr(minCols)},""" +
-      s""""maxCols":${arr(maxCols)},""" +
-      s""""groupPhys":${arr(groupPhys)},""" +
-      s""""sumPhys":${arr(sumPhys)},""" +
-      s""""minPhys":${arr(minPhys)},""" +
-      s""""maxPhys":${arr(maxPhys)}""" +
-      (if (ndvCols.isEmpty) ""
-       else s""","ndvCols":${arr(ndvCols)},"ndvPhys":${arr(ndvPhys)}""") +
-      where.fold("")(w => s""","where":"${esc(w)}"""") +
-      (if (dims.isEmpty) "" else {
-        // singular spellings kept for one dim so pre-multi-dim code
-        // can still open the definition; the plural arrays are the
-        // authoritative multi-dim record
-        (if (dims.size == 1)
-          s""","dimSource":"${esc(dims.head._1)}",""" +
-          s""""factKey":"${esc(dims.head._2)}",""" +
-          s""""dimKey":"${esc(dims.head._3)}""""
-        else "") +
-        s""","dimSources":${arr(dims.map(_._1))}""" +
-        (if (dimPaths.isEmpty) ""
-         else s""","dimPaths":${arr(dimPaths)}""") +
-        s""","factKeys":${arr(dims.map(_._2))}""" +
-        s""","dimKeys":${arr(dims.map(_._3))}""" +
-        s""","groupRels":${arr(groupRels.map(_.toString))}""" +
-        s""","sumRels":${arr(sumRels.map(_.toString))}""" +
-        s""","factKeyPhys":${arr(factKeyPhys)}""" +
-        s""","dimKeyPhys":${arr(dimKeyPhys)}"""
-      }) + "}"
+      s""""sourcePath":"${esc(d.sourcePath)}",""" +
+      s""""groupCols":${arr(d.groupCols)},""" +
+      s""""sumCols":${arr(d.sumCols)},""" +
+      s""""minCols":${arr(d.minCols)},""" +
+      s""""maxCols":${arr(d.maxCols)},""" +
+      s""""groupPhys":${arr(d.groupPhys)},""" +
+      s""""sumPhys":${arr(d.sumPhys)},""" +
+      s""""minPhys":${arr(d.minPhys)},""" +
+      s""""maxPhys":${arr(d.maxPhys)},""" +
+      s""""ndvCols":${arr(d.ndvCols)},"ndvPhys":${arr(d.ndvPhys)},""" +
+      d.where.fold("")(w => s""""where":"${esc(w)}",""") +
+      s""""dimSources":${arr(d.dimSources)},""" +
+      s""""dimPaths":${arr(d.dimPaths)},""" +
+      s""""factKeys":${arr(d.factKeys)},""" +
+      s""""dimKeys":${arr(d.dimKeys)},""" +
+      s""""groupRels":${arr(d.groupRels.map(_.toString))},""" +
+      s""""sumRels":${arr(d.sumRels.map(_.toString))},""" +
+      s""""factKeyPhys":${arr(d.factKeyPhys)},""" +
+      s""""dimKeyPhys":${arr(d.dimKeyPhys)}}"""
     val out = view.fs.create(
       new org.apache.hadoop.fs.Path(view.root, DefFile), false)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  /** Parsed [[DefFile]] contents (physical-name arrays absent on
-    * definitions written before renames were tracked; min/max arrays
-    * absent on pre-min/max definitions — both fold to empty/None). */
-  private[acid] final case class MvDef(source: String,
+  /** Parsed [[DefFile]] contents. The per-dimension arrays are empty on
+    * fact-only views; `groupRels`/`sumRels` name each group/sum
+    * column's owning relation (0 = fact, i >= 1 = dimension i-1). */
+  private[acid] final case class MvDef(source: String, sourcePath: String,
       groupCols: Seq[String], sumCols: Seq[String],
       minCols: Seq[String], maxCols: Seq[String],
       where: Option[String],
-      groupPhys: Option[Seq[String]], sumPhys: Option[Seq[String]],
-      minPhys: Option[Seq[String]], maxPhys: Option[Seq[String]],
-      dimSource: Option[String] = None, factKey: Option[String] = None,
-      dimKey: Option[String] = None,
-      // multi-dim arrays (absent on pre-multi-dim definitions, which
-      // carry at most the singular fields above)
-      dimSources: Option[Seq[String]] = None,
-      factKeys: Option[Seq[String]] = None,
-      dimKeys: Option[Seq[String]] = None,
-      groupRels: Option[Seq[String]] = None,
-      sumRels: Option[Seq[String]] = None,
-      factKeyPhys: Option[Seq[String]] = None,
-      dimKeyPhys: Option[Seq[String]] = None,
-      // authoritative physical roots (absent on defs written before
-      // path binding; those fall back to spec resolution)
-      sourcePath: Option[String] = None,
-      dimPaths: Option[Seq[String]] = None,
-      // approximate-distinct sketch columns (absent pre-ndv)
-      ndvCols: Seq[String] = Nil,
-      ndvPhys: Option[Seq[String]] = None)
+      groupPhys: Seq[String], sumPhys: Seq[String],
+      minPhys: Seq[String], maxPhys: Seq[String],
+      ndvCols: Seq[String], ndvPhys: Seq[String],
+      dimSources: Seq[String], dimPaths: Seq[String],
+      factKeys: Seq[String], dimKeys: Seq[String],
+      groupRels: Seq[Int], sumRels: Seq[Int],
+      factKeyPhys: Seq[String], dimKeyPhys: Seq[String])
 
   /** The persisted definition. The array parse is a real quote-aware
     * scan — column names containing commas, brackets, quotes or
@@ -1187,21 +1081,18 @@ object MaterializedAggView {
     * produced them. */
   private[acid] def readDef(view: Instance): MvDef = {
     val (strs, arrs) = readDefRaw(view)
-    def arrField(k: String): Seq[String] = arrs.getOrElse(k,
+    def str(k: String): String = strs.getOrElse(k,
       throw new IllegalStateException(s"bad $DefFile: no $k"))
-    MvDef(strs.getOrElse("source",
-        throw new IllegalStateException(s"bad $DefFile: no source")),
-      arrField("groupCols"), arrField("sumCols"),
-      arrs.getOrElse("minCols", Nil), arrs.getOrElse("maxCols", Nil),
+    def arr(k: String): Seq[String] = arrs.getOrElse(k,
+      throw new IllegalStateException(s"bad $DefFile: no $k"))
+    MvDef(str("source"), str("sourcePath"),
+      arr("groupCols"), arr("sumCols"), arr("minCols"), arr("maxCols"),
       strs.get("where"),
-      arrs.get("groupPhys"), arrs.get("sumPhys"),
-      arrs.get("minPhys"), arrs.get("maxPhys"),
-      strs.get("dimSource"), strs.get("factKey"), strs.get("dimKey"),
-      arrs.get("dimSources"), arrs.get("factKeys"), arrs.get("dimKeys"),
-      arrs.get("groupRels"), arrs.get("sumRels"),
-      arrs.get("factKeyPhys"), arrs.get("dimKeyPhys"),
-      strs.get("sourcePath"), arrs.get("dimPaths"),
-      arrs.getOrElse("ndvCols", Nil), arrs.get("ndvPhys"))
+      arr("groupPhys"), arr("sumPhys"), arr("minPhys"), arr("maxPhys"),
+      arr("ndvCols"), arr("ndvPhys"),
+      arr("dimSources"), arr("dimPaths"), arr("factKeys"), arr("dimKeys"),
+      arr("groupRels").map(_.toInt), arr("sumRels").map(_.toInt),
+      arr("factKeyPhys"), arr("dimKeyPhys"))
   }
 
   /** The def file as raw (string-field, array-field) maps — every key
@@ -1283,7 +1174,7 @@ object MaterializedAggView {
   private[acid] def rebindDef(view: Instance,
       remap: String => String): Unit = {
     val (strs, arrs) = readDefRaw(view)
-    val bindStr = Set("source", "sourcePath", "dimSource")
+    val bindStr = Set("source", "sourcePath")
     val bindArr = Set("dimSources", "dimPaths")
     val fields =
       strs.map { case (k, v) =>
@@ -1310,43 +1201,18 @@ object MaterializedAggView {
     }
   }
 
-  /** Open a view from its persisted definition. `resolveSource` maps
-    * a dotted catalog name to its Instance (pass the catalog's
-    * resolver from SQL; the default handles only path specs). */
-  def openFromDef(spark: SparkSession, viewRoot: String,
-      resolveSource: String => Instance = null): MaterializedAggView = {
+  /** Open a view from its persisted definition, binding the fact and
+    * every dimension by the physical roots recorded at create time. */
+  def openFromDef(spark: SparkSession,
+      viewRoot: String): MaterializedAggView = {
     val view = VersionedTable.open(spark, viewRoot)
     val d = readDef(view)
-    // binding precedence: the physical root recorded at create time
-    // (unambiguous — a dotted spec can resolve through WHICHEVER
-    // registered catalog answers first, and two catalogs may both
-    // know the name), then the spec (path or catalog resolution) for
-    // defs written before path binding
-    def open1(spec: String, path: Option[String]): Instance =
-      path match {
-        case Some(p) => VersionedTable.open(spark, p)
-        case None if spec.contains('/') => VersionedTable.open(spark, spec)
-        case None =>
-          require(resolveSource != null,
-            s"view source '$spec' is a catalog name; open it through " +
-            "the catalog")
-          resolveSource(spec)
-      }
-    val inst = open1(d.source, d.sourcePath)
-    lazy val factCols = StructType
-      .fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
-    val dims: Seq[DimJoin] = d.dimSources match {
-      case Some(specs) => specs.zipWithIndex.map { case (spec, i) =>
-        DimJoin(open1(spec, d.dimPaths.flatMap(_.lift(i))),
-          d.factKeys.get(i), d.dimKeys.get(i), factCols, spec) }
-      case None => d.dimSource.toSeq.map(spec =>
-        DimJoin(open1(spec, d.dimPaths.flatMap(_.headOption)),
-          d.factKey.get, d.dimKey.get, factCols, spec))
-    }
-    new MaterializedAggView(inst, view, d.groupCols, d.sumCols,
-      d.minCols, d.maxCols, dims, d.where,
-      d.groupPhys, d.sumPhys, d.minPhys, d.maxPhys,
-      d.groupRels.map(_.map(_.toInt)), d.sumRels.map(_.map(_.toInt)),
+    val dims = d.dimSources.indices.map(i =>
+      DimJoin(VersionedTable.open(spark, d.dimPaths(i)),
+        d.factKeys(i), d.dimKeys(i), d.dimSources(i)))
+    new MaterializedAggView(VersionedTable.open(spark, d.sourcePath), view,
+      d.groupCols, d.sumCols, d.minCols, d.maxCols, dims, d.where,
+      d.groupPhys, d.sumPhys, d.minPhys, d.maxPhys, d.groupRels, d.sumRels,
       d.factKeyPhys, d.dimKeyPhys, d.ndvCols, d.ndvPhys)
   }
 
@@ -1520,42 +1386,23 @@ object MaterializedAggView {
     val factKeyPhys = dims0.map(dj => physOf(dj.factKey, 0))
     val dimKeyPhys = dims0.zipWithIndex.map { case (dj, i) =>
       physOf(dj.dimKey, i + 1) }
-    // normalize the caller's DimJoins: factCols always reflects the
-    // fact schema here, and an empty dimSpec records the dim's root
+    // normalize the caller's DimJoins: an empty dimSpec records the
+    // dim's root
     val dims2 = dims0.map(dj => dj.copy(
-      factCols = factSchema.fieldNames.toSet,
       dimSpec = if (dj.dimSpec.nonEmpty) dj.dimSpec else dj.dim.root))
     val view = VersionedTable.create(spark, viewRoot, schema)
-    writeDef(view, sourceSpec.getOrElse(source.root), groupCols, sumCols,
-      minCols, maxCols, where, groupPhys, sumPhys, minPhys, maxPhys,
-      dims2.map(dj => (dj.dimSpec, dj.factKey, dj.dimKey)),
-      groupRels, sumRels, factKeyPhys, dimKeyPhys,
-      sourcePath = source.root, dimPaths = dims2.map(_.dim.root),
-      ndvCols = ndvCols, ndvPhys = ndvPhys)
+    writeDef(view, MvDef(sourceSpec.getOrElse(source.root), source.root,
+      groupCols, sumCols, minCols, maxCols, where,
+      groupPhys, sumPhys, minPhys, maxPhys, ndvCols, ndvPhys,
+      dims2.map(_.dimSpec), dims2.map(_.dim.root),
+      dims2.map(_.factKey), dims2.map(_.dimKey),
+      groupRels, sumRels, factKeyPhys, dimKeyPhys))
     // discovery registry: every relation that feeds this view learns
     // about it (best-effort — see RegistryFile)
     (source +: dims2.map(_.dim)).foreach(t => registerView(t, viewRoot))
     new MaterializedAggView(source, view, groupCols, sumCols,
       minCols, maxCols, dims2, where,
-      Some(groupPhys), Some(sumPhys), Some(minPhys), Some(maxPhys),
-      if (dims2.isEmpty) None else Some(groupRels),
-      if (dims2.isEmpty) None else Some(sumRels),
-      if (dims2.isEmpty) None else Some(factKeyPhys),
-      if (dims2.isEmpty) None else Some(dimKeyPhys),
-      ndvCols, Some(ndvPhys))
+      groupPhys, sumPhys, minPhys, maxPhys, groupRels, sumRels,
+      factKeyPhys, dimKeyPhys, ndvCols, ndvPhys)
   }
-
-  /** Re-open an existing view (definition is supplied by the caller;
-    * the watermark lives in the view table's manifest). The group/sum
-    * names are taken as CURRENT logical names — a view that must
-    * survive source renames should be reopened via [[openFromDef]],
-    * which carries the create-time physical identities. */
-  def open(spark: SparkSession, viewRoot: String, source: Instance,
-      groupCols: Seq[String], sumCols: Seq[String],
-      where: Option[String] = None,
-      minCols: Seq[String] = Nil,
-      maxCols: Seq[String] = Nil): MaterializedAggView =
-    new MaterializedAggView(source, VersionedTable.open(spark, viewRoot),
-      groupCols, sumCols, minCols, maxCols, Nil, where,
-      None, None, None, None, None, None, None, None)
 }

@@ -2,8 +2,6 @@ package graft.acid
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Incremental-materialized-view refresh cost curve — the quantitative
   * artifact behind the O(delta) claim (the way WriterBench numbers the
   * commit protocol and the recall row numbers the ANN keys): refresh
@@ -22,25 +20,7 @@ object MvBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val n = sys.env.getOrElse("SPARK_GRAFT_WRITER_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the UI is off, so the SQLAdaptiveExecutionUpdate events AQE
-      // posts per plan update have no consumer — but their 'formatted'
-      // explain string (spark.sql.ui.explainMode default) is still
-      // built EAGERLY on the driver at every stage materialization,
-      // measured ~20% of wall on multi-commit MV lifecycles (driver
-      // thread dumps: AdaptiveSparkPlanExec.onUpdatePlan ->
-      // QueryExecution.explainString). 'simple' keeps the event (and
-      // any attached listener working) at a fraction of the cost.
-      .config("spark.sql.ui.explainMode", "simple")
-      // no-fork local FS (see Engine.localFsImpl: chmod/ls forks
-      // removed; env-overridable)
-      .config("spark.hadoop.fs.file.impl", graft.Engine.localFsImpl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        graft.Engine.localAbsFsImpl)
-      .getOrCreate()
+    val spark = graft.Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
 

@@ -203,14 +203,6 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     def relLeaf(rel: Int): DataSourceV2Relation =
       if (rel == 0) factLeaf._1 else dimLeaves(rel - 1)._1
 
-    val groupRel: Seq[Int] =
-      d.groupRels.map(_.map(_.toInt))
-        .getOrElse(Seq.fill(d.groupCols.size)(0))
-    val sumRel: Seq[Int] =
-      d.sumRels.map(_.map(_.toInt)).getOrElse(Seq.fill(d.sumCols.size)(0))
-    if (cand.dims.nonEmpty &&
-        (groupRel.size != d.groupCols.size ||
-         sumRel.size != d.sumCols.size)) fail()
 
     val vTable = new GraftTable(cand.root, cand.version, cand.schema,
       timeTraveled = true)
@@ -226,8 +218,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         a: AttributeReference): Option[Int] =
       cols.indices.find(j => resolver(cols(j), a.name) &&
         relLeaf(rels(j)).outputSet.contains(a))
-    def groupIdx(a: AttributeReference) = colIdx(d.groupCols, groupRel, a)
-    def sumIdx(a: AttributeReference) = colIdx(d.sumCols, sumRel, a)
+    def groupIdx(a: AttributeReference) = colIdx(d.groupCols, d.groupRels, a)
+    def sumIdx(a: AttributeReference) = colIdx(d.sumCols, d.sumRels, a)
     // min/max/ndv views are plain (fact-only) by construction
     def minIdx(a: AttributeReference): Option[Int] =
       d.minCols.indices.find(j => resolver(d.minCols(j), a.name) &&
@@ -667,14 +659,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     // Column names here are the view's CREATE-TIME logical names —
     // valid against each relation's pinned snapshot because the
     // candidate passed renameStable (a renamed column disqualified it).
-    val groupRel: Seq[Int] = d.groupRels.map(_.map(_.toInt))
-      .getOrElse(Seq.fill(d.groupCols.size)(0))
-    val sumRel: Seq[Int] = d.sumRels.map(_.map(_.toInt))
-      .getOrElse(Seq.fill(d.sumCols.size)(0))
-    if (cand.dims.nonEmpty && (groupRel.size != d.groupCols.size ||
-        sumRel.size != d.sumCols.size)) fail()
     val relOfC: Map[String, Int] =
-      (d.groupCols.zip(groupRel) ++ d.sumCols.zip(sumRel)).toMap
+      (d.groupCols.zip(d.groupRels) ++ d.sumCols.zip(d.sumRels)).toMap
     val weightedRows: org.apache.spark.sql.DataFrame =
       if (cand.dims.isEmpty) {
         val delta0 = srcInst.weightedDelta(cand.wmLast, cand.srcVersion,
@@ -799,10 +785,10 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       if (rel == 0) factLeaf._1 else dimLeaves(rel - 1)._1
     def groupIdx(a: AttributeReference): Option[Int] =
       d.groupCols.indices.find(j => resolver(d.groupCols(j), a.name) &&
-        relLeaf(groupRel(j)).outputSet.contains(a))
+        relLeaf(d.groupRels(j)).outputSet.contains(a))
     def sumIdx(a: AttributeReference): Option[Int] =
       d.sumCols.indices.find(j => resolver(d.sumCols(j), a.name) &&
-        relLeaf(sumRel(j)).outputSet.contains(a))
+        relLeaf(d.sumRels(j)).outputSet.contains(a))
 
     def remapGroupOnly(e: Expression): Expression = e.transformUp {
       case a: AttributeReference => groupIdx(a) match {
@@ -967,7 +953,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         // this lookup treats `root` as the view's FACT; a view whose
         // fact is elsewhere (we are one of its dims) is surfaced by
         // the lookup keyed on ITS fact leaf instead
-        if (canon(d.sourcePath.getOrElse(d.source)) != canon(root)) None
+        if (canon(d.sourcePath) != canon(root)) None
         else {
           val vv = vInst.latestVersion
           val marks = vInst.appTxnsAt(vv)
@@ -992,32 +978,19 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
             wm >= inst.vacuumHorizon
           if (wm != version && !staleOk) None
           else {
-            val dimSpecs = d.dimSources.getOrElse(d.dimSource.toSeq)
-            val dimRoots = d.dimPaths.getOrElse(Nil)
-            val factKeys = d.factKeys.getOrElse(d.factKey.toSeq)
-            val dimKeys = d.dimKeys.getOrElse(d.dimKey.toSeq)
-            // join views rewrite only with full path binding + owning
-            // relations recorded (older defs refresh fine but are not
-            // rewrite candidates)
-            if (dimSpecs.nonEmpty && (dimRoots.size != dimSpecs.size ||
-                factKeys.size != dimSpecs.size ||
-                dimKeys.size != dimSpecs.size ||
-                d.groupRels.isEmpty || d.sumRels.isEmpty)) None
+            val dims = d.dimPaths.indices.map { i =>
+              val wmKey = app + (if (i == 0) "#dim" else s"#dim$i")
+              DimBind(canon(d.dimPaths(i)), d.factKeys(i), d.dimKeys(i),
+                marks.getOrElse(wmKey, -1L))
+            }
+            if (dims.exists(_.wm < 0)) None
+            else if (!renameStable(d, version, factRenames, dims)) None
             else {
-              val dims = dimRoots.indices.map { i =>
-                val wmKey = app + (if (i == 0) "#dim" else s"#dim$i")
-                DimBind(canon(dimRoots(i)), factKeys(i), dimKeys(i),
-                  marks.getOrElse(wmKey, -1L))
-              }
-              if (dims.exists(_.wm < 0)) None
-              else if (!renameStable(d, version, factRenames, dims)) None
-              else {
-                val schema = StructType.fromDDL(vInst.stateAt(vv)._2)
-                Some(Candidate(canon(vr), vv, schema, d,
-                  canon(root), version, dims,
-                  staleBy = version - math.max(0L, wm),
-                  wmLast = math.max(0L, wm)))
-              }
+              val schema = StructType.fromDDL(vInst.stateAt(vv)._2)
+              Some(Candidate(canon(vr), vv, schema, d,
+                canon(root), version, dims,
+                staleBy = version - math.max(0L, wm),
+                wmLast = math.max(0L, wm)))
             }
           }
         }
@@ -1036,24 +1009,18 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       VersionedTable.open(spark, db.root).tableStateAt(db.wm).renames)
     def renamesOf(rel: Int): Map[String, String] =
       if (rel == 0) factRenames else dimRenames(rel - 1)
-    def stable(cols: Seq[String], phys: Option[Seq[String]],
+    def stable(cols: Seq[String], phys: Seq[String],
         rels: Seq[Int]): Boolean =
-      phys.forall(_.lazyZip(cols).lazyZip(rels).forall { (p, c, r) =>
-        renamesOf(r).getOrElse(c, c) == p })
-    val groupRel = d.groupRels.map(_.map(_.toInt))
-      .getOrElse(Seq.fill(d.groupCols.size)(0))
-    val sumRel = d.sumRels.map(_.map(_.toInt))
-      .getOrElse(Seq.fill(d.sumCols.size)(0))
+      phys.lazyZip(cols).lazyZip(rels).forall { (p, c, r) =>
+        renamesOf(r).getOrElse(c, c) == p }
     val zeros = (n: Int) => Seq.fill(n)(0)
-    stable(d.groupCols, d.groupPhys, groupRel) &&
-    stable(d.sumCols, d.sumPhys, sumRel) &&
+    stable(d.groupCols, d.groupPhys, d.groupRels) &&
+    stable(d.sumCols, d.sumPhys, d.sumRels) &&
     stable(d.minCols, d.minPhys, zeros(d.minCols.size)) &&
     stable(d.maxCols, d.maxPhys, zeros(d.maxCols.size)) &&
     stable(d.ndvCols, d.ndvPhys, zeros(d.ndvCols.size)) &&
-    stable(d.factKeys.getOrElse(d.factKey.toSeq), d.factKeyPhys,
-      zeros(dims.size)) &&
-    stable(d.dimKeys.getOrElse(d.dimKey.toSeq), d.dimKeyPhys,
-      (1 to dims.size))
+    stable(d.factKeys, d.factKeyPhys, zeros(dims.size)) &&
+    stable(d.dimKeys, d.dimKeyPhys, 1 to dims.size)
   }
 
   private def canon(root: String): String = new Path(root).toString

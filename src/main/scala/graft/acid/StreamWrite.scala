@@ -92,8 +92,8 @@ private[acid] final class GraftStreamingWrite(root: String,
     val badPart = partitionBy.filterNot(writeSchema.fieldNames.contains)
     require(badPart.isEmpty,
       s"partition column(s) ${badPart.mkString(", ")} not in stream schema")
-    require(!partitionBy.contains("obj_id"),
-      "obj_id cannot be a partition column (footer stats need it in-file)")
+    // epochs stage on the executors, never through writeStaged
+    VersionedTable.requireInFileObjId(partitionBy)
   }
 
   // one staging namespace per query RUN (a restart constructs a fresh
@@ -247,9 +247,7 @@ private[acid] final class GraftStreamingWrite(root: String,
     refreshViews.foreach { vr =>
       try {
         val spark = SparkSession.active
-        MaterializedAggView.openFromDef(spark, vr,
-          resolveSource = MaterializedAggView.sessionResolver(spark))
-          .refresh()
+        MaterializedAggView.openFromDef(spark, vr).refresh()
       } catch {
         case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(

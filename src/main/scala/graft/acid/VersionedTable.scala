@@ -72,8 +72,7 @@ object VersionedTable {
   /** `stats` maps a data file to its (min, max) obj_id range: delta
     * manifests carry stats for `added`; checkpoints carry stats for
     * `allFiles` (rolled forward), so any snapshot's pruning index is
-    * reconstructible from O(checkpointInterval) manifests. Files from
-    * pre-stats manifests simply have no entry and are never pruned. */
+    * reconstructible from O(checkpointInterval) manifests. */
   /** `objects` is the commit's literal touched-id list; past
     * [[EngineConf.objectListThreshold]] ids it is replaced by
     * `objSummary` (exact count/min/max + bloom — see [[ObjSummary]]),
@@ -83,8 +82,7 @@ object VersionedTable {
   /** `colStats` maps file -> (column -> (min, max)) for SECONDARY
     * cluster columns recorded by a multi-column [[Instance.compact]]
     * (obj_id ranges stay in `stats`). Additive-optional: a reader that
-    * ignores it only loses secondary-key pruning, never correctness —
-    * so it does not bump [[FormatVersion]]. */
+    * ignores it only loses secondary-key pruning, never correctness. */
   final case class Manifest(
       version: Long,
       tsn: Long,
@@ -102,10 +100,9 @@ object VersionedTable {
       // wall-clock stamp of each appTxns entry's LAST update, carried
       // so checkpoints can expire idle watermarks under
       // [[EngineConf.appTxnRetentionMs]] (Delta's
-      // setTransactionRetentionDuration analog). Additive-optional:
-      // absence (legacy manifests) folds as 0 = "age unknown", which
-      // retention treats as keep-forever — expiry can only ever apply
-      // to entries that carry a real stamp.
+      // setTransactionRetentionDuration analog). A missing stamp folds
+      // as 0 = "age unknown", which retention treats as keep-forever —
+      // expiry can only ever apply to entries that carry a real stamp.
       appTxnTs: Map[String, Long] = Map.empty,
       // merge-on-read deletion vectors, as a DELTA: data file -> the
       // sidecar files whose id sets mask its rows. REPLACEMENT
@@ -123,14 +120,14 @@ object VersionedTable {
       // leaf column at write time (the reference's always-on free/stats
       // metadata discipline, free_info.rs:84-194, applied to reads).
       // Additive-optional like colStats: a reader that ignores it only
-      // loses data skipping, never correctness — no FormatVersion bump.
+      // loses data skipping, never correctness.
       // Deltas carry entries for `added`; checkpoints the full fold.
       fileStats: Map[String, Map[String, UStat]] = Map.empty,
       // cross-table atomic commit pointer: URI of the decision record
       // whose atomic claim is the COMMIT POINT for every participating
       // table. The manifest's deltas apply only if the decision
       // resolved "committed"; an aborted/undecided ref neuters them
-      // (see [[Instance.readManifest]]). formatVersion-6 gated.
+      // (see [[Instance.readManifest]]).
       multiRef: Option[String] = None,
       // COLUMN MAPPING (logical -> physical name), the Delta
       // column-mapping analog: a column's PHYSICAL name — what parquet
@@ -140,9 +137,7 @@ object VersionedTable {
       // indirection here, so a rename is metadata-only (zero data IO)
       // and every pre-rename file stays readable. Carried as the FULL
       // current map on every manifest (like schemaDDL); entries exist
-      // only where logical != physical. formatVersion-7 gated: a
-      // reader ignoring the map would request logical names absent
-      // from the files and silently read every renamed column as NULL.
+      // only where logical != physical.
       renames: Map[String, String] = Map.empty,
       // RETIRED physical column names: every physical name ever freed
       // by a DROP COLUMN (directly, or of a renamed column). Old files
@@ -151,9 +146,6 @@ object VersionedTable {
       // the dropped column's values. Carried as the FULL cumulative
       // set on every manifest (monotone — a retired name never
       // un-retires; like renames/schemaDDL, the fold takes the last).
-      // formatVersion-8 gated: a writer ignoring the set would assign
-      // a colliding physical name on re-ADD and silently alias two
-      // generations of data.
       tombstones: Seq[String] = Nil,
       // SEGMENTED checkpoint pointer (checkpoint manifests only): the
       // relative name, under `_manifests/`, of the parquet side-file
@@ -164,8 +156,7 @@ object VersionedTable {
       // checkpoint manifest O(1) regardless of table size; readers
       // fold the tail deltas on top and consult the side files
       // columnar/distributed (see [[Instance.tableStateAt]] and the
-      // skipping paths). formatVersion-8 gated: ignoring the pointer
-      // folds an empty checkpoint. `ckptFiles` = live-file count at
+      // skipping paths). `ckptFiles` = live-file count at
       // the checkpoint (so planners can size decisions without
       // opening the side files).
       ckptRef: Option[String] = None,
@@ -175,9 +166,7 @@ object VersionedTable {
       // when [[EngineConf.changeDataFeed]] is on. `cdcExact = true`
       // asserts the commit's row-level changes are exactly these rows
       // (possibly none) — the streaming feed then serves them instead
-      // of failing on the removal. Additive-optional (no FormatVersion
-      // bump): a reader ignoring the fields falls back to the
-      // fail/ignoreChanges behavior — degraded, never wrong.
+      // of failing on the removal.
       cdc: Seq[String] = Nil,
       cdcExact: Boolean = false,
       // CHECK constraints (name -> boolean SQL expression over logical
@@ -187,9 +176,7 @@ object VersionedTable {
       // FULL current map on every manifest (like renames/schemaDDL);
       // add/drop is a metadata-only commit that conflicts table-wide
       // (the interleaved writer's rows were never validated against
-      // the new invariant). formatVersion-9 gated: a WRITER ignoring
-      // the map would land unvalidated rows and silently void the
-      // invariant every reader relies on.
+      // the new invariant).
       constraints: Map[String, String] = Map.empty)
 
   /** Universal statistic for ONE leaf column of one data file, read
@@ -211,20 +198,6 @@ object VersionedTable {
       case 'N' => Some((Long.MaxValue, Long.MinValue))
       case _ => None
     }
-  }
-
-  /** Resolved per-file deletion mask: the union of a file's sidecars.
-    * `ids` carries legacy obj_id members (sorted, binary-searched);
-    * `pos` carries row-ordinal members from positional sidecars
-    * ([[GraftBitmap]] — the bounded representation a heavily-masked
-    * file needs at scale). Either side may be empty; a reader must
-    * drop a row matched by EITHER. */
-  final case class DvMask(ids: Array[Long], pos: GraftBitmap) {
-    def isEmpty: Boolean = ids.isEmpty && pos.isEmpty
-    def nonEmpty: Boolean = !isEmpty
-  }
-  object DvMask {
-    val empty: DvMask = DvMask(Array.emptyLongArray, GraftBitmap.empty)
   }
 
   /** Handle onto a SEGMENTED checkpoint's parquet side files for one
@@ -346,6 +319,14 @@ object VersionedTable {
     * colliding user column can never be misread as a bloom. */
   private[acid] val BloomKeyPrefix = "#fb:"
 
+  /** obj_id must stay a physical column of every data file: its footer
+    * min/max is the primary pruning index, and merge-on-read deletes
+    * resolve row ordinals against it. Every surface that records or
+    * writes a partitioning checks this. */
+  private[acid] def requireInFileObjId(partitionBy: Seq[String]): Unit =
+    require(!partitionBy.contains("obj_id"),
+      "obj_id cannot be a partition column (footer stats need it in-file)")
+
   private def esc(s: String) = s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
@@ -390,53 +371,15 @@ object VersionedTable {
       sb.toString
     }
 
-  /** Manifest format generation this reader understands. 1 = the
-    * pre-summary shape (no field written — absence implies it); 2 added
-    * `objSummary`, whose SILENT omission by an older reader would skip
-    * conflict detection and empty the change feed — exactly the class
-    * of change that must fail loudly in a mixed-version deployment, so
-    * [[fromJson]] rejects any manifest declaring a NEWER generation.
-    * Additive fields an old reader can safely ignore (e.g. per-column
-    * cluster stats — losing them only loses pruning) do NOT bump this.
-    * 3 added `appTxns` (streaming-epoch idempotence watermarks): an
-    * older writer that dropped them from a checkpoint fold would let a
-    * recovered stream RE-COMMIT an already-committed epoch — duplicate
-    * rows, the exactly-once guarantee silently gone — so manifests
-    * carrying the field declare generation 3. Manifests without it
-    * still declare 2, keeping tables that never saw a streaming write
-    * readable by gen-2 deployments.
-    * 4 added `dvs` (merge-on-read deletion vectors): a reader ignoring
-    * them would RESURRECT every MoR-deleted row — so manifests carrying
-    * them declare generation 4.
-    * 5 added POSITIONAL deletion-vector sidecars (`dvp-` names, row
-    * ordinals as [[GraftBitmap]] instead of obj_id arrays): a gen-4
-    * reader cannot apply them, so any manifest whose dv lists reference
-    * one declares 5 — id-only dv tables keep declaring 4.
-    * 6 added `multiRef` (cross-table atomic commits): the manifest's
-    * deltas are valid ONLY IF the referenced decision record resolved
-    * "committed" — a reader ignoring the field would apply an ABORTED
-    * multi-table commit's deltas, so manifests carrying it declare 6.
-    * 7 added `renames` (column mapping, logical -> fixed physical
-    * name): a reader ignoring the map would request the renamed
-    * column's LOGICAL name from files that spell its physical name and
-    * silently read the whole column as NULL — so manifests carrying a
-    * non-identity map declare 7; never-renamed tables keep their
-    * earlier generation.
-    * 8 added `tombstones` (retired physical column names): a WRITER
-    * ignoring them would map a re-added column onto a dropped column's
-    * still-on-disk physical name and silently resurrect its values —
-    * so manifests carrying a non-empty set declare 8. 8 also marks
-    * SEGMENTED checkpoints (`ckptRef`, the per-file state in a parquet
-    * side file instead of inline): a reader ignoring the pointer would
-    * fold an EMPTY checkpoint and see a vanished table.
-    * 9 added `constraints` (CHECK invariants): a WRITER ignoring the
-    * map would land rows nobody validated and silently void the
-    * invariant — so manifests carrying a non-empty map declare 9;
-    * unconstrained tables keep their earlier generation.
-    * Each manifest declares the MINIMUM generation its own fields
-    * need, so only tables actually using a feature lock out older
-    * deployments. */
-  val FormatVersion = 9
+  /** The one manifest format generation this engine reads and writes.
+    * Every manifest declares it, and [[fromJson]] refuses any other
+    * declared generation (older, newer or absent) and any manifest
+    * without its trailing crc: parsing an unknown shape with defaults
+    * could silently drop a field whose loss corrupts answers (conflict
+    * summaries, epoch watermarks, deletion vectors, column mapping,
+    * constraints). Tables written by an older generation are refused,
+    * not migrated. */
+  val FormatVersion = 10
 
   private[graft] def toJson(m: Manifest): String = {
     def arrS(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
@@ -460,8 +403,7 @@ object VersionedTable {
         s""""cstatsMin":${arrL(cstatKeys.map(_._3))},""" +
         s""""cstatsMax":${arrL(cstatKeys.map(_._4))},"""
     // streaming-epoch watermarks as two parallel arrays, sorted for
-    // byte-stable output; only manifests that carry them pay the
-    // generation-3 gate (see FormatVersion)
+    // byte-stable output
     val appKeys = m.appTxns.keys.toSeq.sorted
     val apps =
       if (appKeys.isEmpty) ""
@@ -515,19 +457,10 @@ object VersionedTable {
     val cdcJson =
       if (!m.cdcExact && m.cdc.isEmpty) ""
       else s""""cdcFiles":${arrS(m.cdc)},"cdcExact":${m.cdcExact},"""
-    val declaredFv =
-      if (m.constraints.nonEmpty) 9
-      else if (m.tombstones.nonEmpty || m.ckptRef.isDefined) 8
-      else if (m.renames.nonEmpty) 7
-      else if (m.multiRef.isDefined) 6
-      else if ((m.dvs.valuesIterator ++ m.allDvs.valuesIterator)
-          .exists(_.exists(_.startsWith("dvp-")))) 5
-      else if (m.dvs.nonEmpty || m.allDvs.nonEmpty) 4
-      else if (m.appTxns.nonEmpty) 3 else 2
     val multi = m.multiRef.map(u => s""""multiRef":"${esc(u)}",""")
       .getOrElse("")
     val payload =
-      s"""{"formatVersion":$declaredFv,""" + multi +
+      s"""{"formatVersion":$FormatVersion,""" + multi +
       s""""version":${m.version},"tsn":${m.tsn},""" +
       s""""tsMillis":${m.tsMillis},"schemaDDL":"${esc(m.schemaDDL)}",""" +
       s""""added":${arrS(m.added)},"removed":${arrS(m.removed)},""" +
@@ -549,23 +482,9 @@ object VersionedTable {
     c.getValue
   }
 
-  /** Deletion-vector sidecar payload: data file -> the obj ids this
-    * sidecar masks in it. Same flat-arrays-plus-crc shape as the
-    * manifest (ids ';'-joined per file so the parser stays split-based;
-    * corruption must fail loudly — a torn sidecar silently read as
-    * fewer ids would RESURRECT deleted rows). */
-  private[acid] def dvToJson(masks: Map[String, Seq[Long]]): String = {
-    val keys = masks.keys.toSeq.sorted
-    def arrS(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-    val payload =
-      s"""{"dvFiles":${arrS(keys)},""" +
-      s""""dvIds":${arrS(keys.map(masks(_).sorted.mkString(";")))}}"""
-    payload.dropRight(1) + s""","crc":${crc32(payload)}}"""
-  }
-
   /** Positional deletion-vector sidecar payload: data file -> base64
     * of its serialized [[GraftBitmap]] of masked row ordinals. Same
-    * flat-arrays-plus-crc shape as the legacy id sidecar; the bitmap's
+    * flat-arrays-plus-crc shape as the manifest; the bitmap's
     * own magic plus the crc make torn or mistyped payloads fail loudly
     * (a sidecar silently read as empty would RESURRECT deleted rows). */
   private[acid] def dvPosToJson(masks: Map[String, GraftBitmap]): String = {
@@ -763,27 +682,6 @@ object VersionedTable {
       out.toSeq
     }
 
-  private[acid] def dvFromJson(s: String): Map[String, Array[Long]] = {
-    val crcIdx = s.lastIndexOf(",\"crc\":")
-    require(crcIdx > 0, s"deletion-vector sidecar missing crc")
-    val stored = s.substring(crcIdx + 7).trim.stripSuffix("}").toLong
-    val payload = s.substring(0, crcIdx) + "}"
-    if (crc32(payload) != stored)
-      throw new java.io.IOException(
-        s"deletion-vector sidecar integrity check failed: " +
-        s"stored crc $stored != computed ${crc32(payload)}")
-    def strArr(k: String): Seq[String] = {
-      val i = s.indexOf("\"" + k + "\":[") + k.length + 4
-      val j = s.indexOf("]", i)
-      val raw = s.substring(i, j)
-      if (raw.isEmpty) Nil
-      else splitItems(raw).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
-    strArr("dvFiles").zip(strArr("dvIds").map(l =>
-      if (l.isEmpty) Array.empty[Long]
-      else l.split(';').map(_.toLong))).toMap
-  }
-
   private[graft] def fromJson(s: String): Manifest = {
     // minimal parser for the fixed shape above (keys never contain
     // escapes; values are numbers, bools, or string arrays)
@@ -840,46 +738,47 @@ object VersionedTable {
       val raw = rawField(k).trim.stripPrefix("[").stripSuffix("]")
       if (raw.isEmpty) Nil else raw.split(",").toSeq.map(_.trim.toLong)
     }
-    // format gate FIRST (before crc — a future generation may hash
-    // differently): a manifest declaring a newer generation than this
-    // reader understands must fail loudly, never parse-with-defaults
-    // (an old reader treating a summary commit as touching nothing
-    // would silently skip conflict detection). Absence = generation 1.
-    if (s.contains("\"formatVersion\":")) {
-      val declared = rawField("formatVersion").toLong
-      if (declared > FormatVersion)
-        throw new ManifestFormatException(
-          s"manifest formatVersion $declared is newer than this reader " +
-          s"supports ($FormatVersion); upgrade before reading this table")
+    // format gate FIRST (another generation may hash differently):
+    // exactly one generation parses, any other declaration fails
+    // loudly — never parse-with-defaults. Only a TERMINATED field
+    // counts, so a torn read's prefix (`"formatVersion":1` of 10) is
+    // never mistaken for a declaration and stays retryable below
+    val fvAt = s.indexOf("\"formatVersion\":")
+    val fvEnd = if (fvAt < 0) -1 else s.indexOf(',', fvAt)
+    val declared =
+      if (fvEnd < 0) None else Some(s.substring(fvAt + 16, fvEnd).trim)
+    declared.filter(_ != FormatVersion.toString).foreach { d =>
+      val newer = d.nonEmpty && d.forall(_.isDigit) && BigInt(d) > FormatVersion
+      throw new ManifestFormatException(
+        if (newer) s"manifest formatVersion $d is newer than this reader " +
+          s"supports ($FormatVersion); upgrade before reading this table"
+        else s"manifest formatVersion $d is older than $FormatVersion, " +
+          "the only generation this reader supports; tables written by " +
+          "older generations are refused, not migrated")
     }
-    // verify integrity first: strip the trailing `,"crc":N}` back to the
-    // original payload and compare CRCs. The match must be in TRAILING
-    // position — `,"crc":<digits>}` running to end-of-text — so a
-    // pre-crc legacy manifest whose schemaDDL happens to contain the
-    // literal substring can't false-trigger the check (lastIndexOf +
-    // the trailing test also keeps a current-format manifest with that
-    // substring in content anchored to its real integrity field).
-    // Manifests with no trailing field skip the check entirely.
+    // integrity: strip the trailing `,"crc":N}` back to the original
+    // payload and compare CRCs. lastIndexOf + the trailing test anchor
+    // to the real integrity field even when content (a schemaDDL)
+    // carries the literal substring. A manifest without the field is
+    // a torn read (retried by [[Instance.readManifest]]) or a pre-crc
+    // writer's — refused either way
     val crcIdx = s.lastIndexOf(",\"crc\":")
-    val digits =
-      if (crcIdx < 0) "" else {
-        val tail = s.substring(crcIdx + 7).trim
-        if (tail.length >= 2 && tail.endsWith("}") &&
-            tail.dropRight(1).nonEmpty && tail.dropRight(1).forall(_.isDigit))
-          tail.dropRight(1)
-        else ""
-      }
-    if (digits.nonEmpty) {
-      val payload = s.substring(0, crcIdx) + "}"
-      val stored = digits.toLong
-      if (crc32(payload) != stored)
-        throw new java.io.IOException(
-          s"manifest integrity check failed: stored crc $stored != computed ${crc32(payload)}")
-    }
+    val tail = if (crcIdx < 0) "" else s.substring(crcIdx + 7).trim
+    val digits = tail.stripSuffix("}")
+    if (!tail.endsWith("}") || digits.isEmpty || !digits.forall(_.isDigit))
+      throw new java.io.IOException(
+        "manifest has no trailing crc field (torn read or pre-crc writer)")
+    val payload = s.substring(0, crcIdx) + "}"
+    if (crc32(payload) != digits.toLong)
+      throw new java.io.IOException(
+        s"manifest integrity check failed: stored crc $digits != computed ${crc32(payload)}")
+    if (declared.isEmpty)
+      throw new ManifestFormatException(
+        s"manifest declares no formatVersion; this reader supports only " +
+        s"generation $FormatVersion, and tables written by older " +
+        "generations are refused, not migrated")
     val stats =
-      if (s.contains("\"statsFiles\":"))
-        strArr("statsFiles").zip(longArr("statsMin").zip(longArr("statsMax"))).toMap
-      else Map.empty[String, (Long, Long)]
+      strArr("statsFiles").zip(longArr("statsMin").zip(longArr("statsMax"))).toMap
     val summary =
       if (s.contains("\"objCount\":"))
         Some(ObjSummary(rawField("objCount").toLong, rawField("objMin").toLong,
@@ -898,10 +797,10 @@ object VersionedTable {
       if (s.contains("\"appIds\":"))
         strArr("appIds").zip(longArr("appEpochs")).toMap
       else Map.empty[String, Long]
-    // 0 = "no stamp" canonicalizes to absence, so manifests written
-    // before stamps (or with stamp-less entries) round-trip exactly
+    // 0 = "no stamp" canonicalizes to absence, so stamp-less entries
+    // round-trip exactly
     val appTxnTs =
-      if (s.contains("\"appIds\":") && s.contains("\"appTs\":"))
+      if (s.contains("\"appIds\":"))
         strArr("appIds").zip(longArr("appTs")).filter(_._2 != 0L).toMap
       else Map.empty[String, Long]
     def dvBlock(prefix: String): Map[String, Seq[String]] =
@@ -929,11 +828,7 @@ object VersionedTable {
       strField("schemaDDL"), strArr("added"), strArr("removed"),
       longArr("objects"), rawField("checkpoint").toBoolean, strArr("allFiles"),
       stats, summary, colStats,
-      // additive wall-clock commit stamp (no FormatVersion bump: a
-      // reader without it only loses timestamp time travel); absent
-      // in legacy manifests -> 0 = "unknown, infinitely old"
-      tsMillis = if (s.contains("\"tsMillis\":")) rawField("tsMillis").toLong
-        else 0L,
+      tsMillis = rawField("tsMillis").toLong,
       appTxns = appTxns, appTxnTs = appTxnTs,
       dvs = dvs, allDvs = allDvs, fileStats = fileStats,
       multiRef = if (s.contains("\"multiRef\":\""))
@@ -948,7 +843,7 @@ object VersionedTable {
       else Map.empty,
       ckptRef = if (s.contains("\"ckptRef\":\""))
         Some(strField("ckptRef")) else None,
-      ckptFiles = if (s.contains("\"ckptFiles\":"))
+      ckptFiles = if (s.contains("\"ckptRef\":\""))
         rawField("ckptFiles").toLong else 0L,
       cdc = if (s.contains("\"cdcFiles\":")) strArr("cdcFiles") else Nil,
       cdcExact = s.contains("\"cdcExact\":") &&
@@ -1265,9 +1160,11 @@ final class ConflictException(msg: String) extends RuntimeException(msg)
 final class ConstraintViolationException(msg: String)
   extends RuntimeException(msg)
 
-/** The manifest declares a format generation newer than this reader —
-  * a mixed-version deployment must upgrade, not parse-with-defaults.
-  * Deterministic (not a torn read), so [[Instance]] never retries it. */
+/** The manifest declares a format generation other than this reader's
+  * [[VersionedTable.FormatVersion]], or none: a newer table needs an
+  * upgraded reader, an older one is refused — never parsed with
+  * defaults. Deterministic (not a torn read), so [[Instance]] never
+  * retries it. */
 final class ManifestFormatException(msg: String) extends java.io.IOException(msg)
 
 /** A transaction carrying a streaming-epoch watermark ([[Txn.markEpoch]])
@@ -1575,17 +1472,10 @@ final class Instance(val spark: SparkSession, val root: String,
     val segmented = ckpt.ckptRef
     // segmented: the name list STAYS in the side files — the driver
     // folds only the O(tail) delta (tailLive/excluded below) and the
-    // exact count rides the checkpoint manifest (legacy segmented
-    // manifests without the count pay one distributed count, once per
-    // memoized fold)
+    // exact count rides the checkpoint manifest
     var files: Set[String] = segmented match {
       case Some(_) => Set.empty
       case None => ckpt.allFiles.toSet
-    }
-    val ckptCount: Long = segmented match {
-      case Some(ref) =>
-        if (ckpt.ckptFiles > 0L) ckpt.ckptFiles else sidecarCount(ref)
-      case None => 0L
     }
     var ddl = ckpt.schemaDDL
     // a segmented checkpoint's manifest carries only its own txn's
@@ -1643,7 +1533,7 @@ final class Instance(val spark: SparkSession, val root: String,
         TableState(tailLive.toSeq.sorted, ddl, stats, colStats, dvs,
           fileStats, ren, tomb,
           Some(SidecarState(ref, excluded, tailLive)),
-          liveCount = ckptCount - excluded.size + tailLive.size,
+          liveCount = ckpt.ckptFiles - excluded.size + tailLive.size,
           constraints = cons)
       case None =>
         TableState(files.toSeq.sorted, ddl, stats, colStats, dvs,
@@ -1705,7 +1595,7 @@ final class Instance(val spark: SparkSession, val root: String,
     * before; CoW rewrites materialize the column physically, which
     * degrades pruning for the rewritten files but never correctness. */
   private[acid] def viewOf(files: Seq[String], ddl: String,
-      masks: Map[String, VersionedTable.DvMask] = Map.empty,
+      masks: Map[String, GraftBitmap] = Map.empty,
       renames: Map[String, String] = Map.empty): DataFrame =
     if (renames.isEmpty) viewOfPhys(files, ddl, masks)
     else {
@@ -1714,8 +1604,7 @@ final class Instance(val spark: SparkSession, val root: String,
       // is planned physical end-to-end and one final projection aliases
       // back to the logical names — Catalyst collapses it into the
       // scan's own projections, so the indirection costs nothing at
-      // runtime. obj_id is never renamable, so mask filters (which
-      // reference it inside viewOfPhys) are unaffected.
+      // runtime.
       val logical = StructType.fromDDL(ddl)
       val physDdl = StructType(logical.map(f =>
         f.copy(name = renames.getOrElse(f.name, f.name)))).toDDL
@@ -1725,12 +1614,11 @@ final class Instance(val spark: SparkSession, val root: String,
     }
 
   private def viewOfPhys(files: Seq[String], ddl: String,
-      masks: Map[String, VersionedTable.DvMask] = Map.empty): DataFrame = {
+      masks: Map[String, GraftBitmap] = Map.empty): DataFrame = {
     // merge-on-read: files with a deletion vector read as their own
-    // branch minus the masked rows — legacy sidecars mask by obj_id,
-    // positional sidecars by row ordinal (`_metadata.row_index`, which
-    // the analyzer resolves through the branch's Project nodes down to
-    // its single file scan). The masked set is SMALL by construction
+    // branch minus the masked row ordinals (`_metadata.row_index`,
+    // which the analyzer resolves through the branch's Project nodes
+    // down to its single file scan). The masked set is SMALL by construction
     // (compaction materializes and clears it), so the per-file
     // branches and the mask filters stay bounded; the clean majority
     // keeps the shared-scan fast paths below untouched.
@@ -1738,22 +1626,10 @@ final class Instance(val spark: SparkSession, val root: String,
     if (masked.nonEmpty) {
       val clean = files.filterNot(masked.toSet)
       val branches = masked.sorted.map { f =>
-        val m = masks(f)
-        var df = viewOfPhys(Seq(f), ddl)
-        if (m.pos.nonEmpty)
-          df = df.withColumn("_graft_ri", col("_metadata.row_index"))
-            .where(!DvExpressions.posMasked(spark, m.pos, col("_graft_ri")))
-            .drop("_graft_ri")
-        val ids = m.ids
-        if (ids.isEmpty) df
-        else if (ids.length <= conf.idBroadcastThreshold)
-          df.filter(!col("obj_id").isin(ids.toSeq: _*))
-        else {
-          val s = spark
-          import s.implicits._
-          df.join(broadcast(ids.toSeq.toDF("obj_id")), Seq("obj_id"),
-            "left_anti")
-        }
+        viewOfPhys(Seq(f), ddl)
+          .withColumn("_graft_ri", col("_metadata.row_index"))
+          .where(!DvExpressions.posMasked(masks(f), col("_graft_ri")))
+          .drop("_graft_ri")
       }
       return (viewOfPhys(clean, ddl) +: branches).reduce(_.unionByName(_))
     }
@@ -2605,6 +2481,7 @@ final class Instance(val spark: SparkSession, val root: String,
       // accreting an empty part file the table carries to every later
       // scan until compaction
       keepEmptyPart: Boolean = false): Seq[String] = {
+    VersionedTable.requireInFileObjId(partitionBy0)
     txn.pendingObservedIds = None // never serve a stale batch's ids
     // CHECK constraints ride the write job itself: every staged row —
     // inserts, CoW rewrite survivors with their updated values, merge
@@ -3061,7 +2938,7 @@ final class Instance(val spark: SparkSession, val root: String,
   // cache can never go stale; bounded by the live dv count, which
   // compaction keeps small
   private val dvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, DvMask]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, GraftBitmap]]()
 
   // decided multi-commit outcomes (immutable once claimed) — each
   // cross-table commit costs each reading instance at most ONE
@@ -3106,23 +2983,8 @@ final class Instance(val spark: SparkSession, val root: String,
     decided
   }
 
-  /** Write one LEGACY id-keyed deletion-vector sidecar. New masks are
-    * positional ([[writeDvSidecarPos]]); this writer remains so the
-    * legacy-format read path stays exercised (and mixed old/new
-    * sidecar lists keep applying) without hand-crafted fixtures. */
-  private[acid] def writeDvSidecar(masks: Map[String, Seq[Long]]): String = {
-    val name = s"dv-${java.util.UUID.randomUUID().toString.take(12)}.json"
-    val out = fs.create(new Path(dataDir, name), false)
-    try out.write(VersionedTable.dvToJson(masks).getBytes("UTF-8"))
-    finally out.close()
-    name
-  }
-
-  /** Write one POSITIONAL deletion-vector sidecar: data file ->
-    * row-ordinal bitmap ([[GraftBitmap]]). The `dvp-` prefix is what
-    * [[VersionedTable.toJson]] keys the formatVersion-5 gate on — a
-    * reader that cannot apply positional masks must reject the table
-    * loudly, never resurrect its deleted rows. Driver-side write
+  /** Write one POSITIONAL deletion-vector sidecar (`dvp-` name): data
+    * file -> row-ordinal bitmap ([[GraftBitmap]]). Driver-side write
     * (point-delete-sized by contract; bulk deletes belong to the
     * copy-on-write paths). */
   private[acid] def writeDvSidecarPos(masks: Map[String, GraftBitmap])
@@ -3134,7 +2996,7 @@ final class Instance(val spark: SparkSession, val root: String,
     name
   }
 
-  private[acid] def readDvSidecar(name: String): Map[String, DvMask] =
+  private[acid] def readDvSidecar(name: String): Map[String, GraftBitmap] =
     dvCache.computeIfAbsent(name, { n =>
       val in = fs.open(new Path(dataDir, n))
       try {
@@ -3142,21 +3004,15 @@ final class Instance(val spark: SparkSession, val root: String,
         val buf = new Array[Byte](8192)
         var r = in.read(buf)
         while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-        val text = bytes.toString("UTF-8")
-        if (n.startsWith("dvp-"))
-          VersionedTable.dvPosFromJson(text).view
-            .mapValues(bm => DvMask(Array.emptyLongArray, bm)).toMap
-        else
-          VersionedTable.dvFromJson(text).view
-            .mapValues(ids => DvMask(ids, GraftBitmap.empty)).toMap
+        VersionedTable.dvPosFromJson(bytes.toString("UTF-8"))
       } finally in.close()
     })
 
   /** Resolve a state's dv map (file -> sidecar names) to the concrete
-    * per-file masks [[viewOf]] consumes, restricted to `files`: legacy
-    * id members union-sorted, positional bitmaps union-folded. */
+    * per-file row-ordinal masks [[viewOf]] consumes, restricted to
+    * `files`: each file's sidecar bitmaps union-folded. */
   private[acid] def resolveDvs(dvs: Map[String, Seq[String]],
-      files: Seq[String]): Map[String, DvMask] = {
+      files: Seq[String]): Map[String, GraftBitmap] = {
     if (dvs.isEmpty) return Map.empty
     val wanted = files.filter(dvs.contains)
     if (wanted.isEmpty) return Map.empty
@@ -3164,10 +3020,8 @@ final class Instance(val spark: SparkSession, val root: String,
     // small RPC on an object store
     pooledMap(wanted.flatMap(dvs).distinct)(readDvSidecar)
     wanted.map { f =>
-      val parts = dvs(f).map(n => readDvSidecar(n).getOrElse(f, DvMask.empty))
-      f -> DvMask(
-        parts.flatMap(_.ids).distinct.sorted.toArray,
-        parts.map(_.pos).foldLeft(GraftBitmap.empty)(_ union _))
+      f -> dvs(f).map(n => readDvSidecar(n).getOrElse(f, GraftBitmap.empty))
+        .foldLeft(GraftBitmap.empty)(_ union _)
     }.toMap
   }
 
@@ -3229,14 +3083,6 @@ final class Instance(val spark: SparkSession, val root: String,
       .map(_.file).collect().toSet
     finally wantB.destroy()
   }
-
-  /** Exact row count of a segmented checkpoint's side files — the
-    * fallback live-count source for LEGACY segmented manifests written
-    * before `ckptFiles` was recorded. One metadata-only Spark count
-    * (parquet footer row counts; no data pages), paid once per
-    * memoized state fold. */
-  private def sidecarCount(ref: String): Long =
-    readSidecarRows(ref).count()
 
   /** Every live file name of `st` as a ONE-COLUMN DataFrame (`file`):
     * inline states from the driver list, segmented states as a
@@ -4329,8 +4175,7 @@ final class Instance(val spark: SparkSession, val root: String,
       // sweep unreferenced ones past the grace — an in-flight txn's
       // just-written sidecar is shielded exactly like staged data
       fs.listStatus(dataDir)
-        .filter(e => e.isFile && (e.getPath.getName.startsWith("dv-") ||
-          e.getPath.getName.startsWith("dvp-")))
+        .filter(e => e.isFile && e.getPath.getName.startsWith("dvp-"))
         .foreach { e =>
           if (!liveDvs.contains(e.getPath.getName) &&
               !referencedDvs.contains(e.getPath.getName) &&
@@ -4437,15 +4282,13 @@ final class Instance(val spark: SparkSession, val root: String,
     * operational shape: pin the exact snapshot a training run
     * consumed, vacuum freely, reproduce later.
     *
-    * Why per-tag files: the previous single `_tags.json` was
+    * Why per-tag files: a single shared tag map would be
     * read-modify-rename — two concurrent taggers of DIFFERENT names
     * could last-writer-win each other, and a LOST tag lets vacuum
-    * reclaim a snapshot its holder believes pinned (verify-and-retry
-    * only narrowed the window). With one file per tag, creation is an
-    * atomic claim (no rival to clobber), deletion touches only its
-    * own file, and no interleaving can un-publish a verified tag.
-    * Legacy `_tags.json` files are readable and migrated to per-tag
-    * files on the first tag mutation.
+    * reclaim a snapshot its holder believes pinned. With one file per
+    * tag, creation is an atomic claim (no rival to clobber), deletion
+    * touches only its own file, and no interleaving can un-publish a
+    * verified tag.
     *
     * Reference analog: a checkpoint CSN pins recoverable state
     * (checkpointer.rs) — here the pin is named and user-held. */
@@ -4462,7 +4305,6 @@ final class Instance(val spark: SparkSession, val root: String,
     val v = if (version < 0L) latestVersion else version
     require(v >= 0L && v <= latestVersion,
       s"cannot tag uncommitted version $v (head ${latestVersion})")
-    migrateLegacyTags()
     fs.mkdirs(tagsDir)
     if (!claimSmallFile(tagFile(name), v.toString.getBytes("UTF-8")))
       throw new IllegalArgumentException(
@@ -4473,12 +4315,9 @@ final class Instance(val spark: SparkSession, val root: String,
 
   /** Drop a tag; false = no such tag. Reclamation of the previously
     * pinned history resumes at the next [[vacuum]]. Deleting one
-    * file cannot disturb concurrent taggers of OTHER names — the
-    * single-json lost-update hazard is structurally gone. */
-  def deleteTag(name: String): Boolean = {
-    migrateLegacyTags()
+    * file cannot disturb concurrent taggers of OTHER names. */
+  def deleteTag(name: String): Boolean =
     fs.delete(tagFile(name), false)
-  }
 
   private def tagsDir = new Path(root, "_tags")
   private def tagFile(name: String) = new Path(tagsDir, name + ".tag")
@@ -4509,83 +4348,29 @@ final class Instance(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Move every legacy `_tags.json` entry to its own claim file, then
-    * drop the json. Idempotent and race-tolerant: concurrent migrators
-    * claim the same (name, version) content, so whoever wins each file
-    * binds the identical pin, and [[tags]] reads the union until the
-    * json disappears. */
-  private def migrateLegacyTags(): Unit = {
-    val legacy = legacyTags()
-    if (legacy.isEmpty) return
-    fs.mkdirs(tagsDir)
-    legacy.foreach { case (n, v) =>
-      if (!fs.exists(tagFile(n)))
-        claimSmallFile(tagFile(n), v.toString.getBytes("UTF-8"))
-    }
-    // the json MUST go once its entries are migrated: tags() reads the
-    // union, so a surviving json would resurrect names deleteTag just
-    // removed (the per-tag file is gone, the legacy entry is not) —
-    // over-protective for vacuum, but the API would report a deletion
-    // that is not effective. Surface the failure instead of swallowing.
-    val json = new Path(root, "_tags.json")
-    val gone =
-      try fs.delete(json, false) || !fs.exists(json)
-      catch { case e: java.io.IOException =>
-        throw new java.io.IOException(
-          s"migrated legacy tags but could not remove $json — a " +
-          "surviving legacy file would resurrect deleted tag names", e)
-      }
-    if (!gone) throw new java.io.IOException(
-      s"migrated legacy tags but $json still exists — a surviving " +
-      "legacy file would resurrect deleted tag names")
-  }
-
-  /** Current tags (name -> version): the `_tags/` claim files, plus
-    * any not-yet-migrated legacy `_tags.json` entries (per-tag file
-    * wins on collision). A missing dir/file is the empty map; a READ
-    * FAILURE throws — every consumer of this map makes a protection
+  /** Current tags (name -> version): the `_tags/` claim files. A
+    * missing dir is the empty map; a READ FAILURE throws — every consumer of this map makes a protection
     * decision (vacuum's horizon clamp above all), and degrading a
     * transient store error to "no tags" would let a vacuum permanently
     * reclaim a snapshot the user believes pinned. */
-  def tags: Map[String, Long] = {
-    val fromFiles: Map[String, Long] =
-      if (!fs.exists(tagsDir)) Map.empty
-      else fs.listStatus(tagsDir).iterator
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".tag"))
-        .map { st =>
-          val p = st.getPath
-          val in = fs.open(p)
-          val s = try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val tmp = new Array[Byte](64)
-            var n = in.read(tmp)
-            while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-            new String(buf.toByteArray, "UTF-8").trim
-          } finally in.close()
-          require(s.nonEmpty && s.forall(_.isDigit),
-            s"corrupt tag file $p (content '$s')")
-          p.getName.dropRight(4) -> s.toLong
-        }.toMap
-    legacyTags() ++ fromFiles
-  }
-
-  /** Pre-migration single-file tag map (empty once migrated). */
-  private def legacyTags(): Map[String, Long] = {
-    val p = new Path(root, "_tags.json")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val s = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](8192)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-      """"((?:[^"\\]|\\.)+)"\s*:\s*(\d+)""".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-    }
-  }
+  def tags: Map[String, Long] =
+    if (!fs.exists(tagsDir)) Map.empty
+    else fs.listStatus(tagsDir).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".tag"))
+      .map { st =>
+        val p = st.getPath
+        val in = fs.open(p)
+        val s = try {
+          val buf = new java.io.ByteArrayOutputStream()
+          val tmp = new Array[Byte](64)
+          var n = in.read(tmp)
+          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
+          new String(buf.toByteArray, "UTF-8").trim
+        } finally in.close()
+        require(s.nonEmpty && s.forall(_.isDigit),
+          s"corrupt tag file $p (content '$s')")
+        p.getName.dropRight(4) -> s.toLong
+      }.toMap
 
   /** Version a tag names, or the parsed number if `spec` is numeric —
     * the shared resolver behind `VERSION AS OF` / `versionAsOf`. */
@@ -4875,7 +4660,7 @@ final class Instance(val spark: SparkSession, val root: String,
     withCommitLock { withRetryUnlocked(maxAttempts, backoffMs)(body) }
 
   /** ADVISORY blocking commit lock ([[EngineConf.commitLock]]): one
-    * exclusive-create claim file under `_manifests/` serializes whole
+    * atomically claimed file under `_manifests/` serializes whole
     * [[withRetry]] attempts, so hot-key writers queue (the reference's
     * tran_mgr.rs:85-127 wait semantics) instead of each redoing the
     * staging work an optimistic retry discards. Crash-released: a
@@ -4898,30 +4683,27 @@ final class Instance(val spark: SparkSession, val root: String,
     // skip the delete; correctness never depended on the lock anyway.
     val token = java.util.UUID.randomUUID().toString
     val deadline = System.currentTimeMillis() + conf.commitLockTimeoutMs
-    var acquired = false
-    while (!acquired) {
-      try {
-        val out = fs.create(lockPath, false) // exclusive create
-        try out.write(
-          token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        acquired = true
-      } catch {
-        case _: java.io.IOException =>
-          val stale =
-            try fs.getFileStatus(lockPath).getModificationTime <
-              System.currentTimeMillis() - conf.commitLockTimeoutMs
-            catch { case _: java.io.FileNotFoundException => false }
-          if (stale) {
-            // crash release: holder exceeded the bound, steal the claim
-            try fs.delete(lockPath, false)
-            catch { case scala.util.control.NonFatal(_) => () }
-          } else if (System.currentTimeMillis() >= deadline) {
-            throw new ConflictException(
-              s"commit lock at $lockPath not acquired within " +
-              s"${conf.commitLockTimeoutMs} ms")
-          } else Thread.sleep(5L)
-      }
+    // the claim goes through the store's atomic publish primitive, as
+    // manifests and tags do: `fs.create(path, overwrite = false)` is a
+    // check-then-create on the local FS, so racing writers could all
+    // "acquire" at once, and their interleaved data/.crc writes left a
+    // claim no holder could read back, so nobody released it and every
+    // later writer stalled for the full timeout
+    while (!claimSmallFile(lockPath,
+        token.getBytes(java.nio.charset.StandardCharsets.UTF_8))) {
+      val stale =
+        try fs.getFileStatus(lockPath).getModificationTime <
+          System.currentTimeMillis() - conf.commitLockTimeoutMs
+        catch { case _: java.io.FileNotFoundException => false }
+      if (stale) {
+        // crash release: holder exceeded the bound, steal the claim
+        try fs.delete(lockPath, false)
+        catch { case scala.util.control.NonFatal(_) => () }
+      } else if (System.currentTimeMillis() >= deadline) {
+        throw new ConflictException(
+          s"commit lock at $lockPath not acquired within " +
+          s"${conf.commitLockTimeoutMs} ms")
+      } else Thread.sleep(5L)
     }
     try body
     finally {
@@ -5181,8 +4963,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   }
 
   /** Resolved per-file masks for `files` under [[localDvs]]. */
-  private def localMasks(files: Seq[String])
-      : Map[String, VersionedTable.DvMask] =
+  private def localMasks(files: Seq[String]): Map[String, GraftBitmap] =
     inst.resolveDvs(localDvs(), files)
 
   /** Read-your-own-writes view (reference MVCC resolve accepts entries
@@ -5796,8 +5577,6 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * never prune). */
   def insertPartitioned(df: DataFrame, partitionBy: Seq[String]): Unit = {
     require(partitionBy.nonEmpty, "partitionBy must be non-empty")
-    require(!partitionBy.contains("obj_id"),
-      "obj_id cannot be a partition column (footer stats need it in-file)")
     adoptSchema(df) // validate BEFORE staging any data
     val staged = inst.writeStaged(df, this, partitionBy,
       observeIds = true, keepEmptyPart = true)
@@ -5852,7 +5631,13 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * value counts as not-matched-by-the-clause (SQL semantics).
     * Duplicate source keys are rejected: two source rows matching one
     * target row would make the rewrite nondeterministic (the same
-    * rule SQL MERGE enforces at runtime). */
+    * rule SQL MERGE enforces at runtime).
+    *
+    * A merge that changes no row publishes no version: an empty
+    * source, or a source whose keys all match with no matched clause
+    * (nothing to update, delete or insert), stages no file, and
+    * [[Instance.commit]] returns the read version without publishing
+    * — `latestVersion` does not move. */
   def merge(source: DataFrame,
       matchedDelete: Option[Column] = None,
       matchedUpdate: Map[String, Column] = Map.empty,
@@ -6053,7 +5838,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   /** Merge-on-read point delete: instead of rewriting every file that
     * holds one of `ids` (copy-on-write amplification: one masked row
     * costs a whole-file rewrite), write ONE small deletion-vector
-    * sidecar naming the (file, id) pairs and attach it to the touched
+    * sidecar of (file, row-ordinal) masks and attach it to the touched
     * files in the manifest. Readers subtract the mask per file — a
     * re-inserted id lands in a NEW file and is never masked — and
     * [[Instance.compact]] materializes and clears outstanding vectors,
@@ -6080,23 +5865,14 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       if (hits.nonEmpty) {
         // record row ORDINALS, not ids: the positional bitmap is the
         // bounded mask representation at scale (a task's mask cost is
-        // O(bitmap words), never O(deleted ids)). The one exception:
-        // a file partitioned BY obj_id carries no physical obj_id
-        // column to resolve ordinals against — those (pathological,
-        // one id per file) keep the legacy id sidecar, which readers
-        // still apply (mixed sidecar lists union per file).
-        val (byPath, physical) = hits.partition { case (f, _) =>
-          f.split('/').exists(_.startsWith("obj_id=")) }
+        // O(bitmap words), never O(deleted ids)). obj_id is always
+        // in-file (never a partition column — see writeStaged), so
+        // every hit file resolves its ordinals.
         val base = localDvs()
-        def attach(sidecar: String, fs_ : Iterable[String]): Unit =
-          fs_.foreach { f =>
-            dvDelta(f) = base.getOrElse(f, Nil) :+ sidecar
-          }
-        if (physical.nonEmpty)
-          attach(inst.writeDvSidecarPos(
-            rowOrdinalsOf(physical)), physical.keys)
-        if (byPath.nonEmpty)
-          attach(inst.writeDvSidecar(byPath), byPath.keys)
+        val sidecar = inst.writeDvSidecarPos(rowOrdinalsOf(hits))
+        hits.keys.foreach { f =>
+          dvDelta(f) = base.getOrElse(f, Nil) :+ sidecar
+        }
       }
     }
     objects ++= ids
@@ -6105,8 +5881,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
 
   /** Resolve (file -> hit obj_ids) to (file -> row-ordinal bitmap) by
     * one targeted scan of the hit files reading only `obj_id` plus the
-    * parquet row index. Rows already masked by a PRIOR vector (either
-    * representation) are excluded — a re-delete must stay a no-op, and
+    * parquet row index. Rows already masked by a PRIOR vector are
+    * excluded — a re-delete must stay a no-op, and
     * under the obj_id-unique-per-snapshot contract a hit id's only
     * unmasked row is the one pass 1 matched. Point-delete sized by the
     * same contract as [[deleteMoR]] (driver collects one (file,
@@ -6128,11 +5904,9 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     rows.groupBy(r => relativize(r.getString(2)))
       .flatMap { case (f, rs) =>
         val wanted = hits.getOrElse(f, Nil).toSet
-        val m = prior.getOrElse(f, VersionedTable.DvMask.empty)
+        val m = prior.getOrElse(f, GraftBitmap.empty)
         val ords = rs.iterator
-          .filter(r => wanted(r.getLong(0)) &&
-            !m.pos.contains(r.getLong(1)) &&
-            java.util.Arrays.binarySearch(m.ids, r.getLong(0)) < 0)
+          .filter(r => wanted(r.getLong(0)) && !m.contains(r.getLong(1)))
           .map(_.getLong(1)).toSeq
         if (ords.isEmpty) None else Some(f -> GraftBitmap(ords))
       }

@@ -1022,6 +1022,28 @@ class AcidSpec extends AnyFunSuite {
     assert(h.getAs[Long]("n_removed_files") == 0L)
   }
 
+  test("merge: a merge that changes no row publishes no version") {
+    val inst = VersionedTable.create(spark, freshDir(), AcidQueries.schema)
+    val t0 = inst.begin()
+    t0.insert(Seq((1L, 10L), (2L, 20L)).toDF("obj_id", "value"))
+    inst.commit(t0)
+    val head = inst.latestVersion
+    // (a) empty source
+    val ta = inst.begin()
+    ta.merge(Seq.empty[(Long, Long)].toDF("obj_id", "value"))
+    assert(inst.commit(ta) == head)
+    assert(inst.latestVersion == head)
+    // (b) every key matches, no matched clause, insertUnmatched: there
+    // is nothing to update, delete or insert
+    val tb = inst.begin()
+    tb.merge(Seq((1L, 111L), (2L, 222L)).toDF("obj_id", "value"),
+      insertUnmatched = true)
+    assert(inst.commit(tb) == head)
+    assert(inst.latestVersion == head)
+    assert(inst.read().collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap == Map(1L -> 10L, 2L -> 20L))
+  }
+
   test("merge: change feed classifies update/delete/insert per clause") {
     val inst = VersionedTable.create(spark, freshDir(), AcidQueries.schema)
     val t0 = inst.begin()
@@ -2247,6 +2269,40 @@ class AcidSpec extends AnyFunSuite {
     val buf = new Array[Byte](64); val n = in.read(buf); in.close()
     assert(new String(buf, 0, n, "UTF-8") == "stolen-by-waiter")
     hfs.delete(lock, false)
+  }
+
+  test("commit lock: writers released at the same instant hold it one at a time") {
+    // a check-then-create claim let racing writers all "acquire" at
+    // once and could leave a lock nobody released; the claim must be
+    // atomic. The timeout is short so a leaked lock fails fast.
+    val conf = graft.acid.EngineConf(commitLock = true,
+      commitLockTimeoutMs = 20000L)
+    (0 until 5).foreach { _ =>
+      val inst = VersionedTable.create(spark, freshDir(),
+        AcidQueries.schema, conf)
+      val inside = new java.util.concurrent.atomic.AtomicInteger(0)
+      val maxInside = new java.util.concurrent.atomic.AtomicInteger(0)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val ts = (0 until 4).map(_ => new Thread(() =>
+        try {
+          val w = VersionedTable.open(spark, inst.root, conf)
+          go.await()
+          w.withRetry() { _ =>
+            maxInside.accumulateAndGet(inside.incrementAndGet(), math.max)
+            Thread.sleep(20L)
+            inside.decrementAndGet()
+          }
+        } catch { case e: Throwable => errs.add(e) }))
+      ts.foreach(_.start()); go.countDown(); ts.foreach(_.join())
+      assert(errs.isEmpty, s"locked writers failed: ${errs.peek()}")
+      assert(maxInside.get == 1, s"${maxInside.get} writers held the lock")
+      val lock = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(inst.root), "_manifests/_commitlock")
+      val hfs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(inst.root), spark.sparkContext.hadoopConfiguration)
+      assert(!hfs.exists(lock), "commit lock must release after use")
+    }
   }
 
   test("fence tolerates a checkpoint folding the UNCHANGED watermark; movement still conflicts") {

@@ -305,6 +305,41 @@ class CatalogSpec extends AnyFunSuite {
       "CALL gcat.system.set_partitioning('pev.t', partition_by => 'nope')"))
   }
 
+  test("obj_id is refused as a partition column at every entry point") {
+    val msg = "obj_id cannot be a partition column"
+    def refused(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(chain.exists(_.contains(msg)), e.toString)
+    }
+    sql("CREATE NAMESPACE IF NOT EXISTS gcat.oidp")
+    sql("CREATE TABLE gcat.oidp.t (obj_id BIGINT, value BIGINT)")
+    sql("INSERT INTO gcat.oidp.t VALUES (1, 10), (2, 20)")
+    sql("INSERT INTO gcat.oidp.t VALUES (3, 30)")
+    val warehouse = spark.conf.get("spark.sql.catalog.gcat.warehouse")
+    val inst = VersionedTable.open(spark, warehouse + "/oidp/t")
+    val head = inst.latestVersion
+    // the API compaction path writes through writeStaged
+    refused(inst.compact(partitionBy = Some(Seq("obj_id"))))
+    assert(inst.latestVersion == head)
+    // the partitioning spec never records it, so a later CALL
+    // system.compact cannot write obj_id= directories either
+    refused(sql(
+      "CALL gcat.system.set_partitioning('oidp.t', partition_by => 'obj_id')"))
+    assert(inst.latestVersion == head)
+    sql("CALL gcat.system.compact('oidp.t', target_files => 1)")
+    assert(VersionedTable.open(spark, warehouse + "/oidp/t")
+      .tableStateAt(inst.latestVersion).inlineFiles
+      .forall(!_.contains("obj_id=")))
+    assert(sql("SELECT sum(value) FROM gcat.oidp.t").head().getLong(0) == 60L)
+    // nor does CREATE TABLE ... PARTITIONED BY create the table
+    refused(sql("CREATE TABLE gcat.oidp.p (obj_id BIGINT, value BIGINT) " +
+      "PARTITIONED BY (obj_id)"))
+    assert(!sql("SHOW TABLES IN gcat.oidp").collect()
+      .map(_.getString(1)).toSeq.contains("p"))
+  }
+
   test("CALL system.restore rolls back as a new commit; history stays time-travelable") {
     sql("CREATE NAMESPACE IF NOT EXISTS gcat.rst")
     sql("CREATE TABLE gcat.rst.t (obj_id BIGINT, value BIGINT)")

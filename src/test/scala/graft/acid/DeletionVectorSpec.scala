@@ -384,7 +384,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(st.dvs.size == 5 && st.dvs.values.forall(_.size == 1))
   }
 
-  test("positional sidecars: dvp- names, formatVersion 5 gate, ordinal precision") {
+  test("positional sidecars: dvp- names, ordinal precision") {
     // rows with IDENTICAL payloads: only the row ORDINAL can tell them
     // apart, so a mask that dropped the wrong row would corrupt silently
     val inst = mk(Seq((1L, 10L), (2L, 10L), (3L, 10L)))
@@ -395,33 +395,30 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(sidecar.startsWith("dvp-"), s"expected positional sidecar: $sidecar")
     // the mask is one ordinal, not an id list
     val mask = inst.resolveDvs(st.dvs, st.inlineFiles)(st.dvs.head._1)
-    assert(mask.ids.isEmpty && mask.pos.iterator.toSeq == Seq(1L))
-    // a manifest referencing a positional sidecar locks out pre-gen-5
-    // readers; the pre-delete manifest stays at its own minimum
-    def manifestText(v: Long) = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(new java.net.URI(inst.root).getPath,
-        "_manifests", f"v$v%020d.json")), "UTF-8")
-    assert(manifestText(2L).contains("\"formatVersion\":5"))
-    assert(!manifestText(1L).contains("\"formatVersion\":5"))
+    assert(mask.iterator.toSeq == Seq(1L))
   }
 
-  test("mixed legacy and positional sidecars on one file both apply") {
+  test("two positional sidecars on one file both apply") {
     val inst = mk(Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))
-    val st = inst.tableStateAt(1L)
-    val file = st.inlineFiles.head
-    // a legacy (id-keyed) sidecar as an older-generation writer left it,
-    // beside a positional one from the current writer
-    val legacy = inst.writeDvSidecar(Map(file -> Seq(2L)))
-    val pos = inst.writeDvSidecarPos(Map(file -> GraftBitmap(Seq(2L))))
-    val both = inst.resolveDvs(Map(file -> Seq(legacy, pos)), Seq(file))(file)
-    assert(both.ids.toSeq == Seq(2L) && both.pos.iterator.toSeq == Seq(2L))
-    // viewOf drops a row matched by EITHER representation: id 2 by the
-    // legacy mask, ordinal 3 (id 4's row) by a second positional mask
-    val pos2 = inst.writeDvSidecarPos(Map(file -> GraftBitmap(Seq(3L))))
-    val merged = inst.resolveDvs(Map(file -> Seq(legacy, pos2)), Seq(file))
-    val seen = inst.viewOf(Seq(file), AcidQueries.schema.toDDL, merged)
+    val file = inst.tableStateAt(1L).inlineFiles.head
+    val a = inst.writeDvSidecarPos(Map(file -> GraftBitmap(Seq(1L))))
+    val b = inst.writeDvSidecarPos(Map(file -> GraftBitmap(Seq(3L))))
+    val both = inst.resolveDvs(Map(file -> Seq(a, b)), Seq(file))
+    assert(both(file).iterator.toSeq == Seq(1L, 3L))
+    // viewOf drops a row matched by EITHER sidecar: ordinal 1 (id 2)
+    // and ordinal 3 (id 4)
+    val seen = inst.viewOf(Seq(file), AcidQueries.schema.toDDL, both)
       .orderBy("obj_id").collect().map(_.getLong(0)).toSeq
     assert(seen == Seq(1L, 3L))
+  }
+
+  test("masked reads register no session function") {
+    val inst = mk(Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    val t = inst.begin(); t.deleteMoR(Seq(2L)); inst.commit(t)
+    assert(contents(inst) == Seq((1L, 10L), (3L, 30L)))
+    // the mask predicate is built as a Column directly: reading a
+    // masked file leaves the shared function registry untouched
+    assert(!spark.catalog.functionExists("graft_pos_masked"))
   }
 
   test("sidecar integrity: corrupt dv fails loudly, never resurrects rows") {

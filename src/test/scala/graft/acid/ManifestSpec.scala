@@ -70,49 +70,77 @@ class ManifestSpec extends AnyFunSuite {
     }
   }
 
-  test("renames declare formatVersion 7; rename-free manifests keep their generation") {
-    val renamed = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
-      checkpoint = false, Nil, renames = Map("b" -> "a"))
-    assert(toJson(renamed).contains("\"formatVersion\":7"))
-    assert(fromJson(toJson(renamed)).renames == Map("b" -> "a"))
+  test("every manifest declares the one format generation") {
     val plain = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
       checkpoint = false, Nil)
-    assert(toJson(plain).contains("\"formatVersion\":2"))
-    // a manifest declaring a future generation still fails loudly
-    val future = toJson(plain).replace("\"formatVersion\":2",
-      "\"formatVersion\":10")
-    intercept[ManifestFormatException] { fromJson(future) }
+    val featured = Seq(plain,
+      plain.copy(appTxns = Map("q" -> 1L)),
+      plain.copy(dvs = Map("f" -> Seq("dvp-1.json"))),
+      plain.copy(multiRef = Some("file:/m/d.json")),
+      plain.copy(renames = Map("b" -> "a")),
+      plain.copy(tombstones = Seq("old_col")),
+      plain.copy(checkpoint = true, ckptRef = Some("ckpt-10-abc.parquet"),
+        ckptFiles = 50000L),
+      plain.copy(constraints = Map("v_pos" -> "v > 0")))
+    featured.foreach { m =>
+      val json = toJson(m)
+      assert(json.startsWith(
+        s"""{"formatVersion":${VersionedTable.FormatVersion},"""), json)
+      assert(fromJson(json) == m)
+    }
+    assert(VersionedTable.FormatVersion == 10)
   }
 
-  test("CHECK constraints declare formatVersion 9 and round-trip exactly") {
+  test("CHECK constraints round-trip exactly") {
     val cons = Map("v_pos" -> "v > 0",
       "weird" -> """s LIKE '%"x\\%' AND v != 0""")
     val m = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
       checkpoint = false, Nil, constraints = cons)
-    assert(toJson(m).contains("\"formatVersion\":9"))
     assert(fromJson(toJson(m)).constraints == cons)
-    // constraint-free manifests keep their earlier generation
-    val plain = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
-      checkpoint = false, Nil, tombstones = Seq("old_col"))
-    assert(toJson(plain).contains("\"formatVersion\":8"))
   }
 
-  test("tombstones and segmented-checkpoint refs declare formatVersion 8") {
+  test("tombstones and segmented-checkpoint refs round-trip") {
     val tombed = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
       checkpoint = false, Nil, tombstones = Seq("old_col"))
-    assert(toJson(tombed).contains("\"formatVersion\":8"))
     assert(fromJson(toJson(tombed)).tombstones == Seq("old_col"))
     val seg = Manifest(10, 2, "a BIGINT", Nil, Nil, Nil,
       checkpoint = true, Nil, ckptRef = Some("ckpt-10-abc.parquet"),
       ckptFiles = 50000L)
-    assert(toJson(seg).contains("\"formatVersion\":8"))
     val back = fromJson(toJson(seg))
     assert(back.ckptRef.contains("ckpt-10-abc.parquet") &&
       back.ckptFiles == 50000L)
-    // tombstone/ckptRef-free manifests keep their earlier generation
-    val plain = Manifest(1, 2, "a BIGINT", Nil, Nil, Nil,
-      checkpoint = false, Nil, renames = Map("b" -> "a"))
-    assert(toJson(plain).contains("\"formatVersion\":7"))
+  }
+
+  test("any other format generation, or no trailing crc, is refused") {
+    val m = Manifest(3, 42, "obj_id BIGINT", Seq("a/f1.parquet"), Nil,
+      Seq(1L), checkpoint = false, Nil, renames = Map("b" -> "a"))
+    val json = toJson(m)
+    val fv = s""""formatVersion":${VersionedTable.FormatVersion},"""
+    // re-seal a payload with a valid trailing crc, so a refusal is
+    // attributable to the generation alone
+    def sealCrc(payload: String): String =
+      payload.dropRight(1) +
+        s""","crc":${VersionedTable.crc32(payload)}}"""
+    val payload = json.substring(0, json.lastIndexOf(",\"crc\":")) + "}"
+    val cases: Seq[(String, String, String)] =
+      ("absent", sealCrc(payload.replace(fv, "")),
+        "declares no formatVersion") +:
+      ((2 to 9).map(g => (s"gen $g",
+        json.replace(fv, s""""formatVersion":$g,"""),
+        s"formatVersion $g is older")) :+
+      (("gen 11", json.replace(fv, """"formatVersion":11,"""),
+        "formatVersion 11 is newer")) :+
+      (("no trailing crc", payload, "no trailing crc")))
+    cases.foreach { case (label, text, cause) =>
+      val e = intercept[java.io.IOException](fromJson(text))
+      assert(e.getMessage.contains(cause), s"$label: ${e.getMessage}")
+      // a generation mismatch is deterministic (never retried as a
+      // torn read); a missing crc is what a torn read looks like
+      assert(e.isInstanceOf[ManifestFormatException] ==
+        (label != "no trailing crc"), label)
+    }
+    // the re-sealing itself is sound: the intact payload parses
+    assert(fromJson(sealCrc(payload)) == m)
   }
 
   test("edge strings: trailing backslash, escaped quote runs, unicode") {
@@ -158,16 +186,6 @@ class ManifestSpec extends AnyFunSuite {
     assert(fromJson(toJson(m)) == m)
   }
 
-  test("a legacy manifest with a non-trailing crc-lookalike field parses") {
-    // hypothetical pre-crc writer that carried an unrelated `crc` field
-    // mid-object: the lookalike is NOT in trailing position, so the
-    // integrity check must be skipped, not failed
-    val legacy = """{"version":5,"crc":999,"tsn":9,"schemaDDL":"obj_id BIGINT",""" +
-      """"added":[],"removed":[],"objects":[],"checkpoint":false,"allFiles":[]}"""
-    val m = fromJson(legacy)
-    assert(m.version == 5 && m.tsn == 9)
-  }
-
   test("paths with commas (hive does not escape ',') round-trip exactly") {
     // a partition value like `k=a,b` keeps its comma in the on-disk
     // name; a naive split-on-',' array parser corrupted added/removed
@@ -177,16 +195,16 @@ class ManifestSpec extends AnyFunSuite {
       removed = Seq("t/k=x,y,z/f.parquet"), objects = Seq(1L),
       checkpoint = true, allFiles = Seq("s/k=a,b/part-1.parquet"),
       stats = Map("s/k=a,b/part-1.parquet" -> (1L, 2L)),
-      dvs = Map("s/k=a,b/part-1.parquet" -> Seq("dv-1.json")),
-      allDvs = Map("s/k=a,b/part-1.parquet" -> Seq("dv-1.json")))
+      dvs = Map("s/k=a,b/part-1.parquet" -> Seq("dvp-1.json")),
+      allDvs = Map("s/k=a,b/part-1.parquet" -> Seq("dvp-1.json")))
     assert(fromJson(toJson(m)) == m)
   }
 
   test("dv sidecar payloads keyed by comma paths round-trip") {
-    val masks = Map("s/k=a,b/f1.parquet" -> Seq(3L, 1L),
-      "p/f2.parquet" -> Seq(2L))
-    val parsed = VersionedTable.dvFromJson(VersionedTable.dvToJson(masks))
-    assert(parsed.view.mapValues(_.toSeq).toMap ==
+    val masks = Map("s/k=a,b/f1.parquet" -> GraftBitmap(Seq(3L, 1L)),
+      "p/f2.parquet" -> GraftBitmap(Seq(2L)))
+    val parsed = VersionedTable.dvPosFromJson(VersionedTable.dvPosToJson(masks))
+    assert(parsed.view.mapValues(_.iterator.toSeq).toMap ==
       Map("s/k=a,b/f1.parquet" -> Seq(1L, 3L), "p/f2.parquet" -> Seq(2L)))
   }
 
@@ -195,25 +213,10 @@ class ManifestSpec extends AnyFunSuite {
       Nil, appTxns = Map("q1" -> 7L, "q2" -> 9L),
       appTxnTs = Map("q1" -> 123L, "q2" -> 456L))
     assert(fromJson(toJson(m)) == m)
-    // a gen-3 manifest written before stamps: appIds without appTs —
-    // entries fold as age-unknown (0) and are never retention-expired
-    val legacy = """{"formatVersion":3,"version":5,"tsn":9,""" +
-      """"schemaDDL":"obj_id BIGINT","added":[],"removed":[],""" +
-      """"objects":[],"checkpoint":false,"appIds":["q1"],""" +
-      """"appEpochs":[4],"allFiles":[]}"""
-    val lm = fromJson(legacy)
-    assert(lm.appTxns == Map("q1" -> 4L) && lm.appTxnTs.isEmpty)
-  }
-
-  test("pre-crc/pre-stats manifests (round-2 format) still parse") {
-    val legacy = """{"version":5,"tsn":9,"schemaDDL":"obj_id BIGINT",""" +
-      """"added":["d/f.parquet"],"removed":[],"objects":[7],""" +
-      """"checkpoint":false,"allFiles":[]}"""
-    val m = fromJson(legacy)
-    assert(m.version == 5 && m.tsn == 9 && m.added == Seq("d/f.parquet"))
-    assert(m.stats.isEmpty)
-    // pre-stamp manifests read as tsMillis=0 ("infinitely old"), so
-    // timestamp travel over a legacy prefix resolves instead of failing
-    assert(m.tsMillis == 0L)
+    // a stamp-less entry serializes as age-unknown (0) and parses back
+    // as absent — never retention-expired
+    val unstamped = m.copy(appTxnTs = Map("q1" -> 123L))
+    assert(toJson(unstamped).contains(""""appTs":[123,0]"""))
+    assert(fromJson(toJson(unstamped)) == unstamped)
   }
 }

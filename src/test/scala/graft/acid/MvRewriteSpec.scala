@@ -232,8 +232,7 @@ class MvRewriteSpec extends AnyFunSuite {
       finally spark.conf.unset(MvRewriteRule.MaxStalenessKey)
       // refresh re-arms the EXACT rewrite at the new head (min/max
       // answer again)
-      MaterializedAggView.openFromDef(spark, viewRoot,
-        resolveSource = MaterializedAggView.sessionResolver(spark)).refresh()
+      MaterializedAggView.openFromDef(spark, viewRoot).refresh()
       MvRewriteRule.invalidateCache()
       assert(scansView(
         srcDf(srcRoot).groupBy("g").agg(min("m").as("mn")), viewRoot))

@@ -185,25 +185,12 @@ class PublishSpec extends AnyFunSuite {
       "conditional-PUT path writes no temps")
   }
 
-  test("format gate: newer manifest generations fail loudly, legacy parses") {
+  test("format gate: newer manifest generations fail loudly") {
     val m = VersionedTable.Manifest(3L, 7L, "obj_id BIGINT", Seq("a.parquet"),
       Nil, Seq(1L, 2L), checkpoint = false, Nil)
     val json = VersionedTable.toJson(m)
-    // writes declare the MINIMUM generation their fields need — this
-    // manifest carries no appTxns, so gen 2 (gen-2 readers keep
-    // working on tables that never saw a streaming write)
-    assert(json.contains(""""formatVersion":2"""))
+    assert(json.contains(s""""formatVersion":${VersionedTable.FormatVersion}"""))
     assert(VersionedTable.fromJson(json).objects == Seq(1L, 2L))
-    // a streaming-epoch watermark needs the gen-3 gate: an old reader
-    // silently dropping it from a checkpoint fold would re-commit a
-    // replayed epoch (duplicate rows)
-    assert(VersionedTable.toJson(m.copy(appTxns = Map("q" -> 1L)))
-      .contains(""""formatVersion":3"""))
-    // a pre-formatVersion manifest (rounds <= 5) still parses: absence
-    // implies generation 1
-    val legacy = """{"version":5,"tsn":9,"schemaDDL":"obj_id BIGINT",""" +
-      """"added":[],"removed":[],"objects":[1,2],"checkpoint":false,"allFiles":[]}"""
-    assert(VersionedTable.fromJson(legacy).version == 5L)
     // a FUTURE generation is rejected with the dedicated error — and
     // BEFORE the crc check (a future format may hash differently), which
     // the now-stale crc of the edited text would otherwise trip first

@@ -340,19 +340,14 @@ class StreamWriteSpec extends AnyFunSuite {
       Seq((1L, "fr", 100L), (2L, "de", 20L), (3L, "en", 30L)))
   }
 
-  test("manifest appTxns: gen-3 only when present, roundtrip, legacy unaffected") {
+  test("manifest appTxns roundtrip") {
     import VersionedTable._
     val m = Manifest(7L, 3L, "obj_id BIGINT", Seq("f1"), Nil, Seq(1L),
       checkpoint = false, allFiles = Nil,
       appTxns = Map("q1" -> 42L, "q0" -> 7L))
-    val js = toJson(m)
-    assert(js.contains("\"formatVersion\":3"))
-    val back = fromJson(js)
+    val back = fromJson(toJson(m))
     assert(back.appTxns == Map("q1" -> 42L, "q0" -> 7L))
-    // no watermark -> still generation 2: gen-2 readers keep working
-    // on tables that never saw a streaming write
     val plain = m.copy(appTxns = Map.empty)
-    assert(toJson(plain).contains("\"formatVersion\":2"))
     assert(fromJson(toJson(plain)).appTxns.isEmpty)
   }
 

@@ -129,24 +129,6 @@ class TagSpec extends AnyFunSuite {
       .map(_.getLong(1)).toSeq == Seq(10L, 20L))
   }
 
-  test("legacy _tags.json reads and migrates to per-tag files") {
-    val t = fresh()
-    t.withRetry() { x => x.insert(Seq((1L, 10L)).toDF("obj_id", "value")) }
-    // plant a pre-migration single-file tag map
-    val legacy = new org.apache.hadoop.fs.Path(t.root, "_tags.json")
-    val out = t.fs.create(legacy, true)
-    try out.write("""{"old1":1,"old2":1}""".getBytes("UTF-8"))
-    finally out.close()
-    assert(t.tags == Map("old1" -> 1L, "old2" -> 1L))
-    assert(t.snapshotByTag("old1").count() == 1)
-    // first mutation migrates: entries move to _tags/, json disappears
-    t.tagVersion("fresh1", 1L)
-    assert(!t.fs.exists(legacy))
-    assert(t.tags == Map("old1" -> 1L, "old2" -> 1L, "fresh1" -> 1L))
-    assert(t.deleteTag("old1"))
-    assert(t.tags == Map("old2" -> 1L, "fresh1" -> 1L))
-  }
-
   test("SQL surface: tag / list_tags / VERSION AS OF 'name' / delete_tag") {
     val tag = java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)
