@@ -201,6 +201,42 @@ private[acid] object GraftTableSource {
         Option(tz)).eval(null), dt)
   }
 
+  /** May data file `rel` hold a row that passes every filter? The
+    * manifest-stats skip test shared by [[GraftScan]] and
+    * [[ManifestFileIndex]]; `filters` are single-column. Each index gets
+    * a veto: hive `k=v` path values, the obj_id primary range, Z-order
+    * colStats, the always-on universal footer stats and the per-file
+    * bloom (equality/IN on declared columns; spilled pointers resolve
+    * through `resolveBloom`). `phys` maps a filter's column to the
+    * physical name the paths and stat indexes spell; `schema` types the
+    * partition values by the filter's own column name. A file with no
+    * entry for a column is kept — skipping only drops provably-dead IO. */
+  def fileMayMatch(filters: Seq[sources.Filter], schema: StructType,
+      phys: String => String, skip: VersionedTable.SkipStats,
+      resolveBloom: String => Option[String])(rel: String): Boolean = {
+    val parts = partPairs(rel).toMap
+    filters.forall { f =>
+      val c = f.references.head
+      val pc = phys(c)
+      if (parts.contains(pc)) {
+        val dt = schema.find(_.name == c).map(_.dataType).getOrElse(StringType)
+        partMayMatch(f, partValue(parts(pc), dt))
+      } else {
+        val range =
+          if (c == "obj_id") skip.ids.get(rel)
+          else skip.colStats.get(rel).flatMap(_.get(pc))
+        val ustats = skip.fileStats.get(rel)
+        range.forall(rangeMayMatch(f, _)) &&
+          // reserved-name guard: a user column spelled "#rows" is
+          // simply not skippable (its key holds the row-count stat)
+          (pc == VersionedTable.RowsKey ||
+            ustats.flatMap(_.get(pc)).forall(ustatMayMatch(f, _))) &&
+          ustats.flatMap(_.get(VersionedTable.BloomKeyPrefix + pc))
+            .forall(bloomMayMatch(f, _, resolveBloom))
+      }
+    }
+  }
+
   /** Executor-safe mirror of GraftScan's per-file skip loop for
     * segmented-checkpoint side-car rows: same veto order (partition
     * path, then primary/Z-order range, then universal footer stats),
@@ -1407,42 +1443,12 @@ private[acid] final class GraftScan(root: String, version: Long,
   }
 
   private def computePrunedFiles(): Seq[String] = {
-    val (files, stats, colStats) =
-      (state.inlineFiles, state.stats, state.colStats)
+    val files = state.inlineFiles
     val allFilters = filters ++ runtimeFilters
-    def driverPred(rel: String): Boolean = {
-      val parts = GraftTableSource.partPairs(rel).toMap
-      allFilters.forall { f =>
-        // filters reference LOGICAL names; paths and stat indexes are
-        // keyed by the fixed physical names
-        val c = f.references.head
-        val pc = phys(c)
-        if (parts.contains(pc)) {
-          val dt = tableSchema.find(_.name == c).map(_.dataType)
-            .getOrElse(StringType)
-          GraftTableSource.partMayMatch(f,
-            GraftTableSource.partValue(parts(pc), dt))
-        } else {
-          val range =
-            if (c == "obj_id") stats.get(rel)
-            else colStats.get(rel).flatMap(_.get(pc))
-          // Z-order/primary ranges AND the always-on universal footer
-          // stats both get a veto — either index may skip the file
-          range.forall(GraftTableSource.rangeMayMatch(f, _)) &&
-            // reserved-name guard: a user column spelled "#rows" is
-            // simply not skippable (its key holds the row-count stat)
-            (pc == VersionedTable.RowsKey ||
-              state.fileStats.get(rel).flatMap(_.get(pc))
-                .forall(GraftTableSource.ustatMayMatch(f, _))) &&
-            // per-file bloom veto for equality/IN on declared columns
-            // (spilled pointers resolve through the instance's own fs)
-            state.fileStats.get(rel)
-              .flatMap(_.get(VersionedTable.BloomKeyPrefix + pc))
-              .forall(GraftTableSource.bloomMayMatch(f, _,
-                inst.resolveBloomPointer))
-        }
-      }
-    }
+    // filters reference LOGICAL names; paths and stat indexes are keyed
+    // by the fixed physical names
+    val driverPred = GraftTableSource.fileMayMatch(allFilters.toSeq,
+      tableSchema, phys, state.skipStats, inst.resolveBloomPointer) _
     state.sidecar match {
       case Some(sc) =>
         // segmented snapshot: the O(files) skip loop runs as a
@@ -1450,7 +1456,7 @@ private[acid] final class GraftScan(root: String, version: Long,
         // veto logic — GraftTableSource.sidecarPred is the executor
         // mirror of driverPred); only the O(tail) inline files screen
         // on the driver. Survivor NAMES are all that comes back.
-        val driverPart = state.inlineFiles.filter(driverPred)
+        val driverPart = files.filter(driverPred)
         val distPart = inst.sidecarSurvivorsStatus(sc)(
           GraftTableSource.sidecarPred(allFilters, state.renames,
             tableSchema, inst.dataDir.toString,

@@ -5,9 +5,15 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
+import org.apache.spark.sql.graft.PlanBridge.localFrame
 
 /** Versioned ACID table layer — capability parity with db-core's
   * transactional storage engine (SURVEY.md §2.1), re-expressed Spark-first
@@ -256,7 +262,32 @@ object VersionedTable {
     /** Exact number of live data files in this snapshot. */
     def numFiles: Long =
       if (liveCount >= 0L) liveCount else inlineFiles.size.toLong
+    def skipStats: SkipStats = SkipStats(stats, colStats, fileStats)
   }
+
+  /** A snapshot's per-file skip index, keyed by dataDir-relative file
+    * name and PHYSICAL column name: obj_id ranges, Z-order cluster
+    * ranges, and universal footer stats (per-file blooms included). The
+    * input of [[GraftTableSource.fileMayMatch]]. */
+  final case class SkipStats(ids: Map[String, (Long, Long)],
+      colStats: Map[String, Map[String, (Long, Long)]],
+      fileStats: Map[String, Map[String, UStat]])
+
+  /** The obj_ids of driver-resident rows; None when `schema` has no
+    * LONG obj_id or a row's id is null. */
+  private[acid] def objIdsOf(rows: Seq[InternalRow],
+      schema: StructType): Option[Seq[Long]] = {
+    val i = schema.fieldNames.indexOf("obj_id")
+    if (i >= 0 && schema(i).dataType == LongType && rows.forall(!_.isNullAt(i)))
+      Some(rows.map(_.getLong(i)))
+    else None
+  }
+
+  /** `logical` with each column under its PHYSICAL (on-disk) name,
+    * field order kept. */
+  private[acid] def physSchema(logical: StructType,
+      renames: Map[String, String]): StructType =
+    StructType(logical.map(f => f.copy(name = renames.getOrElse(f.name, f.name))))
 
   /** Dotted PHYSICAL leaf paths to stat-index for file skipping:
     * either the explicit [[EngineConf.statsColumnList]] (logical
@@ -1577,7 +1608,8 @@ final class Instance(val spark: SparkSession, val root: String,
     // plan by construction; the name list is transient plan input
     // (liveNames), not driver-resident state
     val names = liveNames(st)
-    viewOf(names, st.ddl, resolveDvs(st.dvs, names), st.renames)
+    viewOf(names, st.ddl, resolveDvs(st.dvs, names), st.renames,
+      Some(st.skipStats))
   }
 
   /** DataFrame over an explicit file set (shared by committed snapshots
@@ -1593,11 +1625,18 @@ final class Instance(val spark: SparkSession, val root: String,
     * plan entirely: manifest-level partition pruning with zero file
     * opens. Unpartitioned files (no k=v segments) read exactly as
     * before; CoW rewrites materialize the column physically, which
-    * degrades pruning for the rewritten files but never correctness. */
+    * degrades pruning for the rewritten files but never correctness.
+    *
+    * Every file group but a wide hive-layout one reads through a
+    * [[ManifestFileIndex]] over its manifest names, so nothing is
+    * listed; with `skip` (the snapshot's or the transaction's manifest
+    * stats) the scan's pushed filters also drop files by their stats
+    * before any status is fetched. */
   private[acid] def viewOf(files: Seq[String], ddl: String,
       masks: Map[String, GraftBitmap] = Map.empty,
-      renames: Map[String, String] = Map.empty): DataFrame =
-    if (renames.isEmpty) viewOfPhys(files, ddl, masks)
+      renames: Map[String, String] = Map.empty,
+      skip: Option[SkipStats] = None): DataFrame =
+    if (renames.isEmpty) viewOfPhys(files, ddl, masks, skip)
     else {
       // COLUMN MAPPING: the files (column names, k=v path segments,
       // footer stats) live entirely in PHYSICAL namespace, so the read
@@ -1606,15 +1645,13 @@ final class Instance(val spark: SparkSession, val root: String,
       // scan's own projections, so the indirection costs nothing at
       // runtime.
       val logical = StructType.fromDDL(ddl)
-      val physDdl = StructType(logical.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name)))).toDDL
-      viewOfPhys(files, physDdl, masks)
+      viewOfPhys(files, physSchema(logical, renames).toDDL, masks, skip)
         .select(logical.map(f =>
           col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
     }
 
   private def viewOfPhys(files: Seq[String], ddl: String,
-      masks: Map[String, GraftBitmap] = Map.empty): DataFrame = {
+      masks: Map[String, GraftBitmap], skip: Option[SkipStats]): DataFrame = {
     // merge-on-read: files with a deletion vector read as their own
     // branch minus the masked row ordinals (`_metadata.row_index`,
     // which the analyzer resolves through the branch's Project nodes
@@ -1626,17 +1663,16 @@ final class Instance(val spark: SparkSession, val root: String,
     if (masked.nonEmpty) {
       val clean = files.filterNot(masked.toSet)
       val branches = masked.sorted.map { f =>
-        viewOfPhys(Seq(f), ddl)
+        viewOfPhys(Seq(f), ddl, Map.empty, skip)
           .withColumn("_graft_ri", col("_metadata.row_index"))
           .where(!DvExpressions.posMasked(masks(f), col("_graft_ri")))
           .drop("_graft_ri")
       }
-      return (viewOfPhys(clean, ddl) +: branches).reduce(_.unionByName(_))
+      return (viewOfPhys(clean, ddl, Map.empty, skip) +: branches)
+        .reduce(_.unionByName(_))
     }
     val schema = StructType.fromDDL(ddl)
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (files.isEmpty) return localFrame(spark, schema, Nil)
     def partsOf(f: String): Seq[(String, String)] =
       f.split('/').drop(1).dropRight(1).toSeq.flatMap { seg =>
         val i = seg.indexOf('=')
@@ -1646,8 +1682,7 @@ final class Instance(val spark: SparkSession, val root: String,
     def readGroup(parts: Seq[(String, String)], fs_ : Seq[String]): DataFrame = {
       val partCols = parts.map(_._1).toSet
       val fileSchema = StructType(schema.filterNot(f => partCols(f.name)))
-      var df = spark.read.schema(fileSchema)
-        .parquet(fs_.map(f => new Path(dataDir, f).toString): _*)
+      var df = scanOf(fs_, fileSchema, skip)
       parts.foreach { case (k, raw) =>
         val dt = schema.find(_.name == k).map(_.dataType)
           .getOrElse(org.apache.spark.sql.types.StringType)
@@ -1660,8 +1695,7 @@ final class Instance(val spark: SparkSession, val root: String,
       df.select(schema.map(f => col(f.name)): _*)
     }
     if (groups.size == 1 && groups.keys.head.isEmpty)
-      spark.read.schema(schema)
-        .parquet(files.map(f => new Path(dataDir, f).toString): _*)
+      scanOf(files, schema, skip)
     else {
       // Wide-fanout fast path: one literal-column branch per partition
       // tuple is ideal for a handful of groups (constant-folding prunes
@@ -1697,6 +1731,73 @@ final class Instance(val spark: SparkSession, val root: String,
     }
   }
 
+  /** Parquet scan of `files` (dataDir-relative, no partition columns
+    * in `schema`) through a [[ManifestFileIndex]]. */
+  private[acid] def scanOf(files: Seq[String], schema: StructType,
+      skip: Option[SkipStats] = None): DataFrame =
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        new ManifestFileIndex(this, files, schema, skip), new StructType(),
+        schema, None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** Driver-side read of a few small files on the calling thread, with
+    * the reader GraftScan's factory builds (Spark's parquet reader plus
+    * the row-index column): per file, in file order, each unmasked row
+    * of `schema` (PHYSICAL names) with its row ordinal. Point operations
+    * use it to skip a Spark job's dispatch, which costs more than
+    * reading a small file. None — the caller takes its job path — when a
+    * file is partitioned or the files' total length passes
+    * `spark.sql.files.openCostInBytes`, Spark's own estimate of what
+    * opening one file costs. */
+  private[acid] def pointRows(files: Seq[String], schema: StructType,
+      masks: Map[String, GraftBitmap])
+      : Option[Seq[(String, IndexedSeq[(Long, InternalRow)])]] = {
+    if (files.exists(f => GraftTableSource.partPairs(f).nonEmpty)) return None
+    // statuses one at a time, stopping as soon as the gate is passed: a
+    // point op has few candidates, and a refused one pays little
+    val gate = spark.sessionState.conf.filesOpenCostInBytes
+    var total = 0L
+    val statuses = files.iterator.map { f =>
+      val st = fs.getFileStatus(new Path(dataDir, f)); total += st.getLen; st
+    }.takeWhile(_ => total <= gate).toVector
+    if (statuses.size < files.size) return None
+    val withRi = schema.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+      LongType)
+    val riIdx = schema.length
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      withRi, new StructType(), withRi, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val proj = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+    Some(files.zip(statuses).map { case (f, st) =>
+      val mask = masks.getOrElse(f, GraftBitmap.empty)
+      val it = read(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+        st.getModificationTime, st.getLen))
+      val rows =
+        try it.flatMap { r =>
+          val ri = r.getLong(riIdx)
+          if (mask.contains(ri)) None else Some(ri -> proj(r).copy())
+        }.toIndexedSeq
+        finally it match { case c: java.io.Closeable => c.close(); case _ => }
+      f -> rows
+    })
+  }
+
+  /** [[viewOf]] for a point read: below the [[pointRows]] gate the files
+    * are read here and come back as a local relation, so filtering and
+    * collecting it runs no Spark job. */
+  private[acid] def pointView(files: Seq[String], ddl: String,
+      masks: Map[String, GraftBitmap],
+      renames: Map[String, String]): DataFrame = {
+    val schema = StructType.fromDDL(ddl)
+    pointRows(files, physSchema(schema, renames), masks) match {
+      case Some(rows) => localFrame(spark, schema, rows.flatMap(_._2.map(_._2)))
+      case None => viewOf(files, ddl, masks, renames)
+    }
+  }
+
   /** Current committed table contents. */
   def read(): DataFrame = snapshot(latestVersion)
 
@@ -1713,7 +1814,7 @@ final class Instance(val spark: SparkSession, val root: String,
     try {
       val files = txn.candidateFilesBy(column, values)
       val st = tableStateAt(txn.readVersion)
-      viewOf(files, st.ddl, resolveDvs(st.dvs, files), st.renames)
+      pointView(files, st.ddl, resolveDvs(st.dvs, files), st.renames)
         .filter(col(column).isin(values: _*))
     } finally rollback(txn) // committed files only — nothing to reclaim
   }
@@ -2480,7 +2581,11 @@ final class Instance(val spark: SparkSession, val root: String,
       // stage NOTHING when empty, so each all-empty rewrite stops
       // accreting an empty part file the table carries to every later
       // scan until compaction
-      keepEmptyPart: Boolean = false): Seq[String] = {
+      keepEmptyPart: Boolean = false,
+      // the caller's rows are already on the driver (a point rewrite
+      // read below the Instance.pointRows gate): a local relation of
+      // any size takes the driver-side write
+      driverRows: Boolean = false): Seq[String] = {
     VersionedTable.requireInFileObjId(partitionBy0)
     txn.pendingObservedIds = None // never serve a stale batch's ids
     // CHECK constraints ride the write job itself: every staged row —
@@ -2510,16 +2615,20 @@ final class Instance(val spark: SparkSession, val root: String,
     // stats, and codec, so every downstream surface (skipping,
     // checkpoint folds, DuckDB parity) sees exactly what the job path
     // writes.
-    val localRows: Option[(Seq[org.apache.spark.sql.catalyst.InternalRow],
-        StructType)] =
+    // A point rewrite's survivors plus its updated rows arrive as a
+    // union of local relations, whose rows simply concatenate.
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+    val maxRows = if (driverRows) Int.MaxValue else conf.fastPathRows
+    val localRows: Option[(Seq[InternalRow], StructType)] =
       if (partitionBy.nonEmpty || conf.fastPathRows <= 0) None
-      else df.queryExecution.optimizedPlan match {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-            if l.data.nonEmpty && l.data.length <= conf.fastPathRows =>
-          Some((l.data, l.schema))
+      else (df.queryExecution.optimizedPlan match {
+        case l: LocalRelation => Some((l.data, l.schema))
+        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+          Some((u.children.flatMap(_.asInstanceOf[LocalRelation].data),
+            u.schema))
         case _ => None
-      }
-    localRows match {
+      }).filter { case (rows, _) => rows.nonEmpty && rows.length <= maxRows }
+    val staged0 = localRows match {
       case Some((rows, schema)) =>
         val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
         writeLocalParquet(new Path(out, name), rows, schema)
@@ -2528,10 +2637,8 @@ final class Instance(val spark: SparkSession, val root: String,
         // is always "obj_id" — the primary key is exempt from column
         // mapping, same assumption stagedIdsDf makes). A null id falls
         // back to the job path rather than guessing.
-        val idIdx = schema.fieldNames.indexOf("obj_id")
-        if (idIdx >= 0 && schema(idIdx).dataType == LongType &&
-            rows.forall(!_.isNullAt(idIdx)))
-          txn.stagedLocalIds(s"$sub/$name") = rows.map(_.getLong(idIdx)).toSeq
+        objIdsOf(rows, schema).foreach(txn.stagedLocalIds(s"$sub/$name") = _)
+        Seq(s"$sub/$name") // the one file just written: nothing to list
       case None =>
         val obs =
           if (observeIds && df.columns.contains("obj_id"))
@@ -2554,22 +2661,22 @@ final class Instance(val spark: SparkSession, val root: String,
               xs.asInstanceOf[scala.collection.Seq[Long]].toArray
             case xs: Array[Long] => xs
           })
+        // recursive listing: a partitioned write nests k=v dirs, and
+        // the relative path (with its k=v segments) IS how the manifest
+        // carries each file's partition values — no format change
+        // needed. Segments come from raw on-disk NAMES (never URIs,
+        // whose percent-encoding would diverge from the disk spelling
+        // for values hive escapes or that contain spaces).
+        def leaves(p: Path, prefix: String): Seq[String] = {
+          fs.listStatus(p).toSeq.flatMap { e =>
+            val rel = s"$prefix/${e.getPath.getName}"
+            if (e.isDirectory) leaves(e.getPath, rel)
+            else if (e.getPath.getName.endsWith(".parquet")) Seq(rel)
+            else Nil
+          }
+        }
+        leaves(new Path(out), sub)
     }
-    // recursive listing: a partitioned write nests k=v dirs, and the
-    // relative path (with its k=v segments) IS how the manifest carries
-    // each file's partition values — no format change needed. Segments
-    // come from raw on-disk NAMES (never URIs, whose percent-encoding
-    // would diverge from the disk spelling for values hive escapes or
-    // that contain spaces).
-    def leaves(p: Path, prefix: String): Seq[String] = {
-      fs.listStatus(p).toSeq.flatMap { e =>
-        val rel = s"$prefix/${e.getPath.getName}"
-        if (e.isDirectory) leaves(e.getPath, rel)
-        else if (e.getPath.getName.endsWith(".parquet")) Seq(rel)
-        else Nil
-      }
-    }
-    val staged0 = leaves(new Path(out), sub)
     // per-file stats from the parquet FOOTER — a driver-side metadata
     // read (no Spark job), the same way lakehouse formats derive file
     // skipping stats at write time: obj_id's primary range index PLUS
@@ -2892,7 +2999,8 @@ final class Instance(val spark: SparkSession, val root: String,
     * — the job path's write support, invoked in-process: identical
     * physical types, logical annotations, footer statistics, and
     * session codec, with zero task dispatch. Bounded by
-    * [[EngineConf.fastPathRows]] callers only. */
+    * [[EngineConf.fastPathRows]] rows, or for a point rewrite's
+    * driver-resident rows by the [[pointRows]] byte gate. */
   private def writeLocalParquet(file: Path,
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
       schema: StructType): Unit = {
@@ -4980,7 +5088,17 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     // (segmented: streamed off the side files), never retained
     val files = (inst.liveNames(cachedBaseState()).toSet --
       removed ++ added).toSeq.sorted
-    inst.viewOf(files, ddl, localMasks(files), localRen)
+    inst.viewOf(files, ddl, localMasks(files), localRen, Some(localSkip))
+  }
+
+  /** Txn-local skip index: the pinned snapshot's manifest stats minus
+    * removed files plus this transaction's staged ones, so a filtered
+    * [[read]] skips staged files by their stats too. */
+  private def localSkip: SkipStats = {
+    val b = cachedBaseState()
+    SkipStats(b.stats -- removed ++ addedStats,
+      b.colStats -- removed ++ addedColStats,
+      b.fileStats -- removed ++ addedFileStats)
   }
 
   /** Files whose manifest obj-id range can contain one of `ids` — the
@@ -5594,8 +5712,31 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * distributed ([[deleteMatching]] + an [[ObjSummary]] in the
     * manifest), so NOTHING here is O(batch) on the driver or in
     * metadata. Either way the delete side prunes to candidate files
-    * via manifest id-range stats — an upsert never scans the table. */
-  def upsert(df: DataFrame): Unit = {
+    * via manifest id-range stats — an upsert never scans the table. A
+    * literal batch of at most [[EngineConf.fastPathRows]] rows takes its
+    * ids straight from the plan, so with small candidate files the
+    * whole upsert runs no Spark job (see [[Instance.pointRows]]). */
+  def upsert(df: DataFrame): Unit = localIds(df) match {
+    // a small literal batch carries its ids in the plan: no probe job,
+    // and no persist — which would turn the plan into an
+    // InMemoryRelation and push the insert off the driver-side write
+    case Some(ids) =>
+      delete(ids.distinct)
+      insert(df)
+    case None => upsertPersisted(df)
+  }
+
+  /** The obj_ids of `df` when it is a local relation of at most
+    * [[EngineConf.fastPathRows]] rows with non-null ids. */
+  private def localIds(df: DataFrame): Option[Seq[Long]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.data.nonEmpty && l.data.length <= inst.conf.fastPathRows =>
+        objIdsOf(l.data, l.schema)
+      case _ => None
+    }
+
+  private def upsertPersisted(df: DataFrame): Unit = {
     // consumed multiple times (key probe + delete + insert): persist so
     // a nondeterministic input can't desynchronize the deleted keys
     // from the inserted rows
@@ -5814,25 +5955,94 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * not the whole snapshot. Reads the txn-local view, so repeated
     * mutations in one transaction compose (read-your-own-writes). */
   def delete(ids: Seq[Long]): Unit = {
-    val (_, ddl, _) = localState()
     val cand = candidateFiles(ids)
-    if (cand.nonEmpty) {
-      val masks = localMasks(cand)
-      val snap = inst.viewOf(cand, ddl, masks, localRen)
-        .withColumn("_file", input_file_name())
-      val hit = idMatch(snap, ids)
-        .select("_file").distinct().collect().map(_.getString(0))
-      if (hit.nonEmpty) {
-        val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
-        val survivors = idReject(touched, ids)
-        // no isEmpty pre-probe — writeStaged drops zero-row parts
-        val rewritten = inst.writeStaged(survivors, this)
-        retire(hit.toSeq.map(relativize))
-        added ++= rewritten
-      }
-    }
+    if (cand.nonEmpty) rewriteHits(cand, ids, None)
     objects ++= ids
     spillObjectsIfNeeded()
+  }
+
+  /** Copy-on-write core of [[delete]] and [[update]]: rewrite the files
+    * among `cand` that hold an unmasked row of `ids` — their other rows,
+    * plus `transform` of the matched rows for an update — and retire
+    * them. Below the [[Instance.pointRows]] gate the candidates are read
+    * on the driver and the rewrite takes writeStaged's driver-side
+    * write, so the whole operation runs no Spark job; a hit file left
+    * with no row is retired and nothing is staged for it. Above the
+    * gate one scan finds the hit files and the rewrite is a write job. */
+  private def rewriteHits(cand: Seq[String], ids: Seq[Long],
+      transform: Option[DataFrame => DataFrame]): Unit = {
+    val (_, ddl, _) = localState()
+    val schema = StructType.fromDDL(ddl)
+    val masks = localMasks(cand)
+    inst.pointRows(cand, physSchema(schema, localRen), masks) match {
+      case Some(files) =>
+        val want = ids.toSet
+        val idIdx = schema.fieldIndex("obj_id")
+        val hit = files.filter(_._2.exists(r => want(r._2.getLong(idIdx))))
+        if (hit.nonEmpty) {
+          val (matched, kept) = hit.flatMap(_._2.map(_._2))
+            .partition(r => want(r.getLong(idIdx)))
+          val rows = transform match {
+            case None if kept.isEmpty => None
+            case None => Some(localFrame(inst.spark, schema, kept))
+            case Some(t) => Some(localFrame(inst.spark, schema, kept)
+              .unionByName(t(localFrame(inst.spark, schema, matched))))
+          }
+          val rewritten = rows.fold(Seq.empty[String])(
+            inst.writeStaged(_, this, driverRows = true))
+          retire(hit.map(_._1))
+          added ++= rewritten
+        }
+      case None =>
+        val hit = scanHitOrdinals(cand, ids, masks).keys.toSeq.sorted
+        if (hit.nonEmpty) {
+          val touched = inst.viewOf(hit, ddl, masks, localRen)
+          val rows = transform match {
+            case None => idReject(touched, ids)
+            case Some(t) =>
+              idReject(touched, ids).unionByName(t(idMatch(touched, ids)))
+          }
+          // no isEmpty pre-probe — writeStaged drops zero-row parts
+          val rewritten = inst.writeStaged(rows, this)
+          retire(hit)
+          added ++= rewritten
+        }
+    }
+  }
+
+  private val idSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("obj_id", LongType)))
+
+  /** Row ordinals, per file, of the unmasked rows of `cand` whose obj_id
+    * is in `ids` — the one pass a point operation makes over its
+    * candidate files, read on the driver below the
+    * [[Instance.pointRows]] gate. */
+  private def hitOrdinals(cand: Seq[String], ids: Seq[Long],
+      masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] =
+    inst.pointRows(cand, idSchema, masks) match {
+      case Some(files) =>
+        val want = ids.toSet
+        files.flatMap { case (f, rows) =>
+          val ords = rows.collect { case (ri, r) if want(r.getLong(0)) => ri }
+          if (ords.isEmpty) None else Some(f -> ords)
+        }.toMap
+      case None => scanHitOrdinals(cand, ids, masks)
+    }
+
+  /** [[hitOrdinals]] above the gate: one scan job returns (file, row
+    * index) of the matching rows; the driver drops the ones a prior
+    * vector masks (a re-delete stays a no-op) and deduplicates — the id
+    * set is point-sized. */
+  private def scanHitOrdinals(cand: Seq[String], ids: Seq[Long],
+      masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] = {
+    val scan = inst.scanOf(cand, idSchema).select(col("obj_id"),
+      col("_metadata.file_path").as("_fp"),
+      col("_metadata.row_index").as("_ri"))
+    idMatch(scan, ids).select("_fp", "_ri").collect()
+      .map(r => (relativize(r.getString(0)), r.getLong(1)))
+      .distinct
+      .filterNot { case (f, ri) => masks.get(f).exists(_.contains(ri)) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
   }
 
   /** Merge-on-read point delete: instead of rewriting every file that
@@ -5851,25 +6061,20 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * (Reference: delete marks the object dead in the WAL and defers
     * the physical reclaim, instance.rs:141-168 + vacuum.) */
   def deleteMoR(ids: Seq[Long]): Unit = {
-    val (_, ddl, _) = localState()
     val cand = candidateFiles(ids)
     if (cand.nonEmpty) {
-      // masked rows excluded: re-deleting an already-masked id is a
-      // no-op, not a second mask
-      val snap = inst.viewOf(cand, ddl, localMasks(cand), localRen)
-        .withColumn("_file", input_file_name())
-      val hits = idMatch(snap, ids).select("_file", "obj_id")
-        .distinct().collect()
-        .groupBy(r => relativize(r.getString(0)))
-        .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
+      // record row ORDINALS, not ids: the positional bitmap is the
+      // bounded mask representation at scale (a task's mask cost is
+      // O(bitmap words), never O(deleted ids)). obj_id is always
+      // in-file (never a partition column — see writeStaged), so
+      // every hit file resolves its ordinals. Masked rows are
+      // excluded: re-deleting an already-masked id is a no-op, not a
+      // second mask.
+      val hits = hitOrdinals(cand, ids, localMasks(cand))
       if (hits.nonEmpty) {
-        // record row ORDINALS, not ids: the positional bitmap is the
-        // bounded mask representation at scale (a task's mask cost is
-        // O(bitmap words), never O(deleted ids)). obj_id is always
-        // in-file (never a partition column — see writeStaged), so
-        // every hit file resolves its ordinals.
         val base = localDvs()
-        val sidecar = inst.writeDvSidecarPos(rowOrdinalsOf(hits))
+        val sidecar = inst.writeDvSidecarPos(
+          hits.view.mapValues(GraftBitmap(_)).toMap)
         hits.keys.foreach { f =>
           dvDelta(f) = base.getOrElse(f, Nil) :+ sidecar
         }
@@ -5877,39 +6082,6 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     }
     objects ++= ids
     spillObjectsIfNeeded()
-  }
-
-  /** Resolve (file -> hit obj_ids) to (file -> row-ordinal bitmap) by
-    * one targeted scan of the hit files reading only `obj_id` plus the
-    * parquet row index. Rows already masked by a PRIOR vector are
-    * excluded — a re-delete must stay a no-op, and
-    * under the obj_id-unique-per-snapshot contract a hit id's only
-    * unmasked row is the one pass 1 matched. Point-delete sized by the
-    * same contract as [[deleteMoR]] (driver collects one (file,
-    * ordinal) pair per deleted row). */
-  private def rowOrdinalsOf(hits: Map[String, Seq[Long]])
-      : Map[String, GraftBitmap] = {
-    val prior = localMasks(hits.keys.toSeq)
-    val allIds = hits.values.flatten.toSeq.distinct
-    val idSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("obj_id",
-        org.apache.spark.sql.types.LongType)))
-    val rows = inst.spark.read.schema(idSchema)
-      .parquet(hits.keys.toSeq.sorted
-        .map(f => new Path(inst.dataDir, f).toString): _*)
-      .select(col("obj_id"), col("_metadata.row_index").as("_ri"),
-        col("_metadata.file_path").as("_fp"))
-      .filter(col("obj_id").isin(allIds: _*))
-      .collect()
-    rows.groupBy(r => relativize(r.getString(2)))
-      .flatMap { case (f, rs) =>
-        val wanted = hits.getOrElse(f, Nil).toSet
-        val m = prior.getOrElse(f, GraftBitmap.empty)
-        val ords = rs.iterator
-          .filter(r => wanted(r.getLong(0)) && !m.contains(r.getLong(1)))
-          .map(_.getLong(1)).toSeq
-        if (ords.isEmpty) None else Some(f -> GraftBitmap(ords))
-      }
   }
 
   /** Merge-on-read point UPDATE: the MoR twin of [[update]] — masks the
@@ -5942,24 +6114,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * blocking lock replaced by commit-time conflict detection). Same
     * stats-pruned candidate scan as [[delete]]. */
   def update(ids: Seq[Long], transform: DataFrame => DataFrame): Unit = {
-    val (_, ddl, _) = localState()
     val cand = candidateFiles(ids)
-    if (cand.nonEmpty) {
-      val masks = localMasks(cand)
-      val snap = inst.viewOf(cand, ddl, masks, localRen)
-        .withColumn("_file", input_file_name())
-      val hit = idMatch(snap, ids)
-        .select("_file").distinct().collect().map(_.getString(0))
-      if (hit.nonEmpty) {
-        val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
-        val untouchedRows = idReject(touched, ids)
-        val updatedRows = transform(idMatch(touched, ids))
-        val rewritten =
-          inst.writeStaged(untouchedRows.unionByName(updatedRows), this)
-        retire(hit.toSeq.map(relativize))
-        added ++= rewritten
-      }
-    }
+    if (cand.nonEmpty) rewriteHits(cand, ids, Some(transform))
     objects ++= ids
     spillObjectsIfNeeded()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ExpressionColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,10 +82,7 @@ case class ShingleHashes(child: Expression, k: Int)
 }
 
 object ShingleHashes {
-  def shingleHashes(spark: SparkSession, text: Column, k: Int): Column = {
-    val name = s"graft_shingle_hashes_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs(0), k), "built-in")
-    call_function(name, text)
-  }
+  // built as a Column directly — no session function registration
+  def shingleHashes(spark: SparkSession, text: Column, k: Int): Column =
+    ExpressionColumn(ShingleHashes(ExpressionColumn.expression(text), k))
 }

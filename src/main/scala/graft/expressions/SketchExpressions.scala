@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ExpressionColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Per-document sketches computed in a single pass over the shingle-hash
@@ -139,26 +139,16 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SketchExpressions {
-  private def register(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
+  // built as Columns directly — no session function registration
+  private def e(c: Column): Expression = ExpressionColumn.expression(c)
 
   def minhashBands(spark: SparkSession, sh: Column,
-      numHashes: Int, bandRows: Int): Column = {
-    val name = s"graft_minhash_bands_${numHashes}_$bandRows"
-    register(spark, name, exprs => MinHashBands(exprs(0), numHashes, bandRows))
-    call_function(name, sh)
-  }
+      numHashes: Int, bandRows: Int): Column =
+    ExpressionColumn(MinHashBands(e(sh), numHashes, bandRows))
 
-  def simhashFp(spark: SparkSession, sh: Column): Column = {
-    register(spark, "graft_simhash_fp", exprs => SimHashFingerprint(exprs(0)))
-    call_function("graft_simhash_fp", sh)
-  }
+  def simhashFp(spark: SparkSession, sh: Column): Column =
+    ExpressionColumn(SimHashFingerprint(e(sh)))
 
-  def sortedIntersectSize(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark, "graft_sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)))
-    call_function("graft_sorted_intersect_size", a, b)
-  }
+  def sortedIntersectSize(spark: SparkSession, a: Column, b: Column): Column =
+    ExpressionColumn(SortedIntersectSize(e(a), e(b)))
 }

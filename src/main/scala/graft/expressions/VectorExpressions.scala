@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ExpressionColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd cosine similarity over two ARRAY<DOUBLE> columns.
@@ -220,29 +220,20 @@ case class HyperplaneBands(child: Expression, nBands: Int, rPlanes: Int)
 
 object VectorExpressions {
 
-  private def register(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
+  // Columns are built from the expressions directly: a registry write
+  // per call would log a WARN each time and mutate the function
+  // registry every concurrent reader of the session shares
+  private def e(c: Column): Expression = ExpressionColumn.expression(c)
 
-  /** Register once per session, then expose as a Column function. */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark, "graft_cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-    call_function("graft_cosine_sim", a, b)
-  }
+  def cosineSim(spark: SparkSession, a: Column, b: Column): Column =
+    ExpressionColumn(CosineSimilarity(e(a), e(b)))
 
-  def rollingHash(spark: SparkSession, c: Column): Column = {
-    register(spark, "graft_rolling_hash", exprs => RollingHash(exprs(0)))
-    call_function("graft_rolling_hash", c)
-  }
+  def rollingHash(spark: SparkSession, c: Column): Column =
+    ExpressionColumn(RollingHash(e(c)))
 
-  /** Banded LSH keys (one registered function per parameterization —
-    * the params are codegen'd constants, not runtime arguments). */
+  /** Banded LSH keys (the params are codegen'd constants, not runtime
+    * arguments). */
   def hyperplaneBands(spark: SparkSession, v: Column,
-      nBands: Int, rPlanes: Int): Column = {
-    val name = s"graft_hp_bands_${nBands}_$rPlanes"
-    register(spark, name, exprs => HyperplaneBands(exprs(0), nBands, rPlanes))
-    call_function(name, v)
-  }
+      nBands: Int, rPlanes: Int): Column =
+    ExpressionColumn(HyperplaneBands(e(v), nBands, rPlanes))
 }

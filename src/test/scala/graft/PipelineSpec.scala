@@ -99,6 +99,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(out((1L, 3L)) == 0.0)
   }
 
+  test("vector and sketch expressions register no session function") {
+    import graft.expressions.{ShingleHashes, SketchExpressions, VectorExpressions}
+    val df = Seq((1L, "a b c d", Seq(1.0, 0.0)), (2L, "b c d e", Seq(0.5, 0.5)))
+      .toDF("id", "text", "v")
+    val sh = ShingleHashes.shingleHashes(spark, col("text"), 2)
+    val out = df.select(
+      VectorExpressions.cosineSim(spark, col("v"), col("v")).as("cos"),
+      VectorExpressions.rollingHash(spark, col("text")).as("rh"),
+      VectorExpressions.hyperplaneBands(spark, col("v"), 2, 3).as("hp"),
+      SketchExpressions.minhashBands(spark, sh, 4, 2).as("mh"),
+      SketchExpressions.simhashFp(spark, sh).as("sim"),
+      SketchExpressions.sortedIntersectSize(spark, array_sort(sh),
+        array_sort(sh)).as("n")).collect()
+    assert(out.length == 2 && out.forall(_.getDouble(0) > 0.99))
+    assert(Dedup.jaccardPairs(df, "id", "text", 2, 0.1).count() == 1L)
+    // the Columns wrap the expressions directly: the shared function
+    // registry holds no engine function afterwards
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(registered.isEmpty, registered.mkString(", "))
+  }
+
   test("ANN top-1 picks the true nearest neighbor") {
     val df = Seq(
       (0L, Seq(1.0, 0.0)), (1L, Seq(0.9, 0.1)), (2L, Seq(-1.0, 0.2)))

@@ -242,6 +242,11 @@ class BatchSourceSpec extends AnyFunSuite {
     // fewer bytes than the full one
     val full = graftScan(readGraft(dir)).estimateStatistics().sizeInBytes()
     val (inst2, dir2) = lifecycleTable()
+    // a second data file outside id 1's range: the point rewrites above
+    // leave the table in one file, and pruning needs a file to skip
+    val t4 = inst2.begin()
+    t4.insert(Seq((9L, 90L)).toDF("obj_id", "value"))
+    inst2.commit(t4)
     val pruned = graftScan(readGraft(dir2).filter(col("obj_id") === 1L))
     val prunedBytes = pruned.estimateStatistics().sizeInBytes()
     val fullBytes2 = graftScan(readGraft(dir2)).estimateStatistics()
