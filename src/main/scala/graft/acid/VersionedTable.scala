@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
-import org.apache.spark.sql.graft.PlanBridge.localFrame
+import org.apache.spark.sql.graft.PlanBridge.{localFrame, nullable, rowFilter}
 
 /** Versioned ACID table layer — capability parity with db-core's
   * transactional storage engine (SURVEY.md §2.1), re-expressed Spark-first
@@ -281,6 +281,21 @@ object VersionedTable {
     if (i >= 0 && schema(i).dataType == LongType && rows.forall(!_.isNullAt(i)))
       Some(rows.map(_.getLong(i)))
     else None
+  }
+
+  /** The rows and schema of `df` when its optimized plan is a local
+    * relation, or a union of them (a point rewrite's survivors plus its
+    * updated rows), of 1 to `maxRows` rows: data already on the
+    * driver. */
+  private[acid] def localRowsOf(df: DataFrame, maxRows: Int)
+      : Option[(Seq[InternalRow], StructType)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+    (df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some((l.data, l.schema))
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some((u.children.flatMap(_.asInstanceOf[LocalRelation].data), u.schema))
+      case _ => None
+    }).filter { case (rows, _) => rows.nonEmpty && rows.length <= maxRows }
   }
 
   /** `logical` with each column under its PHYSICAL (on-disk) name,
@@ -1222,6 +1237,16 @@ object Instance {
     * (below it, the literal branches give plan-time whole-scan pruning
     * with zero file index cost; above it, plan width dominates). */
   val PartitionGroupFanout = 32
+
+  /** Bounds of a driver-side point read ([[Instance.pointRows]]): at
+    * most this many candidate files, of at most this total length (and
+    * never more than `spark.sql.files.openCostInBytes`). Measured on 4
+    * cores against the same operation as a Spark job: reading on one
+    * thread wins below them, and loses past ~32 files (a `readWhere` of
+    * 10 KB files) or ~0.5 MB (a copy-on-write `delete` rewriting its
+    * survivors, the heaviest point operation per byte). */
+  val PointReadMaxFiles = 32
+  val PointReadMaxBytes = 512L * 1024
 }
 
 final class Instance(val spark: SparkSession, val root: String,
@@ -1734,35 +1759,42 @@ final class Instance(val spark: SparkSession, val root: String,
   /** Parquet scan of `files` (dataDir-relative, no partition columns
     * in `schema`) through a [[ManifestFileIndex]]. */
   private[acid] def scanOf(files: Seq[String], schema: StructType,
-      skip: Option[SkipStats] = None): DataFrame =
+      skip: Option[SkipStats] = None): DataFrame = {
+    val s = nullable(schema) // as spark.read.parquet reads: see nullable
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new ManifestFileIndex(this, files, schema, skip), new StructType(),
-        schema, None, new ParquetFileFormat, Map.empty)(spark))
+        new ManifestFileIndex(this, files, s, skip), new StructType(),
+        s, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Driver-side read of a few small files on the calling thread, with
     * the reader GraftScan's factory builds (Spark's parquet reader plus
     * the row-index column): per file, in file order, each unmasked row
-    * of `schema` (PHYSICAL names) with its row ordinal. Point operations
-    * use it to skip a Spark job's dispatch, which costs more than
-    * reading a small file. None — the caller takes its job path — when a
-    * file is partitioned or the files' total length passes
+    * of `schema` (PHYSICAL names, read nullable as [[scanOf]] reads)
+    * that passes `keep` (which sees the row before it is copied), with
+    * its row ordinal. Point operations use it to skip a Spark job's
+    * dispatch, which costs more than reading a small file. None — the
+    * caller takes its job path — when a file is partitioned, or the
+    * files pass [[Instance.PointReadMaxFiles]], or their total length
+    * passes [[Instance.PointReadMaxBytes]] or
     * `spark.sql.files.openCostInBytes`, Spark's own estimate of what
     * opening one file costs. */
   private[acid] def pointRows(files: Seq[String], schema: StructType,
-      masks: Map[String, GraftBitmap])
+      masks: Map[String, GraftBitmap], keep: InternalRow => Boolean = _ => true)
       : Option[Seq[(String, IndexedSeq[(Long, InternalRow)])]] = {
-    if (files.exists(f => GraftTableSource.partPairs(f).nonEmpty)) return None
+    if (files.size > Instance.PointReadMaxFiles ||
+        files.exists(f => GraftTableSource.partPairs(f).nonEmpty)) return None
     // statuses one at a time, stopping as soon as the gate is passed: a
     // point op has few candidates, and a refused one pays little
-    val gate = spark.sessionState.conf.filesOpenCostInBytes
+    val gate = math.min(spark.sessionState.conf.filesOpenCostInBytes,
+      Instance.PointReadMaxBytes)
     var total = 0L
     val statuses = files.iterator.map { f =>
       val st = fs.getFileStatus(new Path(dataDir, f)); total += st.getLen; st
     }.takeWhile(_ => total <= gate).toVector
     if (statuses.size < files.size) return None
-    val withRi = schema.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-      LongType)
+    val withRi = nullable(schema).add(
+      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
     val riIdx = schema.length
     val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
       withRi, new StructType(), withRi, Nil,
@@ -1778,23 +1810,25 @@ final class Instance(val spark: SparkSession, val root: String,
       val rows =
         try it.flatMap { r =>
           val ri = r.getLong(riIdx)
-          if (mask.contains(ri)) None else Some(ri -> proj(r).copy())
+          if (mask.contains(ri) || !keep(r)) None else Some(ri -> proj(r).copy())
         }.toIndexedSeq
         finally it match { case c: java.io.Closeable => c.close(); case _ => }
       f -> rows
     })
   }
 
-  /** [[viewOf]] for a point read: below the [[pointRows]] gate the files
-    * are read here and come back as a local relation, so filtering and
-    * collecting it runs no Spark job. */
+  /** The rows of `files` that satisfy `cond`, for a point read: below
+    * the [[pointRows]] gate the files are read here, `cond` drops rows
+    * as they are read, and the matches come back as a local relation,
+    * so collecting it runs no Spark job. */
   private[acid] def pointView(files: Seq[String], ddl: String,
-      masks: Map[String, GraftBitmap],
-      renames: Map[String, String]): DataFrame = {
-    val schema = StructType.fromDDL(ddl)
-    pointRows(files, physSchema(schema, renames), masks) match {
+      masks: Map[String, GraftBitmap], renames: Map[String, String],
+      cond: Column): DataFrame = {
+    val schema = nullable(StructType.fromDDL(ddl))
+    lazy val keep = rowFilter(spark, schema, cond)
+    pointRows(files, physSchema(schema, renames), masks, keep(_)) match {
       case Some(rows) => localFrame(spark, schema, rows.flatMap(_._2.map(_._2)))
-      case None => viewOf(files, ddl, masks, renames)
+      case None => viewOf(files, ddl, masks, renames).filter(cond)
     }
   }
 
@@ -1814,8 +1848,8 @@ final class Instance(val spark: SparkSession, val root: String,
     try {
       val files = txn.candidateFilesBy(column, values)
       val st = tableStateAt(txn.readVersion)
-      pointView(files, st.ddl, resolveDvs(st.dvs, files), st.renames)
-        .filter(col(column).isin(values: _*))
+      pointView(files, st.ddl, resolveDvs(st.dvs, files), st.renames,
+        col(column).isin(values: _*))
     } finally rollback(txn) // committed files only — nothing to reclaim
   }
 
@@ -2615,29 +2649,21 @@ final class Instance(val spark: SparkSession, val root: String,
     // stats, and codec, so every downstream surface (skipping,
     // checkpoint folds, DuckDB parity) sees exactly what the job path
     // writes.
-    // A point rewrite's survivors plus its updated rows arrive as a
-    // union of local relations, whose rows simply concatenate.
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
-    val maxRows = if (driverRows) Int.MaxValue else conf.fastPathRows
-    val localRows: Option[(Seq[InternalRow], StructType)] =
+    val localRows =
       if (partitionBy.nonEmpty || conf.fastPathRows <= 0) None
-      else (df.queryExecution.optimizedPlan match {
-        case l: LocalRelation => Some((l.data, l.schema))
-        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-          Some((u.children.flatMap(_.asInstanceOf[LocalRelation].data),
-            u.schema))
-        case _ => None
-      }).filter { case (rows, _) => rows.nonEmpty && rows.length <= maxRows }
+      else localRowsOf(df, if (driverRows) Int.MaxValue else conf.fastPathRows)
     val staged0 = localRows match {
       case Some((rows, schema)) =>
         val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
         writeLocalParquet(new Path(out, name), rows, schema)
-        // the rows are already on the driver: record their obj_ids so
-        // recordStagedObjects skips its read-back job (physical name
-        // is always "obj_id" — the primary key is exempt from column
-        // mapping, same assumption stagedIdsDf makes). A null id falls
-        // back to the job path rather than guessing.
-        objIdsOf(rows, schema).foreach(txn.stagedLocalIds(s"$sub/$name") = _)
+        // the rows are already on the driver: record an insert's
+        // obj_ids so recordStagedObjects skips its read-back job
+        // (physical name is always "obj_id" — the primary key is exempt
+        // from column mapping, same assumption stagedIdsDf makes). A
+        // null id falls back to the job path rather than guessing. A
+        // point rewrite records its ids itself and reads none of these.
+        if (!driverRows)
+          objIdsOf(rows, schema).foreach(txn.stagedLocalIds(s"$sub/$name") = _)
         Seq(s"$sub/$name") // the one file just written: nothing to list
       case None =>
         val obs =
@@ -5726,15 +5752,12 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     case None => upsertPersisted(df)
   }
 
-  /** The obj_ids of `df` when it is a local relation of at most
-    * [[EngineConf.fastPathRows]] rows with non-null ids. */
+  /** The obj_ids of `df` when it is a local relation (or a union of
+    * them) of at most [[EngineConf.fastPathRows]] rows with non-null ids:
+    * the batches writeStaged writes on the driver. */
   private def localIds(df: DataFrame): Option[Seq[Long]] =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.data.nonEmpty && l.data.length <= inst.conf.fastPathRows =>
-        objIdsOf(l.data, l.schema)
-      case _ => None
-    }
+    localRowsOf(df, inst.conf.fastPathRows).flatMap { case (rows, schema) =>
+      objIdsOf(rows, schema) }
 
   private def upsertPersisted(df: DataFrame): Unit = {
     // consumed multiple times (key probe + delete + insert): persist so
@@ -5972,16 +5995,17 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   private def rewriteHits(cand: Seq[String], ids: Seq[Long],
       transform: Option[DataFrame => DataFrame]): Unit = {
     val (_, ddl, _) = localState()
-    val schema = StructType.fromDDL(ddl)
+    val schema = nullable(StructType.fromDDL(ddl))
     val masks = localMasks(cand)
     inst.pointRows(cand, physSchema(schema, localRen), masks) match {
       case Some(files) =>
         val want = ids.toSet
         val idIdx = schema.fieldIndex("obj_id")
-        val hit = files.filter(_._2.exists(r => want(r._2.getLong(idIdx))))
+        // a null id is no id: the job path's isin never matches it
+        def isHit(r: InternalRow) = !r.isNullAt(idIdx) && want(r.getLong(idIdx))
+        val hit = files.filter(_._2.exists(r => isHit(r._2)))
         if (hit.nonEmpty) {
-          val (matched, kept) = hit.flatMap(_._2.map(_._2))
-            .partition(r => want(r.getLong(idIdx)))
+          val (matched, kept) = hit.flatMap(_._2.map(_._2)).partition(isHit)
           val rows = transform match {
             case None if kept.isEmpty => None
             case None => Some(localFrame(inst.spark, schema, kept))
@@ -6019,13 +6043,13 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * [[Instance.pointRows]] gate. */
   private def hitOrdinals(cand: Seq[String], ids: Seq[Long],
       masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] =
-    inst.pointRows(cand, idSchema, masks) match {
+    inst.pointRows(cand, idSchema, masks, {
+      val want = ids.toSet
+      r => !r.isNullAt(0) && want(r.getLong(0))
+    }) match {
       case Some(files) =>
-        val want = ids.toSet
-        files.flatMap { case (f, rows) =>
-          val ords = rows.collect { case (ri, r) if want(r.getLong(0)) => ri }
-          if (ords.isEmpty) None else Some(f -> ords)
-        }.toMap
+        files.collect { case (f, rows) if rows.nonEmpty => f -> rows.map(_._1) }
+          .toMap
       case None => scanHitOrdinals(cand, ids, masks)
     }
 

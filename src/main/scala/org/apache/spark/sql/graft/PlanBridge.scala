@@ -1,9 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
@@ -20,6 +20,24 @@ object PlanBridge {
       rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `cond` as a test on rows of `schema`, evaluated on the calling
+    * thread: resolved as a filter over `schema` would be (casts
+    * included), then bound to field positions. */
+  def rowFilter(spark: SparkSession, schema: StructType,
+      cond: Column): InternalRow => Boolean = {
+    val f = localFrame(spark, schema, Nil).filter(cond).queryExecution.analyzed
+      .collectFirst { case f: Filter => f }.get
+    val p = Predicate.createInterpreted(
+      BindReferences.bindReference(f.condition, f.child.output))
+    p.eval
+  }
+
+  /** `schema` with every field, nested ones too, nullable — the schema
+    * Spark's own file sources read with. A table's DDL may declare a
+    * column NOT NULL, but a file written before schema evolution added
+    * that column does not hold it, and its rows read as null. */
+  def nullable(schema: StructType): StructType = schema.asNullable
 
   /** A scan's pushed catalyst predicate as a data source filter, the
     * form file-skipping logic consumes; None when it has no such form. */

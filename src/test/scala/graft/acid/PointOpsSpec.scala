@@ -188,6 +188,84 @@ class PointOpsSpec extends AnyFunSuite {
     assert(driver._2 && driver._1.contains((1L, 6L)) && driver._1.contains((2L, 2L)))
   }
 
+  test("the driver path takes a bounded number of files and bytes") {
+    val many = mk((0 until Instance.PointReadMaxFiles + 1)
+      .map(i => Seq((i * 10L, 0L))))
+    def jobs(inst: Instance, ids: Seq[Long]): Int = {
+      val t = inst.begin()
+      try jobsDuring(t.deleteMoR(ids))._2 finally inst.rollback(t)
+    }
+    val ids = (0 to Instance.PointReadMaxFiles).map(_ * 10L)
+    assert(jobs(many, ids.init) == 0)
+    assert(jobs(many, ids) > 0)
+    val big = VersionedTable.create(spark, freshDir(), AcidQueries.schema)
+    val t = big.begin()
+    t.insert(spark.range(300000).select(col("id").as("obj_id"),
+      (col("id") * 7).as("value")).coalesce(1))
+    big.commit(t)
+    val f = big.tableStateAt(big.latestVersion).inlineFiles
+    assert(f.size == 1 && big.fs.getFileStatus(
+      new org.apache.hadoop.fs.Path(big.dataDir, f.head)).getLen >
+      Instance.PointReadMaxBytes)
+    assert(jobs(big, Seq(5L)) > 0)
+  }
+
+  test("a column added by schema evolution reads null in older files, on both paths") {
+    def show(df: DataFrame): Seq[String] =
+      df.select("obj_id", "extra").orderBy("obj_id").collect().map(_.toString).toSeq
+    def scenario(): Seq[Seq[String]] = {
+      val inst = mk(batches.take(2))
+      val e = inst.begin(); e.evolveSchema()
+      e.insert(Seq((900L, 9L, 7L)).toDF("obj_id", "value", "extra"))
+      inst.commit(e)
+      // the table's DDL declares the added primitive column NOT NULL,
+      // which the two older files do not hold
+      val v = inst.latestVersion
+      assert(!StructType.fromDDL(inst.tableStateAt(v).ddl)("extra").nullable)
+      val t = inst.begin()
+      t.update(Seq(1L), _.withColumn("value", lit(-1L)))
+      t.delete(Seq(2L))
+      t.deleteMoR(Seq(101L))
+      val txnRead = show(t.read().filter(col("obj_id").isin(1L, 3L, 900L)))
+      inst.commit(t)
+      Seq(show(inst.read()), show(inst.snapshot(v)), txnRead,
+        show(inst.readWhere("obj_id", Seq(1L, 3L, 900L))),
+        show(inst.read().where(col("extra").isNull)),
+        show(inst.snapshot(v).filter(col("obj_id").isin(3L, 900L))))
+    }
+    val driver = scenario()
+    assert(driver == jobPath(scenario()))
+    val old = Seq(1L, 3L, 4L, 5L, 102L, 103L, 104L, 105L).map(i => s"[$i,null]")
+    assert(driver(0) == old :+ "[900,7]")
+    assert(driver(1) == ((1L to 5L) ++ (101L to 105L)).map(i => s"[$i,null]") :+ "[900,7]")
+    assert(driver(2) == Seq("[1,null]", "[3,null]", "[900,7]"))
+    assert(driver(3) == driver(2) && driver(4) == old)
+    assert(driver(5) == Seq("[3,null]", "[900,7]"))
+  }
+
+  test("a null obj_id is never hit by a point operation, on either path") {
+    def scenario(): Seq[String] = {
+      val inst = mk(Nil)
+      // more rows than the driver-side insert takes: a job writes the
+      // file, and records the null id in the transaction's summary
+      val t = inst.begin()
+      t.insert(((None, 7777L) +: (-40L to 40L).map(i => (Some(i), i)))
+        .toDF("obj_id", "value"))
+      inst.commit(t)
+      val d = inst.begin(); d.deleteMoR(Seq(0L)); inst.commit(d)
+      val u = inst.begin()
+      u.update(Seq(0L, 1L), _.withColumn("value", col("value") * 10))
+      u.delete(Seq(0L))
+      inst.commit(u)
+      inst.read().orderBy(col("obj_id").asc_nulls_first).collect()
+        .map(_.toString).toSeq
+    }
+    val driver = scenario()
+    assert(driver == jobPath(scenario()))
+    assert(driver.size == 81 && driver.take(2) == Seq("[null,7777]", "[-40,-40]"))
+    assert(!driver.contains("[0,0]") && driver.contains("[1,10]"))
+  }
+
   test("partitioned candidates fall back to the job path with equal results") {
     val schema = StructType(Seq(
       StructField("obj_id", LongType, nullable = false),
