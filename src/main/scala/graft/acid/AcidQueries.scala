@@ -158,10 +158,9 @@ object AcidQueries {
     },
 
     // WIDE partition fanout through the driver oracle: (lang, source)
-    // is ~100 distinct tuples, past Instance.PartitionGroupFanout, so
-    // the snapshot takes the single-native-scan path (one hive-layout
-    // relation, partition pruning by Spark's own file index) — and the
-    // partition-filtered aggregate must still match DuckDB exactly
+    // is ~100 distinct tuples, all read by one scan that prunes files
+    // by their partition paths — and the partition-filtered aggregate
+    // must still match DuckDB exactly
     "q46_acid_fanout" -> Q(
       "SELECT source, COUNT(*) AS c, CAST(SUM(n_chars) AS BIGINT) AS chars " +
       "FROM documents WHERE lang = 'en' " +

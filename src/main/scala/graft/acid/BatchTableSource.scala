@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -79,7 +80,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val inst = VersionedTable.open(SparkSession.active, rootOf(options))
     val v = GraftTableSource.resolveVersion(inst, options)
-    StructType.fromDDL(inst.stateAt(v)._2)
+    StructType.fromDDL(inst.tableStateAt(v).ddl)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -103,7 +104,8 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
       GraftTableSource.readCatalogJson(SparkSession.active, root)
     def catalogSpec(key: String): Option[String] =
       catalogJson.flatMap(GraftTableSource.specField(_, key))
-    new GraftTable(root, v, StructType.fromDDL(inst.stateAt(v)._2),
+    val st = inst.tableStateAt(v)
+    new GraftTable(inst, st, Some(v), StructType.fromDDL(st.ddl),
       timeTraveled = options.containsKey("versionAsOf") ||
         options.containsKey("timestampAsOf"),
       partitionByOpt = Option(options.get("partitionBy"))
@@ -173,6 +175,19 @@ private[acid] object GraftTableSource {
         java.sql.Timestamp.valueOf(s).getTime
     }
 
+  /** A relation's name in plans: its pinned version, or the size of
+    * its explicit read set. */
+  def describe(root: String, pinned: Option[Long],
+      st: VersionedTable.TableState): String =
+    pinned.fold(s"graft `$root` [${st.inlineFiles.size} files]")(v =>
+      s"graft `$root` @v$v")
+
+  /** What a relation reads, for equality: a pinned version stands for
+    * its whole state; a read set is its files, masks, mapping and
+    * schema (stats only prune, so they do not change the rows). */
+  def readIdentity(pinned: Option[Long], st: VersionedTable.TableState): Any =
+    pinned.getOrElse((st.inlineFiles, st.sidecar, st.dvs, st.renames, st.ddl))
+
   /** Hive `k=v` path segments of a staged file (raw, still escaped). */
   def partPairs(rel: String): Seq[(String, String)] =
     rel.split('/').drop(1).dropRight(1).toSeq.flatMap { seg =>
@@ -181,30 +196,17 @@ private[acid] object GraftTableSource {
     }
 
   /** Decoded partition value in EXTERNAL Scala form (null for the hive
-    * default-partition marker), for comparing against filter literals. */
-  def partValue(raw: String, dt: DataType): Any = {
-    val s = ExternalCatalogUtils.unescapePathName(raw)
-    if (s == "__HIVE_DEFAULT_PARTITION__") null
-    else CatalystTypeConverters.convertToScala(
-      Cast(Literal(UTF8String.fromString(s), StringType), dt,
-        Option(SQLConf.get.sessionLocalTimeZone)).eval(null), dt)
-  }
-
-  /** [[partValue]] with an EXPLICIT session timezone — the executor
-    * form: `SQLConf.get` on a task thread may fall back to defaults,
-    * so distributed skip predicates capture the driver's zone. */
-  def partValueTz(raw: String, dt: DataType, tz: String): Any = {
-    val s = ExternalCatalogUtils.unescapePathName(raw)
-    if (s == "__HIVE_DEFAULT_PARTITION__") null
-    else CatalystTypeConverters.convertToScala(
-      Cast(Literal(UTF8String.fromString(s), StringType), dt,
-        Option(tz)).eval(null), dt)
-  }
+    * default-partition marker), for comparing against filter literals.
+    * The time zone is explicit: `SQLConf.get` on a task thread may fall
+    * back to defaults, so distributed skip predicates capture the
+    * driver's zone. */
+  def partValue(raw: String, dt: DataType, tz: String): Any =
+    CatalystTypeConverters.convertToScala(partValueInternal(raw, dt, tz), dt)
 
   /** May data file `rel` hold a row that passes every filter? The
-    * manifest-stats skip test shared by [[GraftScan]] and
-    * [[ManifestFileIndex]]; `filters` are single-column. Each index gets
-    * a veto: hive `k=v` path values, the obj_id primary range, Z-order
+    * manifest-stats skip test of [[GraftScan]] over `st`'s stats;
+    * `filters` are single-column. Each index gets a veto: hive `k=v`
+    * path values, the obj_id primary range, Z-order
     * colStats, the always-on universal footer stats and the per-file
     * bloom (equality/IN on declared columns; spilled pointers resolve
     * through `resolveBloom`). `phys` maps a filter's column to the
@@ -212,7 +214,7 @@ private[acid] object GraftTableSource {
     * partition values by the filter's own column name. A file with no
     * entry for a column is kept — skipping only drops provably-dead IO. */
   def fileMayMatch(filters: Seq[sources.Filter], schema: StructType,
-      phys: String => String, skip: VersionedTable.SkipStats,
+      phys: String => String, st: VersionedTable.TableState,
       resolveBloom: String => Option[String])(rel: String): Boolean = {
     val parts = partPairs(rel).toMap
     filters.forall { f =>
@@ -220,12 +222,13 @@ private[acid] object GraftTableSource {
       val pc = phys(c)
       if (parts.contains(pc)) {
         val dt = schema.find(_.name == c).map(_.dataType).getOrElse(StringType)
-        partMayMatch(f, partValue(parts(pc), dt))
+        partMayMatch(f, partValue(parts(pc), dt,
+          SQLConf.get.sessionLocalTimeZone))
       } else {
         val range =
-          if (c == "obj_id") skip.ids.get(rel)
-          else skip.colStats.get(rel).flatMap(_.get(pc))
-        val ustats = skip.fileStats.get(rel)
+          if (c == "obj_id") st.stats.get(rel)
+          else st.colStats.get(rel).flatMap(_.get(pc))
+        val ustats = st.fileStats.get(rel)
         range.forall(rangeMayMatch(f, _)) &&
           // reserved-name guard: a user column spelled "#rows" is
           // simply not skippable (its key holds the row-count stat)
@@ -267,7 +270,7 @@ private[acid] object GraftTableSource {
         if (parts.contains(pc)) {
           val dt = tableSchema.find(_.name == c).map(_.dataType)
             .getOrElse(StringType)
-          partMayMatch(f, partValueTz(parts(pc), dt, tz))
+          partMayMatch(f, partValue(parts(pc), dt, tz))
         } else {
           val range =
             if (c == "obj_id") CheckpointStore.statsOf(r)
@@ -296,12 +299,13 @@ private[acid] object GraftTableSource {
   }
 
   /** Decoded partition value in CATALYST internal form (for the
-    * constant partition columns the reader appends to every row). */
-  def partValueInternal(raw: String, dt: DataType): Any = {
+    * constant partition columns the readers append to every row). */
+  def partValueInternal(raw: String, dt: DataType,
+      tz: String = SQLConf.get.sessionLocalTimeZone): Any = {
     val s = ExternalCatalogUtils.unescapePathName(raw)
     if (s == "__HIVE_DEFAULT_PARTITION__") null
     else Cast(Literal(UTF8String.fromString(s), StringType), dt,
-      Option(SQLConf.get.sessionLocalTimeZone)).eval(null)
+      Option(tz)).eval(null)
   }
 
   /** Does `range` (a file's min/max for some column) possibly satisfy
@@ -541,8 +545,8 @@ private[acid] object GraftTableSource {
     * scan. Conservative by construction: every refusal path returns
     * None; an answer is produced only when every live file contributed
     * an exact stat. */
-  private[acid] def analyzeAggregation(root: String, version: Long,
-      tableSchema: StructType,
+  private[acid] def analyzeAggregation(inst: Instance,
+      st: VersionedTable.TableState, tableSchema: StructType,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Array[InternalRow], String)] = try {
     import org.apache.spark.sql.connector.expressions.NamedReference
@@ -594,9 +598,6 @@ private[acid] object GraftTableSource {
         case _ => None
       }
 
-    val spark = SparkSession.active
-    val inst = VersionedTable.open(spark, root)
-    val st = inst.tableStateAt(version)
     // masked rows are invisible to footer stats; compaction heals
     if (st.dvs.nonEmpty) return None
     def phys(path: Seq[String]): String =
@@ -877,7 +878,18 @@ private[acid] object GraftTableSource {
   }
 }
 
-private[acid] final class GraftTable(root: String, version: Long,
+/** The relation every read of a graft table plans through: `state`
+  * is what its scans read — a committed version's fold (`pinned` =
+  * that version; the provider, the catalog and [[Instance.snapshot]])
+  * or an explicit read set with no version (a transaction's live
+  * files, change-feed images, compaction input; see
+  * [[Instance.viewOf]]). Only a pinned relation is an MV-rewrite or
+  * metadata-aggregate candidate, and only a pinned one is written
+  * through. Equal to another relation over the same rows, so
+  * `CacheManager` matches two reads of one snapshot. */
+private[acid] final class GraftTable(private[acid] val inst: Instance,
+    private[acid] val state: VersionedTable.TableState,
+    private[acid] val pinned: Option[Long],
     tableSchema: StructType, timeTraveled: Boolean = false,
     partitionByOpt: Option[String] = None,
     clusterByOpt: Option[String] = None,
@@ -888,25 +900,35 @@ private[acid] final class GraftTable(root: String, version: Long,
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.sources.InsertableRelation {
-  override def name(): String = s"graft `$root` @v$version"
+  private def root: String = inst.root
+  override def name(): String = GraftTableSource.describe(root, pinned, state)
   override def schema(): StructType = tableSchema
   // identity for the MV rewrite rule: which table, pinned at which
   // version, this relation will scan
   private[acid] def tableRoot: String = root
-  private[acid] def tableVersion: Long = version
+  private[acid] def tableVersion: Long = pinned.getOrElse(throw
+    new IllegalStateException(s"${name()} is a read set, not a version"))
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.V1_BATCH_WRITE, TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, version, tableSchema)
+    new GraftScanBuilder(inst, state, pinned, tableSchema)
+
+  private val identity =
+    (root, GraftTableSource.readIdentity(pinned, state), tableSchema)
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftTable => t.identity == identity
+    case _ => false
+  }
+  private lazy val hash = identity.hashCode
+  override def hashCode: Int = hash
 
   /** SQL `TRUNCATE TABLE`: one metadata-only ACID commit; the
     * pre-truncate version stays time-travelable. */
   override def truncateTable(): Boolean = {
     if (timeTraveled) throw new IllegalArgumentException(
       s"cannot write to time-traveled snapshot ${name()}")
-    val inst = VersionedTable.open(SparkSession.active, root)
     val txn = inst.begin()
     try {
       txn.truncate()
@@ -1017,7 +1039,7 @@ private[acid] final class GraftTable(root: String, version: Long,
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     if (timeTraveled) throw new IllegalArgumentException(
       s"cannot write to time-traveled snapshot ${name()}")
-    () => new GraftRowLevelOperation(root, version, tableSchema,
+    () => new GraftRowLevelOperation(inst, tableVersion, tableSchema,
       info.command())
   }
 
@@ -1036,7 +1058,6 @@ private[acid] final class GraftTable(root: String, version: Long,
         s"unsupported DELETE predicate ${filters.mkString(", ")}: only " +
         "obj_id = k / obj_id IN (...) deletes are supported in SQL"))
     val spark = SparkSession.active
-    val inst = VersionedTable.open(spark, root)
     val txn = inst.begin()
     try {
       plan match {
@@ -1114,7 +1135,8 @@ private[acid] final class GraftWriteBuilder(table: GraftTable,
   }
 }
 
-private[acid] final class GraftScanBuilder(root: String, version: Long,
+private[acid] final class GraftScanBuilder(inst: Instance,
+    state: VersionedTable.TableState, pinned: Option[Long],
     tableSchema: StructType, onBuild: GraftScan => Unit = _ => (),
     wholeGroups: Boolean = false)
     extends ScanBuilder
@@ -1193,6 +1215,7 @@ private[acid] final class GraftScanBuilder(root: String, version: Long,
   // filter residual), so eligibility here reduces to: can EVERY live
   // file answer exactly? Refused (conservatively, falling back to the
   // normal scan) when:
+  //  - the relation is an explicit read set, not a pinned version;
   //  - any grouping expression is present, or a function other than
   //    the four above (or a DISTINCT count) appears;
   //  - any live file carries a deletion vector (masked rows are
@@ -1226,8 +1249,8 @@ private[acid] final class GraftScanBuilder(root: String, version: Long,
     val key = agg.aggregateExpressions.mkString(",") + "|" +
       agg.groupByExpressions.mkString(",")
     aggAnalyzed.getOrElse(key, {
-      val r = GraftTableSource.analyzeAggregation(root, version, tableSchema,
-        agg)
+      val r = if (pinned.isEmpty) None
+        else GraftTableSource.analyzeAggregation(inst, state, tableSchema, agg)
       aggAnalyzed = aggAnalyzed.updated(key, r)
       r
     })
@@ -1235,10 +1258,11 @@ private[acid] final class GraftScanBuilder(root: String, version: Long,
 
   override def build(): Scan = aggResult match {
     case Some((schema, rows, pushed)) =>
-      new GraftAggScan(root, version, schema, rows, pushed)
+      new GraftAggScan(GraftTableSource.describe(inst.root, pinned, state),
+        schema, rows, pushed)
     case None =>
-      val s = new GraftScan(root, version, tableSchema, required, skipFilters,
-        wholeGroups, limit, topN)
+      val s = new GraftScan(inst, state, pinned, tableSchema, required,
+        skipFilters, wholeGroups, limit, topN)
       onBuild(s)
       s
   }
@@ -1248,13 +1272,13 @@ private[acid] final class GraftScanBuilder(root: String, version: Long,
   * from manifest/checkpoint metadata at plan time, so the "scan" is a
   * [[org.apache.spark.sql.connector.read.LocalScan]] — Spark executes
   * it as a driver-local table scan with ZERO jobs against data files. */
-private[acid] final class GraftAggScan(root: String, version: Long,
+private[acid] final class GraftAggScan(table: String,
     aggSchema: StructType, resultRows: Array[InternalRow], pushed: String)
     extends Scan with org.apache.spark.sql.connector.read.LocalScan {
   override def readSchema(): StructType = aggSchema
   override def rows(): Array[InternalRow] = resultRows
   override def description(): String =
-    s"graft $root @v$version PushedAggregation: [$pushed] (metadata-only)"
+    s"$table PushedAggregation: [$pushed] (metadata-only)"
 }
 
 /** One bin-packed input split: files (or file ranges) sharing one
@@ -1269,7 +1293,16 @@ private[acid] final case class GraftInputPartition(
 private[acid] final case class TopNSpec(path: Seq[String], asc: Boolean,
     nullsFirst: Boolean, n: Int)
 
-private[acid] final class GraftScan(root: String, version: Long,
+/** The one planner and reader of a graft relation's data files: file
+  * skipping over `state`'s manifest stats (or, on a segmented
+  * checkpoint, over its side files), hive `k=v` partition values,
+  * column mapping and deletion-vector masks, resolved only for the
+  * files left after pruning. Equal to another scan of the same rows
+  * (table root, version or read set, required schema, pushed
+  * filters), as Spark's own `FileScan` is, so exchange reuse sees a
+  * repeated read as one scan. */
+private[graft] final class GraftScan(inst: Instance,
+    state: VersionedTable.TableState, pinned: Option[Long],
     tableSchema: StructType, required: StructType,
     filters: Array[sources.Filter],
     wholeGroups: Boolean = false,
@@ -1278,19 +1311,30 @@ private[acid] final class GraftScan(root: String, version: Long,
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
-  @transient private lazy val spark = SparkSession.active
-  @transient private lazy val inst = VersionedTable.open(spark, root)
+  private def spark = inst.spark
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
-    val fs = if (filters.isEmpty) "" else
-      filters.mkString(" PushedFilters: [", ", ", "]")
+    // abbreviated as Spark's file scans abbreviate theirs: AQE renders
+    // the plan on every update, and an IN list can hold thousands of ids
+    val fs = if (filters.isEmpty) "" else " PushedFilters: " +
+      org.apache.commons.lang3.StringUtils.abbreviate(
+        filters.mkString("[", ", ", "]"), SQLConf.get.maxMetadataStringLength)
     val lm = pushedLimit.fold("")(n => s" PushedLimit: $n")
     val tn = pushedTopN.fold("")(t => s" PushedTopN: ${t.path.mkString(".")}" +
       s" ${if (t.asc) "ASC" else "DESC"} LIMIT ${t.n}")
-    s"graft $root @v$version$fs$lm$tn"
+    s"${GraftTableSource.describe(inst.root, pinned, state)}$fs$lm$tn"
   }
+
+  private val identity = (inst.root, GraftTableSource.readIdentity(pinned, state),
+    required, filters.toSeq, wholeGroups, pushedLimit, pushedTopN)
+  override def equals(o: Any): Boolean = o match {
+    case s: GraftScan => s.identity == identity
+    case _ => false
+  }
+  private lazy val hash = identity.hashCode
+  override def hashCode: Int = hash
 
   /** Size/row statistics AFTER static file skipping, so the optimizer
     * auto-broadcasts a small (or well-pruned) graft side of a join —
@@ -1359,11 +1403,10 @@ private[acid] final class GraftScan(root: String, version: Long,
     // sees the narrowed file set
     prunedFilesMemo = null
     prunedStatusesMemo = null
+    factoryMemo = null
     sidecarStatusMemo = Map.empty
     sidecarRowsMemo = Map.empty
   }
-
-  @transient private lazy val state = inst.tableStateAt(version)
 
   /** Physical (on-disk) name of a logical column under the pinned
     * version's column mapping — what file columns, `k=v` path
@@ -1448,7 +1491,7 @@ private[acid] final class GraftScan(root: String, version: Long,
     // filters reference LOGICAL names; paths and stat indexes are keyed
     // by the fixed physical names
     val driverPred = GraftTableSource.fileMayMatch(allFilters.toSeq,
-      tableSchema, phys, state.skipStats, inst.resolveBloomPointer) _
+      tableSchema, phys, state, inst.resolveBloomPointer) _
     state.sidecar match {
       case Some(sc) =>
         // segmented snapshot: the O(files) skip loop runs as a
@@ -1461,7 +1504,7 @@ private[acid] final class GraftScan(root: String, version: Long,
           GraftTableSource.sidecarPred(allFilters, state.renames,
             tableSchema, inst.dataDir.toString,
             new org.apache.spark.util.SerializableConfiguration(
-              SparkSession.active.sessionState.newHadoopConf())))
+              spark.sessionState.newHadoopConf())))
         sidecarStatusMemo = distPart.map { case (f, sz, mt, _) =>
           f -> (sz, mt) }.toMap
         sidecarRowsMemo = distPart.collect { case (f, _, _, n) if n >= 0L =>
@@ -1655,13 +1698,27 @@ private[acid] final class GraftScan(root: String, version: Long,
     }.toArray
   }
 
+  // Spark asks each copy of the scan's exec node for a reader factory
+  // (every plan rewrite makes one), and every build broadcasts a Hadoop
+  // conf per layout: build one per file set
+  @transient @volatile private var factoryMemo: PartitionReaderFactory = null
+
   override def createReaderFactory(): PartitionReaderFactory = {
+    var f = factoryMemo
+    if (f == null) { f = buildReaderFactory(); factoryMemo = f }
+    f
+  }
+
+  private def buildReaderFactory(): PartitionReaderFactory = {
     val fmt = new ParquetFileFormat
     // masks filter by the parquet-generated row index (requested via
     // the reader's temporary metadata column — filled by both the
     // vectorized and row-based readers, file-absolute even across
     // splits)
     val masked = dvMasks.nonEmpty
+    // read nullable, as Spark's file sources do: a column schema
+    // evolution added is absent from older files and reads as null
+    val req = PlanBridge.nullable(required)
     val layouts = prunedFiles.map(r =>
       GraftTableSource.partPairs(r).map(_._1)).distinct.map { layout =>
       // the reader plans in PHYSICAL namespace end-to-end (file columns
@@ -1670,9 +1727,9 @@ private[acid] final class GraftScan(root: String, version: Long,
       // reports the logical names
       def physF(f: StructField) = f.copy(name = phys(f.name))
       val partFields = StructType(
-        required.filter(f => layout.contains(phys(f.name))).map(physF))
+        req.filter(f => layout.contains(phys(f.name))).map(physF))
       var fileSchema = StructType(
-        required.filterNot(f => layout.contains(phys(f.name))).map(physF))
+        req.filterNot(f => layout.contains(phys(f.name))).map(physF))
       if (masked)
         fileSchema = StructType(fileSchema :+ StructField(
           ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
@@ -1742,6 +1799,7 @@ private[acid] final class GraftReaderFactory(
       else gp.files.map(_ => GraftBitmap.empty)
     val rows: Iterator[InternalRow] =
       gp.files.iterator.zip(masks.iterator).flatMap { case (f, mask) =>
+        PlanBridge.setInputFile(f)
         val fileRows = lr.reader(f).asInstanceOf[Iterator[Any]].flatMap {
           case b: ColumnarBatch => b.rowIterator().asScala
           case row: InternalRow => Iterator.single(row)
@@ -1757,7 +1815,7 @@ private[acid] final class GraftReaderFactory(
       override def next(): Boolean =
         if (rows.hasNext) { cur = rows.next(); true } else false
       override def get(): InternalRow = cur
-      override def close(): Unit = ()
+      override def close(): Unit = PlanBridge.unsetInputFile()
     }
   }
 
@@ -1767,8 +1825,10 @@ private[acid] final class GraftReaderFactory(
     // zero-copy column reorder: wrap the reader's (file ++ partition)
     // batch with its vectors permuted to the required order
     val batches: Iterator[ColumnarBatch] =
-      gp.files.iterator.flatMap(f =>
-        lr.reader(f).asInstanceOf[Iterator[Any]]).map { r =>
+      gp.files.iterator.flatMap { f =>
+        PlanBridge.setInputFile(f)
+        lr.reader(f).asInstanceOf[Iterator[Any]]
+      }.map { r =>
         val b = r.asInstanceOf[ColumnarBatch]
         new ColumnarBatch(
           lr.order.map(i => b.column(i)).toArray[ColumnVector], b.numRows())
@@ -1778,7 +1838,7 @@ private[acid] final class GraftReaderFactory(
       override def next(): Boolean =
         if (batches.hasNext) { cur = batches.next(); true } else false
       override def get(): ColumnarBatch = cur
-      override def close(): Unit = ()
+      override def close(): Unit = PlanBridge.unsetInputFile()
     }
   }
 }

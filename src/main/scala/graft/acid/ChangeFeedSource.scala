@@ -6,15 +6,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -100,12 +98,6 @@ private[acid] object ChangeFeedSource {
         org.apache.spark.sql.types.StringType, nullable = false))
     else base
   }
-
-  def partPairs(rel: String): Seq[(String, String)] =
-    rel.split('/').drop(1).dropRight(1).toSeq.flatMap { seg =>
-      val i = seg.indexOf('=')
-      if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-    }
 
   /** One [[CdfPartition]] per file appended by each data commit in
     * `(lo, hi]` — shared by the micro-batch stream and the bounded
@@ -200,18 +192,14 @@ private[acid] object ChangeFeedSource {
       rel -> inst.fs.getFileStatus(new Path(inst.dataDir, rel))).toMap
     specs.foreach { case (rel, v, changeType, keep) =>
       val isCdc = changeType == "__cdc__"
-      val pairs = if (isCdc) Nil else partPairs(rel)
+      val pairs = if (isCdc) Nil else GraftTableSource.partPairs(rel)
       val status = statuses(rel)
       // `k` spells the PHYSICAL column name
       val consts = pairs.map { case (k, raw) =>
         val dt = schema.find(f =>
             ren.getOrElse(f.name, f.name) == k).map(_.dataType)
           .getOrElse(org.apache.spark.sql.types.StringType)
-        val s = ExternalCatalogUtils.unescapePathName(raw)
-        if (s == "__HIVE_DEFAULT_PARTITION__") null
-        else Cast(Literal(org.apache.spark.unsafe.types.UTF8String
-            .fromString(s), org.apache.spark.sql.types.StringType), dt,
-          Option(SQLConf.get.sessionLocalTimeZone)).eval(null)
+        GraftTableSource.partValueInternal(raw, dt)
       } :+ (v: Any)
       // cdc side files carry _change_type IN-FILE; every other spec
       // gets it as a per-partition constant

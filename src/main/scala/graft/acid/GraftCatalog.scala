@@ -86,8 +86,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       timeTraveled: Boolean): GraftTable = {
     val root = tablePath(ident).toString
     val inst = VersionedTable.open(SparkSession.active, root)
-    new GraftTable(root, version,
-      StructType.fromDDL(inst.stateAt(version)._2), timeTraveled,
+    val st = inst.tableStateAt(version)
+    new GraftTable(inst, st, Some(version), StructType.fromDDL(st.ddl),
+      timeTraveled,
       partitionByOpt = readPartitionBy(ident),
       clusterByOpt = readClusterBy(ident),
       uniqueIdsOpt = readUniqueIds(ident),

@@ -142,8 +142,10 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           (rl, rc) <- peel(j.right)
         } yield (ll ++ rl, lc ++ rc ++
           j.condition.toSeq.flatMap(splitConjunctivePredicates))
+      // an explicit read set (a refresh's own delta read, a
+      // transaction's view) is never a rewrite candidate
       case r: DataSourceV2Relation => r.table match {
-        case t: GraftTable => Some((Seq((r, t)), Nil))
+        case t: GraftTable if t.pinned.isDefined => Some((Seq((r, t)), Nil))
         case _ => None
       }
       case _ => None
@@ -204,8 +206,9 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       if (rel == 0) factLeaf._1 else dimLeaves(rel - 1)._1
 
 
-    val vTable = new GraftTable(cand.root, cand.version, cand.schema,
-      timeTraveled = true)
+    val vInst = VersionedTable.open(spark, cand.root)
+    val vTable = new GraftTable(vInst, vInst.tableStateAt(cand.version),
+      Some(cand.version), cand.schema, timeTraveled = true)
     val vRel = DataSourceV2Relation.create(vTable, None, None)
     def viewAttr(name: String): AttributeReference =
       vRel.output.collectFirst {

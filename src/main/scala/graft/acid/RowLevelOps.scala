@@ -38,10 +38,11 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The metadata-fast DELETE shapes (obj_id = k / IN, truncate) never
   * reach this path — [[GraftTable.canDeleteWhere]] claims them first. */
-final class GraftRowLevelOperation(root: String,
+final class GraftRowLevelOperation(private[acid] val inst: Instance,
     private[acid] val version: Long,
     tableSchema: StructType, cmd: RowLevelOperation.Command)
     extends RowLevelOperation {
+  private def root = inst.root
 
   // captured when Spark builds the operation's scan (driver-side);
   // commit retires exactly these files
@@ -51,12 +52,12 @@ final class GraftRowLevelOperation(root: String,
   override def description(): String = s"graft cow $cmd `$root` @v$version"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, version, tableSchema, s => scan = s,
-      wholeGroups = true)
+    new GraftScanBuilder(inst, inst.tableStateAt(version), Some(version),
+      tableSchema, s => scan = s, wholeGroups = true)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new GraftCowWrite(root, info.schema(),
+      override def build(): Write = new GraftCowWrite(info.schema(),
         GraftRowLevelOperation.this)
     }
 }
@@ -64,8 +65,10 @@ final class GraftRowLevelOperation(root: String,
 private[acid] final case class CowFileMessage(file: String)
     extends WriterCommitMessage
 
-private[acid] final class GraftCowWrite(root: String, dataSchema: StructType,
+private[acid] final class GraftCowWrite(dataSchema: StructType,
     op: GraftRowLevelOperation) extends Write with BatchWrite {
+
+  private def inst = op.inst
 
   // one staging sub-dir per operation, uuid-unique like writeStaged's;
   // files inside it only become visible via the manifest commit below
@@ -75,7 +78,6 @@ private[acid] final class GraftCowWrite(root: String, dataSchema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
-    val inst = VersionedTable.open(spark, root)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
     // column mapping: staged files spell PHYSICAL names (rows are
@@ -97,8 +99,6 @@ private[acid] final class GraftCowWrite(root: String, dataSchema: StructType,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val inst = VersionedTable.open(spark, root)
     val staged = messages.collect {
       case CowFileMessage(f) if f != null => s"$stagingSub/$f"
     }.toSeq
@@ -123,8 +123,8 @@ private[acid] final class GraftCowWrite(root: String, dataSchema: StructType,
       val consNow = inst.tableStateAt(txn.readVersion).constraints
       if (consNow.nonEmpty && staged.nonEmpty) {
         import org.apache.spark.sql.functions.{coalesce, expr, lit}
-        val rows = inst.viewOf(staged, pinnedSt.ddl, Map.empty,
-          pinnedSt.renames)
+        val rows = inst.viewOf(staged, pinnedSt.ddl,
+          renames = pinnedSt.renames)
         consNow.toSeq.sortBy(_._1).foreach { case (n, check) =>
           val bad = rows.filter(coalesce(expr(check), lit(true)) === false)
             .limit(1).collect()
@@ -148,7 +148,6 @@ private[acid] final class GraftCowWrite(root: String, dataSchema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val inst = VersionedTable.open(SparkSession.active, root)
     try inst.fs.delete(new Path(inst.dataDir, stagingSub), true)
     catch { case _: Throwable => () }
   }

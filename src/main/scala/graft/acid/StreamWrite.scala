@@ -171,10 +171,7 @@ private[acid] final class GraftStreamingWrite(root: String,
         // commit per micro-batch. Keys are read from the staged files'
         // obj_id column only (distributed, never collected); the delete
         // side prunes to candidate files via manifest id-range stats
-        val spark = SparkSession.active
-        val keys = spark.read
-          .schema(StructType(tableSchema.filter(_.name == "obj_id")))
-          .parquet(staged.map(f => new Path(inst.dataDir, f).toString): _*)
+        val keys = inst.viewOf(staged, Instance.IdSchema.toDDL)
         // a micro-batch carrying duplicate obj_id values would land
         // every copy, breaking the obj_id-unique-per-snapshot contract
         // point ops and the change feed rely on (Txn.merge rejects the
@@ -199,7 +196,7 @@ private[acid] final class GraftStreamingWrite(root: String,
       if (consNow.nonEmpty && staged.nonEmpty) {
         import org.apache.spark.sql.functions.{coalesce, expr, lit}
         val rows = inst.viewOf(staged, pinnedMapping._1,
-          Map.empty, pinnedMapping._2)
+          renames = pinnedMapping._2)
         consNow.toSeq.sortBy(_._1).foreach { case (n, check) =>
           val bad = rows.filter(coalesce(expr(check), lit(true)) === false)
             .limit(1).collect()

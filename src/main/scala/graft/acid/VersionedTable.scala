@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
-import org.apache.spark.sql.graft.PlanBridge.{localFrame, nullable, rowFilter}
+import org.apache.spark.sql.graft.PlanBridge.{localFrame, nullable, rowFilter, tableFrame}
 
 /** Versioned ACID table layer — capability parity with db-core's
   * transactional storage engine (SURVEY.md §2.1), re-expressed Spark-first
@@ -262,16 +262,7 @@ object VersionedTable {
     /** Exact number of live data files in this snapshot. */
     def numFiles: Long =
       if (liveCount >= 0L) liveCount else inlineFiles.size.toLong
-    def skipStats: SkipStats = SkipStats(stats, colStats, fileStats)
   }
-
-  /** A snapshot's per-file skip index, keyed by dataDir-relative file
-    * name and PHYSICAL column name: obj_id ranges, Z-order cluster
-    * ranges, and universal footer stats (per-file blooms included). The
-    * input of [[GraftTableSource.fileMayMatch]]. */
-  final case class SkipStats(ids: Map[String, (Long, Long)],
-      colStats: Map[String, Map[String, (Long, Long)]],
-      fileStats: Map[String, Map[String, UStat]])
 
   /** The obj_ids of driver-resident rows; None when `schema` has no
     * LONG obj_id or a row's id is null. */
@@ -1232,12 +1223,6 @@ object Instance {
     * subplan, well inside analyzer comfort). */
   val ChangesBatchVersions = 32
 
-  /** Partition-tuple count past which [[Instance.viewOf]] switches from
-    * per-group literal-column branches to one native hive-layout scan
-    * (below it, the literal branches give plan-time whole-scan pruning
-    * with zero file index cost; above it, plan width dominates). */
-  val PartitionGroupFanout = 32
-
   /** Bounds of a driver-side point read ([[Instance.pointRows]]): at
     * most this many candidate files, of at most this total length (and
     * never more than `spark.sql.files.openCostInBytes`). Measured on 4
@@ -1247,6 +1232,22 @@ object Instance {
     * survivors, the heaviest point operation per byte). */
   val PointReadMaxFiles = 32
   val PointReadMaxBytes = 512L * 1024
+
+  private[acid] val IdSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("obj_id", LongType)))
+
+  /** The whole of one data file as a reader input. */
+  private[acid] def wholeFile(st: org.apache.hadoop.fs.FileStatus): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L,
+      st.getLen, Array.empty, st.getModificationTime, st.getLen)
+
+  /** `use` over `read`'s rows of `f`, closing the file after. */
+  private[acid] def readFile[T](read: PartitionedFile => Iterator[InternalRow],
+      f: PartitionedFile)(use: Iterator[InternalRow] => T): T = {
+    val it = read(f)
+    try use(it)
+    finally it match { case c: java.io.Closeable => c.close(); case _ => }
+  }
 }
 
 final class Instance(val spark: SparkSession, val root: String,
@@ -1626,159 +1627,45 @@ final class Instance(val spark: SparkSession, val root: String,
     appTxnsAt(latestVersion).get(appId)
 
   /** Version-pinned snapshot read (reference: open_read at the txn's
-    * snapshot CSN, instance.rs:126-134). */
-  def snapshot(v: Long): DataFrame = {
-    val st = tableStateAt(v)
-    // an unpruned snapshot read enumerates every file in its Spark
-    // plan by construction; the name list is transient plan input
-    // (liveNames), not driver-resident state
-    val names = liveNames(st)
-    viewOf(names, st.ddl, resolveDvs(st.dvs, names), st.renames,
-      Some(st.skipStats))
-  }
+    * snapshot CSN, instance.rs:126-134). The version's state is the
+    * scan's input as is: on a segmented checkpoint its files are pruned
+    * over the side files, never listed on the driver. */
+  def snapshot(v: Long): DataFrame = readState(tableStateAt(v), Some(v))
 
-  /** DataFrame over an explicit file set (shared by committed snapshots
-    * and transaction-local views).
-    *
-    * Partition-aware: files staged by a partitioned insert carry their
-    * partition values as `k=v` path segments (hive layout inside the
-    * staging dir — the manifest's file list is the partition index, no
-    * format change). Files are grouped by partition tuple; each group
-    * is read without the partition columns, which come back as CAST
-    * literals — so a `filter(lang === "en")` CONSTANT-FOLDS to false
-    * on every other group and Catalyst prunes those scans from the
-    * plan entirely: manifest-level partition pruning with zero file
-    * opens. Unpartitioned files (no k=v segments) read exactly as
-    * before; CoW rewrites materialize the column physically, which
-    * degrades pruning for the rewritten files but never correctness.
-    *
-    * Every file group but a wide hive-layout one reads through a
-    * [[ManifestFileIndex]] over its manifest names, so nothing is
-    * listed; with `skip` (the snapshot's or the transaction's manifest
-    * stats) the scan's pushed filters also drop files by their stats
-    * before any status is fetched. */
+  /** DataFrame over an explicit read set (transaction-local views,
+    * change-feed images, compaction input): the same [[GraftTable]]
+    * relation a snapshot reads, over `files` with their deletion-vector
+    * sidecar lists `dvs` and column mapping `renames`. It carries no
+    * manifest stats, so its scans skip files by partition values only:
+    * files staged by a partitioned insert carry them as `k=v` path
+    * segments, which the scan appends per file layout. */
   private[acid] def viewOf(files: Seq[String], ddl: String,
-      masks: Map[String, GraftBitmap] = Map.empty,
-      renames: Map[String, String] = Map.empty,
-      skip: Option[SkipStats] = None): DataFrame =
-    if (renames.isEmpty) viewOfPhys(files, ddl, masks, skip)
-    else {
-      // COLUMN MAPPING: the files (column names, k=v path segments,
-      // footer stats) live entirely in PHYSICAL namespace, so the read
-      // is planned physical end-to-end and one final projection aliases
-      // back to the logical names — Catalyst collapses it into the
-      // scan's own projections, so the indirection costs nothing at
-      // runtime.
-      val logical = StructType.fromDDL(ddl)
-      viewOfPhys(files, physSchema(logical, renames).toDDL, masks, skip)
-        .select(logical.map(f =>
-          col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
-    }
-
-  private def viewOfPhys(files: Seq[String], ddl: String,
-      masks: Map[String, GraftBitmap], skip: Option[SkipStats]): DataFrame = {
-    // merge-on-read: files with a deletion vector read as their own
-    // branch minus the masked row ordinals (`_metadata.row_index`,
-    // which the analyzer resolves through the branch's Project nodes
-    // down to its single file scan). The masked set is SMALL by construction
-    // (compaction materializes and clears it), so the per-file
-    // branches and the mask filters stay bounded; the clean majority
-    // keeps the shared-scan fast paths below untouched.
-    val masked = files.filter(f => masks.get(f).exists(_.nonEmpty))
-    if (masked.nonEmpty) {
-      val clean = files.filterNot(masked.toSet)
-      val branches = masked.sorted.map { f =>
-        viewOfPhys(Seq(f), ddl, Map.empty, skip)
-          .withColumn("_graft_ri", col("_metadata.row_index"))
-          .where(!DvExpressions.posMasked(masks(f), col("_graft_ri")))
-          .drop("_graft_ri")
-      }
-      return (viewOfPhys(clean, ddl, Map.empty, skip) +: branches)
-        .reduce(_.unionByName(_))
-    }
-    val schema = StructType.fromDDL(ddl)
-    if (files.isEmpty) return localFrame(spark, schema, Nil)
-    def partsOf(f: String): Seq[(String, String)] =
-      f.split('/').drop(1).dropRight(1).toSeq.flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) Some(seg.substring(0, i) -> seg.substring(i + 1)) else None
-      }
-    val groups = files.groupBy(partsOf)
-    def readGroup(parts: Seq[(String, String)], fs_ : Seq[String]): DataFrame = {
-      val partCols = parts.map(_._1).toSet
-      val fileSchema = StructType(schema.filterNot(f => partCols(f.name)))
-      var df = scanOf(fs_, fileSchema, skip)
-      parts.foreach { case (k, raw) =>
-        val dt = schema.find(_.name == k).map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(raw)
-        val c = if (v == "__HIVE_DEFAULT_PARTITION__") lit(null).cast(dt)
-        else lit(v).cast(dt)
-        df = df.withColumn(k, c)
-      }
-      df.select(schema.map(f => col(f.name)): _*)
-    }
-    if (groups.size == 1 && groups.keys.head.isEmpty)
-      scanOf(files, schema, skip)
-    else {
-      // Wide-fanout fast path: one literal-column branch per partition
-      // tuple is ideal for a handful of groups (constant-folding prunes
-      // whole scans at plan time) but a 10^4-partition snapshot would
-      // analyze a 10^4-branch union. Files are bucketed by their exact
-      // partition column SEQUENCE — the nesting ORDER, which is what
-      // Spark's discovery requires to be consistent — and EVERY
-      // sequence with more than PartitionGroupFanout tuples is handed
-      // to Spark's own hive-layout parsing as one relation (basePath
-      // anchors it; the staging segment above the k=v dirs is ignored
-      // because discovery walks leaf-up and stops at the first non-k=v
-      // segment; values unescape identically). One native relation per
-      // wide order matters because compact() rewrites with its own
-      // sorted order: a table alternating insert order and compacted
-      // order must not regrow a per-tuple union for either. The rest —
-      // CoW rewrites that physicalized the columns (all share the
-      // empty tuple: one branch), narrow minority orders — union
-      // beside them as literal branches.
-      val bySeq = groups.groupBy { case (parts, _) => parts.map(_._1) }
-      val (wide, narrow) = bySeq.partition { case (sq, gs) =>
-        sq.nonEmpty && gs.size > Instance.PartitionGroupFanout }
-      val nativeBranches = wide.toSeq.sortBy(_._1.mkString(","))
-        .map { case (_, gs) =>
-          spark.read.schema(schema)
-            .option("basePath", fs.makeQualified(dataDir).toString)
-            .parquet(gs.values.flatten.toSeq.sorted
-              .map(f => new Path(dataDir, f).toString): _*)
-            .select(schema.map(f => col(f.name)): _*)
-        }
-      val literalBranches = narrow.values.flatten.toSeq.sortBy(_._2.min)
-        .map { case (p, fs_) => readGroup(p, fs_) }
-      (nativeBranches ++ literalBranches).reduce(_.unionByName(_))
-    }
+      dvs: Map[String, Seq[String]] = Map.empty,
+      renames: Map[String, String] = Map.empty): DataFrame = {
+    val set = files.toSet
+    readState(TableState(files, ddl, Map.empty, Map.empty,
+      dvs.filter { case (f, _) => set(f) }, renames = renames), None)
   }
 
-  /** Parquet scan of `files` (dataDir-relative, no partition columns
-    * in `schema`) through a [[ManifestFileIndex]]. */
-  private[acid] def scanOf(files: Seq[String], schema: StructType,
-      skip: Option[SkipStats] = None): DataFrame = {
-    val s = nullable(schema) // as spark.read.parquet reads: see nullable
-    spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new ManifestFileIndex(this, files, s, skip), new StructType(),
-        s, None, new ParquetFileFormat, Map.empty)(spark))
+  /** `st` read through GraftScan: pinned at version `pinned`, or an
+    * explicit read set. Programmatic reads use the table schema made
+    * nullable, as Spark's file sources read (see [[nullable]]). */
+  private[acid] def readState(st: TableState, pinned: Option[Long]): DataFrame = {
+    val schema = nullable(StructType.fromDDL(st.ddl))
+    if (st.inlineFiles.isEmpty && st.sidecar.isEmpty) localFrame(spark, schema, Nil)
+    else tableFrame(spark, new GraftTable(this, st, pinned, schema))
   }
 
   /** Driver-side read of a few small files on the calling thread, with
-    * the reader GraftScan's factory builds (Spark's parquet reader plus
-    * the row-index column): per file, in file order, each unmasked row
-    * of `schema` (PHYSICAL names, read nullable as [[scanOf]] reads)
-    * that passes `keep` (which sees the row before it is copied), with
-    * its row ordinal. Point operations use it to skip a Spark job's
-    * dispatch, which costs more than reading a small file. None — the
-    * caller takes its job path — when a file is partitioned, or the
-    * files pass [[Instance.PointReadMaxFiles]], or their total length
-    * passes [[Instance.PointReadMaxBytes]] or
-    * `spark.sql.files.openCostInBytes`, Spark's own estimate of what
-    * opening one file costs. */
+    * [[rowIndexReader]]: per file, in file order, each unmasked row of
+    * `schema` (PHYSICAL names, read nullable) that passes `keep` (which
+    * sees the row before it is copied), with its row ordinal. Point
+    * operations use it to skip a Spark job's dispatch, which costs more
+    * than reading a small file. None — the caller takes its job path —
+    * when a file is partitioned, or the files pass
+    * [[Instance.PointReadMaxFiles]], or their total length passes
+    * [[Instance.PointReadMaxBytes]] or `spark.sql.files.openCostInBytes`,
+    * Spark's own estimate of what opening one file costs. */
   private[acid] def pointRows(files: Seq[String], schema: StructType,
       masks: Map[String, GraftBitmap], keep: InternalRow => Boolean = _ => true)
       : Option[Seq[(String, IndexedSeq[(Long, InternalRow)])]] = {
@@ -1793,28 +1680,54 @@ final class Instance(val spark: SparkSession, val root: String,
       val st = fs.getFileStatus(new Path(dataDir, f)); total += st.getLen; st
     }.takeWhile(_ => total <= gate).toVector
     if (statuses.size < files.size) return None
-    val withRi = nullable(schema).add(
-      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
     val riIdx = schema.length
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-      withRi, new StructType(), withRi, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    val read = rowIndexReader(schema)
     val proj = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
       case (f, i) => BoundReference(i, f.dataType, nullable = true) })
     Some(files.zip(statuses).map { case (f, st) =>
       val mask = masks.getOrElse(f, GraftBitmap.empty)
-      val it = read(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
-        st.getModificationTime, st.getLen))
-      val rows =
-        try it.flatMap { r =>
+      f -> Instance.readFile(read, Instance.wholeFile(st)) { it =>
+        it.flatMap { r =>
           val ri = r.getLong(riIdx)
           if (mask.contains(ri) || !keep(r)) None else Some(ri -> proj(r).copy())
         }.toIndexedSeq
-        finally it match { case c: java.io.Closeable => c.close(); case _ => }
-      f -> rows
+      }
     })
+  }
+
+  /** Spark's parquet reader of `schema` (PHYSICAL names, read nullable)
+    * with the row-index column appended at position `schema.length` —
+    * the reader GraftScan's factory builds for masked files. The
+    * function is serializable, so a job can run it on executors. */
+  private def rowIndexReader(schema: StructType)
+      : PartitionedFile => Iterator[InternalRow] = {
+    val withRi = nullable(schema).add(
+      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      withRi, new StructType(), withRi, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+  }
+
+  /** Row ordinals, per file, of the unmasked rows of `files` whose
+    * obj_id is in `ids`: the job-path twin of a [[pointRows]] pass,
+    * for candidates above its gate. One Spark job; each task opens its
+    * files with [[rowIndexReader]] and returns only the hits, so a
+    * re-delete of a masked row stays a no-op. */
+  private[acid] def hitOrdinalsJob(files: Seq[String], ids: Seq[Long],
+      masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] = {
+    val read = rowIndexReader(Instance.IdSchema)
+    val want = ids.toSet
+    val splits = pooledMap(files)(f => (f,
+      Instance.wholeFile(fs.getFileStatus(new Path(dataDir, f))),
+      masks.getOrElse(f, GraftBitmap.empty)))
+    spark.sparkContext.parallelize(splits,
+      math.max(1, math.min(splits.size, spark.sparkContext.defaultParallelism)))
+      .flatMap { case (f, pf, mask) =>
+        Instance.readFile(read, pf)(_.filter(r => !r.isNullAt(0) &&
+          want(r.getLong(0)) && !mask.contains(r.getLong(1)))
+          .map(r => f -> r.getLong(1)).toVector)
+      }.collect().toSeq.groupMap(_._1)(_._2)
   }
 
   /** The rows of `files` that satisfy `cond`, for a point read: below
@@ -1822,13 +1735,14 @@ final class Instance(val spark: SparkSession, val root: String,
     * as they are read, and the matches come back as a local relation,
     * so collecting it runs no Spark job. */
   private[acid] def pointView(files: Seq[String], ddl: String,
-      masks: Map[String, GraftBitmap], renames: Map[String, String],
+      dvs: Map[String, Seq[String]], renames: Map[String, String],
       cond: Column): DataFrame = {
     val schema = nullable(StructType.fromDDL(ddl))
     lazy val keep = rowFilter(spark, schema, cond)
-    pointRows(files, physSchema(schema, renames), masks, keep(_)) match {
+    pointRows(files, physSchema(schema, renames), resolveDvs(dvs, files),
+        keep(_)) match {
       case Some(rows) => localFrame(spark, schema, rows.flatMap(_._2.map(_._2)))
-      case None => viewOf(files, ddl, masks, renames).filter(cond)
+      case None => viewOf(files, ddl, dvs, renames).filter(cond)
     }
   }
 
@@ -1848,7 +1762,7 @@ final class Instance(val spark: SparkSession, val root: String,
     try {
       val files = txn.candidateFilesBy(column, values)
       val st = tableStateAt(txn.readVersion)
-      pointView(files, st.ddl, resolveDvs(st.dvs, files), st.renames,
+      pointView(files, st.ddl, st.dvs, st.renames,
         col(column).isin(values: _*))
     } finally rollback(txn) // committed files only — nothing to reclaim
   }
@@ -2346,10 +2260,8 @@ final class Instance(val spark: SparkSession, val root: String,
             val s = spark; import s.implicits._
             df.join(broadcast(ids.toDF("obj_id")), Seq("obj_id"), "left_semi")
           }
-        val pre = touched(viewOf(preFiles, preDdl,
-          resolveDvs(preDvs, preFiles), preRen))
-        val post = touched(viewOf(postFiles, m.schemaDDL,
-          resolveDvs(curDvs, postFiles), m.renames))
+        val pre = touched(viewOf(preFiles, preDdl, preDvs, preRen))
+        val post = touched(viewOf(postFiles, m.schemaDDL, curDvs, m.renames))
         val preIds = pre.select("obj_id").distinct()
         val postIds = post.select("obj_id").distinct()
         def tag(df: DataFrame, other: DataFrame, join: String,
@@ -2374,10 +2286,8 @@ final class Instance(val spark: SparkSession, val root: String,
         // values rewritten) is indistinguishable from a copy and is not
         // emitted; the feed assumes the layer's id contract (obj_id
         // unique per snapshot — guaranteed by the upsert/point-op API).
-        val pre = viewOf(preFiles, preDdl,
-          resolveDvs(preDvs, preFiles), preRen)
-        val post = viewOf(postFiles, m.schemaDDL,
-          resolveDvs(curDvs, postFiles), m.renames)
+        val pre = viewOf(preFiles, preDdl, preDvs, preRen)
+        val post = viewOf(postFiles, m.schemaDDL, curDvs, m.renames)
         // one column layout across both sides (schema evolution within
         // the commit appears as typed nulls, same as the union path)
         val allCols: Seq[(String, DataType)] =
@@ -2499,11 +2409,9 @@ final class Instance(val spark: SparkSession, val root: String,
       val postFiles = m.added ++ dvTargets
       if (preFiles.isEmpty && postFiles.isEmpty) None
       else {
-        val pre = aligned(viewOf(preFiles, preDdl,
-          resolveDvs(preDvs, preFiles), preRen)
+        val pre = aligned(viewOf(preFiles, preDdl, preDvs, preRen)
           .withColumn("_w", lit(-1L)), preRen)
-        val post = aligned(viewOf(postFiles, m.schemaDDL,
-          resolveDvs(curDvs, postFiles), m.renames)
+        val post = aligned(viewOf(postFiles, m.schemaDDL, curDvs, m.renames)
           .withColumn("_w", lit(1L)), m.renames)
         Some(post.unionByName(pre, allowMissingColumns = true))
       }
@@ -3143,7 +3051,7 @@ final class Instance(val spark: SparkSession, val root: String,
     })
 
   /** Resolve a state's dv map (file -> sidecar names) to the concrete
-    * per-file row-ordinal masks [[viewOf]] consumes, restricted to
+    * per-file row-ordinal masks the readers apply, restricted to
     * `files`: each file's sidecar bitmaps union-folded. */
   private[acid] def resolveDvs(dvs: Map[String, Seq[String]],
       files: Seq[String]): Map[String, GraftBitmap] = {
@@ -4596,8 +4504,7 @@ final class Instance(val spark: SparkSession, val root: String,
     val st = tableStateAt(txn.readVersion)
     val masked = st.dvs.keys.toSeq.sorted
     if (masked.isEmpty) { rollback(txn); return 0 }
-    val masks = resolveDvs(st.dvs, masked)
-    val survivors = viewOf(masked, st.ddl, masks, st.renames)
+    val survivors = viewOf(masked, st.ddl, st.dvs, st.renames)
     val rewritten =
       // no isEmpty pre-probe (it ran the whole plan twice):
       // writeStaged drops zero-row part files, so an empty result
@@ -4715,7 +4622,7 @@ final class Instance(val spark: SparkSession, val root: String,
     // compaction MATERIALIZES outstanding deletion vectors: the rewrite
     // reads through the masks and the retired files' dv entries drop
     // with them, healing read overhead back to zero
-    val view = viewOf(files, ddl, resolveDvs(st.dvs, files), st.renames)
+    val view = viewOf(files, ddl, st.dvs, st.renames)
     val clustered = cluster match {
       case Nil => view.coalesce(targetFiles)
       case Seq(c) => view.repartitionByRange(targetFiles, col(c))
@@ -4891,8 +4798,7 @@ final class Instance(val spark: SparkSession, val root: String,
     * materialized on the driver here — the caller decides whether the
     * cardinality permits a literal list or requires a summary). */
   private[acid] def stagedIdsDf(staged: Seq[String]): DataFrame =
-    spark.read.parquet(staged.map(f => new Path(dataDir, f).toString): _*)
-      .select("obj_id").distinct()
+    viewOf(staged, Instance.IdSchema.toDDL).distinct()
 
   /** Build an [[ObjSummary]] from an id column DISTRIBUTED: each
     * partition folds its ids into a local bloom bitset + count/range,
@@ -5108,23 +5014,17 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * base files (without this, manifests could remove one base file
     * twice while publishing both rewrites, resurrecting deleted rows). */
   def read(): DataFrame = {
-    val (_, ddl, _) = localState()
-    // an unpruned txn-local read enumerates every live file in its
-    // plan by construction: full names are transient plan input
-    // (segmented: streamed off the side files), never retained
-    val files = (inst.liveNames(cachedBaseState()).toSet --
-      removed ++ added).toSeq.sorted
-    inst.viewOf(files, ddl, localMasks(files), localRen, Some(localSkip))
-  }
-
-  /** Txn-local skip index: the pinned snapshot's manifest stats minus
-    * removed files plus this transaction's staged ones, so a filtered
-    * [[read]] skips staged files by their stats too. */
-  private def localSkip: SkipStats = {
     val b = cachedBaseState()
-    SkipStats(b.stats -- removed ++ addedStats,
-      b.colStats -- removed ++ addedColStats,
-      b.fileStats -- removed ++ addedFileStats)
+    val (files, ddl, stats) = localState()
+    // a segmented base keeps its checkpoint-covered files in the side
+    // files, pruned there by the scan; this transaction's removals are
+    // excluded from them like a later commit's would be
+    inst.readState(b.copy(inlineFiles = files, ddl = ddl, stats = stats,
+      colStats = b.colStats -- removed ++ addedColStats,
+      fileStats = b.fileStats -- removed ++ addedFileStats,
+      dvs = localDvs(), renames = localRen,
+      sidecar = b.sidecar.map(sc => sc.copy(excluded = sc.excluded ++ removed,
+        tailLive = files.toSet))), None)
   }
 
   /** Files whose manifest obj-id range can contain one of `ids` — the
@@ -5340,9 +5240,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     if (!inst.conf.uniqueIds || staged.isEmpty) return
     // raw ids, NOT stagedIdsDf (whose distinct() would hide
     // within-batch duplicates from the check below)
-    val batchIds = inst.spark.read
-      .parquet(staged.map(f => new Path(inst.dataDir, f).toString): _*)
-      .select("obj_id")
+    val batchIds = inst.viewOf(staged, Instance.IdSchema.toDDL)
     val dup = batchIds.groupBy("obj_id").count()
       .filter(col("count") > 1).limit(1).collect()
     if (dup.nonEmpty)
@@ -5364,7 +5262,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     val cand = candidateFilesRange(lo, hi)
     if (cand.nonEmpty) {
       val (_, ddl, _) = localState()
-      val existing = inst.viewOf(cand, ddl, localMasks(cand), localRen)
+      val existing = inst.viewOf(cand, ddl, localDvs(), localRen)
         .select("obj_id")
       val clash = existing.join(batchIds, Seq("obj_id"), "left_semi")
         .limit(1).collect()
@@ -5404,7 +5302,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // no observation (job path not taken / metric unavailable):
       // the original read-back probe
       case None =>
-        val idsDf = inst.stagedIdsDf(staged)
+        // a null id is no id (the job path's observation skips it too)
+        val idsDf = inst.stagedIdsDf(staged).where(col("obj_id").isNotNull)
         val th = inst.conf.objectListThreshold
         val probe = idsDf.limit(th + 1).collect().map(_.getLong(0))
         if (probe.length <= th) { objects ++= probe; spillObjectsIfNeeded() }
@@ -5706,17 +5605,20 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     val tomb1 = (tomb0.toSet ++ dropped.map(c => ren0.getOrElse(c, c)))
       .toSeq.sorted
     if (tomb1 != tomb0) tombstones = Some(tomb1)
-    schemaDDL = Some(next)
+    // an added column is absent from every older file, whose rows read
+    // it as null: record it nullable whatever the DataFrame declared
+    schemaDDL = Some(StructType(nextSchema.map(f =>
+      if (addedCols(f.name)) nullable(StructType(Seq(f))).head else f)).toDDL)
     schemaEvolved = true
   }
 
   /** [[insert]] with hive-style partitioning on low-cardinality domain
     * columns (lang, source, date): rows land in `k=v` subdirs of the
     * staging dir, and those path segments — carried verbatim in the
-    * manifest's file list — become the partition index. Reads
-    * reconstruct the columns as literals per file group, so partition
-    * predicates prune whole groups at plan time with zero file opens
-    * (see [[Instance.viewOf]]). Callers should partition every insert
+    * manifest's file list — become the partition index. Reads append
+    * the columns per file layout, and partition predicates prune whole
+    * files at plan time with zero file opens (see [[GraftScan]]).
+    * Callers should partition every insert
     * of a table the same way; mixing is safe (unpartitioned files just
     * never prune). */
   def insertPartitioned(df: DataFrame, partitionBy: Seq[String]): Unit = {
@@ -5865,7 +5767,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // base∩src rows live only in candidate files (a pruned file's id
       // range misses the whole source span), so this snapshot is the
       // exact match side for both the rewrite and the insert anti join
-      val masks = localMasks(cand)
+      val masks = localDvs()
       val snap = if (cand.isEmpty) null
         else inst.viewOf(cand, ddl, masks, localRen)
           .withColumn("_file", input_file_name())
@@ -5951,7 +5853,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       val lo = bounds.getLong(0); val hi = bounds.getLong(1)
       val cand = candidateFilesRange(lo, hi)
       if (cand.nonEmpty) {
-        val masks = localMasks(cand)
+        val masks = localDvs()
         val snap = inst.viewOf(cand, ddl, masks, localRen)
           .withColumn("_file", input_file_name())
         val hit = snap.join(keys, Seq("obj_id"), "left_semi")
@@ -6018,9 +5920,9 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
           added ++= rewritten
         }
       case None =>
-        val hit = scanHitOrdinals(cand, ids, masks).keys.toSeq.sorted
+        val hit = inst.hitOrdinalsJob(cand, ids, masks).keys.toSeq.sorted
         if (hit.nonEmpty) {
-          val touched = inst.viewOf(hit, ddl, masks, localRen)
+          val touched = inst.viewOf(hit, ddl, localDvs(), localRen)
           val rows = transform match {
             case None => idReject(touched, ids)
             case Some(t) =>
@@ -6034,40 +5936,21 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     }
   }
 
-  private val idSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("obj_id", LongType)))
-
   /** Row ordinals, per file, of the unmasked rows of `cand` whose obj_id
     * is in `ids` — the one pass a point operation makes over its
     * candidate files, read on the driver below the
-    * [[Instance.pointRows]] gate. */
+    * [[Instance.pointRows]] gate and as one job above it. */
   private def hitOrdinals(cand: Seq[String], ids: Seq[Long],
       masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] =
-    inst.pointRows(cand, idSchema, masks, {
+    inst.pointRows(cand, Instance.IdSchema, masks, {
       val want = ids.toSet
       r => !r.isNullAt(0) && want(r.getLong(0))
     }) match {
       case Some(files) =>
         files.collect { case (f, rows) if rows.nonEmpty => f -> rows.map(_._1) }
           .toMap
-      case None => scanHitOrdinals(cand, ids, masks)
+      case None => inst.hitOrdinalsJob(cand, ids, masks)
     }
-
-  /** [[hitOrdinals]] above the gate: one scan job returns (file, row
-    * index) of the matching rows; the driver drops the ones a prior
-    * vector masks (a re-delete stays a no-op) and deduplicates — the id
-    * set is point-sized. */
-  private def scanHitOrdinals(cand: Seq[String], ids: Seq[Long],
-      masks: Map[String, GraftBitmap]): Map[String, Seq[Long]] = {
-    val scan = inst.scanOf(cand, idSchema).select(col("obj_id"),
-      col("_metadata.file_path").as("_fp"),
-      col("_metadata.row_index").as("_ri"))
-    idMatch(scan, ids).select("_fp", "_ri").collect()
-      .map(r => (relativize(r.getString(0)), r.getLong(1)))
-      .distinct
-      .filterNot { case (f, ri) => masks.get(f).exists(_.contains(ri)) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-  }
 
   /** Merge-on-read point delete: instead of rewriting every file that
     * holds one of `ids` (copy-on-write amplification: one masked row
@@ -6123,7 +6006,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // masks are resolved into the plan as literal arrays at
       // construction, so this view keeps reading PRE-mask rows even
       // after deleteMoR below registers the new vector
-      val current = idMatch(inst.viewOf(cand, ddl, localMasks(cand), localRen), ids)
+      val current = idMatch(inst.viewOf(cand, ddl, localDvs(), localRen), ids)
       val updated = transform(current)
         .select(StructType.fromDDL(ddl).fieldNames.map(col).toIndexedSeq: _*)
       deleteMoR(ids)
@@ -6276,10 +6159,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     val addedFiles = added.toSeq.sorted
     val ddl = schemaDDL.getOrElse(base.ddl)
     val ren = localRen
-    val pre = inst.viewOf(removedFiles, base.ddl,
-      inst.resolveDvs(base.dvs, removedFiles), base.renames)
-    val post = inst.viewOf(addedFiles, ddl,
-      inst.resolveDvs(localDvs(), addedFiles), ren)
+    val pre = inst.viewOf(removedFiles, base.ddl, base.dvs, base.renames)
+    val post = inst.viewOf(addedFiles, ddl, localDvs(), ren)
     val allCols: Seq[(String, DataType)] =
       (post.schema ++ pre.schema.filterNot(f =>
         post.columns.contains(f.name)))

@@ -1,13 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.InputFileBlockHolder
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.datasources.DataSourceStrategy
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.StructType
 
 /** Plan-level helpers Spark keeps `private[sql]` or `protected[sql]`. */
@@ -39,8 +41,18 @@ object PlanBridge {
     * that column does not hold it, and its rows read as null. */
   def nullable(schema: StructType): StructType = schema.asNullable
 
-  /** A scan's pushed catalyst predicate as a data source filter, the
-    * form file-skipping logic consumes; None when it has no such form. */
-  def translateFilter(e: Expression): Option[sources.Filter] =
-    DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true)
+  /** A DataFrame reading `table` through its DSv2 scan — the relation
+    * `spark.read.format(...)` would resolve, built from an object the
+    * caller already holds. */
+  def tableFrame(spark: SparkSession, table: Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      DataSourceV2Relation.create(table, None, None))
+
+  /** Names `f` as the file the current task reads, for
+    * `input_file_name()`, as Spark's own file readers do; [[unsetInputFile]]
+    * clears it when the reader closes. */
+  def setInputFile(f: PartitionedFile): Unit =
+    InputFileBlockHolder.set(f.urlEncodedPath, f.start, f.length)
+
+  def unsetInputFile(): Unit = InputFileBlockHolder.unset()
 }

@@ -558,14 +558,14 @@ class AcidSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("obj_id"), r.getAs[String]("lang")))
     assert(all.toSeq == Seq((1L, "en"), (2L, "de"), (3L, "en"), (4L, "fr")))
 
-    // a partition predicate folds every other group to empty: exactly
-    // ONE parquet scan survives in the plan (manifest-level pruning —
-    // the pruned partitions' files are never even opened)
+    // a partition predicate prunes by path: the one scan plans only
+    // lang=en files (manifest-level pruning — the pruned partitions'
+    // files are never even opened)
     val en = inst.read().filter(col("lang") === "en")
     assert(en.collect().map(_.getAs[Long]("obj_id")).sorted.toSeq == Seq(1L, 3L))
-    val plan = en.queryExecution.executedPlan.toString
-    val scans = plan.linesIterator.count(_.contains("FileScan parquet"))
-    assert(scans == 1, s"expected one surviving scan, plan:\n$plan")
+    val planned = graftLeaves(en).flatMap(_.prunedFiles)
+    assert(graftLeaves(en).size == 1 && planned.nonEmpty &&
+      planned.forall(_.contains("lang=en")), s"expected lang=en files only: $planned")
 
     // point update still prunes by footer stats and rewrites correctly
     val t2 = inst.begin()
@@ -595,16 +595,18 @@ class AcidSpec extends AnyFunSuite {
     val t2 = inst.begin()
     t2.update(Seq(1L), df => df.withColumn("v", col("v") + 1))
     inst.commit(t2)
-    def scans(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("FileScan parquet"))
-    // the rewritten (unpartitioned) file joins every partition filter
-    assert(scans(inst.read().filter(col("lang") === "de")) >= 2)
+    def unpartitioned(): Seq[String] =
+      inst.stateAt(inst.latestVersion)._1.filterNot(_.contains("lang="))
+    // the rewritten file holds lang in its columns, not its path
+    assert(unpartitioned().size == 1)
 
     inst.compact()
-    // compaction re-applied partitionBy(lang): pruning is exact again
+    // compaction re-applied partitionBy(lang): every file is in its
+    // partition again, and the filter plans the lang=de file only
+    assert(unpartitioned().isEmpty)
     val de = inst.read().filter(col("lang") === "de")
-    assert(scans(de) == 1, de.queryExecution.executedPlan.toString)
+    val planned = graftLeaves(de).flatMap(_.prunedFiles)
+    assert(planned.size == 1 && planned.forall(_.contains("lang=de")), planned)
     assert(de.collect().map(_.getAs[Long]("obj_id")).toSeq == Seq(2L))
     assert(inst.read().count() == 3)
     assert(inst.read().filter(col("obj_id") === 1L).collect()(0)
@@ -1456,6 +1458,23 @@ class AcidSpec extends AnyFunSuite {
     assert(feed.select("obj_id").distinct().count() == n.toLong)
   }
 
+  /** The optimized plan's graft scans, one per data-file leaf. */
+  private def graftLeaves(df: org.apache.spark.sql.DataFrame)
+      : Seq[graft.acid.GraftScan] =
+    df.queryExecution.optimizedPlan.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan
+    }.collect { case g: graft.acid.GraftScan => g }
+
+  /** No leaf of `df` reads data files except through a GraftScan. */
+  private def onlyGraftScans(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().forall {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.isInstanceOf[graft.acid.GraftScan]
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case _ => false
+    }
+
   test("wide partition fanout reads as ONE native partitioned scan") {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "obj_id BIGINT, value BIGINT, lang STRING")
@@ -1466,10 +1485,10 @@ class AcidSpec extends AnyFunSuite {
       Seq("lang"))
     inst.commit(t)
     val out = inst.read()
-    // 40 partition tuples > PartitionGroupFanout: the snapshot must be
-    // one hive-layout relation, not a 40-branch union
-    assert(out.queryExecution.optimizedPlan.collectLeaves().size == 1,
-      "expected a single native partitioned scan")
+    // 40 partition tuples: the snapshot is one scan over the hive
+    // layout, not a 40-branch union
+    assert(out.queryExecution.optimizedPlan.collectLeaves().size == 1 &&
+      graftLeaves(out).size == 1, "expected a single partitioned scan")
     assert(out.count() == 200)
     assert(out.columns.toSeq == Seq("obj_id", "value", "lang"))
     val one = out.filter(col("lang") === "l7")
@@ -1477,28 +1496,26 @@ class AcidSpec extends AnyFunSuite {
     assert(rows.length == 5 && rows.forall(_.getString(2) == "l7"))
     assert(rows.map(_.getLong(0)).toSeq ==
       (1 to 200).filter(_ % 40 == 7).map(_.toLong))
-    // the predicate reaches the scan as a PARTITION filter (pruned by
-    // the file index, not evaluated per row)
-    val planStr = one.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters: [") && planStr.contains("lang"),
-      s"partition filter missing from scan:\n$planStr")
-    // a delete (CoW rewrite physicalizes the column for ONE file) must
-    // NOT flip the table back to a 40-branch plan: the rewritten file
-    // unions beside the native scan as a single literal branch
+    // the predicate prunes by partition path before any file opens:
+    // the scan plans only lang=l7 files
+    val pruned = graftLeaves(one).flatMap(_.prunedFiles)
+    assert(pruned.nonEmpty && pruned.forall(_.contains("lang=l7")),
+      s"partition pruning missing: $pruned")
+    // a delete (CoW rewrite physicalizes the column for ONE file)
+    // reads in the same scan as the partitioned files
     inst.withRetry() { txn => txn.delete(Seq(7L)) }
     val after = inst.read()
-    assert(after.queryExecution.optimizedPlan.collectLeaves().size <= 2,
-      "one native scan + one physicalized-rewrite branch, not per-partition branches")
+    assert(after.queryExecution.optimizedPlan.collectLeaves().size == 1 &&
+      graftLeaves(after).size == 1,
+      "one scan over the partitioned files and the physicalized rewrite")
     assert(after.count() == 199)
     assert(after.filter(col("lang") === "l7").count() == 4)
   }
 
   test("mixed partition nesting orders read correctly at any fanout") {
     // two inserts partitioned on the same COLUMNS in different ORDER:
-    // Spark's discovery cannot mix lang=/source= with source=/lang=
-    // nestings in one relation, so each wide order gets its OWN native
-    // scan (narrow orders would stay on literal branches) — never an
-    // analyzer error, always the right rows
+    // lang=/source= and source=/lang= nestings are two file layouts of
+    // one scan — never an analyzer error, always the right rows
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "obj_id BIGINT, value BIGINT, lang STRING, source STRING")
     val inst = VersionedTable.create(spark, freshDir(), schema)
@@ -1512,15 +1529,52 @@ class AcidSpec extends AnyFunSuite {
     t2.insertPartitioned(batch(101 to 200), Seq("source", "lang"))
     inst.commit(t2)
     val out = inst.read()
-    // both orders are wide (50 tuples each > fanout threshold): each
-    // reads as its OWN native relation — two leaves, not 100 branches
-    assert(out.queryExecution.optimizedPlan.collectLeaves().size == 2,
-      "one native scan per wide nesting order")
+    assert(out.queryExecution.optimizedPlan.collectLeaves().size == 1 &&
+      graftLeaves(out).size == 1, "one scan over both nesting orders")
     assert(out.count() == 200)
     assert(out.filter(col("lang") === "l3").count() ==
       (1 to 200).count(_ % 10 == 3))
     assert(out.filter(col("lang") === "l3" && col("source") === "s2")
       .collect().forall(r => r.getString(2) == "l3" && r.getString(3) == "s2"))
+  }
+
+  test("one GraftScan reads clean, masked, partitioned and physicalized files under a rename") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "obj_id BIGINT, value BIGINT, lang STRING")
+    val inst = VersionedTable.create(spark, freshDir(), schema)
+    def rows(r: Seq[Int]) = r.map(i =>
+      (i.toLong, i * 100L, if (i % 2 == 0) "de" else "en"))
+      .toDF("obj_id", "value", "lang")
+    inst.withRetry() { t => t.insert(rows(1 to 4)) }                      // clean
+    inst.withRetry() { t => t.insertPartitioned(rows(10 to 13), Seq("lang")) }
+    inst.withRetry() { t => t.deleteMoR(Seq(2L)) }                        // masked
+    inst.withRetry() { t => t.delete(Seq(10L)) }                          // physicalized
+    inst.withRetry() { t => t.renameColumn("value", "amount") }
+    val v = inst.latestVersion
+    val expected = Seq("[1,100,en]", "[3,300,en]", "[4,400,de]",
+      "[11,1100,en]", "[12,1200,de]", "[13,1300,en]")
+    def show(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.orderBy("obj_id").collect().map(_.toString).toSeq
+    val snap = inst.snapshot(v)
+    assert(graftLeaves(snap).size == 1 && onlyGraftScans(snap))
+    assert(snap.columns.toSeq == Seq("obj_id", "amount", "lang"))
+    assert(show(snap) == expected)
+    assert(show(snap.filter(col("lang") === "de")) ==
+      Seq("[4,400,de]", "[12,1200,de]"))
+    assert(graftLeaves(inst.read()).size == 1 && onlyGraftScans(inst.read()))
+    val t = inst.begin()
+    try {
+      t.insert(Seq((20L, 2000L, "de")).toDF("obj_id", "amount", "lang"))
+      val local = t.read()
+      assert(graftLeaves(local).size == 1 && onlyGraftScans(local))
+      assert(show(local) == expected :+ "[20,2000,de]")
+    } finally inst.rollback(t)
+    val feed = inst.changes(0L, v)
+    assert(graftLeaves(feed).nonEmpty && onlyGraftScans(feed))
+    def ids(change: String) = feed.filter(col("_change") === change)
+      .select("obj_id").as[Long].collect().sorted.toSeq
+    assert(ids("insert") == Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 13L))
+    assert(ids("delete") == Seq(2L, 10L))
   }
 
   test("schema guard: an unsanctioned shape change throws before staging") {

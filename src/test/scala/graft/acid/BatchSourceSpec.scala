@@ -278,7 +278,7 @@ class BatchSourceSpec extends AnyFunSuite {
       s"runtime IN must prune to one file, got ${scan.prunedFiles}")
     // row-level-operation scans volunteer runtime filtering too
     // (Spark's runtime GROUP filtering for group-based CoW)
-    val rlo = new GraftRowLevelOperation(dir, inst.latestVersion,
+    val rlo = new GraftRowLevelOperation(inst, inst.latestVersion,
       AcidQueries.schema,
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
     val cowScan = rlo.newScanBuilder(

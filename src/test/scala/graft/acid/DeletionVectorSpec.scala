@@ -407,7 +407,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(both(file).iterator.toSeq == Seq(1L, 3L))
     // viewOf drops a row matched by EITHER sidecar: ordinal 1 (id 2)
     // and ordinal 3 (id 4)
-    val seen = inst.viewOf(Seq(file), AcidQueries.schema.toDDL, both)
+    val seen = inst.viewOf(Seq(file), AcidQueries.schema.toDDL,
+      Map(file -> Seq(a, b)))
       .orderBy("obj_id").collect().map(_.getLong(0)).toSeq
     assert(seen == Seq(1L, 3L))
   }
@@ -416,8 +417,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     val inst = mk(Seq((1L, 10L), (2L, 20L), (3L, 30L)))
     val t = inst.begin(); t.deleteMoR(Seq(2L)); inst.commit(t)
     assert(contents(inst) == Seq((1L, 10L), (3L, 30L)))
-    // the mask predicate is built as a Column directly: reading a
-    // masked file leaves the shared function registry untouched
+    // masks apply inside the scan's reader: reading a masked file
+    // leaves the shared function registry untouched
     assert(!spark.catalog.functionExists("graft_pos_masked"))
   }
 
@@ -476,7 +477,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = inst.begin(); t.deleteMoR(Seq(2L)); inst.commit(t)
     val schema = org.apache.spark.sql.types.StructType
       .fromDDL(inst.stateAt(2L)._2)
-    val scan = new GraftScan(inst.root, 2L, schema, schema,
+    val scan = new GraftScan(inst, inst.tableStateAt(2L), Some(2L), schema, schema,
       Array.empty, wholeGroups = true)
     assert(scan.pinnedDvs == inst.tableStateAt(2L).dvs)
     assert(scan.pinnedDvs.nonEmpty)

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,8 +62,8 @@ class PointOpsSpec extends AnyFunSuite {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    plan.collect { case s: FileSourceScanExec => s.metrics("numFiles").value }
-      .sum
+    plan.collect { case b: BatchScanExec => b.scan }
+      .collect { case g: GraftScan => g.prunedFiles.size.toLong }.sum
   }
 
   private def rows(df: DataFrame): Seq[(Long, Long)] =
@@ -218,10 +218,11 @@ class PointOpsSpec extends AnyFunSuite {
       val e = inst.begin(); e.evolveSchema()
       e.insert(Seq((900L, 9L, 7L)).toDF("obj_id", "value", "extra"))
       inst.commit(e)
-      // the table's DDL declares the added primitive column NOT NULL,
-      // which the two older files do not hold
+      // the DataFrame declares the added primitive column NOT NULL;
+      // the two older files do not hold it, so the DDL records it
+      // nullable
       val v = inst.latestVersion
-      assert(!StructType.fromDDL(inst.tableStateAt(v).ddl)("extra").nullable)
+      assert(StructType.fromDDL(inst.tableStateAt(v).ddl)("extra").nullable)
       val t = inst.begin()
       t.update(Seq(1L), _.withColumn("value", lit(-1L)))
       t.delete(Seq(2L))
@@ -241,6 +242,26 @@ class PointOpsSpec extends AnyFunSuite {
     assert(driver(2) == Seq("[1,null]", "[3,null]", "[900,7]"))
     assert(driver(3) == driver(2) && driver(4) == old)
     assert(driver(5) == Seq("[3,null]", "[900,7]"))
+    // the DSv2 read of the same evolution sees the null too
+    val inst = mk(Seq(Seq((1L, 10L))))
+    val e = inst.begin(); e.evolveSchema()
+    e.insert(Seq((2L, 20L, 7L)).toDF("obj_id", "value", "extra"))
+    inst.commit(e)
+    val dsv2 = spark.read.format("graft").load(inst.root)
+    assert(dsv2.where($"extra".isNull).count() == 1)
+    assert(dsv2.orderBy("obj_id").collect().map(_.toString).toSeq ==
+      Seq("[1,10,null]", "[2,20,7]"))
+  }
+
+  test("a small insert holding a null obj_id commits and records its other ids") {
+    val inst = mk(Nil)
+    val t = inst.begin()
+    t.insert(Seq((None, 7L), (Some(1L), 1L), (Some(2L), 2L), (Some(3L), 3L))
+      .toDF("obj_id", "value"))
+    inst.commit(t)
+    val m = inst.readManifest(inst.latestVersion)
+    assert(m.objects.sorted == Seq(1L, 2L, 3L))
+    assert(inst.read().count() == 4)
   }
 
   test("a null obj_id is never hit by a point operation, on either path") {
