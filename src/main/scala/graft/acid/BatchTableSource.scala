@@ -77,9 +77,20 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+  // Spark asks one provider object for the schema and then for the
+  // table of one load: the instance and version inferSchema resolved,
+  // with the options they were resolved from, are handed to getTable,
+  // so a load opens the table and reads its manifests once
+  private var resolved: Option[(java.util.Map[String, String], Instance, Long)] = None
+
+  private def resolve(options: CaseInsensitiveStringMap): (Instance, Long) = {
     val inst = VersionedTable.open(SparkSession.active, rootOf(options))
-    val v = GraftTableSource.resolveVersion(inst, options)
+    (inst, GraftTableSource.resolveVersion(inst, options))
+  }
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val (inst, v) = resolve(options)
+    resolved = Some((options.asCaseSensitiveMap(), inst, v))
     StructType.fromDDL(inst.tableStateAt(v).ddl)
   }
 
@@ -87,10 +98,14 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     val root = rootOf(options)
-    val inst = VersionedTable.open(SparkSession.active, root)
     // pin here: schema and every later scan agree on one version even
-    // if writers commit between resolution and execution
-    val v = GraftTableSource.resolveVersion(inst, options)
+    // if writers commit between resolution and execution — the version
+    // inferSchema resolved, when it ran for these options
+    val (inst, v) = resolved match {
+      case Some((opts, i, v0)) if opts == properties => (i, v0)
+      case _ => resolve(options)
+    }
+    resolved = None
     // table-level specs recorded by the CATALOG (set_unique_ids /
     // set_partitioning / set_clustering write _catalog.json at the
     // table root) apply to PATH-based access too — a table protected

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
-import org.apache.spark.sql.graft.PlanBridge.{localFrame, nullable, rowFilter, tableFrame}
+import org.apache.spark.sql.graft.PlanBridge.{collectRows, localFrame, nullable, qualifiedLocalFrame, rowFilter, tableFrame}
 
 /** Versioned ACID table layer — capability parity with db-core's
   * transactional storage engine (SURVEY.md §2.1), re-expressed Spark-first
@@ -288,6 +288,13 @@ object VersionedTable {
       case _ => None
     }).filter { case (rows, _) => rows.nonEmpty && rows.length <= maxRows }
   }
+
+  /** Whether `df` optimizes to a local relation of no rows. */
+  private[acid] def isEmptyLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty
+      case _ => false
+    }
 
   /** `logical` with each column under its PHYSICAL (on-disk) name,
     * field order kept. */
@@ -2248,7 +2255,9 @@ final class Instance(val spark: SparkSession, val root: String,
       }
       prevDvs = rolled
       val curDvs = rolled
-      val dvTargets = m.dvs.keys.toSeq.filterNot(m.removed.toSet).sorted
+      // a file the commit both staged and masked is post-only: it is
+      // read once, under its mask, with the commit's other added files
+      val dvTargets = m.dvs.keys.toSeq.filterNot((m.removed ++ m.added).toSet).sorted
       val preFiles = m.removed ++ dvTargets
       val postFiles = m.added ++ dvTargets
       if (m.objects.nonEmpty) {
@@ -2338,7 +2347,7 @@ final class Instance(val spark: SparkSession, val root: String,
       val batches = perVersion.grouped(Instance.ChangesBatchVersions)
         .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
       if (batches.size == 1) batches.head
-      else batches.map(_.localCheckpoint())
+      else JobLabel(spark, "graft:changes")(batches.map(_.localCheckpoint()))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
@@ -2404,7 +2413,9 @@ final class Instance(val spark: SparkSession, val root: String,
       }
       prevDvs = rolled
       val curDvs = rolled
-      val dvTargets = m.dvs.keys.toSeq.filterNot(m.removed.toSet).sorted
+      // a file the commit both staged and masked is post-only: it is
+      // read once, under its mask, with the commit's other added files
+      val dvTargets = m.dvs.keys.toSeq.filterNot((m.removed ++ m.added).toSet).sorted
       val preFiles = m.removed ++ dvTargets
       val postFiles = m.added ++ dvTargets
       if (preFiles.isEmpty && postFiles.isEmpty) None
@@ -2422,7 +2433,7 @@ final class Instance(val spark: SparkSession, val root: String,
       val batches = perVersion.grouped(Instance.ChangesBatchVersions)
         .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
       if (batches.size == 1) batches.head
-      else batches.map(_.localCheckpoint())
+      else JobLabel(spark, "graft:weighted-delta")(batches.map(_.localCheckpoint()))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
@@ -5699,6 +5710,13 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * target row would make the rewrite nondeterministic (the same
     * rule SQL MERGE enforces at runtime).
     *
+    * A source of at most [[EngineConf.fastPathRows]] rows, none with a
+    * null id, whose candidate files pass the [[Instance.pointRows]]
+    * gate merges on the driver (the shape of every view refresh): after
+    * the probe, one read of the source and no hit-file, rewrite or
+    * insert job (see [[mergeLocal]]). The results are the same either
+    * way.
+    *
     * A merge that changes no row publishes no version: an empty
     * source, or a source whose keys all match with no matched clause
     * (nothing to update, delete or insert), stages no file, and
@@ -5723,7 +5741,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // shuffle, then a bounds aggregate) — and the same pass collects
       // the conflict-tracking id list (capped at objectListThreshold,
       // null on overflow), which used to cost its own limit-probe job
-      // at the end of the merge. The duplicate id itself is only
+      // at the end of the merge, and the source row count that gates
+      // the driver-side merge. The duplicate id itself is only
       // recomputed on the failure path, which may pay a second
       // (doomed) pass for its error message.
       val th = inst.conf.objectListThreshold
@@ -5735,14 +5754,15 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
             org.apache.spark.sql.functions.max(col("_c")),
             org.apache.spark.sql.functions.sum(
               when(col("obj_id").isNull, col("_c")).otherwise(lit(0L))),
-            inst.cappedIdUdaf(col("obj_id"))).collect()(0)
+            inst.cappedIdUdaf(col("obj_id")),
+            org.apache.spark.sql.functions.sum(col("_c"))).collect()(0)
       }
       if (probe.isNullAt(0)) return // empty source: no-op
       // exact distinct id list from the probe pass (the groupBy already
       // deduplicated); null = overflowed past the threshold. A source
       // with null obj_ids (no internal caller produces one) keeps the
-      // legacy limit-probe recording below, whose unboxing spelled
-      // nulls as 0L — exact behavioral compatibility.
+      // limit-probe recording below, which skips the nulls: a null id
+      // is no id, as for inserts.
       val srcIds: Array[Long] =
         if (probe.getLong(3) > 0L) null
         else probe.get(4) match {
@@ -5762,56 +5782,71 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       val lo = probe.getLong(0); val hi = probe.getLong(1)
       val keys = src.select("obj_id")
       val (_, ddl, _) = localState()
-      val tCols = StructType.fromDDL(ddl).fieldNames.toSeq
+      val schema = nullable(StructType.fromDDL(ddl))
+      val tCols = schema.fieldNames.toSeq
       val cand = candidateFilesRange(lo, hi)
-      // base∩src rows live only in candidate files (a pruned file's id
-      // range misses the whole source span), so this snapshot is the
-      // exact match side for both the rewrite and the insert anti join
-      val masks = localDvs()
-      val snap = if (cand.isEmpty) null
-        else inst.viewOf(cand, ddl, masks, localRen)
-          .withColumn("_file", input_file_name())
       val mutates = matchedDelete.isDefined || matchedUpdate.nonEmpty
-      if (snap != null && mutates) {
-        val hit = JobLabel(inst.spark, "graft:merge-hit-files") {
-          snap.join(keys, Seq("obj_id"), "left_semi")
-            .select("_file").distinct().collect().map(_.getString(0))
-        }
-        if (hit.nonEmpty) {
-          val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
-          val kept = touched.join(keys, Seq("obj_id"), "left_anti")
-            .select(tCols.map(col): _*)
-          val joined = touched.alias("t")
-            .join(src.alias("s"), col("t.obj_id") === col("s.obj_id"))
-          val afterDelete = matchedDelete.fold(joined)(c =>
-            joined.filter(!coalesce(c, lit(false))))
-          val updCond = matchedUpdateCond.map(c => coalesce(c, lit(false)))
-          val assigned = tCols.map { n =>
-            val pre = col(s"t.$n")
-            matchedUpdate.get(n) match {
-              case Some(expr) =>
-                updCond.fold(expr)(c => when(c, expr).otherwise(pre)).as(n)
-              case None => pre.as(n)
+      // the matched rows after the clauses, over `joined`: each matched
+      // target row (alias t) beside its source row (alias s)
+      def applyClauses(joined: DataFrame): DataFrame = {
+        val afterDelete = matchedDelete.fold(joined)(c =>
+          joined.filter(!coalesce(c, lit(false))))
+        val updCond = matchedUpdateCond.map(c => coalesce(c, lit(false)))
+        afterDelete.select(tCols.map { n =>
+          val pre = col(s"t.$n")
+          matchedUpdate.get(n) match {
+            case Some(expr) =>
+              updCond.fold(expr)(c => when(c, expr).otherwise(pre)).as(n)
+            case None => pre.as(n)
+          }
+        }: _*)
+      }
+      // a source of at most fastPathRows rows, none with a null id, over
+      // candidates below the pointRows gate merges on the driver
+      val local =
+        if (probe.getLong(3) > 0L || probe.getLong(5) > inst.conf.fastPathRows) None
+        else inst.pointRows(cand, physSchema(schema, localRen), localMasks(cand))
+      local match {
+        case Some(files) =>
+          mergeLocal(src, schema, files, mutates, insertUnmatched, applyClauses)
+        case None =>
+          // base∩src rows live only in candidate files (a pruned file's id
+          // range misses the whole source span), so this snapshot is the
+          // exact match side for both the rewrite and the insert anti join
+          val masks = localDvs()
+          val snap = if (cand.isEmpty) null
+            else inst.viewOf(cand, ddl, masks, localRen)
+              .withColumn("_file", input_file_name())
+          if (snap != null && mutates) {
+            val hit = JobLabel(inst.spark, "graft:merge-hit-files") {
+              snap.join(keys, Seq("obj_id"), "left_semi")
+                .select("_file").distinct().collect().map(_.getString(0))
+            }
+            if (hit.nonEmpty) {
+              val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
+              val kept = touched.join(keys, Seq("obj_id"), "left_anti")
+                .select(tCols.map(col): _*)
+              val joined = touched.alias("t")
+                .join(src.alias("s"), col("t.obj_id") === col("s.obj_id"))
+              val rewrite = kept.unionByName(applyClauses(joined))
+              // no isEmpty pre-probe: the join/union executes ONCE, in
+              // the write job — writeStaged drops zero-row part files
+              val rewritten = JobLabel(inst.spark, "graft:merge-rewrite") {
+                inst.writeStaged(rewrite, this)
+              }
+              retire(hit.toSeq.map(relativize))
+              added ++= rewritten
             }
           }
-          val rewrite = kept.unionByName(afterDelete.select(assigned: _*))
-          // no isEmpty pre-probe: the join/union executes ONCE, in
-          // the write job — writeStaged drops zero-row part files
-          val rewritten = JobLabel(inst.spark, "graft:merge-rewrite") {
-            inst.writeStaged(rewrite, this)
+          if (insertUnmatched) {
+            val unmatched = if (snap == null) src
+              else src.join(snap.select("obj_id"), Seq("obj_id"), "left_anti")
+            val inserts = unmatched.select(tCols.map(col): _*)
+            // empty anti-join stages nothing (no pre-probe, no empty part:
+            // a merge's commit publishes via its rewrite/marks regardless)
+            JobLabel(inst.spark, "graft:merge-insert")(
+              insert(inserts, keepEmptyPart = false))
           }
-          retire(hit.toSeq.map(relativize))
-          added ++= rewritten
-        }
-      }
-      if (insertUnmatched) {
-        val unmatched = if (snap == null) src
-          else src.join(snap.select("obj_id"), Seq("obj_id"), "left_anti")
-        val inserts = unmatched.select(tCols.map(col): _*)
-        // empty anti-join stages nothing (no pre-probe, no empty part:
-        // a merge's commit publishes via its rewrite/marks regardless)
-        JobLabel(inst.spark, "graft:merge-insert")(
-          insert(inserts, keepEmptyPart = false))
       }
       // conflict tracking over the full source key set (a superset of
       // the rows actually modified — conservative, never unsound);
@@ -5819,17 +5854,73 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // widen the conflict set, so double-recording is harmless. The
       // id list rode the probe job above — no extra pass unless it
       // overflowed the threshold (then the bounded bloom summary pays
-      // one, as it always did) or carried nulls (legacy limit-probe).
+      // one, as it always did) or carried nulls (limit-probe).
       if (mutates) {
         if (srcIds != null) { objects ++= srcIds; spillObjectsIfNeeded() }
         else if (probe.getLong(3) > 0L) {
-          val legacy = keys.limit(th + 1).collect().map(_.getLong(0))
+          val legacy = keys.where(col("obj_id").isNotNull).limit(th + 1)
+            .collect().map(_.getLong(0))
           if (legacy.length <= th) {
             objects ++= legacy; spillObjectsIfNeeded()
           } else mergeSummary(inst.buildSummary(keys))
         } else mergeSummary(inst.buildSummary(keys))
       }
     } finally src.unpersist()
+  }
+
+  /** The body of [[merge]] below the [[Instance.pointRows]] gate:
+    * `files` are the candidates read on the driver (logical `schema`),
+    * and the source has at most [[EngineConf.fastPathRows]] rows, none
+    * with a null id. The persisted source is read once; the join by
+    * obj_id runs here, `clauses` evaluate over a local relation (folded
+    * at optimization, no job), and the rewritten and inserted rows take
+    * writeStaged's driver-side write. Hit files, kept rows and unmatched
+    * inserts are those of the job path. */
+  private def mergeLocal(src: DataFrame, schema: StructType,
+      files: Seq[(String, IndexedSeq[(Long, InternalRow)])],
+      mutates: Boolean, insertUnmatched: Boolean,
+      clauses: DataFrame => DataFrame): Unit = {
+    val srcRows = JobLabel(inst.spark, "graft:merge-local")(collectRows(src))
+    val sIdx = src.schema.fieldIndex("obj_id")
+    val bySrcId = srcRows.map(r => r.getLong(sIdx) -> r).toMap
+    val tIdx = schema.fieldIndex("obj_id")
+    // a null target id matches no source row, as in the job path's join
+    def matchOf(r: InternalRow): Option[InternalRow] =
+      if (r.isNullAt(tIdx)) None else bySrcId.get(r.getLong(tIdx))
+    if (mutates) {
+      val hit = files.filter(_._2.exists(r => matchOf(r._2).isDefined))
+      if (hit.nonEmpty) {
+        val (matched, kept) =
+          hit.flatMap(_._2.map(_._2)).partition(matchOf(_).isDefined)
+        val joined = qualifiedLocalFrame(inst.spark,
+          Seq("t" -> schema, "s" -> src.schema), matched.map(t =>
+            InternalRow.fromSeq(t.toSeq(schema) ++ matchOf(t).get.toSeq(src.schema))))
+        val updated = clauses(joined)
+        val rewrite =
+          if (kept.isEmpty) updated
+          else localFrame(inst.spark, schema, kept).unionByName(updated)
+        // the clauses evaluate once, here: the write takes their rows
+        val rewritten = localRowsOf(rewrite, Int.MaxValue) match {
+          case Some((rows, sch)) =>
+            inst.writeStaged(localFrame(inst.spark, sch, rows), this, driverRows = true)
+          case None if isEmptyLocal(rewrite) => Nil
+          case None => inst.writeStaged(rewrite, this, driverRows = true)
+        }
+        retire(hit.map(_._1))
+        added ++= rewritten
+      }
+    }
+    if (insertUnmatched) {
+      val present = files.iterator.flatMap(_._2).map(_._2)
+        .filterNot(_.isNullAt(tIdx)).map(_.getLong(tIdx)).toSet
+      val unmatched = srcRows.filterNot(r => present(r.getLong(sIdx)))
+      val inserts = localFrame(inst.spark, src.schema, unmatched)
+        .select(schema.fieldNames.toSeq.map(col): _*)
+      // nothing to stage; the schema check still applies, as on the
+      // job path's empty insert
+      if (unmatched.isEmpty) adoptSchema(inserts)
+      else insert(inserts, keepEmptyPart = false)
+    }
   }
 
   /** Distributed DELETE by key DataFrame — the unbounded-batch twin of

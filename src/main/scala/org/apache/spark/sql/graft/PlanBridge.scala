@@ -23,6 +23,24 @@ object PlanBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
+  /** [[localFrame]] over rows that concatenate one row of each part,
+    * each part's columns qualified by its alias: `col("t.value")` and
+    * `col("s.value")` resolve as they do over `a.alias("t").join(b.alias("s"))`,
+    * and their filters and projections fold at optimization too. */
+  def qualifiedLocalFrame(spark: SparkSession, parts: Seq[(String, StructType)],
+      rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(parts.flatMap { case (q, schema) =>
+        DataTypeUtils.toAttributes(schema).map(_.withQualifier(Seq(q))) }, rows))
+
+  /** The rows of `df`, collected as one action. The plan is built
+    * afresh, so a `df` persisted after its plan was first built still
+    * reads its cache. */
+  def collectRows(df: DataFrame): Seq[InternalRow] =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      df.queryExecution.logical).queryExecution.executedPlan.executeCollect()
+      .map(_.copy()).toSeq
+
   /** `cond` as a test on rows of `schema`, evaluated on the calling
     * thread: resolved as a filter over `schema` would be (casts
     * included), then bound to field positions. */

@@ -2223,17 +2223,14 @@ class AcidSpec extends AnyFunSuite {
   }
 
   test("commit lock: hot-key writers serialize exactly; lock releases after use") {
-    // generous acquisition timeout: 12 increments serialize through ONE
-    // lock, and under full-suite parallel load a single locked
-    // read+upsert can take seconds — the default 30 s lets the LAST
-    // waiter time out spuriously (observed twice in r12 full runs;
-    // never isolated; 300 s ALSO tripped once in an r14 full run whose
-    // host window ran compute 40% slow — 12 queued commits x ~25 s).
-    // The semantics under test (exact serialization, release-after-use)
-    // don't involve the timeout at all, so it is set beyond any
-    // plausible load stall.
+    // acquisition timeout: 12 increments serialize through ONE lock,
+    // and under full-suite load a single locked read+upsert can take
+    // seconds, so the last waiter may queue behind 11 of them; 120 s
+    // bounds that with room. The semantics under test (exact
+    // serialization, release-after-use) don't involve the timeout; a
+    // waiter that needs longer points at a stalled lock claim.
     val conf = graft.acid.EngineConf(commitLock = true,
-      commitLockTimeoutMs = 1800000L)
+      commitLockTimeoutMs = 120000L)
     val inst = VersionedTable.create(spark, freshDir(), AcidQueries.schema,
       conf)
     val t0 = inst.begin()

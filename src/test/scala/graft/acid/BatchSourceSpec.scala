@@ -62,6 +62,28 @@ class BatchSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("out of range"))
   }
 
+  test("a load pins the version its schema was resolved at, with one instance") {
+    val (inst, dir) = lifecycleTable()
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir))
+    val p = new GraftTableProvider
+    val schema = p.inferSchema(opts)
+    // a commit between schema resolution and table resolution
+    val t = inst.begin(); t.insert(Seq((9L, 90L)).toDF("obj_id", "value")); inst.commit(t)
+    val first = p.getTable(schema, Array.empty, opts.asCaseSensitiveMap())
+      .asInstanceOf[GraftTable]
+    assert(first.pinned.contains(3L))
+    // getTable without a matching inferSchema resolves on its own
+    val second = p.getTable(schema, Array.empty, opts.asCaseSensitiveMap())
+      .asInstanceOf[GraftTable]
+    assert(second.pinned.contains(4L) && (second.inst ne first.inst))
+    val other = p.inferSchema(opts)
+    val third = p.getTable(other, Array.empty,
+      java.util.Map.of("path", dir, "versionAsOf", "1"))
+      .asInstanceOf[GraftTable]
+    assert(third.pinned.contains(1L))
+  }
+
   test("SQL front door: CREATE TEMPORARY VIEW USING graft, with time travel") {
     val (_, dir) = lifecycleTable()
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW graft_head USING graft " +
