@@ -223,8 +223,9 @@ object Bench {
     //  2. a COMPACT summary line (no 120-key dict — total, failures,
     //     canaries, recall) is printed LAST so it always fits whole
     //     inside the tail window.
+    // keyed by core count, so a run at one count keeps another's
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_QUERIES.json")
+      s"BENCH_QUERIES_c$cpus.json")
     try {
       val p = java.nio.file.Paths.get(outFile).toAbsolutePath
       java.nio.file.Files.write(p,

@@ -747,10 +747,8 @@ object AcidQueries {
       .filter(col("c_name") === probe)
       .select(col("c_custkey"), col("c_nationkey"))
       .orderBy("c_custkey")
-    val planned = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan
-    }.collect { case g: GraftScan => g.prunedFiles.size }.sum
+    val planned = GraftScan.planned(df.queryExecution.executedPlan)
+      .map(_.prunedFiles.size).sum
     if (planned > 2) throw new IllegalStateException(
       s"bloom skipping did not prune: $planned of 8 files planned")
     df
@@ -1609,11 +1607,8 @@ object AcidQueries {
       inst.commit(t)
     }
     val totalFiles = inst.stateAt(inst.latestVersion)._1.size
-    def scanFiles(df: DataFrame): Int = df.queryExecution.executedPlan
-      .collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.scan.asInstanceOf[GraftScan].prunedFiles.size
-      }.sum
+    def scanFiles(df: DataFrame): Int =
+      GraftScan.planned(df.queryExecution.executedPlan).map(_.prunedFiles.size).sum
     def relation = spark.read.format("graft").option("path", tmp).load()
     val eq = relation.filter(col("event_type") === "purchase")
     val in = relation.filter(col("event_type").isin("click", "view") &&

@@ -1676,6 +1676,31 @@ private[graft] final class GraftScan(inst: Instance,
       case _ => files
     }
 
+  /** Set when a planner placed this scan below a plan's root; see
+    * [[DriverScanStrategy]]. */
+  @transient @volatile private[acid] var plannedBelowRoot = false
+
+  /** Whether [[driverRows]] may answer this scan: a plain read (no
+    * row-level operation, pushed limit or top-n) whose pruned files
+    * pass the [[Instance.pointRows]] gate. Fetches no more than the
+    * job path's split planning does: the pruned list and its statuses. */
+  private[acid] def driverReadable: Boolean =
+    !wholeGroups && pushedLimit.isEmpty && pushedTopN.isEmpty &&
+      inst.pointStatuses(prunedFiles, prunedStatuses(_)).isDefined
+
+  /** The rows of the pruned files, masks applied, that pass `keep`, read
+    * on the calling thread in [[readSchema]] order. `keep` sees each row
+    * before it is copied. Files come in the order the job path packs
+    * them into its one split (longest first), so both paths return the
+    * rows in the same order. */
+  private[acid] def driverRows(keep: InternalRow => Boolean): Seq[InternalRow] = {
+    val statuses = prunedStatuses
+    val files = prunedFiles.sorted.sortBy(f => -statuses(f).getLen)
+    val schema = StructType(required.map(f => f.copy(name = phys(f.name))))
+    inst.readPoint(files.map(f => f -> statuses(f)), schema, dvMasks, keep)
+      .flatMap(_._2.map(_._2))
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val statuses = prunedStatuses
@@ -1782,6 +1807,15 @@ private[graft] final class GraftScan(inst: Instance,
     }.toMap
     new GraftReaderFactory(layouts)
   }
+}
+
+private[graft] object GraftScan {
+  /** The graft scans `plan` holds, job-path and driver-side alike. */
+  def planned(plan: org.apache.spark.sql.execution.SparkPlan): Seq[GraftScan] =
+    plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      case d: GraftDriverScanExec => d.scan
+    }.collect { case g: GraftScan => g }
 }
 
 private[acid] final case class GraftLayoutReader(

@@ -337,25 +337,4 @@ private[acid] object CheckpointStore {
           else ustatsOf(r).get(pcol).map(_.nulls).forall(_ != 0L)
         })
     }
-
-  /** [[mayContainId]] generalized to a secondary column: Z-order
-    * colStats first, then the universal footer stats' integral range;
-    * rows with neither stay candidates. `pcol` is the PHYSICAL name. */
-  def mayContainCol(pcol: String,
-      sortedVals: Array[Long]): CkptRow => Boolean = r => {
-    val ci = r.colNames.indexOf(pcol)
-    val range =
-      if (ci >= 0) Some((r.colMins(ci), r.colMaxs(ci)))
-      else {
-        val ui = r.uCols.indexOf(pcol)
-        if (ui >= 0)
-          UStat(r.uKinds(ui).head, r.uMins(ui), r.uMaxs(ui),
-            r.uNulls(ui)).longRange
-        else None
-      }
-    range match {
-      case Some((lo, hi)) => anyIn(sortedVals, lo, hi)
-      case None => true
-    }
-  }
 }

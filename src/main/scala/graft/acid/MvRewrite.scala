@@ -15,15 +15,18 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 
 /** Session extension that installs [[MvRewriteRule]] — transparent
-  * materialized-view query acceleration.
+  * materialized-view query acceleration — and [[DriverScanStrategy]],
+  * which reads a query that is one small graft scan on the driver.
   *
   * Registered by `Engine.session` (and usable standalone via
   * `spark.sql.extensions=graft.acid.GraftExtensions`). The rule is a
   * no-op until `spark.graft.mv.rewrite` is set to `true`, so plans are
   * byte-identical with the flag off. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(s => MvRewriteRule(s))
+    e.injectPlannerStrategy(_ => DriverScanStrategy)
+  }
 }
 
 /** Rewrites an aggregate over a graft table — or over the fact ⨝ dims

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
-import org.apache.spark.sql.graft.PlanBridge.{collectRows, localFrame, nullable, qualifiedLocalFrame, rowFilter, tableFrame}
+import org.apache.spark.sql.graft.PlanBridge.{collectRows, localFrame, nullable, qualifiedLocalFrame, tableFrame}
 
 /** Versioned ACID table layer — capability parity with db-core's
   * transactional storage engine (SURVEY.md §2.1), re-expressed Spark-first
@@ -197,7 +197,7 @@ object VersionedTable {
     * (then IS NULL can never skip the file). */
   final case class UStat(kind: Char, min: String, max: String, nulls: Long) {
     /** Bounds as a Long range when the domain is integral-comparable
-      * (the shape [[Txn.candidateFilesBy]] consumes); an all-null
+      * (what range pruning compares values against); an all-null
       * column yields the EMPTY range so value probes prune it. */
     def longRange: Option[(Long, Long)] = kind match {
       case 'L' | 'T' | 'A' => Some((min.toLong, max.toLong))
@@ -1667,15 +1667,24 @@ final class Instance(val spark: SparkSession, val root: String,
     * [[rowIndexReader]]: per file, in file order, each unmasked row of
     * `schema` (PHYSICAL names, read nullable) that passes `keep` (which
     * sees the row before it is copied), with its row ordinal. Point
-    * operations use it to skip a Spark job's dispatch, which costs more
-    * than reading a small file. None — the caller takes its job path —
-    * when a file is partitioned, or the files pass
-    * [[Instance.PointReadMaxFiles]], or their total length passes
-    * [[Instance.PointReadMaxBytes]] or `spark.sql.files.openCostInBytes`,
-    * Spark's own estimate of what opening one file costs. */
+    * operations and small root-level scans ([[GraftDriverScanExec]])
+    * use it to skip a Spark job's dispatch, which costs more than
+    * reading a small file. None — the caller takes its job path — when
+    * [[pointStatuses]] refuses the files. */
   private[acid] def pointRows(files: Seq[String], schema: StructType,
       masks: Map[String, GraftBitmap], keep: InternalRow => Boolean = _ => true)
-      : Option[Seq[(String, IndexedSeq[(Long, InternalRow)])]] = {
+      : Option[Seq[(String, IndexedSeq[(Long, InternalRow)])]] =
+    pointStatuses(files, f => fs.getFileStatus(new Path(dataDir, f)))
+      .map(sts => readPoint(files.zip(sts), schema, masks, keep))
+
+  /** The statuses of `files` (from `status`, in order) when they may be
+    * read on the driver. None when a file is partitioned, or the files
+    * pass [[Instance.PointReadMaxFiles]], or their total length passes
+    * [[Instance.PointReadMaxBytes]] or `spark.sql.files.openCostInBytes`,
+    * Spark's own estimate of what opening one file costs. */
+  private[acid] def pointStatuses(files: Seq[String],
+      status: String => org.apache.hadoop.fs.FileStatus)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
     if (files.size > Instance.PointReadMaxFiles ||
         files.exists(f => GraftTableSource.partPairs(f).nonEmpty)) return None
     // statuses one at a time, stopping as soon as the gate is passed: a
@@ -1684,14 +1693,22 @@ final class Instance(val spark: SparkSession, val root: String,
       Instance.PointReadMaxBytes)
     var total = 0L
     val statuses = files.iterator.map { f =>
-      val st = fs.getFileStatus(new Path(dataDir, f)); total += st.getLen; st
+      val st = status(f); total += st.getLen; st
     }.takeWhile(_ => total <= gate).toVector
-    if (statuses.size < files.size) return None
+    if (statuses.size < files.size) None else Some(statuses)
+  }
+
+  /** The read half of [[pointRows]], over files [[pointStatuses]]
+    * admitted. */
+  private[acid] def readPoint(
+      files: Seq[(String, org.apache.hadoop.fs.FileStatus)], schema: StructType,
+      masks: Map[String, GraftBitmap], keep: InternalRow => Boolean)
+      : Seq[(String, IndexedSeq[(Long, InternalRow)])] = {
     val riIdx = schema.length
     val read = rowIndexReader(schema)
     val proj = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
       case (f, i) => BoundReference(i, f.dataType, nullable = true) })
-    Some(files.zip(statuses).map { case (f, st) =>
+    files.map { case (f, st) =>
       val mask = masks.getOrElse(f, GraftBitmap.empty)
       f -> Instance.readFile(read, Instance.wholeFile(st)) { it =>
         it.flatMap { r =>
@@ -1699,7 +1716,7 @@ final class Instance(val spark: SparkSession, val root: String,
           if (mask.contains(ri) || !keep(r)) None else Some(ri -> proj(r).copy())
         }.toIndexedSeq
       }
-    })
+    }
   }
 
   /** Spark's parquet reader of `schema` (PHYSICAL names, read nullable)
@@ -1737,42 +1754,22 @@ final class Instance(val spark: SparkSession, val root: String,
       }.collect().toSeq.groupMap(_._1)(_._2)
   }
 
-  /** The rows of `files` that satisfy `cond`, for a point read: below
-    * the [[pointRows]] gate the files are read here, `cond` drops rows
-    * as they are read, and the matches come back as a local relation,
-    * so collecting it runs no Spark job. */
-  private[acid] def pointView(files: Seq[String], ddl: String,
-      dvs: Map[String, Seq[String]], renames: Map[String, String],
-      cond: Column): DataFrame = {
-    val schema = nullable(StructType.fromDDL(ddl))
-    lazy val keep = rowFilter(spark, schema, cond)
-    pointRows(files, physSchema(schema, renames), resolveDvs(dvs, files),
-        keep(_)) match {
-      case Some(rows) => localFrame(spark, schema, rows.flatMap(_._2.map(_._2)))
-      case None => viewOf(files, ddl, dvs, renames).filter(cond)
-    }
-  }
-
   /** Current committed table contents. */
   def read(): DataFrame = snapshot(latestVersion)
 
-  /** Point/IN read on any INDEXED column: candidate files are pruned by
-    * the manifest's range stats BEFORE any file opens (obj_id via the
-    * primary stats index, secondary columns via the Z-order
-    * [[compact]]'s colStats), then the residual filter runs on the
-    * survivors. On a clustered table this is the id-is-the-address
-    * access path for the SECONDARY key too — O(sqrt(files)) opens, not
-    * a snapshot scan. `values` is a small literal set (a point read);
-    * large key sets belong in a join against [[read]]. */
-  def readWhere(column: String, values: Seq[Long]): DataFrame = {
-    val txn = begin()
-    try {
-      val files = txn.candidateFilesBy(column, values)
-      val st = tableStateAt(txn.readVersion)
-      pointView(files, st.ddl, st.dvs, st.renames,
-        col(column).isin(values: _*))
-    } finally rollback(txn) // committed files only — nothing to reclaim
-  }
+  /** Point/IN read on any INDEXED column: [[read]] filtered to rows
+    * whose `column` is one of `values`. Its scan prunes files by the
+    * manifest before any opens (obj_id via the primary stats index,
+    * secondary columns via the Z-order [[compact]]'s colStats, the
+    * footer stats and the per-file blooms), and a result over a few
+    * small files is read on the driver with no Spark job
+    * ([[GraftDriverScanExec]]). On a clustered table this is the
+    * id-is-the-address access path for the SECONDARY key too —
+    * O(sqrt(files)) opens, not a snapshot scan. `values` is a small
+    * literal set (a point read); large key sets belong in a join
+    * against [[read]]. */
+  def readWhere(column: String, values: Seq[Long]): DataFrame =
+    read().filter(col(column).isin(values: _*))
 
   /** Roll the table back to the contents of version `v` as a NEW
     * commit (never rewriting history): the manifest delta re-adds the
@@ -4084,245 +4081,246 @@ final class Instance(val spark: SparkSession, val root: String,
     * reclamation — so phase 2 keeps "everything unreferenced is
     * eventually reclaimed" even though phase 1's manifest walk is
     * bounded. */
-  def vacuum(retainVersions: Int, sweepOrphans: Boolean = true): Int = {
-    val head = latestVersion
-    // tag protection: the horizon never passes the OLDEST tag, so a
-    // tagged snapshot (and everything after it) stays fully readable —
-    // the walk below then covers a longer window (manifest READS only,
-    // pooled; the file retention itself is what the tag asks for).
-    // Deleting the tag re-allows reclamation at the next vacuum.
-    val minTag = tags.values.minOption.getOrElse(Long.MaxValue)
-    val horizon = math.max(0L,
-      math.min(head - retainVersions + 1, minTag))
-    // EVERY manifest is read exactly ONCE: one backward walk from the
-    // horizon to its governing checkpoint, one pooled forward read of
-    // (horizon, head]. The live set is the horizon snapshot plus every
-    // file added inside the window (a file added then removed within
-    // the window was live at some retained version — union keeps it),
-    // so the per-version stateAt replays the old code did — O(retention
-    // x interval) manifest reads — collapse to O(interval + retention).
-    var cv = horizon
-    var tail = List.empty[Manifest] // (cv, horizon], oldest first
-    var ckpt: Manifest = null
-    while (ckpt == null) {
-      val m = readManifest(cv)
-      if (m.checkpoint) ckpt = m else { tail = m :: tail; cv -= 1 }
-    }
-    val above = pooledMap(((horizon + 1) to head).toSeq)(readManifest)
-    // side-car aware: a segmented horizon checkpoint keeps its full
-    // file list in the parquet side files — the fold below touches
-    // only the O(window-churn) delta names plus the SPARSE dv map,
-    // never the 10^7-name list (an inline checkpoint's list is bounded
-    // by checkpointInlineFiles by construction)
-    val ckptInlineFiles: Set[String] =
-      if (ckpt.ckptRef.isDefined) Set.empty else ckpt.allFiles.toSet
-    val ckptAllDvs0 = ckpt.ckptRef match {
-      case Some(ref) => sidecarDvs(ref)
-      case None => ckpt.allDvs
-    }
-    var horizonDvs = ckptAllDvs0
-    // per-name last action inside (cv, horizon]: true = live after it.
-    // A file REFERENCED by the window but dead at every retained
-    // version is exactly one whose last window op is a removal — it
-    // was live before that removal (so it is in the checkpoint fold or
-    // a window add: referenced), and nothing re-added it
-    var lastOp = Map.empty[String, Boolean]
-    tail.foreach { m =>
-      m.removed.foreach(f => lastOp = lastOp.updated(f, false))
-      m.added.foreach(f => lastOp = lastOp.updated(f, true))
-      horizonDvs = horizonDvs -- m.removed
-      m.dvs.foreach { case (f, l) =>
-        horizonDvs = if (l.isEmpty) horizonDvs - f else horizonDvs.updated(f, l)
+  def vacuum(retainVersions: Int, sweepOrphans: Boolean = true): Int =
+    JobLabel(spark, "graft:vacuum") {
+      val head = latestVersion
+      // tag protection: the horizon never passes the OLDEST tag, so a
+      // tagged snapshot (and everything after it) stays fully readable —
+      // the walk below then covers a longer window (manifest READS only,
+      // pooled; the file retention itself is what the tag asks for).
+      // Deleting the tag re-allows reclamation at the next vacuum.
+      val minTag = tags.values.minOption.getOrElse(Long.MaxValue)
+      val horizon = math.max(0L,
+        math.min(head - retainVersions + 1, minTag))
+      // EVERY manifest is read exactly ONCE: one backward walk from the
+      // horizon to its governing checkpoint, one pooled forward read of
+      // (horizon, head]. The live set is the horizon snapshot plus every
+      // file added inside the window (a file added then removed within
+      // the window was live at some retained version — union keeps it),
+      // so the per-version stateAt replays the old code did — O(retention
+      // x interval) manifest reads — collapse to O(interval + retention).
+      var cv = horizon
+      var tail = List.empty[Manifest] // (cv, horizon], oldest first
+      var ckpt: Manifest = null
+      while (ckpt == null) {
+        val m = readManifest(cv)
+        if (m.checkpoint) ckpt = m else { tail = m :: tail; cv -= 1 }
       }
-    }
-    // change-data side files referenced inside the bounded walk stay
-    // readable (the stream's lag must fit the retention window — the
-    // same contract as data files); older ones fall to the orphan
-    // sweep once past the grace
-    val cdcKeep = (tail.flatMap(_.cdc) ++ above.flatMap(_.cdc)).toSet
-    val aboveAdded = above.flatMap(_.added).toSet
-    // names to reclaim: window-removed, not re-added by the window's
-    // end, not re-referenced above the horizon — O(churn), no full set
-    val deadFiles = lastOp.collect { case (f, false) => f }.toSet --
-      aboveAdded -- cdcKeep
-    // the orphan sweep's driver-known keep set: every name the bounded
-    // window speaks for (horizon-live checkpoint membership is probed
-    // against the side files in batches — see keepBatch below)
-    val windowKeep = lastOp.collect { case (f, true) => f }.toSet ++
-      ckptInlineFiles ++ aboveAdded ++ cdcKeep
-    // deletion-vector sidecars have the same two-phase lifecycle: live
-    // = referenced by the horizon fold or any window manifest (a
-    // sidecar attached then replaced INSIDE the window was live at a
-    // retained version — the union keeps it, exactly like files);
-    // referenced-but-dead = replaced or materialized before the horizon
-    val liveDvs = horizonDvs.values.flatten.toSet ++
-      above.flatMap(m => m.dvs.values.flatten ++ m.allDvs.values.flatten)
-    val referencedDvs = ckptAllDvs0.values.flatten.toSet ++
-      tail.flatMap(_.dvs.values.flatten) ++
-      above.flatMap(m => m.dvs.values.flatten ++ m.allDvs.values.flatten)
-    // deletes issued on the bounded pool too — each is an RPC on an
-    // object store, and a big retirement batch is exactly when vacuum
-    // latency matters
-    var removed = pooledMap(
-        deadFiles.toSeq ++ (referencedDvs -- liveDvs).toSeq) { rel =>
-      val p = new Path(dataDir, rel)
-      if (fs.exists(p)) { fs.delete(p, false); true } else false
-    }.count(identity)
-    if (sweepOrphans) {
-      // "now" comes from the STORE's clock, not the driver's: the grace
-      // is compared against filesystem mtimes, and driver/store clock
-      // skew would silently erode it (a driver running fast could
-      // reclaim live in-flight staging). A just-written probe file's
-      // mtime is the store's own notion of now; falls back to the
-      // driver clock only if the probe can't be written.
-      val cutoff = storeNow() - conf.orphanGraceMs
-      // publish() temps from crashed writers (never claimed a version,
-      // invisible to readers) are ordinary orphans once past the grace
-      fs.listStatus(manifestDir)
-        .filter(e => e.isFile && (e.getPath.getName.startsWith(".tmp-") ||
-          // ChecksumFileSystem sidecars of crashed publish temps
-          e.getPath.getName.startsWith("..tmp-")))
-        .foreach { e =>
-          if (e.getModificationTime < cutoff) {
-            fs.delete(e.getPath, false); removed += 1
-          }
+      val above = pooledMap(((horizon + 1) to head).toSeq)(readManifest)
+      // side-car aware: a segmented horizon checkpoint keeps its full
+      // file list in the parquet side files — the fold below touches
+      // only the O(window-churn) delta names plus the SPARSE dv map,
+      // never the 10^7-name list (an inline checkpoint's list is bounded
+      // by checkpointInlineFiles by construction)
+      val ckptInlineFiles: Set[String] =
+        if (ckpt.ckptRef.isDefined) Set.empty else ckpt.allFiles.toSet
+      val ckptAllDvs0 = ckpt.ckptRef match {
+        case Some(ref) => sidecarDvs(ref)
+        case None => ckpt.allDvs
+      }
+      var horizonDvs = ckptAllDvs0
+      // per-name last action inside (cv, horizon]: true = live after it.
+      // A file REFERENCED by the window but dead at every retained
+      // version is exactly one whose last window op is a removal — it
+      // was live before that removal (so it is in the checkpoint fold or
+      // a window add: referenced), and nothing re-added it
+      var lastOp = Map.empty[String, Boolean]
+      tail.foreach { m =>
+        m.removed.foreach(f => lastOp = lastOp.updated(f, false))
+        m.added.foreach(f => lastOp = lastOp.updated(f, true))
+        horizonDvs = horizonDvs -- m.removed
+        m.dvs.foreach { case (f, l) =>
+          horizonDvs = if (l.isEmpty) horizonDvs - f else horizonDvs.updated(f, l)
         }
-      // segmented-checkpoint side files whose writer crashed between
-      // the side-file write and the manifest publish (a LOST race
-      // cleans up after itself; a crash can't): a `ckpt-v{N}-*` dir is
-      // live iff manifest N exists and points at exactly this name
-      fs.listStatus(manifestDir)
-        .filter(e => e.isDirectory && e.getPath.getName.startsWith("ckpt-v"))
-        .foreach { e =>
-          val name = e.getPath.getName
-          val ver = name.stripPrefix("ckpt-v").takeWhile(_.isDigit)
-          val referencedByManifest = ver.nonEmpty && {
-            try readManifest(ver.toLong).ckptRef.contains(name)
-            catch { case _: java.io.FileNotFoundException => false }
-          }
-          if (!referencedByManifest && e.getModificationTime < cutoff) {
-            fs.delete(e.getPath, true); removed += 1
-          }
-        }
-      // claim temps from crashed TAGGERS (same lifecycle as publish
-      // temps: never claimed, invisible to tags() — the .tag suffix
-      // filter skips them — reclaimable past the grace). A tag may
-      // legally be NAMED '.tmp-foo' (the tag charset allows leading
-      // dots), so its claim file '.tmp-foo.tag' shares the temp
-      // prefix — the sweep must spare anything carrying the .tag
-      // suffix (claim temps never do: they end in a uuid fragment)
-      // and its ChecksumFileSystem sidecar '..tmp-foo.tag.crc'.
-      if (fs.exists(tagsDir))
-        fs.listStatus(tagsDir)
-          .filter { e =>
-            val n = e.getPath.getName
-            e.isFile && (n.startsWith(".tmp-") || n.startsWith("..tmp-")) &&
-            !n.endsWith(".tag") && !n.endsWith(".tag.crc")
-          }
+      }
+      // change-data side files referenced inside the bounded walk stay
+      // readable (the stream's lag must fit the retention window — the
+      // same contract as data files); older ones fall to the orphan
+      // sweep once past the grace
+      val cdcKeep = (tail.flatMap(_.cdc) ++ above.flatMap(_.cdc)).toSet
+      val aboveAdded = above.flatMap(_.added).toSet
+      // names to reclaim: window-removed, not re-added by the window's
+      // end, not re-referenced above the horizon — O(churn), no full set
+      val deadFiles = lastOp.collect { case (f, false) => f }.toSet --
+        aboveAdded -- cdcKeep
+      // the orphan sweep's driver-known keep set: every name the bounded
+      // window speaks for (horizon-live checkpoint membership is probed
+      // against the side files in batches — see keepBatch below)
+      val windowKeep = lastOp.collect { case (f, true) => f }.toSet ++
+        ckptInlineFiles ++ aboveAdded ++ cdcKeep
+      // deletion-vector sidecars have the same two-phase lifecycle: live
+      // = referenced by the horizon fold or any window manifest (a
+      // sidecar attached then replaced INSIDE the window was live at a
+      // retained version — the union keeps it, exactly like files);
+      // referenced-but-dead = replaced or materialized before the horizon
+      val liveDvs = horizonDvs.values.flatten.toSet ++
+        above.flatMap(m => m.dvs.values.flatten ++ m.allDvs.values.flatten)
+      val referencedDvs = ckptAllDvs0.values.flatten.toSet ++
+        tail.flatMap(_.dvs.values.flatten) ++
+        above.flatMap(m => m.dvs.values.flatten ++ m.allDvs.values.flatten)
+      // deletes issued on the bounded pool too — each is an RPC on an
+      // object store, and a big retirement batch is exactly when vacuum
+      // latency matters
+      var removed = pooledMap(
+          deadFiles.toSeq ++ (referencedDvs -- liveDvs).toSeq) { rel =>
+        val p = new Path(dataDir, rel)
+        if (fs.exists(p)) { fs.delete(p, false); true } else false
+      }.count(identity)
+      if (sweepOrphans) {
+        // "now" comes from the STORE's clock, not the driver's: the grace
+        // is compared against filesystem mtimes, and driver/store clock
+        // skew would silently erode it (a driver running fast could
+        // reclaim live in-flight staging). A just-written probe file's
+        // mtime is the store's own notion of now; falls back to the
+        // driver clock only if the probe can't be written.
+        val cutoff = storeNow() - conf.orphanGraceMs
+        // publish() temps from crashed writers (never claimed a version,
+        // invisible to readers) are ordinary orphans once past the grace
+        fs.listStatus(manifestDir)
+          .filter(e => e.isFile && (e.getPath.getName.startsWith(".tmp-") ||
+            // ChecksumFileSystem sidecars of crashed publish temps
+            e.getPath.getName.startsWith("..tmp-")))
           .foreach { e =>
             if (e.getModificationTime < cutoff) {
               fs.delete(e.getPath, false); removed += 1
             }
           }
-      // dv sidecars live FLAT in dataDir (never inside staging dirs):
-      // sweep unreferenced ones past the grace — an in-flight txn's
-      // just-written sidecar is shielded exactly like staged data
-      fs.listStatus(dataDir)
-        .filter(e => e.isFile && e.getPath.getName.startsWith("dvp-"))
-        .foreach { e =>
-          if (!liveDvs.contains(e.getPath.getName) &&
-              !referencedDvs.contains(e.getPath.getName) &&
-              e.getModificationTime < cutoff) {
-            fs.delete(e.getPath, false); removed += 1
-          }
-        }
-      // spilled-bloom sidecars (`fb-` names, also flat in dataDir):
-      // referenced iff some retained manifest's fileStats carries a
-      // pointer into them. The reference set is computable on the
-      // driver only while EVERY retained checkpoint is INLINE — a
-      // segmented one keeps its fileStats in parquet side files, so
-      // that round SKIPS the fb sweep entirely (blooms are veto-only:
-      // keeping an orphan costs bytes, deleting a live one would cost
-      // pruning — and this sweep must prove, not guess).
-      if ((ckpt :: tail ::: above.toList).forall(_.ckptRef.isEmpty)) {
-        val fbRefs: Set[String] =
-          (ckpt :: tail ::: above.toList)
-            .iterator
-            .flatMap(_.fileStats.valuesIterator.flatMap(_.valuesIterator))
-            .collect {
-              case u if u.kind == 'F' &&
-                  VersionedTable.isBloomPointer(u.min) =>
-                VersionedTable.bloomPointerName(u.min)
-            }.toSet
-        fs.listStatus(dataDir)
-          .filter(e => e.isFile && e.getPath.getName.startsWith("fb-"))
+        // segmented-checkpoint side files whose writer crashed between
+        // the side-file write and the manifest publish (a LOST race
+        // cleans up after itself; a crash can't): a `ckpt-v{N}-*` dir is
+        // live iff manifest N exists and points at exactly this name
+        fs.listStatus(manifestDir)
+          .filter(e => e.isDirectory && e.getPath.getName.startsWith("ckpt-v"))
           .foreach { e =>
-            if (!fbRefs.contains(e.getPath.getName) &&
+            val name = e.getPath.getName
+            val ver = name.stripPrefix("ckpt-v").takeWhile(_.isDigit)
+            val referencedByManifest = ver.nonEmpty && {
+              try readManifest(ver.toLong).ckptRef.contains(name)
+              catch { case _: java.io.FileNotFoundException => false }
+            }
+            if (!referencedByManifest && e.getModificationTime < cutoff) {
+              fs.delete(e.getPath, true); removed += 1
+            }
+          }
+        // claim temps from crashed TAGGERS (same lifecycle as publish
+        // temps: never claimed, invisible to tags() — the .tag suffix
+        // filter skips them — reclaimable past the grace). A tag may
+        // legally be NAMED '.tmp-foo' (the tag charset allows leading
+        // dots), so its claim file '.tmp-foo.tag' shares the temp
+        // prefix — the sweep must spare anything carrying the .tag
+        // suffix (claim temps never do: they end in a uuid fragment)
+        // and its ChecksumFileSystem sidecar '..tmp-foo.tag.crc'.
+        if (fs.exists(tagsDir))
+          fs.listStatus(tagsDir)
+            .filter { e =>
+              val n = e.getPath.getName
+              e.isFile && (n.startsWith(".tmp-") || n.startsWith("..tmp-")) &&
+              !n.endsWith(".tag") && !n.endsWith(".tag.crc")
+            }
+            .foreach { e =>
+              if (e.getModificationTime < cutoff) {
+                fs.delete(e.getPath, false); removed += 1
+              }
+            }
+        // dv sidecars live FLAT in dataDir (never inside staging dirs):
+        // sweep unreferenced ones past the grace — an in-flight txn's
+        // just-written sidecar is shielded exactly like staged data
+        fs.listStatus(dataDir)
+          .filter(e => e.isFile && e.getPath.getName.startsWith("dvp-"))
+          .foreach { e =>
+            if (!liveDvs.contains(e.getPath.getName) &&
+                !referencedDvs.contains(e.getPath.getName) &&
                 e.getModificationTime < cutoff) {
               fs.delete(e.getPath, false); removed += 1
             }
           }
-      }
-      // membership of a listed file in the horizon checkpoint's fold:
-      // inline checkpoints fold into windowKeep directly; a SEGMENTED
-      // checkpoint is probed in bounded batches against the side files
-      // (driver memory stays O(batch), not O(files-on-disk))
-      val pendingOrphans =
-        scala.collection.mutable.ArrayBuffer.empty[(String, Path)]
-      def flushOrphans(): Unit = {
-        if (pendingOrphans.isEmpty) return
-        val keep = ckpt.ckptRef match {
-          case Some(ref) =>
-            sidecarMember(ref, pendingOrphans.map(_._1).toSet)
-          case None => Set.empty[String]
-        }
-        pendingOrphans.foreach { case (rel, p) =>
-          if (!keep(rel)) { fs.delete(p, false); removed += 1 }
-        }
-        pendingOrphans.clear()
-      }
-      fs.listStatus(dataDir).filter(_.isDirectory).foreach { d =>
-        // recursive: partitioned staging nests k=v dirs, and their
-        // orphans must be reclaimable too. Relative paths accumulate
-        // raw on-disk NAMES — matching the manifest spelling exactly;
-        // a URI-derived path would percent-encode and silently treat
-        // every special-char partition file as unreferenced.
-        def sweep(p: Path, prefix: String): Unit =
-          fs.listStatus(p).foreach { e =>
-            val rel = s"$prefix/${e.getPath.getName}"
-            if (e.isDirectory) sweep(e.getPath, rel)
-            else if (!e.getPath.getName.startsWith("_") &&
-                !windowKeep.contains(rel) &&
-                e.getModificationTime < cutoff) {
-              if (ckpt.ckptRef.isEmpty) {
+        // spilled-bloom sidecars (`fb-` names, also flat in dataDir):
+        // referenced iff some retained manifest's fileStats carries a
+        // pointer into them. The reference set is computable on the
+        // driver only while EVERY retained checkpoint is INLINE — a
+        // segmented one keeps its fileStats in parquet side files, so
+        // that round SKIPS the fb sweep entirely (blooms are veto-only:
+        // keeping an orphan costs bytes, deleting a live one would cost
+        // pruning — and this sweep must prove, not guess).
+        if ((ckpt :: tail ::: above.toList).forall(_.ckptRef.isEmpty)) {
+          val fbRefs: Set[String] =
+            (ckpt :: tail ::: above.toList)
+              .iterator
+              .flatMap(_.fileStats.valuesIterator.flatMap(_.valuesIterator))
+              .collect {
+                case u if u.kind == 'F' &&
+                    VersionedTable.isBloomPointer(u.min) =>
+                  VersionedTable.bloomPointerName(u.min)
+              }.toSet
+          fs.listStatus(dataDir)
+            .filter(e => e.isFile && e.getPath.getName.startsWith("fb-"))
+            .foreach { e =>
+              if (!fbRefs.contains(e.getPath.getName) &&
+                  e.getModificationTime < cutoff) {
                 fs.delete(e.getPath, false); removed += 1
-              } else {
-                pendingOrphans += ((rel, e.getPath))
-                if (pendingOrphans.size >= 65536) flushOrphans()
               }
             }
+        }
+        // membership of a listed file in the horizon checkpoint's fold:
+        // inline checkpoints fold into windowKeep directly; a SEGMENTED
+        // checkpoint is probed in bounded batches against the side files
+        // (driver memory stays O(batch), not O(files-on-disk))
+        val pendingOrphans =
+          scala.collection.mutable.ArrayBuffer.empty[(String, Path)]
+        def flushOrphans(): Unit = {
+          if (pendingOrphans.isEmpty) return
+          val keep = ckpt.ckptRef match {
+            case Some(ref) =>
+              sidecarMember(ref, pendingOrphans.map(_._1).toSet)
+            case None => Set.empty[String]
           }
-        sweep(d.getPath, d.getPath.getName)
-        // probe + delete before the empties check below can run
-        flushOrphans()
-        // prune the dir once nothing but markers remains anywhere below
-        def onlyMarkers(p: Path): Boolean = fs.listStatus(p).forall(e =>
-          if (e.isDirectory) onlyMarkers(e.getPath)
-          else e.getPath.getName.startsWith("_"))
-        if (onlyMarkers(d.getPath) && d.getModificationTime < cutoff)
-          fs.delete(d.getPath, true)
+          pendingOrphans.foreach { case (rel, p) =>
+            if (!keep(rel)) { fs.delete(p, false); removed += 1 }
+          }
+          pendingOrphans.clear()
+        }
+        fs.listStatus(dataDir).filter(_.isDirectory).foreach { d =>
+          // recursive: partitioned staging nests k=v dirs, and their
+          // orphans must be reclaimable too. Relative paths accumulate
+          // raw on-disk NAMES — matching the manifest spelling exactly;
+          // a URI-derived path would percent-encode and silently treat
+          // every special-char partition file as unreferenced.
+          def sweep(p: Path, prefix: String): Unit =
+            fs.listStatus(p).foreach { e =>
+              val rel = s"$prefix/${e.getPath.getName}"
+              if (e.isDirectory) sweep(e.getPath, rel)
+              else if (!e.getPath.getName.startsWith("_") &&
+                  !windowKeep.contains(rel) &&
+                  e.getModificationTime < cutoff) {
+                if (ckpt.ckptRef.isEmpty) {
+                  fs.delete(e.getPath, false); removed += 1
+                } else {
+                  pendingOrphans += ((rel, e.getPath))
+                  if (pendingOrphans.size >= 65536) flushOrphans()
+                }
+              }
+            }
+          sweep(d.getPath, d.getPath.getName)
+          // probe + delete before the empties check below can run
+          flushOrphans()
+          // prune the dir once nothing but markers remains anywhere below
+          def onlyMarkers(p: Path): Boolean = fs.listStatus(p).forall(e =>
+            if (e.isDirectory) onlyMarkers(e.getPath)
+            else e.getPath.getName.startsWith("_"))
+          if (onlyMarkers(d.getPath) && d.getModificationTime < cutoff)
+            fs.delete(d.getPath, true)
+        }
       }
+      // record the pre-image horizon: data files dead at every retained
+      // version may now be gone, so an incremental reader (a
+      // materialized view's weightedDelta) whose interval starts below
+      // the horizon must fall back to a snapshot rebuild instead of
+      // failing mid-job on a reclaimed file. Monotone max across
+      // vacuums; best-effort (a lost marker only degrades the reader to
+      // its FileNotFound fallback, never to a wrong answer).
+      recordVacuumHorizon(horizon)
+      removed
     }
-    // record the pre-image horizon: data files dead at every retained
-    // version may now be gone, so an incremental reader (a
-    // materialized view's weightedDelta) whose interval starts below
-    // the horizon must fall back to a snapshot rebuild instead of
-    // failing mid-job on a reclaimed file. Monotone max across
-    // vacuums; best-effort (a lost marker only degrades the reader to
-    // its FileNotFound fallback, never to a wrong answer).
-    recordVacuumHorizon(horizon)
-    removed
-  }
 
   /** SNAPSHOT TAGS: name a committed version — ONE FILE PER TAG under
     * `_tags/`, bound via the same fails-if-exists [[ManifestClaimer]]
@@ -4564,7 +4562,7 @@ final class Instance(val spark: SparkSession, val root: String,
     * cluster dimension, so point/range ops on the SECONDARY column
     * also prune to O(sqrt(files)) files via the manifest's per-column
     * stats ([[VersionedTable.Manifest.colStats]], consulted by
-    * [[Txn.candidateFilesBy]]) — instead of scanning every file
+    * [[GraftScan]]'s file skipping) — instead of scanning every file
     * because only obj_id ranges were indexed. A single-column
     * `clusterBy` is a plain range cluster on that column.
     *
@@ -4634,39 +4632,41 @@ final class Instance(val spark: SparkSession, val root: String,
     // reads through the masks and the retired files' dv entries drop
     // with them, healing read overhead back to zero
     val view = viewOf(files, ddl, st.dvs, st.renames)
-    val clustered = cluster match {
-      case Nil => view.coalesce(targetFiles)
-      case Seq(c) => view.repartitionByRange(targetFiles, col(c))
-      case cols =>
-        // Z-order: scale each column to a fixed-width bucket over its
-        // global [min, max] (one tiny agg job), bit-interleave the
-        // buckets into one key, range-partition + locally sort on it.
-        // The interleave keeps every output file's extent bounded in
-        // ALL dimensions — a lexicographic sort would leave the
-        // trailing columns spanning their full range in every file.
-        val bits = math.min(16, 63 / cols.size)
-        val aggs = cols.flatMap(c =>
-          Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-        val bounds = view.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val z = cols.zipWithIndex.flatMap { case (c, j) =>
-          val (mn, mx) =
-            if (bounds.isNullAt(2 * j)) (0L, 1L)
-            else (bounds.getLong(2 * j), bounds.getLong(2 * j + 1))
-          val range = math.max(1L, mx - mn)
-          // double scaling: 53-bit mantissa is exact for bucketing and
-          // immune to (value * 2^bits) long overflow on wide ranges
-          val scaled = ((col(c).cast("long") - mn).cast("double")
-            / range * ((1L << bits) - 1)).cast("long")
-          (0 until bits).map(i =>
-            shiftleft(shiftright(scaled, i).bitwiseAND(lit(1L)),
-              i * cols.size + j))
-        }.reduce(_ + _)
-        view.withColumn("_z", z)
-          .repartitionByRange(targetFiles, col("_z"))
-          .sortWithinPartitions("_z")
-          .drop("_z")
+    val staged = JobLabel(spark, "graft:compact") {
+      val clustered = cluster match {
+        case Nil => view.coalesce(targetFiles)
+        case Seq(c) => view.repartitionByRange(targetFiles, col(c))
+        case cols =>
+          // Z-order: scale each column to a fixed-width bucket over its
+          // global [min, max] (one tiny agg job), bit-interleave the
+          // buckets into one key, range-partition + locally sort on it.
+          // The interleave keeps every output file's extent bounded in
+          // ALL dimensions — a lexicographic sort would leave the
+          // trailing columns spanning their full range in every file.
+          val bits = math.min(16, 63 / cols.size)
+          val aggs = cols.flatMap(c =>
+            Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
+          val bounds = view.agg(aggs.head, aggs.tail: _*).collect()(0)
+          val z = cols.zipWithIndex.flatMap { case (c, j) =>
+            val (mn, mx) =
+              if (bounds.isNullAt(2 * j)) (0L, 1L)
+              else (bounds.getLong(2 * j), bounds.getLong(2 * j + 1))
+            val range = math.max(1L, mx - mn)
+            // double scaling: 53-bit mantissa is exact for bucketing and
+            // immune to (value * 2^bits) long overflow on wide ranges
+            val scaled = ((col(c).cast("long") - mn).cast("double")
+              / range * ((1L << bits) - 1)).cast("long")
+            (0 until bits).map(i =>
+              shiftleft(shiftright(scaled, i).bitwiseAND(lit(1L)),
+                i * cols.size + j))
+          }.reduce(_ + _)
+          view.withColumn("_z", z)
+            .repartitionByRange(targetFiles, col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z")
+      }
+      writeStaged(clustered, txn, partCols)
     }
-    val staged = writeStaged(clustered, txn, partCols)
     // secondary cluster columns get per-file footer ranges into the
     // manifest (obj_id already rides the primary stats index)
     val secondary = cluster.filterNot(_ == "obj_id")
@@ -5096,78 +5096,6 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
             .getOrElse(true))
         (driverPart ++ distPart).sorted
       case None => files.filter(overlap)
-    }
-  }
-
-  /** [[candidateFiles]] generalized to ANY indexed column: files whose
-    * recorded range for `column` can contain one of `values`. Columns
-    * get ranges from a multi-column [[Instance.compact]] (manifest
-    * colStats); obj_id consults the primary stats index. Files with no
-    * recorded range for the column are always candidates — a
-    * Z-order-clustered table prunes a secondary-key point op to
-    * O(sqrt(files)) instead of all of them, and an unclustered table
-    * degrades to the full set, never to a wrong answer. */
-  private[graft] def candidateFilesBy(column: String,
-      values: Seq[Long]): Seq[String] = {
-    if (column == "obj_id") return candidateFiles(values)
-    val baseState = cachedBaseState()
-    // txn-local INLINE names only (segmented: the O(tail) part); the
-    // checkpoint-covered bulk always flows through the distributed
-    // side-file filter below
-    val files = (baseState.inlineFiles.toSet -- removed ++ added)
-      .toSeq.sorted
-    // reserved-name guard: a USER column spelled like [[RowsKey]]
-    // collides with the row-count pseudo-stat — never prune by it:
-    // EVERY live file stays a candidate (segmented: survivors under
-    // the always-true predicate)
-    if ({
-      val i = column.indexOf('.')
-      (if (i < 0) localRen.getOrElse(column, column)
-       else column.take(i)) == VersionedTable.RowsKey
-    }) return baseState.sidecar match {
-      case Some(sc) =>
-        val scX = sc.copy(excluded = sc.excluded ++ removed ++ added)
-        (files ++ inst.sidecarSurvivors(scX)(_ => true)).sorted
-      case None => files
-    }
-    val colStats = baseState.colStats -- removed ++ addedColStats
-    val fileStats = baseState.fileStats -- removed ++ addedFileStats
-    // stats indexes are keyed by PHYSICAL column name (footer-derived;
-    // dotted struct leaves translate their top-level segment only)
-    val pcol = {
-      val i = column.indexOf('.')
-      if (i < 0) localRen.getOrElse(column, column)
-      else localRen.getOrElse(column.take(i), column.take(i)) +
-        column.substring(i)
-    }
-    val sorted = values.distinct.sorted.toArray
-    def anyIn(lo: Long, hi: Long): Boolean = {
-      var i = java.util.Arrays.binarySearch(sorted, lo)
-      if (i < 0) i = -i - 1
-      i < sorted.length && sorted(i) <= hi
-    }
-    // Z-order cluster stats first, then the always-on universal footer
-    // stats — so an UN-compacted table still prunes integral-key point
-    // ops; files with no recorded range degrade to candidates, never
-    // to a wrong answer
-    def driverPred(f: String): Boolean =
-      colStats.get(f).flatMap(_.get(pcol))
-        .orElse(fileStats.get(f).flatMap(_.get(pcol)).flatMap(_.longRange))
-        match {
-      case Some((lo, hi)) => anyIn(lo, hi)
-      case None => true
-    }
-    baseState.sidecar match {
-      case Some(sc) =>
-        // same split as candidateFiles: O(tail) locally, the
-        // checkpoint-covered bulk as a distributed side-file filter
-        val localOnly = (sc.tailLive ++ added) -- removed
-        val driverPart = files.filter(f => localOnly(f) && driverPred(f))
-        val scX = sc.copy(excluded = sc.excluded ++ removed ++ added)
-        val distPart = inst.sidecarSurvivors(scX)(
-          CheckpointStore.mayContainCol(pcol, sorted))
-        (driverPart ++ distPart).sorted
-      case None => files.filter(driverPred)
     }
   }
 

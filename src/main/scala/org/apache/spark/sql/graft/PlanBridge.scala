@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.InputFileBlockHolder
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.connector.catalog.Table
@@ -40,18 +39,6 @@ object PlanBridge {
     classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
       df.queryExecution.logical).queryExecution.executedPlan.executeCollect()
       .map(_.copy()).toSeq
-
-  /** `cond` as a test on rows of `schema`, evaluated on the calling
-    * thread: resolved as a filter over `schema` would be (casts
-    * included), then bound to field positions. */
-  def rowFilter(spark: SparkSession, schema: StructType,
-      cond: Column): InternalRow => Boolean = {
-    val f = localFrame(spark, schema, Nil).filter(cond).queryExecution.analyzed
-      .collectFirst { case f: Filter => f }.get
-    val p = Predicate.createInterpreted(
-      BindReferences.bindReference(f.condition, f.child.output))
-    p.eval
-  }
 
   /** `schema` with every field, nested ones too, nullable — the schema
     * Spark's own file sources read with. A table's DDL may declare a

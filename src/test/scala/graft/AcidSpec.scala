@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.acid.{AcidQueries, ConflictException, EngineConf, VersionedTable}
+import graft.acid.{AcidQueries, ConflictException, EngineConf, GraftScan, Txn, VersionedTable}
 
 /** ACID-layer scenario tests mirroring the reference's E2E coverage
   * (instance.rs:599-762): visibility, snapshot isolation, rollback,
@@ -16,6 +17,13 @@ class AcidSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir() = Files.createTempDirectory("graft_acid_").toUri.toString
+
+  /** Files the scan of `t.read()` filtered to `column IN values` plans:
+    * the transaction-local read's manifest pruning. */
+  private def prunedBy(t: Txn, column: String, values: Seq[Long]): Seq[String] =
+    t.read().filter(col(column).isin(values: _*)).queryExecution.optimizedPlan
+      .collect { case r: DataSourceV2ScanRelation => r.scan }
+      .collect { case g: GraftScan => g.prunedFiles }.flatten
 
   test("scenario: insert/update/delete/rollback/reopen") {
     val rows = AcidQueries.scenario(spark).collect()
@@ -755,7 +763,7 @@ class AcidSpec extends AnyFunSuite {
     }
     val t = inst.begin()
     try {
-      val byK2 = t.candidateFilesBy("k2", Seq(2050L))
+      val byK2 = prunedBy(t, "k2", Seq(2050L))
       assert(byK2.size == 1, s"k2 prune gave ${byK2.size}/4 files — " +
         "universal stats not consulted")
       val rw = inst.readWhere("k2", Seq(2050L))
@@ -772,7 +780,7 @@ class AcidSpec extends AnyFunSuite {
     val reopened = VersionedTable.open(spark, inst.root)
     val t2 = reopened.begin()
     try {
-      val byK2 = t2.candidateFilesBy("k2", Seq(2050L))
+      val byK2 = prunedBy(t2, "k2", Seq(2050L))
       assert(byK2.size == 1,
         s"k2 prune after checkpoint gave ${byK2.size} files")
     } finally reopened.rollback(t2)
@@ -806,7 +814,7 @@ class AcidSpec extends AnyFunSuite {
       // SECONDARY pruning now works: a k2 point op must NOT need every
       // file (Z-order bounds each file's k2 extent; the manifest's
       // colStats carry it)
-      val byK2 = t.candidateFilesBy("k2", Seq(2000L))
+      val byK2 = prunedBy(t, "k2", Seq(2000L))
       assert(byK2.size < 8, s"k2 prune gave ${byK2.size}/8 files — no pruning")
       assert(byK2.size <= 5, s"k2 prune gave ${byK2.size}/8 files — Z-extent too wide")
       // and the pruned set is SOUND: the k2 rows all live in candidates
@@ -834,7 +842,7 @@ class AcidSpec extends AnyFunSuite {
     }
     val t2 = inst.begin()
     try {
-      val byK2 = t2.candidateFilesBy("k2", Seq(2000L))
+      val byK2 = prunedBy(t2, "k2", Seq(2000L))
       // 8 clustered files still pruned; the 12 new un-clustered files
       // have no k2 stats and stay candidates (sound, not wrong)
       assert(byK2.count(files.contains) <= 5,
@@ -847,7 +855,7 @@ class AcidSpec extends AnyFunSuite {
     inst.restore(clusteredV)
     val t3 = inst.begin()
     try {
-      assert(t3.candidateFilesBy("k2", Seq(2000L)).size <= 5,
+      assert(prunedBy(t3, "k2", Seq(2000L)).size <= 5,
         "restore dropped the secondary cluster stats")
     } finally inst.rollback(t3)
 
@@ -1899,10 +1907,10 @@ class AcidSpec extends AnyFunSuite {
     val q58 = inst.read()
     assert(q58.columns.toSeq == Seq("obj_id", "amount"))
     assert(q58.agg(sum("amount")).head().getLong(0) == (1 to 40).map(_ * 10L).sum)
-    // candidateFilesBy on the RENAMED logical name prunes via the
+    // the scan filtered on the RENAMED logical name prunes via the
     // physical colStats entries written before the rename
     val txn = inst.begin()
-    val cand = txn.candidateFilesBy("amount", Seq(50L))
+    val cand = prunedBy(txn, "amount", Seq(50L))
     val all = inst.stateAt(inst.latestVersion)._1
     assert(cand.size < all.size,
       s"renamed-column point op must prune (${cand.size} of ${all.size})")

@@ -26,12 +26,23 @@ class BatchSourceSpec extends AnyFunSuite {
   }
 
   private def graftScan(df: DataFrame): GraftScan = {
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan
-    }
+    val scans = GraftScan.planned(df.queryExecution.executedPlan)
     assert(scans.nonEmpty, "no BatchScanExec in plan:\n" +
       df.queryExecution.executedPlan)
-    scans.head.asInstanceOf[GraftScan]
+    scans.head
+  }
+
+  /** Runs `body` with the driver-read gate at 1 byte: every scan takes
+    * its job path. */
+  private def jobPath[T](body: => T): T = {
+    val key = "spark.sql.files.openCostInBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   private def lifecycleTable(): (Instance, String) = {
@@ -411,7 +422,8 @@ class BatchSourceSpec extends AnyFunSuite {
   test("columnar path active for atomic schemas; schema evolution time-travels") {
     val (inst, dir) = lifecycleTable()
     val df = readGraft(dir)
-    val scans = df.queryExecution.executedPlan.collect {
+    // the job path's reader: a scan this small is otherwise read on the driver
+    val scans = jobPath(df.queryExecution.executedPlan).collect {
       case b: BatchScanExec => b }
     assert(scans.head.supportsColumnar,
       "vectorized read path should be active for flat long columns")
@@ -479,7 +491,7 @@ class BatchSourceSpec extends AnyFunSuite {
     val hasLocal = plan.collect {
       case l: org.apache.spark.sql.execution.LocalTableScanExec => l
     }.nonEmpty
-    val hasBatch = plan.collect { case b: BatchScanExec => b }.nonEmpty
+    val hasBatch = GraftScan.planned(plan).nonEmpty
     hasLocal && !hasBatch
   }
 

@@ -67,10 +67,7 @@ class CatalogSpec extends AnyFunSuite {
       "(3, 'en', 30)")
     // partition pruning flows through the catalog table's scan
     val en = sql("SELECT * FROM gcat.part.docs WHERE lang = 'en'")
-    val scans = en.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.asInstanceOf[GraftScan]
-    }
+    val scans = GraftScan.planned(en.queryExecution.executedPlan)
     assert(scans.head.prunedFiles.nonEmpty &&
       scans.head.prunedFiles.forall(_.contains("lang=en")))
     assert(en.count() == 2L)

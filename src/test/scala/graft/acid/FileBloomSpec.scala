@@ -5,7 +5,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,11 +28,9 @@ class FileBloomSpec extends AnyFunSuite {
   // FILES surviving the manifest skip (input partitions would
   // under-count: small files bin-pack many-per-partition)
   private def plannedFiles(df: DataFrame): Int = {
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan
-    }
+    val scans = GraftScan.planned(df.queryExecution.executedPlan)
     assert(scans.nonEmpty, "no BatchScanExec in plan")
-    scans.collect { case g: GraftScan => g.prunedFiles.size }.sum
+    scans.map(_.prunedFiles.size).sum
   }
 
   // 24 single-file commits, user ids disjoint per file but with

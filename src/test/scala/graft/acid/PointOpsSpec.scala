@@ -6,7 +6,6 @@ import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,8 +61,7 @@ class PointOpsSpec extends AnyFunSuite {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    plan.collect { case b: BatchScanExec => b.scan }
-      .collect { case g: GraftScan => g.prunedFiles.size.toLong }.sum
+    GraftScan.planned(plan).map(_.prunedFiles.size.toLong).sum
   }
 
   private def rows(df: DataFrame): Seq[(Long, Long)] =

@@ -3,7 +3,7 @@ package graft.acid
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,11 +31,9 @@ class SegmentedCkptSpec extends AnyFunSuite {
     spark.read.format("graft").option("path", root).load()
 
   private def graftScan(df: DataFrame): GraftScan = {
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan
-    }
+    val scans = GraftScan.planned(df.queryExecution.executedPlan)
     assert(scans.nonEmpty, "no BatchScanExec in plan")
-    scans.head.asInstanceOf[GraftScan]
+    scans.head
   }
 
   test("lifecycle under always-segmented checkpoints: insert/update/delete/MoR/compact/restore/reopen") {
@@ -243,7 +241,10 @@ class SegmentedCkptSpec extends AnyFunSuite {
       val skipMs = (System.nanoTime() - t1) / 1000000L
       assert(cand == Seq("synth/part-041500.parquet"), s"got $cand")
       // secondary-column skipping via the universal stats
-      val byCol = txn.candidateFilesBy("value", Seq(123_456L)) // file 12345
+      val byCol = txn.read().filter(col("value") === 123_456L)
+        .queryExecution.optimizedPlan
+        .collect { case r: DataSourceV2ScanRelation => r.scan }
+        .collect { case g: GraftScan => g.prunedFiles }.flatten // file 12345
       assert(byCol == Seq("synth/part-012345.parquet"), s"got $byCol")
       // bounded wall: a distributed columnar filter, not a driver JSON
       // fold — generous CI bound, but it would be minutes if the skip
@@ -273,10 +274,7 @@ class SegmentedCkptSpec extends AnyFunSuite {
     // cover the limit); execution would fail on the synthetic file, so
     // only the planned partitioning is asserted
     val limited = readGraft(dir).limit(100)
-    val scans = limited.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.asInstanceOf[GraftScan]
-    }
+    val scans = GraftScan.planned(limited.queryExecution.executedPlan)
     assert(scans.nonEmpty)
     val plannedFiles = scans.head.planInputPartitions()
       .flatMap { case p: GraftInputPartition => p.files }.length
@@ -287,10 +285,7 @@ class SegmentedCkptSpec extends AnyFunSuite {
     // cutoff job finds 2 covering files among 50k (1000 rows each,
     // disjoint id ranges); everything else is pruned unplanned
     val top = readGraft(dir).orderBy(col("obj_id")).limit(1500)
-    val topScan = top.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.asInstanceOf[GraftScan]
-    }.head
+    val topScan = GraftScan.planned(top.queryExecution.executedPlan).head
     val topPlanned = topScan.planInputPartitions()
       .flatMap { case p: GraftInputPartition => p.files }
       .map(_.filePath.toString).sorted

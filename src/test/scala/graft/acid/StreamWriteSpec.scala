@@ -213,10 +213,7 @@ class StreamWriteSpec extends AnyFunSuite {
         (4L, "fr", 40L)))
     // streamed files staged in hive layout -> partition PRUNING works
     val en = spark.sql(s"SELECT * FROM $cat.p.ev WHERE lang = 'en'")
-    val scans = en.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.asInstanceOf[GraftScan]
-    }
+    val scans = GraftScan.planned(en.queryExecution.executedPlan)
     assert(scans.head.prunedFiles.nonEmpty &&
       scans.head.prunedFiles.forall(_.contains("lang=en")))
     assert(en.count() == 2L)
