@@ -2,7 +2,7 @@ package graft.acid
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -112,56 +112,43 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister {
     // via CALL set_unique_ids must not accept duplicate obj_ids just
     // because the writer came through .option("path", ...). Explicit
     // options still win (the caller asked for that behavior by name).
-    // The file is probed and read ONCE per resolution, not per key:
-    // four separate exists+open round-trips per getTable would be four
-    // object-store RPCs on every table open at scale.
-    val catalogJson =
-      GraftTableSource.readCatalogJson(SparkSession.active, root)
-    def catalogSpec(key: String): Option[String] =
-      catalogJson.flatMap(GraftTableSource.specField(_, key))
+    // The file is read ONCE per resolution, not per key: four separate
+    // reads per getTable would be four object-store RPCs on every
+    // table open at scale.
+    val catalogSpec =
+      GraftTableSource.readCatalogJson(inst.fs, new Path(inst.root))
     val st = inst.tableStateAt(v)
     new GraftTable(inst, st, Some(v), StructType.fromDDL(st.ddl),
       timeTraveled = options.containsKey("versionAsOf") ||
         options.containsKey("timestampAsOf"),
       partitionByOpt = Option(options.get("partitionBy"))
-        .orElse(catalogSpec("partitionBy")),
+        .orElse(catalogSpec.get("partitionBy")),
       clusterByOpt = Option(options.get("clusterBy"))
-        .orElse(catalogSpec("clusterBy")),
+        .orElse(catalogSpec.get("clusterBy")),
       uniqueIdsOpt =
         if (options.containsKey("uniqueIds"))
           options.getBoolean("uniqueIds", false)
-        else catalogSpec("uniqueIds").contains("true"),
+        else catalogSpec.get("uniqueIds").contains("true"),
       bloomColsOpt = Option(options.get("bloomFilters"))
-        .orElse(catalogSpec("bloomFilters")))
+        .orElse(catalogSpec.get("bloomFilters")))
   }
 }
 
 private[acid] object GraftTableSource {
 
-  /** One string field of the table root's `_catalog.json` (the spec
-    * file [[GraftCatalog]] maintains); None when absent/empty — shared
-    * by the catalog and the path-based provider so both front doors
-    * honor the same recorded table specs. */
-  def readCatalogSpec(spark: SparkSession, root: String,
-      key: String): Option[String] =
-    readCatalogJson(spark, root).flatMap(specField(_, key))
-
-  /** The raw `_catalog.json` body, read in ONE exists+open round-trip
-    * (callers extract multiple fields from it via [[specField]]). */
-  def readCatalogJson(spark: SparkSession, root: String): Option[String] = {
-    val p = new Path(root, "_catalog.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close())
+  /** The non-empty string fields of the table root's `_catalog.json`
+    * (the spec file [[GraftCatalog]] maintains), read with one `open`;
+    * empty when the file is absent. The catalog and the path-based
+    * provider both read it here, so both front doors honor the same
+    * recorded table specs. */
+  def readCatalogJson(fs: FileSystem, root: Path): Map[String, String] =
+    MetaJson.read(fs, new Path(root, "_catalog.json")).fold(
+      Map.empty[String, String]) { s =>
+      val n = MetaJson.parse(s)
+      n.fieldNames.asScala.map(k => k -> n.get(k))
+        .collect { case (k, v) if v.isTextual && v.textValue.nonEmpty =>
+          k -> v.textValue }.toMap
     }
-  }
-
-  def specField(json: String, key: String): Option[String] =
-    (s""""$key":"([^"]*)"""").r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty)
 
   def resolveVersion(inst: Instance, options: CaseInsensitiveStringMap): Long =
     (Option(options.get("versionAsOf")), Option(options.get("timestampAsOf"))) match {

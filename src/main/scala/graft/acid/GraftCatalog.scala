@@ -87,12 +87,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val root = tablePath(ident).toString
     val inst = VersionedTable.open(SparkSession.active, root)
     val st = inst.tableStateAt(version)
+    val spec = catalogSpec(ident)
     new GraftTable(inst, st, Some(version), StructType.fromDDL(st.ddl),
       timeTraveled,
-      partitionByOpt = readPartitionBy(ident),
-      clusterByOpt = readClusterBy(ident),
-      uniqueIdsOpt = readUniqueIds(ident),
-      bloomColsOpt = readBloomFilters(ident))
+      partitionByOpt = spec.get("partitionBy"),
+      clusterByOpt = spec.get("clusterBy"),
+      uniqueIdsOpt = spec.get("uniqueIds").contains("true"),
+      bloomColsOpt = spec.get("bloomFilters"))
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -204,30 +205,20 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     graftTable(ident, 0L, timeTraveled = false)
   }
 
-  private def readCatalogKey(ident: Identifier, key: String)
-      : Option[String] = {
-    val p = new Path(tablePath(ident), "_catalog.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val m = (s""""$key":"([^"]*)"""").r.findFirstMatchIn(s)
-      m.map(_.group(1)).filter(_.nonEmpty)
-    }
-  }
+  private def catalogSpec(ident: Identifier): Map[String, String] =
+    GraftTableSource.readCatalogJson(fs, tablePath(ident))
 
   private def readPartitionBy(ident: Identifier): Option[String] =
-    readCatalogKey(ident, "partitionBy")
+    catalogSpec(ident).get("partitionBy")
 
   private def readClusterBy(ident: Identifier): Option[String] =
-    readCatalogKey(ident, "clusterBy")
+    catalogSpec(ident).get("clusterBy")
 
   private def readUniqueIds(ident: Identifier): Boolean =
-    readCatalogKey(ident, "uniqueIds").contains("true")
+    catalogSpec(ident).get("uniqueIds").contains("true")
 
   private def readBloomFilters(ident: Identifier): Option[String] =
-    readCatalogKey(ident, "bloomFilters")
+    catalogSpec(ident).get("bloomFilters")
 
   /** Rewrite `_catalog.json` with the given specs (absent when all
     * are empty/off) — write-then-rename, never delete-then-create: a
@@ -238,13 +229,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       partitionBy: Seq[String], clusterBy: Seq[String],
       uniqueIds: Boolean = false,
       bloomFilters: Seq[String] = Nil): Unit = {
-    // the spec serializes as comma-joined values inside a "..." json
-    // string and reads back with a [^"]* regex — a column name
-    // carrying a quote, backslash, comma or control char would corrupt
-    // the file or split wrongly on read. Refuse it loudly at write
-    // time (same contract the _ivf.json writer enforces via esc/unesc;
-    // here the names also live in paths and SQL, so a safe charset is
-    // the honest surface rather than escaping).
+    // the spec serializes as comma-joined values inside a json string:
+    // a column name carrying a comma would split wrongly on read. Names
+    // with a quote, backslash or control character are refused too:
+    // they also live in paths and SQL, so a safe charset is the honest
+    // surface rather than escaping.
     (partitionBy ++ clusterBy ++ bloomFilters).foreach { c =>
       require(!c.exists(ch => ch == '"' || ch == '\\' || ch == ',' ||
           ch < ' '),
@@ -258,26 +247,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (fs.exists(p)) fs.delete(p, false)
       return
     }
-    val json = "{" + Seq(
-      if (partitionBy.isEmpty) None
-      else Some(s""""partitionBy":"${partitionBy.mkString(",")}""""),
-      if (clusterBy.isEmpty) None
-      else Some(s""""clusterBy":"${clusterBy.mkString(",")}""""),
-      if (!uniqueIds) None else Some(""""uniqueIds":"true""""),
-      if (bloomFilters.isEmpty) None
-      else Some(s""""bloomFilters":"${bloomFilters.mkString(",")}"""")
-    ).flatten.mkString(",") + "}"
-    val tmp = new Path(tablePath(ident),
-      s"._catalog-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8"))
-    finally out.close()
-    try {
-      if (!fs.rename(tmp, p)) { fs.delete(p, false); fs.rename(tmp, p) }
-    } finally {
-      try { if (fs.exists(tmp)) fs.delete(tmp, false) }
-      catch { case _: java.io.IOException => () }
-    }
+    MetaJson.replace(fs, p, MetaJson.obj { g =>
+      Seq("partitionBy" -> partitionBy, "clusterBy" -> clusterBy,
+        "uniqueIds" -> (if (uniqueIds) Seq("true") else Nil),
+        "bloomFilters" -> bloomFilters).foreach { case (k, cols) =>
+        if (cols.nonEmpty) g.writeStringField(k, cols.mkString(","))
+      }
+    })
   }
 
   /** SQL `ALTER TABLE` as ONE metadata-only schema-evolution commit:

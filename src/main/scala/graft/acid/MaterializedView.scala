@@ -874,29 +874,11 @@ object MaterializedAggView {
     registeredViews(table.fs, table.root)
 
   private[acid] def registeredViews(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, RegistryFile)
-    try {
-      if (!fs.exists(p)) Nil
-      else {
-        val in = fs.open(p)
-        val s = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](8192)
-          var n = in.read(tmp)
-          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-        // quote-aware scan of the single string array (paths may in
-        // principle carry escaped quotes/backslashes via esc)
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(
-          s.dropWhile(_ != '[')).map(m => m.group(1)
-            .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-          .filterNot(_ == "views")
-      }
-    } catch { case _: java.io.IOException => Nil }
-  }
+      root: String): Seq[String] =
+    try MetaJson.read(fs, new org.apache.hadoop.fs.Path(root, RegistryFile))
+      .fold(Seq.empty[String])(s =>
+        MetaJson.strings(MetaJson.parse(s).path("views")))
+    catch { case _: java.io.IOException => Nil }
 
   private def registerView(table: Instance, viewRoot: String): Unit = try {
     val canon = new org.apache.hadoop.fs.Path(viewRoot).toString
@@ -931,24 +913,10 @@ object MaterializedAggView {
     }
   } catch { case scala.util.control.NonFatal(_) => () } // best-effort
 
-  private def writeRegistry(table: Instance, views: Seq[String]): Unit = {
-    val json =
-      s"""{"views":[${views.map(v => "\"" + esc(v) + "\"").mkString(",")}]}"""
-    val p = new org.apache.hadoop.fs.Path(table.root, RegistryFile)
-    val tmp = new org.apache.hadoop.fs.Path(table.root,
-      s"._mvreg-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = table.fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try {
-      if (!table.fs.rename(tmp, p)) {
-        table.fs.delete(p, false); table.fs.rename(tmp, p)
-      }
-    } finally {
-      try { if (table.fs.exists(tmp)) table.fs.delete(tmp, false) }
-      catch { case _: java.io.IOException => () }
-    }
-  }
+  private def writeRegistry(table: Instance, views: Seq[String]): Unit =
+    MetaJson.replace(table.fs,
+      new org.apache.hadoop.fs.Path(table.root, RegistryFile),
+      MetaJson.obj(MetaJson.strings(_, "views", views)))
 
   /** Whether `root` holds a materialized view's persisted definition
     * (the catalog's rename hook asks before treating a moved table as
@@ -1023,37 +991,28 @@ object MaterializedAggView {
     * catalog operations; opening binds by the recorded paths. */
   private val DefFile = "_mv.json"
 
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-  }
   private def writeDef(view: Instance, d: MvDef): Unit = {
-    def arr(xs: Seq[String]) =
-      s"[${xs.map(c => "\"" + esc(c) + "\"").mkString(",")}]"
-    val json = s"""{"source":"${esc(d.source)}",""" +
+    val json = MetaJson.obj { g =>
+      def arr(k: String, xs: Seq[String]) = MetaJson.strings(g, k, xs)
+      g.writeStringField("source", d.source)
       // the AUTHORITATIVE binding: `source`/`dimSources` may be dotted
       // catalog names (display + catalog ops), but two registered
       // catalogs can both resolve the same dotted name — opening binds
       // by the physical root recorded at create time, never by a
       // which-catalog-answers-first guess
-      s""""sourcePath":"${esc(d.sourcePath)}",""" +
-      s""""groupCols":${arr(d.groupCols)},""" +
-      s""""sumCols":${arr(d.sumCols)},""" +
-      s""""minCols":${arr(d.minCols)},""" +
-      s""""maxCols":${arr(d.maxCols)},""" +
-      s""""groupPhys":${arr(d.groupPhys)},""" +
-      s""""sumPhys":${arr(d.sumPhys)},""" +
-      s""""minPhys":${arr(d.minPhys)},""" +
-      s""""maxPhys":${arr(d.maxPhys)},""" +
-      s""""ndvCols":${arr(d.ndvCols)},"ndvPhys":${arr(d.ndvPhys)},""" +
-      d.where.fold("")(w => s""""where":"${esc(w)}",""") +
-      s""""dimSources":${arr(d.dimSources)},""" +
-      s""""dimPaths":${arr(d.dimPaths)},""" +
-      s""""factKeys":${arr(d.factKeys)},""" +
-      s""""dimKeys":${arr(d.dimKeys)},""" +
-      s""""groupRels":${arr(d.groupRels.map(_.toString))},""" +
-      s""""sumRels":${arr(d.sumRels.map(_.toString))},""" +
-      s""""factKeyPhys":${arr(d.factKeyPhys)},""" +
-      s""""dimKeyPhys":${arr(d.dimKeyPhys)}}"""
+      g.writeStringField("sourcePath", d.sourcePath)
+      arr("groupCols", d.groupCols); arr("sumCols", d.sumCols)
+      arr("minCols", d.minCols); arr("maxCols", d.maxCols)
+      arr("groupPhys", d.groupPhys); arr("sumPhys", d.sumPhys)
+      arr("minPhys", d.minPhys); arr("maxPhys", d.maxPhys)
+      arr("ndvCols", d.ndvCols); arr("ndvPhys", d.ndvPhys)
+      d.where.foreach(g.writeStringField("where", _))
+      arr("dimSources", d.dimSources); arr("dimPaths", d.dimPaths)
+      arr("factKeys", d.factKeys); arr("dimKeys", d.dimKeys)
+      arr("groupRels", d.groupRels.map(_.toString))
+      arr("sumRels", d.sumRels.map(_.toString))
+      arr("factKeyPhys", d.factKeyPhys); arr("dimKeyPhys", d.dimKeyPhys)
+    }
     val out = view.fs.create(
       new org.apache.hadoop.fs.Path(view.root, DefFile), false)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1075,19 +1034,16 @@ object MaterializedAggView {
       groupRels: Seq[Int], sumRels: Seq[Int],
       factKeyPhys: Seq[String], dimKeyPhys: Seq[String])
 
-  /** The persisted definition. The array parse is a real quote-aware
-    * scan — column names containing commas, brackets, quotes or
-    * backslashes round-trip exactly as [[writeDef]]'s escaper
-    * produced them. */
+  /** The persisted definition. */
   private[acid] def readDef(view: Instance): MvDef = {
-    val (strs, arrs) = readDefRaw(view)
-    def str(k: String): String = strs.getOrElse(k,
+    val n = readDefRaw(view)
+    def field(k: String) = Option(n.get(k)).getOrElse(
       throw new IllegalStateException(s"bad $DefFile: no $k"))
-    def arr(k: String): Seq[String] = arrs.getOrElse(k,
-      throw new IllegalStateException(s"bad $DefFile: no $k"))
+    def str(k: String): String = field(k).textValue
+    def arr(k: String): Seq[String] = MetaJson.strings(field(k))
     MvDef(str("source"), str("sourcePath"),
       arr("groupCols"), arr("sumCols"), arr("minCols"), arr("maxCols"),
-      strs.get("where"),
+      Option(n.get("where")).map(_.textValue),
       arr("groupPhys"), arr("sumPhys"), arr("minPhys"), arr("maxPhys"),
       arr("ndvCols"), arr("ndvPhys"),
       arr("dimSources"), arr("dimPaths"), arr("factKeys"), arr("dimKeys"),
@@ -1095,76 +1051,18 @@ object MaterializedAggView {
       arr("factKeyPhys"), arr("dimKeyPhys"))
   }
 
-  /** The def file as raw (string-field, array-field) maps — every key
-    * preserved verbatim, so a rewrite re-serializing these maps is
-    * lossless for fields it doesn't touch (see [[rebindDef]]). */
-  private def readDefRaw(
-      view: Instance): (Map[String, String], Map[String, Seq[String]]) = {
-    val p = new org.apache.hadoop.fs.Path(view.root, DefFile)
-    require(view.fs.exists(p), s"${view.root} is not a materialized view " +
-      s"(no $DefFile)")
-    val in = view.fs.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      var n = in.read(tmp)
-      while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    // scan one JSON string literal starting at json(i) == '"'; returns
-    // (unescaped value, index just past the closing quote)
-    def scanString(i0: Int): (String, Int) = {
-      require(i0 < json.length && json.charAt(i0) == '"',
-        s"bad $DefFile: expected string at offset $i0")
-      val sb = new StringBuilder
-      var i = i0 + 1
-      while (i < json.length && json.charAt(i) != '"') {
-        val c = json.charAt(i)
-        if (c == '\\' && i + 1 < json.length) {
-          sb.append(json.charAt(i + 1)); i += 2
-        } else { sb.append(c); i += 1 }
-      }
-      require(i < json.length, s"bad $DefFile: unterminated string")
-      (sb.toString, i + 1)
-    }
-    // sequential object scan: `indexOf`-style key lookup could match
-    // a key-shaped substring inside an EARLIER field's escaped value,
-    // so keys and values are consumed strictly in document order
-    def skipWs(i0: Int): Int = {
-      var i = i0
-      while (i < json.length && json.charAt(i).isWhitespace) i += 1
-      i
-    }
-    var i = skipWs(0)
-    require(i < json.length && json.charAt(i) == '{', s"bad $DefFile")
-    i = skipWs(i + 1)
-    var strs = Map.empty[String, String]
-    var arrs = Map.empty[String, Seq[String]]
-    while (i < json.length && json.charAt(i) != '}') {
-      val (k, afterKey) = scanString(i)
-      i = skipWs(afterKey)
-      require(i < json.length && json.charAt(i) == ':', s"bad $DefFile")
-      i = skipWs(i + 1)
-      if (json.charAt(i) == '[') {
-        i = skipWs(i + 1)
-        val out = Seq.newBuilder[String]
-        while (json.charAt(i) != ']') {
-          val (v, next) = scanString(i)
-          out += v
-          i = skipWs(next)
-          if (json.charAt(i) == ',') i = skipWs(i + 1)
-        }
-        arrs += k -> out.result()
-        i = skipWs(i + 1)
-      } else {
-        val (v, next) = scanString(i)
-        strs += k -> v
-        i = skipWs(next)
-      }
-      if (i < json.length && json.charAt(i) == ',') i = skipWs(i + 1)
-    }
-    (strs, arrs)
-  }
+  /** The def file as a JSON object, every key kept in document order,
+    * so a rewrite re-serializing it is lossless for fields it doesn't
+    * touch (see [[rebindDef]]). */
+  private def readDefRaw(view: Instance)
+      : com.fasterxml.jackson.databind.node.ObjectNode =
+    MetaJson.read(view.fs, new org.apache.hadoop.fs.Path(view.root, DefFile))
+      .map(MetaJson.parse(_) match {
+        case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+        case _ => throw new IllegalStateException(s"bad $DefFile")
+      })
+      .getOrElse(throw new IllegalArgumentException(
+        s"${view.root} is not a materialized view (no $DefFile)"))
 
   /** Rewrite the BINDING fields of a persisted definition through
     * `remap` (old spec/path → new), leaving every other field
@@ -1173,32 +1071,16 @@ object MaterializedAggView {
     * The write is temp+rename like every other marker file. */
   private[acid] def rebindDef(view: Instance,
       remap: String => String): Unit = {
-    val (strs, arrs) = readDefRaw(view)
-    val bindStr = Set("source", "sourcePath")
-    val bindArr = Set("dimSources", "dimPaths")
-    val fields =
-      strs.map { case (k, v) =>
-        "\"" + esc(k) + "\":\"" +
-          esc(if (bindStr(k)) remap(v) else v) + "\"" } ++
-      arrs.map { case (k, vs) =>
-        "\"" + esc(k) + "\":[" +
-          (if (bindArr(k)) vs.map(remap) else vs)
-            .map(v => "\"" + esc(v) + "\"").mkString(",") + "]" }
-    val json = fields.mkString("{", ",", "}")
-    val p = new org.apache.hadoop.fs.Path(view.root, DefFile)
-    val tmp = new org.apache.hadoop.fs.Path(view.root,
-      s".$DefFile-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = view.fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try {
-      if (!view.fs.rename(tmp, p)) {
-        view.fs.delete(p, false); view.fs.rename(tmp, p)
-      }
-    } finally {
-      try { if (view.fs.exists(tmp)) view.fs.delete(tmp, false) }
-      catch { case _: java.io.IOException => () }
+    val n = readDefRaw(view)
+    Seq("source", "sourcePath").foreach(k =>
+      n.put(k, remap(n.get(k).textValue)))
+    Seq("dimSources", "dimPaths").foreach { k =>
+      val vs = MetaJson.strings(n.get(k))
+      val a = n.putArray(k) // replaced in place: key order is kept
+      vs.foreach(v => a.add(remap(v)))
     }
+    MetaJson.replace(view.fs,
+      new org.apache.hadoop.fs.Path(view.root, DefFile), n.toString)
   }
 
   /** Open a view from its persisted definition, binding the fact and

@@ -371,11 +371,6 @@ object VersionedTable {
     require(!partitionBy.contains("obj_id"),
       "obj_id cannot be a partition column (footer stats need it in-file)")
 
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
   /** Unsigned lexicographic UTF-8 byte order — parquet's sort order
     * for string (BINARY/UTF8) statistics. Java's String.compareTo
     * (UTF-16 code-unit order) disagrees for supplementary characters,
@@ -393,28 +388,6 @@ object VersionedTable {
     x.length - y.length
   }
 
-  /** Inverse of [[esc]] — needed only for fields that carry ARBITRARY
-    * user data (universal-stat string bounds); file names and column
-    * names never contain the escaped characters. */
-  private def unesc(s: String): String =
-    if (s.indexOf('\\') < 0) s
-    else {
-      val sb = new StringBuilder; var i = 0
-      while (i < s.length) {
-        val c = s(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case o => sb.append(o); i += 2 // \" and \\
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-
   /** The one manifest format generation this engine reads and writes.
     * Every manifest declares it, and [[fromJson]] refuses any other
     * declared generation (older, newer or absent) and any manifest
@@ -425,106 +398,93 @@ object VersionedTable {
     * not migrated. */
   val FormatVersion = 10
 
-  private[graft] def toJson(m: Manifest): String = {
-    def arrS(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-    def arrL(xs: Seq[Long]) = xs.mkString("[", ",", "]")
-    // stats as three parallel arrays so the fixed-shape parser stays
-    // trivial; sorted for byte-stable output (the crc depends on it)
-    val statKeys = m.stats.keys.toSeq.sorted
-    val summary = m.objSummary.map { s =>
-      s""""objCount":${s.count},"objMin":${s.min},"objMax":${s.max},""" +
-      s""""objBloomK":${s.bloom.k},"objBloom":"${s.bloom.toBase64}","""
-    }.getOrElse("")
-    // colStats flattened to four parallel arrays (file, col, min, max)
-    // — same trivial-parser shape as stats; emitted only when present
-    val cstatKeys = m.colStats.toSeq.sortBy(_._1).flatMap { case (f, cs) =>
-      cs.toSeq.sortBy(_._1).map { case (c, r) => (f, c, r._1, r._2) }
+  private[graft] def toJson(m: Manifest): String = MetaJson.seal(MetaJson.obj { g =>
+    import MetaJson.{longs, strings}
+    // every map is written as parallel arrays sorted by key, so the
+    // bytes (and the crc) are a function of the value alone
+    def sortedKeys[V](kv: Map[String, V]) = kv.keys.toSeq.sorted
+    g.writeNumberField("formatVersion", FormatVersion)
+    m.multiRef.foreach(g.writeStringField("multiRef", _))
+    g.writeNumberField("version", m.version)
+    g.writeNumberField("tsn", m.tsn)
+    g.writeNumberField("tsMillis", m.tsMillis)
+    g.writeStringField("schemaDDL", m.schemaDDL)
+    strings(g, "added", m.added)
+    strings(g, "removed", m.removed)
+    longs(g, "objects", m.objects)
+    g.writeBooleanField("checkpoint", m.checkpoint)
+    m.objSummary.foreach { s =>
+      g.writeNumberField("objCount", s.count)
+      g.writeNumberField("objMin", s.min)
+      g.writeNumberField("objMax", s.max)
+      g.writeNumberField("objBloomK", s.bloom.k)
+      g.writeStringField("objBloom", s.bloom.toBase64)
     }
-    val cstats =
-      if (cstatKeys.isEmpty) ""
-      else s""""cstatsFiles":${arrS(cstatKeys.map(_._1))},""" +
-        s""""cstatsCols":${arrS(cstatKeys.map(_._2))},""" +
-        s""""cstatsMin":${arrL(cstatKeys.map(_._3))},""" +
-        s""""cstatsMax":${arrL(cstatKeys.map(_._4))},"""
-    // streaming-epoch watermarks as two parallel arrays, sorted for
-    // byte-stable output
-    val appKeys = m.appTxns.keys.toSeq.sorted
-    val apps =
-      if (appKeys.isEmpty) ""
-      else s""""appIds":${arrS(appKeys)},""" +
-        s""""appEpochs":${arrL(appKeys.map(m.appTxns(_)))},""" +
-        s""""appTs":${arrL(appKeys.map(m.appTxnTs.getOrElse(_, 0L)))},"""
-    // deletion vectors flattened to two parallel arrays (file, then its
-    // sidecar list joined with ';' — sidecar names are uuids, never
-    // contain ';'); an empty list serializes as "" = clear-this-entry
-    def dvBlock(prefix: String, dvs: Map[String, Seq[String]]): String = {
-      val keys = dvs.keys.toSeq.sorted
-      if (keys.isEmpty) ""
-      else s""""${prefix}Files":${arrS(keys)},""" +
-        s""""${prefix}Lists":${arrS(keys.map(dvs(_).mkString(";")))},"""
+    // colStats as four parallel arrays (file, col, min, max)
+    val cstats = m.colStats.toSeq.sortBy(_._1).flatMap { case (f, cs) =>
+      cs.toSeq.sortBy(_._1).map { case (c, r) => (f, c, r) }
     }
-    val dvsJson = dvBlock("dv", m.dvs) + dvBlock("allDv", m.allDvs)
-    // universal file stats flattened to six parallel arrays — the same
-    // trivial-parser shape as cstats, with string-typed bounds (esc'd:
-    // string-column values are arbitrary user data)
-    val ustatRows = m.fileStats.toSeq.sortBy(_._1).flatMap { case (f, cs) =>
+    if (cstats.nonEmpty) {
+      strings(g, "cstatsFiles", cstats.map(_._1))
+      strings(g, "cstatsCols", cstats.map(_._2))
+      longs(g, "cstatsMin", cstats.map(_._3._1))
+      longs(g, "cstatsMax", cstats.map(_._3._2))
+    }
+    // streaming-epoch watermarks; a stamp-less entry writes 0
+    val apps = sortedKeys(m.appTxns)
+    if (apps.nonEmpty) {
+      strings(g, "appIds", apps)
+      longs(g, "appEpochs", apps.map(m.appTxns))
+      longs(g, "appTs", apps.map(m.appTxnTs.getOrElse(_, 0L)))
+    }
+    // deletion vectors: file, then its sidecar list joined with ';'
+    // (sidecar names are uuids); "" = clear this entry
+    Seq("dv" -> m.dvs, "allDv" -> m.allDvs).foreach { case (prefix, dvs) =>
+      val keys = sortedKeys(dvs)
+      if (keys.nonEmpty) {
+        strings(g, prefix + "Files", keys)
+        strings(g, prefix + "Lists", keys.map(dvs(_).mkString(";")))
+      }
+    }
+    // universal file stats as six parallel arrays
+    val ustats = m.fileStats.toSeq.sortBy(_._1).flatMap { case (f, cs) =>
       cs.toSeq.sortBy(_._1).map { case (c, u) => (f, c, u) }
     }
-    val ustats =
-      if (ustatRows.isEmpty) ""
-      else s""""ustatFiles":${arrS(ustatRows.map(_._1))},""" +
-        s""""ustatCols":${arrS(ustatRows.map(_._2))},""" +
-        s""""ustatKinds":${arrS(ustatRows.map(_._3.kind.toString))},""" +
-        s""""ustatMins":${arrS(ustatRows.map(_._3.min))},""" +
-        s""""ustatMaxs":${arrS(ustatRows.map(_._3.max))},""" +
-        s""""ustatNulls":${arrL(ustatRows.map(_._3.nulls))},"""
-    // column mapping as two parallel arrays (logical, physical), sorted
-    // for byte-stable output; only entries where the names differ
-    val renKeys = m.renames.keys.toSeq.sorted
-    val rens =
-      if (renKeys.isEmpty) ""
-      else s""""renFrom":${arrS(renKeys)},""" +
-        s""""renTo":${arrS(renKeys.map(m.renames(_)))},"""
-    val tombs =
-      if (m.tombstones.isEmpty) ""
-      else s""""tombstones":${arrS(m.tombstones.sorted)},"""
-    // CHECK constraints as two parallel arrays (name, expression),
-    // sorted for byte-stable output; expressions are arbitrary SQL so
-    // they esc like ustat string bounds
-    val consKeys = m.constraints.keys.toSeq.sorted
-    val cons =
-      if (consKeys.isEmpty) ""
-      else s""""consNames":${arrS(consKeys)},""" +
-        s""""consExprs":${arrS(consKeys.map(m.constraints(_)))},"""
-    val ckpt = m.ckptRef.map(r =>
-      s""""ckptRef":"${esc(r)}","ckptFiles":${m.ckptFiles},""").getOrElse("")
-    val cdcJson =
-      if (!m.cdcExact && m.cdc.isEmpty) ""
-      else s""""cdcFiles":${arrS(m.cdc)},"cdcExact":${m.cdcExact},"""
-    val multi = m.multiRef.map(u => s""""multiRef":"${esc(u)}",""")
-      .getOrElse("")
-    val payload =
-      s"""{"formatVersion":$FormatVersion,""" + multi +
-      s""""version":${m.version},"tsn":${m.tsn},""" +
-      s""""tsMillis":${m.tsMillis},"schemaDDL":"${esc(m.schemaDDL)}",""" +
-      s""""added":${arrS(m.added)},"removed":${arrS(m.removed)},""" +
-      s""""objects":${arrL(m.objects)},"checkpoint":${m.checkpoint},""" +
-      summary + cstats + apps + dvsJson + ustats + rens + tombs + cons +
-      ckpt + cdcJson +
-      s""""allFiles":${arrS(m.allFiles)},""" +
-      s""""statsFiles":${arrS(statKeys)},""" +
-      s""""statsMin":${arrL(statKeys.map(m.stats(_)._1))},""" +
-      s""""statsMax":${arrL(statKeys.map(m.stats(_)._2))}}"""
-    // integrity hash over the full payload (reference: crc32.rs:73-106);
-    // appended last so verification is a prefix-CRC + field compare
-    payload.dropRight(1) + s""","crc":${crc32(payload)}}"""
-  }
+    if (ustats.nonEmpty) {
+      strings(g, "ustatFiles", ustats.map(_._1))
+      strings(g, "ustatCols", ustats.map(_._2))
+      strings(g, "ustatKinds", ustats.map(_._3.kind.toString))
+      strings(g, "ustatMins", ustats.map(_._3.min))
+      strings(g, "ustatMaxs", ustats.map(_._3.max))
+      longs(g, "ustatNulls", ustats.map(_._3.nulls))
+    }
+    val rens = sortedKeys(m.renames)
+    if (rens.nonEmpty) {
+      strings(g, "renFrom", rens)
+      strings(g, "renTo", rens.map(m.renames))
+    }
+    if (m.tombstones.nonEmpty) strings(g, "tombstones", m.tombstones.sorted)
+    val cons = sortedKeys(m.constraints)
+    if (cons.nonEmpty) {
+      strings(g, "consNames", cons)
+      strings(g, "consExprs", cons.map(m.constraints))
+    }
+    m.ckptRef.foreach { r =>
+      g.writeStringField("ckptRef", r)
+      g.writeNumberField("ckptFiles", m.ckptFiles)
+    }
+    if (m.cdcExact || m.cdc.nonEmpty) {
+      strings(g, "cdcFiles", m.cdc)
+      g.writeBooleanField("cdcExact", m.cdcExact)
+    }
+    strings(g, "allFiles", m.allFiles)
+    val statKeys = sortedKeys(m.stats)
+    strings(g, "statsFiles", statKeys)
+    longs(g, "statsMin", statKeys.map(m.stats(_)._1))
+    longs(g, "statsMax", statKeys.map(m.stats(_)._2))
+  })
 
-  private[acid] def crc32(s: String): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(s.getBytes("UTF-8"))
-    c.getValue
-  }
+  private[acid] def crc32(s: String): Long = MetaJson.crc32(s)
 
   /** Positional deletion-vector sidecar payload: data file -> base64
     * of its serialized [[GraftBitmap]] of masked row ordinals. Same
@@ -533,13 +493,12 @@ object VersionedTable {
     * (a sidecar silently read as empty would RESURRECT deleted rows). */
   private[acid] def dvPosToJson(masks: Map[String, GraftBitmap]): String = {
     val keys = masks.keys.toSeq.sorted
-    def arrS(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
     val enc = java.util.Base64.getEncoder
-    val payload =
-      s"""{"dvpFiles":${arrS(keys)},""" +
-      s""""dvpBitmaps":${arrS(keys.map(f =>
-        enc.encodeToString(masks(f).serialize())))}}"""
-    payload.dropRight(1) + s""","crc":${crc32(payload)}}"""
+    MetaJson.seal(MetaJson.obj { g =>
+      MetaJson.strings(g, "dvpFiles", keys)
+      MetaJson.strings(g, "dvpBitmaps",
+        keys.map(f => enc.encodeToString(masks(f).serialize())))
+    })
   }
 
   /** Spilled-bloom sidecar payload (`fb-` names): the (file, column,
@@ -551,36 +510,19 @@ object VersionedTable {
     * answers never. Pointer ustats (`@<name>#<idx>`, ~30 bytes)
     * replace the base64 in the manifest and ride every stat surface —
     * checkpoints, segmented side files, restore — unchanged. */
-  private[acid] def fbToJson(rows: Seq[(String, String, String)]): String = {
-    def arrS(xs: Seq[String]) =
-      xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-    val payload =
-      s"""{"files":${arrS(rows.map(_._1))},""" +
-      s""""cols":${arrS(rows.map(_._2))},""" +
-      s""""blooms":${arrS(rows.map(_._3))}}"""
-    payload.dropRight(1) + s""","crc":${crc32(payload)}}"""
-  }
+  private[acid] def fbToJson(rows: Seq[(String, String, String)]): String =
+    MetaJson.seal(MetaJson.obj { g =>
+      MetaJson.strings(g, "files", rows.map(_._1))
+      MetaJson.strings(g, "cols", rows.map(_._2))
+      MetaJson.strings(g, "blooms", rows.map(_._3))
+    })
 
   /** The blooms array of an fb sidecar; None on ANY damage (see
-    * [[fbToJson]] — veto-only, so None means "keep the file"). The
-    * `"blooms":[` anchor cannot occur inside a JSON string here (raw
-    * quotes are esc'd), and base64 payloads carry no brackets/quotes,
-    * so the split-based parse is exact. */
-  private[acid] def fbFromJson(text: String): Option[Array[String]] = {
-    val ci = text.lastIndexOf(",\"crc\":")
-    if (ci < 0 || !text.endsWith("}")) return None
-    val declared = text.substring(ci + 7, text.length - 1)
-    if (declared.isEmpty || !declared.forall(_.isDigit)) return None
-    if (crc32(text.substring(0, ci) + "}") != declared.toLong) return None
-    val bi = text.indexOf("\"blooms\":[")
-    if (bi < 0) return None
-    val end = text.indexOf(']', bi)
-    if (end < 0) return None
-    val inner = text.substring(bi + 10, end)
-    if (inner.isEmpty) Some(Array.empty)
-    else Some(inner.split(',').map(s =>
-      s.trim.stripPrefix("\"").stripSuffix("\"")))
-  }
+    * [[fbToJson]] — veto-only, so None means "keep the file"). */
+  private[acid] def fbFromJson(text: String): Option[Array[String]] =
+    try Some(MetaJson.strings(MetaJson.parse(
+      MetaJson.unseal(text, "bloom sidecar")).get("blooms")).toArray)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private[acid] def isBloomPointer(min: String): Boolean =
     min.startsWith("@fb-")
@@ -612,16 +554,7 @@ object VersionedTable {
     var arr = fbCache.get(key)
     if (arr == null) {
       arr = try {
-        val fs = p.getFileSystem(conf())
-        val in = fs.open(p)
-        val text = try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var r = in.read(buf)
-          while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-          bytes.toString("UTF-8")
-        } finally in.close()
-        fbFromJson(text).orNull
+        MetaJson.read(p.getFileSystem(conf()), p).flatMap(fbFromJson).orNull
       } catch { case scala.util.control.NonFatal(_) => null }
       if (arr != null) {
         if (fbCache.size > 64) fbCache.clear()
@@ -640,24 +573,15 @@ object VersionedTable {
     * mid-sequence failure, or by a READER arbitrating a decision still
     * missing past [[EngineConf.multiGraceMs]] (the Percolator-style
     * resolution of a coordinator that died between phases). */
-  private[acid] def decisionToJson(committed: Boolean): String = {
-    val payload =
-      s"""{"state":"${if (committed) "committed" else "aborted"}"}"""
-    payload.dropRight(1) + s""","crc":${crc32(payload)}}"""
-  }
+  private[acid] def decisionToJson(committed: Boolean): String =
+    MetaJson.seal(MetaJson.obj(
+      _.writeStringField("state", if (committed) "committed" else "aborted")))
 
   /** Some(committed?) — throws on a corrupt record (a torn decision
     * silently read as aborted would void a committed transaction). */
-  private[acid] def decisionFromJson(s: String): Boolean = {
-    val crcIdx = s.lastIndexOf(",\"crc\":")
-    require(crcIdx > 0, "multi-commit decision record missing crc")
-    val stored = s.substring(crcIdx + 7).trim.stripSuffix("}").toLong
-    val payload = s.substring(0, crcIdx) + "}"
-    if (crc32(payload) != stored)
-      throw new java.io.IOException(
-        s"multi-commit decision integrity check failed")
-    s.contains("\"state\":\"committed\"")
-  }
+  private[acid] def decisionFromJson(s: String): Boolean =
+    MetaJson.parse(MetaJson.unseal(s, "multi-commit decision record"))
+      .path("state").asText == "committed"
 
   /** Atomically claim `target` with a decision body via the same
     * [[ManifestClaimer]] primitive manifests use. True iff THIS call
@@ -682,106 +606,14 @@ object VersionedTable {
   }
 
   private[acid] def dvPosFromJson(s: String): Map[String, GraftBitmap] = {
-    val crcIdx = s.lastIndexOf(",\"crc\":")
-    require(crcIdx > 0, "positional deletion-vector sidecar missing crc")
-    val stored = s.substring(crcIdx + 7).trim.stripSuffix("}").toLong
-    val payload = s.substring(0, crcIdx) + "}"
-    if (crc32(payload) != stored)
-      throw new java.io.IOException(
-        s"positional deletion-vector sidecar integrity check failed: " +
-        s"stored crc $stored != computed ${crc32(payload)}")
-    def strArr(k: String): Seq[String] = {
-      val i = s.indexOf("\"" + k + "\":[") + k.length + 4
-      val j = s.indexOf("]", i)
-      val raw = s.substring(i, j)
-      if (raw.isEmpty) Nil
-      else splitItems(raw).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
+    val n = MetaJson.parse(
+      MetaJson.unseal(s, "positional deletion-vector sidecar"))
     val dec = java.util.Base64.getDecoder
-    strArr("dvpFiles").zip(strArr("dvpBitmaps").map(b =>
-      GraftBitmap.deserialize(dec.decode(b)))).toMap
+    MetaJson.strings(n.get("dvpFiles")).zip(MetaJson.strings(n.get("dvpBitmaps"))
+      .map(b => GraftBitmap.deserialize(dec.decode(b)))).toMap
   }
 
-  /** Split a JSON array body on TOP-LEVEL commas only: a comma inside
-    * a quoted element (hive path escaping does not escape ',' — a
-    * partition value like `k=a,b` keeps it in the on-disk name, and the
-    * manifest stores names exactly as spelled on disk) must not split
-    * the element. Quote state tracks esc()'s escapes defensively. */
-  private[acid] def splitItems(raw: String): Seq[String] =
-    if (raw.isEmpty) Nil
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new StringBuilder; var inStr = false; var i = 0
-      while (i < raw.length) {
-        val c = raw(i)
-        if (inStr) {
-          if (c == '\\' && i + 1 < raw.length) {
-            sb.append(c).append(raw(i + 1)); i += 1
-          } else { if (c == '"') inStr = false; sb.append(c) }
-        } else if (c == ',') { out += sb.toString; sb.clear() }
-        else { if (c == '"') inStr = true; sb.append(c) }
-        i += 1
-      }
-      out += sb.toString
-      out.toSeq
-    }
-
   private[graft] def fromJson(s: String): Manifest = {
-    // minimal parser for the fixed shape above (keys never contain
-    // escapes; values are numbers, bools, or string arrays)
-    def strField(k: String): String = {
-      val i = s.indexOf("\"" + k + "\":\"") + k.length + 4
-      // escape-aware scan + single-pass unescape (handles \\ before ",
-      // and the \uXXXX forms esc() emits for control characters)
-      val sb = new StringBuilder; var j = i
-      var done = false
-      while (!done) {
-        s(j) match {
-          case '"' => done = true
-          case '\\' =>
-            s(j + 1) match {
-              case 'n' => sb.append('\n'); j += 2
-              case 'u' =>
-                sb.append(Integer.parseInt(s.substring(j + 2, j + 6), 16).toChar)
-                j += 6
-              case c => sb.append(c); j += 2 // \" and \\
-            }
-          case c => sb.append(c); j += 1
-        }
-      }
-      sb.toString
-    }
-    def rawField(k: String): String = {
-      val i = s.indexOf("\"" + k + "\":") + k.length + 3
-      // quote-aware bracket depth: a '[', ']', ',' or '}' INSIDE a
-      // quoted element (stat bounds are arbitrary user strings; hive
-      // path escaping keeps many specials literal in file names) must
-      // not terminate or rebalance the scan
-      var j = i; var depth = 0; var inStr = false
-      while (j < s.length &&
-          (inStr || depth > 0 || (s(j) != ',' && s(j) != '}'))) {
-        val c = s(j)
-        if (inStr) {
-          if (c == '\\') j += 1
-          else if (c == '"') inStr = false
-        } else {
-          if (c == '"') inStr = true
-          else if (c == '[') depth += 1
-          else if (c == ']') depth -= 1
-        }
-        j += 1
-      }
-      s.substring(i, j)
-    }
-    def strArr(k: String): Seq[String] = {
-      val raw = rawField(k).trim.stripPrefix("[").stripSuffix("]")
-      if (raw.isEmpty) Nil
-      else splitItems(raw).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
-    def longArr(k: String): Seq[Long] = {
-      val raw = rawField(k).trim.stripPrefix("[").stripSuffix("]")
-      if (raw.isEmpty) Nil else raw.split(",").toSeq.map(_.trim.toLong)
-    }
     // format gate FIRST (another generation may hash differently):
     // exactly one generation parses, any other declaration fails
     // loudly — never parse-with-defaults. Only a TERMINATED field
@@ -800,98 +632,71 @@ object VersionedTable {
           "the only generation this reader supports; tables written by " +
           "older generations are refused, not migrated")
     }
-    // integrity: strip the trailing `,"crc":N}` back to the original
-    // payload and compare CRCs. lastIndexOf + the trailing test anchor
-    // to the real integrity field even when content (a schemaDDL)
-    // carries the literal substring. A manifest without the field is
-    // a torn read (retried by [[Instance.readManifest]]) or a pre-crc
-    // writer's — refused either way
-    val crcIdx = s.lastIndexOf(",\"crc\":")
-    val tail = if (crcIdx < 0) "" else s.substring(crcIdx + 7).trim
-    val digits = tail.stripSuffix("}")
-    if (!tail.endsWith("}") || digits.isEmpty || !digits.forall(_.isDigit))
-      throw new java.io.IOException(
-        "manifest has no trailing crc field (torn read or pre-crc writer)")
-    val payload = s.substring(0, crcIdx) + "}"
-    if (crc32(payload) != digits.toLong)
-      throw new java.io.IOException(
-        s"manifest integrity check failed: stored crc $digits != computed ${crc32(payload)}")
+    // integrity: a manifest without its trailing crc is a torn read
+    // (retried by [[Instance.readManifest]]) or a pre-crc writer's —
+    // refused either way
+    val n = MetaJson.parse(MetaJson.unseal(s, "manifest"))
     if (declared.isEmpty)
       throw new ManifestFormatException(
         s"manifest declares no formatVersion; this reader supports only " +
         s"generation $FormatVersion, and tables written by older " +
         "generations are refused, not migrated")
-    val stats =
-      strArr("statsFiles").zip(longArr("statsMin").zip(longArr("statsMax"))).toMap
-    val summary =
-      if (s.contains("\"objCount\":"))
-        Some(ObjSummary(rawField("objCount").toLong, rawField("objMin").toLong,
-          rawField("objMax").toLong,
-          IdBloom.fromBase64(strField("objBloom"), rawField("objBloomK").toInt)))
-      else None
-    val colStats =
-      if (s.contains("\"cstatsFiles\":"))
-        strArr("cstatsFiles").zip(strArr("cstatsCols"))
-          .zip(longArr("cstatsMin").zip(longArr("cstatsMax")))
-          .groupBy(_._1._1)
-          .map { case (f, rows) =>
-            f -> rows.map { case ((_, c), r) => c -> r }.toMap }
-      else Map.empty[String, Map[String, (Long, Long)]]
-    val appTxns =
-      if (s.contains("\"appIds\":"))
-        strArr("appIds").zip(longArr("appEpochs")).toMap
-      else Map.empty[String, Long]
+    def field(k: String) = Option(n.get(k)).getOrElse(
+      throw new java.io.IOException(s"manifest has no $k field"))
+    def strs(k: String) = MetaJson.strings(field(k))
+    def longs(k: String) = MetaJson.longs(field(k))
+    def opt[T](k: String)(f: String => T): Option[T] =
+      if (n.has(k)) Some(f(k)) else None
+    val summary = opt("objCount")(_ => ObjSummary(field("objCount").longValue,
+      field("objMin").longValue, field("objMax").longValue,
+      IdBloom.fromBase64(field("objBloom").textValue,
+        field("objBloomK").intValue)))
+    val colStats = opt("cstatsFiles") { _ =>
+      strs("cstatsFiles").zip(strs("cstatsCols"))
+        .zip(longs("cstatsMin").zip(longs("cstatsMax")))
+        .groupBy(_._1._1)
+        .map { case (f, rows) =>
+          f -> rows.map { case ((_, c), r) => c -> r }.toMap }
+    }.getOrElse(Map.empty)
+    val apps = opt("appIds")(strs).getOrElse(Nil)
     // 0 = "no stamp" canonicalizes to absence, so stamp-less entries
     // round-trip exactly
-    val appTxnTs =
-      if (s.contains("\"appIds\":"))
-        strArr("appIds").zip(longArr("appTs")).filter(_._2 != 0L).toMap
-      else Map.empty[String, Long]
+    val (appTxns, appTxnTs) =
+      if (apps.isEmpty) (Map.empty[String, Long], Map.empty[String, Long])
+      else (apps.zip(longs("appEpochs")).toMap,
+        apps.zip(longs("appTs")).filter(_._2 != 0L).toMap)
     def dvBlock(prefix: String): Map[String, Seq[String]] =
-      if (s.contains("\"" + prefix + "Files\":"))
-        strArr(prefix + "Files").zip(strArr(prefix + "Lists").map(l =>
-          if (l.isEmpty) Seq.empty[String]
-          else l.split(';').toSeq)).toMap
-      else Map.empty[String, Seq[String]]
-    val dvs = dvBlock("dv")
-    val allDvs = dvBlock("allDv")
-    val fileStats =
-      if (s.contains("\"ustatFiles\":")) {
-        val fls = strArr("ustatFiles"); val cols = strArr("ustatCols")
-        val kinds = strArr("ustatKinds")
-        val mins = strArr("ustatMins").map(unesc)
-        val maxs = strArr("ustatMaxs").map(unesc)
-        val nulls = longArr("ustatNulls")
-        fls.indices.map(i => (fls(i), cols(i),
-            UStat(kinds(i).head, mins(i), maxs(i), nulls(i))))
-          .groupBy(_._1)
-          .map { case (f, rows) =>
-            f -> rows.map(r => r._2 -> r._3).toMap }
-      } else Map.empty[String, Map[String, UStat]]
-    Manifest(rawField("version").toLong, rawField("tsn").toLong,
-      strField("schemaDDL"), strArr("added"), strArr("removed"),
-      longArr("objects"), rawField("checkpoint").toBoolean, strArr("allFiles"),
-      stats, summary, colStats,
-      tsMillis = rawField("tsMillis").toLong,
+      opt(prefix + "Files")(strs).fold(Map.empty[String, Seq[String]])(
+        _.zip(strs(prefix + "Lists").map(l =>
+          if (l.isEmpty) Seq.empty[String] else l.split(';').toSeq)).toMap)
+    val fileStats = opt("ustatFiles") { _ =>
+      val fls = strs("ustatFiles"); val cols = strs("ustatCols")
+      val kinds = strs("ustatKinds")
+      val mins = strs("ustatMins"); val maxs = strs("ustatMaxs")
+      val nulls = longs("ustatNulls")
+      fls.indices.map(i => (fls(i), cols(i),
+          UStat(kinds(i).head, mins(i), maxs(i), nulls(i))))
+        .groupBy(_._1)
+        .map { case (f, rows) => f -> rows.map(r => r._2 -> r._3).toMap }
+    }.getOrElse(Map.empty)
+    Manifest(field("version").longValue, field("tsn").longValue,
+      field("schemaDDL").textValue, strs("added"), strs("removed"),
+      longs("objects"), field("checkpoint").booleanValue, strs("allFiles"),
+      strs("statsFiles").zip(longs("statsMin").zip(longs("statsMax"))).toMap,
+      summary, colStats,
+      tsMillis = field("tsMillis").longValue,
       appTxns = appTxns, appTxnTs = appTxnTs,
-      dvs = dvs, allDvs = allDvs, fileStats = fileStats,
-      multiRef = if (s.contains("\"multiRef\":\""))
-        Some(strField("multiRef")) else None,
-      renames = if (s.contains("\"renFrom\":"))
-        strArr("renFrom").zip(strArr("renTo")).toMap
-      else Map.empty,
-      tombstones = if (s.contains("\"tombstones\":"))
-        strArr("tombstones") else Nil,
-      constraints = if (s.contains("\"consNames\":"))
-        strArr("consNames").zip(strArr("consExprs").map(unesc)).toMap
-      else Map.empty,
-      ckptRef = if (s.contains("\"ckptRef\":\""))
-        Some(strField("ckptRef")) else None,
-      ckptFiles = if (s.contains("\"ckptRef\":\""))
-        rawField("ckptFiles").toLong else 0L,
-      cdc = if (s.contains("\"cdcFiles\":")) strArr("cdcFiles") else Nil,
-      cdcExact = s.contains("\"cdcExact\":") &&
-        rawField("cdcExact").toBoolean)
+      dvs = dvBlock("dv"), allDvs = dvBlock("allDv"), fileStats = fileStats,
+      multiRef = opt("multiRef")(field(_).textValue),
+      renames = opt("renFrom")(k => strs(k).zip(strs("renTo")).toMap)
+        .getOrElse(Map.empty),
+      tombstones = opt("tombstones")(strs).getOrElse(Nil),
+      constraints = opt("consNames")(k => strs(k).zip(strs("consExprs")).toMap)
+        .getOrElse(Map.empty),
+      ckptRef = opt("ckptRef")(field(_).textValue),
+      ckptFiles = opt("ckptFiles")(field(_).longValue).getOrElse(0L),
+      cdc = opt("cdcFiles")(strs).getOrElse(Nil),
+      cdcExact = opt("cdcExact")(field(_).booleanValue).getOrElse(false))
   }
 
   /** One-time datastore initialization (reference:
@@ -1327,13 +1132,9 @@ final class Instance(val spark: SparkSession, val root: String,
   private def readManifestUncached(v: Long): Manifest = {
     var attempt = 0
     while (true) {
-      val text =
-        try {
-          val in = fs.open(manifestPath(v))
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        } catch {
-          case e: java.io.FileNotFoundException => throw e // never torn
-        }
+      // absent is never torn: not retried
+      val text = MetaJson.read(fs, manifestPath(v)).getOrElse(
+        throw new java.io.FileNotFoundException(manifestPath(v).toString))
       try {
         val m = fromJson(text)
         return m.multiRef match {
@@ -1427,9 +1228,7 @@ final class Instance(val spark: SparkSession, val root: String,
     }
 
   private def readHeadHint(): Option[Long] =
-    try {
-      val in = fs.open(headPath)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    try MetaJson.read(fs, headPath).flatMap { text =>
       val parts = text.trim.split(' ')
       if (parts.length == 2 && parts(0).nonEmpty &&
           parts(0).forall(_.isDigit) && crc32(parts(0)).toString == parts(1)) {
@@ -3011,12 +2810,7 @@ final class Instance(val spark: SparkSession, val root: String,
     val p = new Path(uri)
     val dfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def readState(): Option[Boolean] =
-      try {
-        val in = dfs.open(p)
-        val text = try new String(in.readAllBytes(), "UTF-8")
-          finally in.close()
-        Some(VersionedTable.decisionFromJson(text))
-      } catch { case _: java.io.FileNotFoundException => None }
+      MetaJson.read(dfs, p).map(VersionedTable.decisionFromJson)
     val deadline = System.currentTimeMillis() + conf.multiGraceMs
     var state = readState()
     while (state.isEmpty && System.currentTimeMillis() < deadline) {
@@ -3048,14 +2842,9 @@ final class Instance(val spark: SparkSession, val root: String,
 
   private[acid] def readDvSidecar(name: String): Map[String, GraftBitmap] =
     dvCache.computeIfAbsent(name, { n =>
-      val in = fs.open(new Path(dataDir, n))
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var r = in.read(buf)
-        while (r >= 0) { bytes.write(buf, 0, r); r = in.read(buf) }
-        VersionedTable.dvPosFromJson(bytes.toString("UTF-8"))
-      } finally in.close()
+      val p = new Path(dataDir, n)
+      VersionedTable.dvPosFromJson(MetaJson.read(fs, p).getOrElse(
+        throw new java.io.FileNotFoundException(p.toString)))
     })
 
   /** Resolve a state's dv map (file -> sidecar names) to the concrete
@@ -4410,14 +4199,8 @@ final class Instance(val spark: SparkSession, val root: String,
       .filter(st => st.isFile && st.getPath.getName.endsWith(".tag"))
       .map { st =>
         val p = st.getPath
-        val in = fs.open(p)
-        val s = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](64)
-          var n = in.read(tmp)
-          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray, "UTF-8").trim
-        } finally in.close()
+        val s = MetaJson.read(fs, p).getOrElse(
+          throw new java.io.FileNotFoundException(p.toString)).trim
         require(s.nonEmpty && s.forall(_.isDigit),
           s"corrupt tag file $p (content '$s')")
         p.getName.dropRight(4) -> s.toLong
@@ -4460,44 +4243,20 @@ final class Instance(val spark: SparkSession, val root: String,
     * `from >= vacuumHorizon` read only files that were live at a
     * retained version. 0 = never vacuumed (or marker unreadable — the
     * caller's FileNotFound fallback covers that window). */
-  def vacuumHorizon: Long = {
-    val p = new Path(root, "_vacuum.json")
-    try {
-      if (!fs.exists(p)) 0L
-      else {
-        val in = fs.open(p)
-        val s = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](256)
-          var n = in.read(tmp)
-          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-        """"horizon"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-          .map(_.group(1).toLong).getOrElse(0L)
-      }
-    } catch { case _: java.io.IOException => 0L }
-  }
+  def vacuumHorizon: Long =
+    try MetaJson.read(fs, vacuumFile)
+      .fold(0L)(MetaJson.parse(_).path("horizon").asLong(0L))
+    catch { case _: java.io.IOException => 0L }
 
-  private def recordVacuumHorizon(h: Long): Unit = {
-    if (h <= vacuumHorizon) return
-    val p = new Path(root, "_vacuum.json")
-    val tmp = new Path(root,
-      s"._vacuum-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(s"""{"horizon":$h}""".getBytes("UTF-8"))
-      finally out.close()
-      // rename over the target where the store allows it; fall back to
-      // delete + rename (the transient absence only reads as horizon 0,
-      // which the FileNotFound fallback covers)
-      if (!fs.rename(tmp, p)) { fs.delete(p, false); fs.rename(tmp, p) }
-    } catch { case _: java.io.IOException => () }
-    finally {
-      try { if (fs.exists(tmp)) fs.delete(tmp, false) }
+  private def vacuumFile = new Path(root, "_vacuum.json")
+
+  // a transient absence while the store replaces the file only reads
+  // as horizon 0, which the FileNotFound fallback covers
+  private def recordVacuumHorizon(h: Long): Unit =
+    if (h > vacuumHorizon)
+      try MetaJson.replace(fs, vacuumFile,
+        MetaJson.obj(_.writeNumberField("horizon", h)))
       catch { case _: java.io.IOException => () }
-    }
-  }
 
   /** Materialize outstanding deletion vectors WITHOUT a full
     * compaction: rewrite only the MASKED files (each minus its masked

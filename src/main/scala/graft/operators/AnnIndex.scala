@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-import graft.acid.{EngineConf, EpochAlreadyCommittedException, Instance, MaterializedAggView, VersionedTable}
+import graft.acid.{EngineConf, EpochAlreadyCommittedException, Instance, MaterializedAggView, MetaJson, VersionedTable}
 
 /** PERSISTED IVF ANN index — the "index once, search forever" shape
   * [[Similarity.annTop1Ivf]] (which trains + assigns per call) needs
@@ -446,16 +446,7 @@ object IvfIndex {
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".idx"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](4096)
-          var n = in.read(tmp)
-          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-      }.sorted
+      .flatMap(st => MetaJson.read(fs, st.getPath)).sorted
   }
 
   /** Drop a persisted index: deregister from its source (when it has
@@ -583,61 +574,20 @@ object IvfIndex {
   def open(spark: SparkSession, root: String): IvfIndex = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(new Path(rootP, MetaFile))
-    val s = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](65536)
-      var n = in.read(tmp)
-      while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    // field values are escaped by writeMeta (same convention as the
-    // manifest esc): the char class must step over \" and \\ or a
-    // root path / column name containing a quote corrupts the parse
+    val meta = new Path(rootP, MetaFile)
+    val n = MetaJson.parse(MetaJson.read(fs, meta).getOrElse(
+      throw new java.io.FileNotFoundException(meta.toString)))
     def strField(k: String): Option[String] =
-      (s""""$k":"((?:[^"\\\\]|\\\\.)*)"""").r.findFirstMatchIn(s)
-        .map(m => unesc(m.group(1)))
-    def intField(k: String): Int =
-      (s""""$k":(\\d+)""").r.findFirstMatchIn(s).get.group(1).toInt
-    val dim = intField("dim"); val nCells = intField("nCells")
-    // parse "centroids":[[a,b],[c,d],...] — numbers only, depth-matched
-    val centsStr = s.substring(s.indexOf("\"centroids\":") + 12)
-    val body = {
-      var depth = 0; var i = 0; var end = -1
-      while (end < 0 && i < centsStr.length) {
-        val c = centsStr.charAt(i)
-        if (c == '[') depth += 1
-        else if (c == ']') { depth -= 1; if (depth == 0) end = i }
-        i += 1
-      }
-      centsStr.substring(1, end) // inside the outer [ ]
-    }
-    val cents: Array[Array[Double]] =
-      body.split("\\],\\[").map(_.replace("[", "").replace("]", "")
-        .split(',').map(_.trim.toDouble))
+      Option(n.get(k)).map(_.textValue)
+    def rows(k: String) = (0 until n.path(k).size).map(n.path(k).get)
+    val dim = n.get("dim").intValue; val nCells = n.get("nCells").intValue
+    val cents: Array[Array[Double]] = rows("centroids")
+      .map(r => Array.tabulate(r.size)(r.get(_).doubleValue)).toArray
     require(cents.length == nCells && cents.forall(_.length == dim),
       s"corrupt $MetaFile at $root")
     // optional persisted recall curve: "calibration":[[p,hits,n],...]
-    val calibration: Seq[(Int, Long, Long)] = {
-      val at = s.indexOf("\"calibration\":")
-      if (at < 0) Nil
-      else {
-        val cs0 = s.substring(at + 14)
-        var depth = 0; var i = 0; var end = -1
-        while (end < 0 && i < cs0.length) {
-          val c = cs0.charAt(i)
-          if (c == '[') depth += 1
-          else if (c == ']') { depth -= 1; if (depth == 0) end = i }
-          i += 1
-        }
-        val body = cs0.substring(1, end)
-        if (body.isEmpty) Nil
-        else body.split("\\],\\[").toSeq.map { t =>
-          val xs = t.replace("[", "").replace("]", "").split(',')
-          (xs(0).trim.toInt, xs(1).trim.toLong, xs(2).trim.toLong)
-        }
-      }
-    }
+    val calibration: Seq[(Int, Long, Long)] = rows("calibration").map(r =>
+      (r.get(0).intValue, r.get(1).longValue, r.get(2).longValue))
     val assign = VersionedTable.open(spark,
       new Path(rootP, "assign").toString, assignConf)
     new IvfIndex(spark, root, dim, nCells, cents, assign,
@@ -646,58 +596,29 @@ object IvfIndex {
       strField("vecCol").getOrElse("v"), calibration)
   }
 
-  /** JSON string escaping for meta fields (the manifest's convention,
-    * VersionedTable.esc) — a root path or column name containing a
-    * quote/backslash must round-trip, not corrupt the file. */
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
-  private def unesc(s: String): String =
-    if (s.indexOf('\\') < 0) s
-    else {
-      val sb = new StringBuilder; var i = 0
-      while (i < s.length) {
-        val c = s(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case o => sb.append(o); i += 2 // \" and \\
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-
   private[operators] def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
       rootP: Path, dim: Int, nCells: Int, cents: Array[Array[Double]],
       sourceRoot: Option[String], idCol: String, vecCol: String,
       calibration: Seq[(Int, Long, Long)] = Nil): Unit = {
-    val calJson =
-      if (calibration.isEmpty) ""
-      else calibration.map { case (p, h, n) => s"[$p,$h,$n]" }
-        .mkString(""""calibration":[""", ",", "],")
-    val json =
-      s"""{"dim":$dim,"nCells":$nCells,""" +
-      sourceRoot.map(r => s""""sourceRoot":"${esc(r)}",""").getOrElse("") +
-      s""""idCol":"${esc(idCol)}","vecCol":"${esc(vecCol)}",""" + calJson +
-      s""""centroids":[${cents.map(_.mkString("[", ",", "]"))
-        .mkString(",")}]}"""
-    val tmp = new Path(rootP,
-      s"._ivf-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8"))
-    finally out.close()
-    val p = new Path(rootP, MetaFile)
-    try {
-      if (!fs.rename(tmp, p)) { fs.delete(p, false); fs.rename(tmp, p) }
-    } finally {
-      try { if (fs.exists(tmp)) fs.delete(tmp, false) }
-      catch { case _: java.io.IOException => () }
-    }
+    MetaJson.replace(fs, new Path(rootP, MetaFile), MetaJson.obj { g =>
+      g.writeNumberField("dim", dim)
+      g.writeNumberField("nCells", nCells)
+      sourceRoot.foreach(g.writeStringField("sourceRoot", _))
+      g.writeStringField("idCol", idCol)
+      g.writeStringField("vecCol", vecCol)
+      if (calibration.nonEmpty) {
+        g.writeArrayFieldStart("calibration")
+        calibration.foreach { case (p, h, n) =>
+          g.writeStartArray(); g.writeNumber(p); g.writeNumber(h)
+          g.writeNumber(n); g.writeEndArray()
+        }
+        g.writeEndArray()
+      }
+      g.writeArrayFieldStart("centroids")
+      cents.foreach { c =>
+        g.writeStartArray(); c.foreach(x => g.writeNumber(x)); g.writeEndArray()
+      }
+      g.writeEndArray()
+    })
   }
 }

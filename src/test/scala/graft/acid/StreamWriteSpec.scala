@@ -308,6 +308,26 @@ class StreamWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("idempotent replay holds for app ids with quotes and backslashes") {
+    // the watermark is keyed by the app id as written into the
+    // manifest: an id that reads back changed never matches its own
+    // replay, and the retried batch lands a second time
+    Seq("etl\"daily", "etl\\daily", "etl\\\"daily\\").foreach { app =>
+      val dir = freshDir()
+      val inst = VersionedTable.create(spark, dir, AcidQueries.schema)
+      def write(): Unit = Seq((1L, 10L)).toDF("obj_id", "value")
+        .write.format("graft").option("path", dir)
+        .option("txnAppId", app).option("txnVersion", 1L)
+        .mode("append").save()
+      write()
+      write() // replay at the same txnVersion: must be a no-op
+      assert(spark.read.format("graft").load(dir).count() == 1L, app)
+      assert(inst.latestVersion == 1L, app)
+      assert(VersionedTable.open(spark, dir).appTxnsAt(1L) == Map(app -> 1L),
+        app)
+    }
+  }
+
   test("upsert mode composes with partitioned staging") {
     val tag = java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)
