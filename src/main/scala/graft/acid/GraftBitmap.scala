@@ -64,8 +64,8 @@ final class GraftBitmap private (
       case _ => Iterator.empty
     }
 
-  /** Set union — sidecar lists accumulate across commits, and a
-    * reader folds a file's vectors into one mask. */
+  /** Set union — a delete adds its hits to a file's prior mask, and a
+    * reader folds a file's sidecar list into one mask. */
   def union(other: GraftBitmap): GraftBitmap = {
     if (other.isEmpty) return this
     if (this.isEmpty) return other

@@ -208,17 +208,32 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def catalogSpec(ident: Identifier): Map[String, String] =
     GraftTableSource.readCatalogJson(fs, tablePath(ident))
 
-  private def readPartitionBy(ident: Identifier): Option[String] =
-    catalogSpec(ident).get("partitionBy")
+  /** The column list `spec` records under `key` (Nil when unset). */
+  private def specCols(spec: Map[String, String], key: String): Seq[String] =
+    spec.get(key).toSeq.flatMap(_.split(','))
 
-  private def readClusterBy(ident: Identifier): Option[String] =
-    catalogSpec(ident).get("clusterBy")
+  /** The column names of `ident`'s head schema — read without
+    * [[openInstance]]'s `_catalog.json` read, which a spec rewrite
+    * makes itself. */
+  private def headColumns(ident: Identifier): Set[String] = {
+    val inst = VersionedTable.open(SparkSession.active, tablePath(ident).toString)
+    StructType.fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
+  }
 
-  private def readUniqueIds(ident: Identifier): Boolean =
-    catalogSpec(ident).get("uniqueIds").contains("true")
-
-  private def readBloomFilters(ident: Identifier): Option[String] =
-    catalogSpec(ident).get("bloomFilters")
+  /** Rewrite `ident`'s spec with the given entries replaced and the
+    * others as recorded — one `_catalog.json` read per procedure call. */
+  private def updateCatalogSpec(ident: Identifier,
+      partitionBy: Option[Seq[String]] = None,
+      clusterBy: Option[Seq[String]] = None,
+      uniqueIds: Option[Boolean] = None,
+      bloomFilters: Option[Seq[String]] = None): Unit = {
+    val spec = catalogSpec(ident)
+    writeCatalogSpec(ident,
+      partitionBy.getOrElse(specCols(spec, "partitionBy")),
+      clusterBy.getOrElse(specCols(spec, "clusterBy")),
+      uniqueIds.getOrElse(spec.get("uniqueIds").contains("true")),
+      bloomFilters.getOrElse(specCols(spec, "bloomFilters")))
+  }
 
   /** Rewrite `_catalog.json` with the given specs (absent when all
     * are empty/off) — write-then-rename, never delete-then-create: a
@@ -267,8 +282,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val inst = VersionedTable.open(SparkSession.active,
       tablePath(ident).toString)
-    val partCols: Set[String] = readPartitionBy(ident)
-      .map(_.split(',').map(_.trim).toSet).getOrElse(Set.empty)
+    val spec = catalogSpec(ident)
+    val partCols = specCols(spec, "partitionBy").map(_.trim).toSet
+    val clusterCols = specCols(spec, "clusterBy").map(_.trim).toSet
     def one(names: Array[String], what: String): String = {
       require(names.length == 1,
         s"nested $what not supported: ${names.mkString(".")}")
@@ -290,8 +306,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
             s"no such column $name")
           require(!partCols.contains(name),
             s"cannot drop partition column $name")
-          require(!readClusterBy(ident)
-              .exists(_.split(',').map(_.trim).contains(name)),
+          require(!clusterCols.contains(name),
             s"cannot drop cluster column $name " +
             "(clear it with CALL system.set_clustering first)")
           txn.alterSchema(StructType(
@@ -303,8 +318,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           // authoritative
           require(!partCols.contains(from),
             s"cannot rename partition column $from")
-          require(!readClusterBy(ident)
-              .exists(_.split(',').map(_.trim).contains(from)),
+          require(!clusterCols.contains(from),
             s"cannot rename cluster column $from " +
             "(clear it with CALL system.set_clustering first)")
           txn.renameColumn(from, ren.newName())
@@ -456,8 +470,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** The current identity-partition columns of `dotted`, if any. */
   private[acid] def partitionColsFor(dotted: String): Option[Seq[String]] = {
     val parts = dotted.split('.')
-    readPartitionBy(Identifier.of(parts.dropRight(1), parts.last))
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    catalogSpec(Identifier.of(parts.dropRight(1), parts.last))
+      .get("partitionBy").map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
   }
 
   private[acid] def setPartitioning(dotted: String,
@@ -465,16 +479,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val parts = dotted.split('.')
     val ident = Identifier.of(parts.dropRight(1), parts.last)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val inst = openInstance(dotted)
-    val schemaCols = StructType
-      .fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
+    val schemaCols = headColumns(ident)
     cols.foreach(c => require(schemaCols.contains(c),
       s"partition column $c not in table schema"))
     VersionedTable.requireInFileObjId(cols)
-    writeCatalogSpec(ident, cols,
-      readClusterBy(ident).map(_.split(',').toSeq).getOrElse(Nil),
-      readUniqueIds(ident),
-      readBloomFilters(ident).map(_.split(',').toSeq).getOrElse(Nil))
+    updateCatalogSpec(ident, partitionBy = Some(cols))
   }
 
   /** CLUSTER-SPEC EVOLUTION (the ingest-side half of `compact`'s
@@ -491,15 +500,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val parts = dotted.split('.')
     val ident = Identifier.of(parts.dropRight(1), parts.last)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val inst = openInstance(dotted)
-    val schemaCols = StructType
-      .fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
+    val schemaCols = headColumns(ident)
     cols.foreach(c => require(schemaCols.contains(c),
       s"cluster column $c not in table schema"))
-    writeCatalogSpec(ident,
-      readPartitionBy(ident).map(_.split(',').toSeq).getOrElse(Nil), cols,
-      readUniqueIds(ident),
-      readBloomFilters(ident).map(_.split(',').toSeq).getOrElse(Nil))
+    updateCatalogSpec(ident, clusterBy = Some(cols))
   }
 
   /** Toggle append-time id-uniqueness enforcement for SQL writes to
@@ -509,10 +513,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val parts = dotted.split('.')
     val ident = Identifier.of(parts.dropRight(1), parts.last)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    writeCatalogSpec(ident,
-      readPartitionBy(ident).map(_.split(',').toSeq).getOrElse(Nil),
-      readClusterBy(ident).map(_.split(',').toSeq).getOrElse(Nil), on,
-      readBloomFilters(ident).map(_.split(',').toSeq).getOrElse(Nil))
+    updateCatalogSpec(ident, uniqueIds = Some(on))
   }
 
   /** BLOOM-FILTER spec evolution: declare (or clear) the columns every
@@ -524,15 +525,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val parts = dotted.split('.')
     val ident = Identifier.of(parts.dropRight(1), parts.last)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val inst = openInstance(dotted)
-    val schemaCols = StructType
-      .fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
+    val schemaCols = headColumns(ident)
     cols.foreach(c => require(schemaCols.contains(c),
       s"bloom column $c not in table schema"))
-    writeCatalogSpec(ident,
-      readPartitionBy(ident).map(_.split(',').toSeq).getOrElse(Nil),
-      readClusterBy(ident).map(_.split(',').toSeq).getOrElse(Nil),
-      readUniqueIds(ident), cols)
+    updateCatalogSpec(ident, bloomFilters = Some(cols))
   }
 
   private[acid] def pathFor(dotted: String): Path = {
@@ -548,9 +544,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     // rewrites (CALL system.compact above all — it re-stages every
     // live file) KEEP the bloom index instead of silently dropping it
     VersionedTable.open(SparkSession.active, tablePath(ident).toString,
-      EngineConf(fileBloomCols = readBloomFilters(ident)
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)))
+      EngineConf(fileBloomCols = specCols(catalogSpec(ident), "bloomFilters")
+        .map(_.trim).filter(_.nonEmpty)))
   }
 
   /** Catalog-level CROSS-TABLE transaction front door: one [[Txn]] per

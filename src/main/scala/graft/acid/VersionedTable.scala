@@ -587,23 +587,39 @@ object VersionedTable {
     * [[ManifestClaimer]] primitive manifests use. True iff THIS call
     * bound the decision. */
   private[acid] def claimDecision(fs: FileSystem, target: Path,
-      claimer: ManifestClaimer, committed: Boolean): Boolean = {
-    val body = decisionToJson(committed).getBytes("UTF-8")
+      claimer: ManifestClaimer, committed: Boolean): Boolean =
+    claimFile(fs, claimer, target, decisionToJson(committed).getBytes("UTF-8"))(
+      AnyIoError)
+
+  /** Any store failure of a claim reads as a lost race. */
+  private[acid] val AnyIoError: PartialFunction[Throwable, Boolean] = {
+    case _: java.io.IOException => false
+  }
+
+  /** Bind `target` to `body` atomically through `claimer`: true iff THIS
+    * call bound it, false when the claim throws what `lostRace` maps to
+    * false (anything else propagates). A claimer that publishes by file
+    * ([[ManifestClaimer.needsTemp]]) gets the body as a hidden temp
+    * beside the target — invisible to readers, removed on every
+    * non-crash path and swept by [[Instance.vacuum]] after a crash;
+    * conditional-PUT claimers carry the body in the request. */
+  private[acid] def claimFile(fs: FileSystem, claimer: ManifestClaimer,
+      target: Path, body: Array[Byte])(
+      lostRace: PartialFunction[Throwable, Boolean]): Boolean =
     if (!claimer.needsTemp) {
       try claimer.claim(fs, null, target, body)
-      catch { case _: java.io.IOException => false }
+      catch lostRace
     } else {
       val tmp = new Path(target.getParent,
         s".tmp-${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = fs.create(tmp, true)
       try out.write(body) finally out.close()
       try claimer.claim(fs, tmp, target, body)
-      catch { case _: java.io.IOException => false }
+      catch lostRace
       finally {
         try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
       }
     }
-  }
 
   private[acid] def dvPosFromJson(s: String): Map[String, GraftBitmap] = {
     val n = MetaJson.parse(
@@ -1521,15 +1537,38 @@ final class Instance(val spark: SparkSession, val root: String,
   /** Spark's parquet reader of `schema` (PHYSICAL names, read nullable)
     * with the row-index column appended at position `schema.length` —
     * the reader GraftScan's factory builds for masked files. The
-    * function is serializable, so a job can run it on executors. */
+    * function is serializable, so a job can run it on executors.
+    * Memoized per schema and session SQL settings ([[readers]]). */
   private def rowIndexReader(schema: StructType)
       : PartitionedFile => Iterator[InternalRow] = {
     val withRi = nullable(schema).add(
       ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-      withRi, new StructType(), withRi, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    val key = (withRi, spark.sessionState.conf.getAllConfs)
+    readers.synchronized {
+      var read = readers.get(key)
+      if (read == null) {
+        read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+          withRi, new StructType(), withRi, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf())
+        readers.put(key, read)
+      }
+      read
+    }
+  }
+
+  // prepared readers by (requested schema, session SQL settings):
+  // preparing one serializes and broadcasts the whole Hadoop conf,
+  // which cost a point read more than reading its file. Spark runs one
+  // prepared reader over every file and task of a scan, so callers
+  // share it the same way; a changed setting keys a new reader, and
+  // the least recently used falls out past a handful
+  private val readers = new java.util.LinkedHashMap[
+      (StructType, Map[String, String]),
+      PartitionedFile => Iterator[InternalRow]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (StructType, Map[String, String]),
+        PartitionedFile => Iterator[InternalRow]]): Boolean = size > 8
   }
 
   /** Row ordinals, per file, of the unmasked rows of `files` whose
@@ -2241,32 +2280,12 @@ final class Instance(val spark: SparkSession, val root: String,
     *
     * The atomic step itself is the PLUGGABLE [[EngineConf.claimer]]
     * (link/rename default, conditional-PUT for object stores — see
-    * [[ManifestClaimer]]). For claimers that publish by file ([[
-    * ManifestClaimer.needsTemp]]), the body is first fully written to
-    * a hidden temp in _manifests (invisible to [[latestVersion]]'s
-    * `v*` filter), removed on every non-crash path and swept by
-    * [[vacuum]] after a crash; conditional-PUT claimers carry the body
-    * in the request and skip the temp entirely. */
-  private[acid] def publish(m: Manifest): Boolean = {
-    val target = manifestPath(m.version)
-    val body = toJson(m).getBytes("UTF-8")
-    val claimer = conf.claimer
-    if (!claimer.needsTemp) {
-      try claimer.claim(fs, null, target, body)
-      catch { case _: java.io.IOException => false }
-    } else {
-      val tmp = new Path(manifestDir,
-        s".tmp-v${m.version}-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(body) finally out.close()
-      try claimer.claim(fs, tmp, target, body)
-      catch {
-        case _: java.io.IOException => false
-      } finally {
-        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-      }
-    }
-  }
+    * [[ManifestClaimer]]), through [[VersionedTable.claimFile]]: a
+    * temp it writes in _manifests is invisible to [[latestVersion]]'s
+    * `v*` filter. */
+  private[acid] def publish(m: Manifest): Boolean =
+    claimFile(fs, conf.claimer, manifestPath(m.version),
+      toJson(m).getBytes("UTF-8"))(AnyIoError)
 
   /** Begin a transaction: allocate a TSN, pin the snapshot
     * (reference: begin_transaction, instance.rs:88-99 + tran_mgr.rs:66-73). */
@@ -2545,8 +2564,7 @@ final class Instance(val spark: SparkSession, val root: String,
     // compatibility check and land in the NonFatal fallback below —
     // the distributed pass, which handles mixed schemas)
     val p0 = new Path(dataDir, staged.head)
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p0, hconf))
+    val fr = openParquet(p0)
     val schema = try fr.getFooter.getFileMetaData.getSchema
       finally fr.close()
     val cols: Seq[(String,
@@ -2849,15 +2867,19 @@ final class Instance(val spark: SparkSession, val root: String,
 
   /** Resolve a state's dv map (file -> sidecar names) to the concrete
     * per-file row-ordinal masks the readers apply, restricted to
-    * `files`: each file's sidecar bitmaps union-folded. */
+    * `files`: each file's sidecar bitmaps union-folded (one sidecar
+    * per file as [[Txn.deleteMoR]] writes them; a restore can publish
+    * a longer list). */
   private[acid] def resolveDvs(dvs: Map[String, Seq[String]],
       files: Seq[String]): Map[String, GraftBitmap] = {
     if (dvs.isEmpty) return Map.empty
     val wanted = files.filter(dvs.contains)
     if (wanted.isEmpty) return Map.empty
-    // warm the cache on the driver pool first: each sidecar is one
-    // small RPC on an object store
-    pooledMap(wanted.flatMap(dvs).distinct)(readDvSidecar)
+    // warm the cache with what it lacks, on the driver pool when that
+    // is more than a few: each sidecar is one small RPC on an object
+    // store
+    pooledMap(wanted.flatMap(dvs).distinct.filterNot(dvCache.containsKey))(
+      readDvSidecar)
     wanted.map { f =>
       f -> dvs(f).map(n => readDvSidecar(n).getOrElse(f, GraftBitmap.empty))
         .foldLeft(GraftBitmap.empty)(_ union _)
@@ -3211,6 +3233,17 @@ final class Instance(val spark: SparkSession, val root: String,
     })
   }
 
+  /** A parquet file reader over `p` (footer parsed), opened with the
+    * table's Hadoop conf: `ParquetFileReader.open(in)` alone builds its
+    * options from a fresh `Configuration`, which re-parses the Hadoop
+    * XML defaults on every staged file. */
+  private def openParquet(p: Path): org.apache.parquet.hadoop.ParquetFileReader = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf),
+      org.apache.parquet.HadoopReadOptions.builder(hconf).build())
+  }
+
   /** (min, max) of the obj_id column from a parquet file's footer
     * statistics; None when the column is absent or stats are missing
     * (the file is then never pruned — conservative). */
@@ -3228,9 +3261,7 @@ final class Instance(val spark: SparkSession, val root: String,
   private[acid] def footerLongRange(p: Path, column: String)
       : Option[(Long, Long)] = {
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openParquet(p)
       try {
         val blocks = reader.getFooter.getBlocks
         var lo = Long.MaxValue; var hi = Long.MinValue
@@ -3402,9 +3433,7 @@ final class Instance(val spark: SparkSession, val root: String,
       }
     }
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openParquet(p)
       try {
         val accs = scala.collection.mutable.LinkedHashMap[String, Acc]()
         reader.getFooter.getBlocks.forEach { b =>
@@ -4167,26 +4196,11 @@ final class Instance(val spark: SparkSession, val root: String,
     * transient store failure must propagate, not masquerade as a lost
     * race (tagVersion would report "tag already exists" for a tag
     * that was silently never recorded). */
-  private def claimSmallFile(target: Path, body: Array[Byte]): Boolean = {
-    def lostRace: PartialFunction[Throwable, Boolean] = {
+  private def claimSmallFile(target: Path, body: Array[Byte]): Boolean =
+    claimFile(fs, conf.claimer, target, body) {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
       case _: java.nio.file.FileAlreadyExistsException => false
     }
-    if (!conf.claimer.needsTemp) {
-      try conf.claimer.claim(fs, null, target, body)
-      catch lostRace
-    } else {
-      val tmp = new Path(target.getParent,
-        s".tmp-${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(body) finally out.close()
-      try conf.claimer.claim(fs, tmp, target, body)
-      catch lostRace
-      finally {
-        try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-      }
-    }
-  }
 
   /** Current tags (name -> version): the `_tags/` claim files. A
     * missing dir is the empty map; a READ FAILURE throws — every consumer of this map makes a protection
@@ -5733,9 +5747,10 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   /** Merge-on-read point delete: instead of rewriting every file that
     * holds one of `ids` (copy-on-write amplification: one masked row
     * costs a whole-file rewrite), write ONE small deletion-vector
-    * sidecar of (file, row-ordinal) masks and attach it to the touched
-    * files in the manifest. Readers subtract the mask per file — a
-    * re-inserted id lands in a NEW file and is never masked — and
+    * sidecar of (file, row-ordinal) masks — each touched file's whole
+    * mask, its earlier deletes included — and make it the touched
+    * files' one sidecar in the manifest. Readers subtract the mask per
+    * file — a re-inserted id lands in a NEW file and is never masked — and
     * [[Instance.compact]] materializes and clears outstanding vectors,
     * so the masked set stays bounded. Point-delete sized by contract:
     * the (file, id) hit list is collected on the driver; bulk deletes
@@ -5755,14 +5770,19 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // every hit file resolves its ordinals. Masked rows are
       // excluded: re-deleting an already-masked id is a no-op, not a
       // second mask.
-      val hits = hitOrdinals(cand, ids, localMasks(cand))
+      val masks = localMasks(cand)
+      val hits = hitOrdinals(cand, ids, masks)
       if (hits.nonEmpty) {
-        val base = localDvs()
-        val sidecar = inst.writeDvSidecarPos(
-          hits.view.mapValues(GraftBitmap(_)).toMap)
-        hits.keys.foreach { f =>
-          dvDelta(f) = base.getOrElse(f, Nil) :+ sidecar
-        }
+        // one sidecar per file (Delta's deletion-vector rule): the
+        // file's prior mask unioned with the new hits REPLACES its
+        // list, so a reader resolves one bitmap however many deletes
+        // the file took. A sidecar an earlier deleteMoR of this
+        // transaction wrote is superseded unpublished; vacuum's orphan
+        // sweep reclaims it
+        val sidecar = inst.writeDvSidecarPos(hits.map { case (f, ords) =>
+          f -> masks.getOrElse(f, GraftBitmap.empty).union(GraftBitmap(ords))
+        })
+        hits.keys.foreach(f => dvDelta(f) = Seq(sidecar))
       }
     }
     objects ++= ids

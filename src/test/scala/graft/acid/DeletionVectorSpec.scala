@@ -54,7 +54,21 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(inst.readManifest(2L).objects == Seq(2L))
   }
 
-  test("re-inserted id is NOT masked; second MoR delete appends a sidecar") {
+  /** The dv sidecars in the table's data directory. */
+  private def sidecarFiles(inst: Instance): Set[String] =
+    inst.fs.listStatus(inst.dataDir).map(_.getPath.getName)
+      .filter(_.startsWith("dvp-")).toSet
+
+  /** The single sidecar `dvs` lists for its one masked file, as that
+    * file's row ordinals. */
+  private def onlyMask(inst: Instance, dvs: Map[String, Seq[String]]): Seq[Long] = {
+    assert(dvs.size == 1, s"one masked file expected: $dvs")
+    val (file, list) = dvs.head
+    assert(list.size == 1, s"one sidecar per file expected: $list")
+    inst.readDvSidecar(list.head)(file).iterator.toSeq
+  }
+
+  test("re-inserted id is NOT masked; second MoR delete rewrites the file's one sidecar") {
     val inst = mk(Seq((1L, 10L), (2L, 20L)))
     val t1 = inst.begin(); t1.deleteMoR(Seq(2L)); inst.commit(t1)
     // re-insert id 2 into a NEW file: per-file masks must not touch it
@@ -62,13 +76,24 @@ class DeletionVectorSpec extends AnyFunSuite {
     t2.insert(Seq((2L, 200L)).toDF("obj_id", "value").coalesce(1))
     inst.commit(t2)
     assert(contents(inst) == Seq((1L, 10L), (2L, 200L)))
-    // now MoR-delete id 1 (same original file): list grows to 2
+    // now MoR-delete id 1 (same original file): the file's list is
+    // still one sidecar, whose mask is the union of both deletes
     val t3 = inst.begin(); t3.deleteMoR(Seq(1L)); inst.commit(t3)
     assert(contents(inst) == Seq((2L, 200L)))
-    assert(inst.tableStateAt(inst.latestVersion).dvs.head._2.size == 2)
-    // deleting an already-masked id is a no-op, not a third sidecar
+    val st = inst.tableStateAt(inst.latestVersion)
+    assert(onlyMask(inst, st.dvs) == Seq(0L, 1L))
+    // deleting an already-masked id is a no-op: no sidecar is written
+    val written = sidecarFiles(inst)
     val t4 = inst.begin(); t4.deleteMoR(Seq(1L)); inst.commit(t4)
-    assert(inst.tableStateAt(inst.latestVersion).dvs.head._2.size == 2)
+    assert(sidecarFiles(inst) == written)
+    assert(inst.tableStateAt(inst.latestVersion).dvs == st.dvs)
+    // every earlier version still reads its own rows
+    def at(v: Long) = inst.snapshot(v).orderBy("obj_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(at(1L) == Seq((1L, 10L), (2L, 20L)))
+    assert(at(2L) == Seq((1L, 10L)))
+    assert(at(3L) == Seq((1L, 10L), (2L, 200L)))
+    assert(at(4L) == Seq((2L, 200L)))
   }
 
   test("compact materializes masks and clears every dv entry") {
@@ -108,8 +133,43 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.read().collect().map(_.getLong(0)).toSeq == Seq(2L))
     inst.commit(t)
     assert(contents(inst) == Seq((2L, 20L)))
-    // both deletes share the txn: one dv list entry per sidecar write
-    assert(inst.tableStateAt(inst.latestVersion).dvs.head._2.size == 2)
+    // the second delete's sidecar holds both masks and replaces the
+    // first's, which is never published
+    assert(onlyMask(inst, inst.tableStateAt(inst.latestVersion).dvs) == Seq(0L, 2L))
+  }
+
+  test("three MoR deletes on one file: each id leaves every change feed once, at its own version") {
+    val inst = mk(Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))
+    // v2, v3, v4: one id each, all in the one data file
+    Seq(2L, 4L, 1L).foreach(id => inst.withRetry()(_.deleteMoR(Seq(id))))
+    assert(onlyMask(inst, inst.tableStateAt(4L).dvs) == Seq(0L, 1L, 3L))
+    val expected = Seq((1L, 4L), (2L, 2L), (4L, 3L))
+    val changed = inst.changes(0L, 4L).select("obj_id", "_version", "_change")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    assert(changed.filter(_._3 == "delete").map(c => (c._1, c._2)).sorted ==
+      expected, s"got $changed")
+    assert(changed.count(_._3 != "insert") == 3, s"got $changed")
+    // weightedDelta has no version column: per version, the net is the
+    // one id that version deleted; over the interval each nets -1 once
+    def net(from: Long, to: Long): Seq[(Long, Long)] =
+      inst.weightedDelta(from, to).groupBy("obj_id").agg(sum("_w").as("w"))
+        .filter(col("w") =!= 0L).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    expected.foreach { case (id, v) => assert(net(v - 1, v) == Seq((id, -1L))) }
+    assert(net(1L, 4L) == expected.map(e => (e._1, -1L)))
+    val name = "dv_feed_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    inst.readChangesStream(readChangeFeed = true).writeStream.format("memory")
+      .queryName(name)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_dv_feed_ckpt_").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val feed = spark.table(name).collect()
+      .map(r => (r.getAs[Long]("obj_id"), r.getAs[Long]("_version"),
+        r.getAs[String]("_change_type"))).toSeq
+    assert(feed.filter(_._3 == "delete").map(c => (c._1, c._2)).sorted ==
+      expected, s"got $feed")
+    assert(feed.count(_._3 != "insert") == 3, s"got $feed")
   }
 
   test("conflicts: concurrent mask-vs-mask and mask-vs-rewrite on one file") {

@@ -136,6 +136,41 @@ class DriverScanSpec extends AnyFunSuite {
       spark.sql("SELECT value FROM dscan_pt WHERE obj_id = 4")).forall(onDriver))
   }
 
+  test("driver-path reads and MoR deletes share one prepared parquet reader per schema") {
+    val inst = mk((0 until 4).map(i => (1L to 8L).map(j => (i * 100L + j, j))))
+    val v = inst.latestVersion
+    val sc = spark.sparkContext
+    // broadcast ids are handed out in sequence, so the gap between two
+    // probes counts the broadcasts made between them; preparing a
+    // parquet reader broadcasts the Hadoop conf
+    def probe(): Long = { val b = sc.broadcast(0); try b.id finally b.destroy() }
+    def round(i: Int): Unit = {
+      val travel = inst.snapshot(v).filter(col("obj_id") === 1L + i)
+      assert(onDriver(travel) && travel.collect().length == 1)
+      assert(inst.readWhere("obj_id", Seq(101L + i)).collect().length == 1)
+      val t = inst.begin()
+      assert(t.read().filter(col("obj_id") === 201L + i).collect().length == 1)
+      t.deleteMoR(Seq(301L + i))
+      inst.commit(t)
+    }
+    round(0) // the first operation of each shape prepares its reader
+    val before = probe()
+    (1 to 5).foreach(round)
+    val made = probe() - before - 1
+    assert(made == 0, s"$made broadcasts in 20 driver-path operations")
+    assert(inst.read().filter(col("obj_id") > 300L).collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(307L, 308L))
+    // a changed session setting keys a reader of its own
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, (!spark.sessionState.conf.parquetVectorizedReaderEnabled).toString)
+    try {
+      val at = probe()
+      assert(inst.snapshot(v).filter(col("obj_id") === 1L).collect().length == 1)
+      assert(probe() - at == 2, "no new reader under a changed setting")
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("driver and job paths agree: masks, a renamed and an evolved column, null ids") {
     val inst = mk(batches)
     val v1 = inst.latestVersion
