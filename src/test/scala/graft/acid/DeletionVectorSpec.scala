@@ -68,7 +68,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     inst.readDvSidecar(list.head)(file).iterator.toSeq
   }
 
-  test("re-inserted id is NOT masked; second MoR delete rewrites the file's one sidecar") {
+  test("re-inserted id is NOT masked; second MoR delete keeps one sidecar") {
     val inst = mk(Seq((1L, 10L), (2L, 20L)))
     val t1 = inst.begin(); t1.deleteMoR(Seq(2L)); inst.commit(t1)
     // re-insert id 2 into a NEW file: per-file masks must not touch it
