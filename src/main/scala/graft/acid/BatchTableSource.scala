@@ -983,7 +983,7 @@ private[acid] final class GraftTable(private[acid] val inst: Instance,
     val tinyLocal = clusterCols.nonEmpty &&
       (data.queryExecution.optimizedPlan match {
         case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          l.data.length <= inst.conf.fastPathRows
+          l.data.length <= Instance.FastPathRows
         case _ => false
       })
     val shaped =

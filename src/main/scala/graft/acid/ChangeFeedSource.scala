@@ -90,8 +90,7 @@ final class ChangeFeedProvider extends TableProvider with DataSourceRegister {
 
 private[acid] object ChangeFeedSource {
   def outputSchema(inst: Instance, changeFeed: Boolean = false): StructType = {
-    val (_, ddl) = inst.stateAt(inst.latestVersion)
-    val base = StructType.fromDDL(ddl)
+    val base = StructType.fromDDL(inst.tableStateAt(inst.latestVersion).ddl)
       .add(StructField("_version", LongType, nullable = false))
     if (changeFeed)
       base.add(StructField("_change_type",
@@ -129,13 +128,7 @@ private[acid] object ChangeFeedSource {
     ((lo + 1) to hi).foreach { v =>
       val m = inst.readManifest(v)
       val priorDvs = prevDvs
-      if (changeFeed) {
-        var rolled = prevDvs -- m.removed
-        m.dvs.foreach { case (f, l) =>
-          rolled = if (l.isEmpty) rolled - f else rolled.updated(f, l)
-        }
-        prevDvs = rolled
-      }
+      if (changeFeed) prevDvs = VersionedTable.foldDvs(prevDvs, m.removed, m.dvs)
       val isData = m.objects.nonEmpty || m.objSummary.isDefined
       if (isData) {
         // a merge-on-read delete commit (dv delta, no file delta) is a

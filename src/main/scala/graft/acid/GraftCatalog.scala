@@ -217,7 +217,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * makes itself. */
   private def headColumns(ident: Identifier): Set[String] = {
     val inst = VersionedTable.open(SparkSession.active, tablePath(ident).toString)
-    StructType.fromDDL(inst.stateAt(inst.latestVersion)._2).fieldNames.toSet
+    StructType.fromDDL(inst.tableStateAt(inst.latestVersion).ddl).fieldNames.toSet
   }
 
   /** Rewrite `ident`'s spec with the given entries replaced and the

@@ -1,6 +1,6 @@
 package graft.acid
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
@@ -97,28 +97,26 @@ import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType, 
   * delta aligns schemas by physical identity). */
 final class MaterializedAggView private (
     val source: Instance, val view: Instance,
-    val groupCols: Seq[String], val sumCols: Seq[String],
-    val minCols: Seq[String], val maxCols: Seq[String],
     val dimJoins: Seq[MaterializedAggView.DimJoin],
-    val where: Option[String],
-    // fixed PHYSICAL names of the group/sum/min/max columns IN THEIR
-    // OWNING RELATION, captured at create: refresh re-resolves them to
+    // the persisted definition: besides the create-time column names
+    // it pins each group/sum/min/max/ndv column's and join key's fixed
+    // PHYSICAL name IN ITS OWNING RELATION (refresh re-resolves them to
     // that relation's head logical names, so renaming a view column in
-    // the fact OR a dimension neither breaks the refresh nor (worse)
-    // folds pre-rename rows into the NULL group
-    groupPhys: Seq[String], sumPhys: Seq[String],
-    minPhys: Seq[String], maxPhys: Seq[String],
-    // owning relation per group/sum column (0 = fact, i >= 1 =
-    // dimJoins(i-1))
-    groupRels: Seq[Int], sumRels: Seq[Int],
-    // fixed physical names of the join keys (fact side aligned with
-    // dimJoins; dim side one per dim)
-    factKeyPhys: Seq[String], dimKeyPhys: Seq[String],
-    // approximate-distinct columns: `ndv_<c>` stores a DataSketches
-    // HLL sketch per group (binary). Inserts UNION in (mergeable);
-    // a net-removed value marks the group for a targeted recompute —
-    // sketches cannot subtract. Plain (fact-only) views only.
-    val ndvCols: Seq[String], ndvPhys: Seq[String]) {
+    // the fact OR a dimension neither breaks the refresh nor, worse,
+    // folds pre-rename rows into the NULL group) and the owning
+    // relation of every group/sum column
+    private[acid] val d: MaterializedAggView.MvDef) {
+
+  def groupCols: Seq[String] = d.groupCols
+  def sumCols: Seq[String] = d.sumCols
+  def minCols: Seq[String] = d.minCols
+  def maxCols: Seq[String] = d.maxCols
+  def where: Option[String] = d.where
+  // approximate-distinct columns: `ndv_<c>` stores a DataSketches HLL
+  // sketch per group (binary). Inserts UNION in (mergeable); a
+  // net-removed value marks the group for a targeted recompute —
+  // sketches cannot subtract. Plain (fact-only) views only.
+  def ndvCols: Seq[String] = d.ndvCols
 
   /** First dimension, if any — compatibility accessor for the
     * single-dim surface (mv_status, older callers). */
@@ -133,16 +131,11 @@ final class MaterializedAggView private (
   private def appId: String =
     "mv:" + new org.apache.hadoop.fs.Path(view.root).toString
 
-  /** Stored partial-sum type per sum column, read from the VIEW's own
-    * schema (fixed at create): LongType for integral sources,
-    * DECIMAL(38, s) for decimal sources — every fold/merge casts to
-    * exactly what the table stores, so integral views behave
-    * bit-identically to the pre-decimal implementation. */
-  private lazy val sumStore: Map[String, DataType] = {
-    val st = StructType.fromDDL(view.stateAt(view.latestVersion)._2)
-      .fields.map(f => f.name -> f.dataType).toMap
-    sumCols.map(c => c -> st.getOrElse(s"sum_$c", LongType)).toMap
-  }
+  private def rels: Seq[Instance] = source +: dimJoins.map(_.dim)
+
+  private lazy val sumStore: String => DataType =
+    MaterializedAggView.sumStore(
+      StructType.fromDDL(view.tableStateAt(view.latestVersion).ddl))
 
   /** Version of the source the view currently reflects (-1 = never
     * refreshed; the first refresh folds the HEAD SNAPSHOT at +1 — the
@@ -189,73 +182,6 @@ final class MaterializedAggView private (
     * [[EngineConf.mvRebuildMaxInterval]]). Diagnostic only. */
   @volatile var lastRefreshMode: String = "none"
 
-  /** Star-join resolution context pinned at per-relation heads
-    * (`heads(0)` = fact, `heads(i)` = dimJoins(i-1)'s head): resolves
-    * every view column and join key from its CREATE-TIME physical
-    * identity to the owning relation's head logical name — so a
-    * rename on EITHER side mid-interval is transparent and a dropped
-    * column fails loudly — and builds the normalized per-relation
-    * inputs the signed join delta and the snapshot fold share. */
-  private final class StarCtx(heads: Seq[Long]) {
-    private val rels: Seq[Instance] = source +: dimJoins.map(_.dim)
-    private val states =
-      rels.zip(heads).map { case (r, v) => r.tableStateAt(v) }
-    private val headMaps: Seq[Map[String, String]] = states.map { st =>
-      StructType.fromDDL(st.ddl).fields
-        .map(f => st.renames.getOrElse(f.name, f.name) -> f.name).toMap
-    }
-    /** Owning relation index per view column (0 = fact). */
-    val relOf: Map[String, Int] =
-      (groupCols.zip(groupRels) ++ sumCols.zip(sumRels)).toMap
-    private def resolve1(orig: String, phys: String, r: Int): String =
-      headMaps(r).getOrElse(phys, throw new IllegalStateException(
-        s"view column '$orig' (physical '$phys') no longer exists in " +
-        s"${if (r == 0) "the fact table" else s"dimension ${r - 1}"} " +
-        "at its head; drop and rebuild the view"))
-    // create-time physical name per view column
-    private val colPhys: Map[String, String] =
-      (groupCols.zip(groupPhys) ++ sumCols.zip(sumPhys)).toMap
-    /** Head logical name per view column. */
-    val colNow: Map[String, String] = (groupCols ++ sumCols).distinct
-      .map(c => c -> resolve1(c, colPhys(c), relOf(c))).toMap
-    /** (factKeyHeadName, dimKeyHeadName) per dim. */
-    val keyNow: Seq[(String, String)] = dimJoins.zipWithIndex.map {
-      case (dj, i) =>
-        (resolve1(dj.factKey, factKeyPhys(i), 0),
-          resolve1(dj.dimKey, dimKeyPhys(i), i + 1))
-    }
-    /** Project relation `r`'s head-named rows down to its owned view
-      * columns + its join keys, spelled with their CREATE-TIME names,
-      * plus weight `_w<r>` (from `_w`, or the given literal). */
-    def normalized(df: DataFrame, r: Int, w: Option[Long]): DataFrame = {
-      val owned = (groupCols ++ sumCols).distinct.filter(relOf(_) == r)
-        .map(c => (colNow(c), c))
-      val keys =
-        if (r == 0) keyNow.zipWithIndex.map { case ((fk, _), i) =>
-          (fk, dimJoins(i).factKey) }
-        else Seq((keyNow(r - 1)._2, dimJoins(r - 1).dimKey))
-      val pairs = (owned ++ keys).distinctBy(_._2)
-      val wCol = w.map(lit(_)).getOrElse(col("_w"))
-      df.select((pairs.map { case (now, orig) => col(now).as(orig) } :+
-        wCol.as(s"_w$r")): _*)
-    }
-    /** Inner star join of normalized relation inputs: the view
-      * columns (create-time names) + signed weight product `_w`. */
-    def starJoin(fact: DataFrame, dims: Seq[DataFrame],
-        sign: Long): DataFrame = {
-      var j = fact.alias("R0")
-      dimJoins.zipWithIndex.foreach { case (dj, i) =>
-        j = j.join(dims(i).alias(s"R${i + 1}"),
-          col(s"R0.${dj.factKey}") === col(s"R${i + 1}.${dj.dimKey}"))
-      }
-      val outs = (groupCols ++ sumCols).distinct.map(c =>
-        col(s"R${relOf(c)}.$c").as(c))
-      val w = (0 to dimJoins.size).map(r => col(s"R$r._w$r"))
-        .reduce(_ * _) * lit(sign)
-      j.select((outs :+ w.as("_w")): _*)
-    }
-  }
-
   /** The COMPLETE view contents at `(head, headD)` — one snapshot
     * scan (plus the dim snapshot join for join views), no history
     * read. This is the telescoped identity behind the initial build:
@@ -267,28 +193,16 @@ final class MaterializedAggView private (
     * whose incremental interval is no longer readable. Reference
     * analog: recovery reads the checkpoint, not the whole WAL
     * (io.rs:260-289). */
-  private def fullFold(head: Long, headDs: Seq[Long],
-      // by-name: join views resolve through StarCtx instead and the
-      // lazy fact-only resolvers would throw on dim-side columns
-      gNow: => Seq[(String, String)], sNow: => Seq[(String, String)],
-      mNow: => Seq[(String, String)], xNow: => Seq[(String, String)],
-      nNow: => Seq[(String, String)] = Nil): DataFrame = {
+  private def fullFold(b: MaterializedAggView.Binding, head: Long,
+      headDs: Seq[Long]): DataFrame = {
+    val f0 = source.snapshot(head)
+    val f = where.fold(f0)(p => f0.filter(expr(p)))
     val rows =
-      if (dimJoins.isEmpty) {
-        val s0 = source.snapshot(head)
-        val sF = where.fold(s0)(p => s0.filter(expr(p)))
-        sF.select((gNow ++ sNow ++ mNow ++ xNow ++ nNow).distinct.map {
-          case (now, orig) => col(now).as(orig) }: _*)
-      } else {
-        val ctx = new StarCtx(head +: headDs)
-        val f0 = source.snapshot(head)
-        val f = ctx.normalized(
-          where.fold(f0)(p => f0.filter(expr(p))), 0, Some(1L))
-        val ds = dimJoins.indices.map(i =>
-          ctx.normalized(dimJoins(i).dim.snapshot(headDs(i)), i + 1,
-            Some(1L)))
-        ctx.starJoin(f, ds, 1L).drop("_w")
-      }
+      if (dimJoins.isEmpty) f.select(b.columns(0): _*)
+      else b.starJoin(b.normalized(f, 0, Some(1L)),
+        dimJoins.indices.map(i => b.normalized(
+          dimJoins(i).dim.snapshot(headDs(i)), i + 1, Some(1L))), 1L)
+        .drop("_w")
     val aggs: Seq[Column] =
       count(lit(1)).as("cnt") +:
       (sumCols.flatMap(c => Seq(
@@ -326,29 +240,12 @@ final class MaterializedAggView private (
           dimJoins.indices.forall(i => headDs(i) <= lastDs(i))) {
         lastRefreshMode = "noop"; return head
       }
-      // resolve the view columns' fixed physical names to the HEAD's
-      // logical names: the delta below is head-aligned, so a source
-      // rename mid-interval is transparent — unless the column was
+      // the view columns' fixed physical names resolved to each
+      // relation's HEAD logical names: the deltas are head-aligned, so
+      // a rename mid-interval is transparent — unless the column was
       // dropped, which has no incremental answer
-      val stH = source.tableStateAt(head)
-      val headPhysToLogical =
-        org.apache.spark.sql.types.StructType.fromDDL(stH.ddl).fields
-          .map(f => stH.renames.getOrElse(f.name, f.name) -> f.name).toMap
-      def resolve(phys: Seq[String], logical: Seq[String]) =
-        phys.zip(logical).map { case (p, orig) =>
-          headPhysToLogical.getOrElse(p, throw new IllegalStateException(
-            s"view column '$orig' (physical '$p') no longer exists in " +
-            s"the source at v$head; drop and rebuild the view")) -> orig
-        }
-      // join views bind ALL columns by logical name (dim columns have
-      // no fact-side physical identity); rename resilience applies to
-      // plain views only — forcing these in a join view would throw on
-      // dim-side names, so they stay lazy
-      lazy val gNow = resolve(groupPhys, groupCols)
-      lazy val sNow = resolve(sumPhys, sumCols)
-      lazy val mNow = resolve(minPhys, minCols)
-      lazy val xNow = resolve(maxPhys, maxCols)
-      lazy val nNow = resolve(ndvPhys, ndvCols)
+      lazy val atHead =
+        new MaterializedAggView.Binding(d, rels, head +: headDs)
       // rebuild triggers: the interval's pre-images may be reclaimed
       // (vacuum horizon, or a FileNotFound already surfaced below), or
       // the catch-up interval is long enough that a bounded-plan
@@ -373,7 +270,7 @@ final class MaterializedAggView private (
       val tooManySides = changedSides > source.conf.mvMaxChangedSides
       if (initial || forceRebuild || vacuumStale || longInterval ||
           tooManySides) {
-        val full = fullFold(head, headDs, gNow, sNow, mNow, xNow, nNow)
+        val full = fullFold(atHead, head, headDs)
         try {
           JobLabel(view.spark, "mv:snapshot-fold") {
           view.withRetry() { t =>
@@ -418,117 +315,8 @@ final class MaterializedAggView private (
       // the signed row delta — NOT the classified change feed: an
       // aggregate needs net multiplicities only, and weightedDelta skips
       // the feed's per-row identity diff (copy-backs cancel in the Σ)
-      val weighted =
-        if (dimJoins.isEmpty) {
-          val weighted0 = source.weightedDelta(last, head, alignToHead = true)
-          where.fold(weighted0)(p => weighted0.filter(expr(p)))
-            // back to the view's own (create-time) column names
-            .select(((gNow ++ sNow ++ mNow ++ xNow ++ nNow).distinct.map {
-              case (now, orig) => col(now).as(orig) } :+ col("_w")): _*)
-        } else {
-          // SIGNED delta of the star join F ⨝ D1 ⨝ … ⨝ Dk by
-          // inclusion–exclusion over the CHANGED relations: expanding
-          // Π r_new − Π (r_new − Δr) gives
-          //   Δ(Π r) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
-          //            Π_{r∈S} Δr ⨝ Π_{r∉S} r_new
-          // Weights multiply through the join, so dim group moves,
-          // key retargets, deletes and duplicate keys all fall out of
-          // the algebra; QUIET relations never appear as deltas, so a
-          // fact-only interval costs exactly one term (ΔF against
-          // key-restricted dim snapshots), and a single-dim view gets
-          // the classic ΔF⨝D_new + F_new⨝ΔD − ΔF⨝ΔD. Every full
-          // snapshot in a term is SEMI-JOIN restricted to the keys
-          // the term's deltas can actually match — lossless for an
-          // inner join — so dim and fact reads stay O(churn) and
-          // prune by their obj_id stats index / runtime filters.
-          // All relations resolve by create-time PHYSICAL identity
-          // (StarCtx), so renames on either side are transparent and
-          // the deltas fold head-aligned.
-          val ctx = new StarCtx(head +: headDs)
-          def whereF(df: DataFrame): DataFrame =
-            where.fold(df)(p => df.filter(expr(p)))
-          // each changed side's delta appears in 2^(k-1) of the union
-          // terms below; past the 3-term single-dim shape, materialize
-          // the (O(churn)-sized) deltas once so the file-restricted
-          // delta scans don't re-run per term and the term plans stay
-          // shallow. Quiet sides' deltas are never evaluated — only
-          // changed ones may be checkpointed.
-          val ckptDeltas = changedSides >= 3
-          val dFact0 = ctx.normalized(
-            whereF(source.weightedDelta(last, head, alignToHead = true)),
-            0, None)
-          val dFact =
-            if (ckptDeltas && head > last)
-              JobLabel(view.spark, "mv:delta-ckpt")(dFact0.localCheckpoint())
-            else dFact0
-          val dDims: Seq[DataFrame] = dimJoins.indices.map { i =>
-            val d = ctx.normalized(dimJoins(i).dim.weightedDelta(
-              lastDs(i), headDs(i), alignToHead = true), i + 1, None)
-            if (ckptDeltas && headDs(i) > lastDs(i))
-              JobLabel(view.spark, "mv:delta-ckpt")(d.localCheckpoint())
-            else d
-          }
-          val fSnap = ctx.normalized(
-            whereF(source.snapshot(head)), 0, Some(1L))
-          // memoized per refresh: a dim snapshot appears in up to
-          // 2^(k-1) terms — one shared DataFrame keeps the relations
-          // canonically identical, so the file listing happens once
-          // and Spark's exchange reuse can kick in across terms
-          val dimSnapMemo =
-            scala.collection.mutable.Map.empty[Int, DataFrame]
-          def dimSnap(i: Int): DataFrame =
-            dimSnapMemo.getOrElseUpdate(i, ctx.normalized(
-              dimJoins(i).dim.snapshot(headDs(i)), i + 1, Some(1L)))
-          val changed: Seq[Int] =
-            (if (head > last) Seq(0) else Nil) ++
-            dimJoins.indices.collect {
-              case i if headDs(i) > lastDs(i) => i + 1 }
-          // stats-driven restriction floor: a quiet side's snapshot is
-          // semi-join restricted to the keys the term's deltas can
-          // match — O(churn) reads at scale — but each restriction
-          // costs a distinct-probe exchange + broadcast per term,
-          // pure overhead when the manifest's footer row counts bound
-          // the whole snapshot under mvSemiRestrictMinRows (driver
-          // metadata; lossless either way for an inner join — the
-          // unmatched extra rows drop in the join itself)
-          def tiny(r: Instance, v: Long): Boolean =
-            r.approxRowBound(v)
-              .exists(_ <= r.conf.mvSemiRestrictMinRows)
-          val factTiny = tiny(source, head)
-          val dimTiny = dimJoins.indices.map(i =>
-            tiny(dimJoins(i).dim, headDs(i)))
-          val terms = (1 until (1 << changed.size)).map { m =>
-            val s = changed.indices.collect {
-              case j if (m & (1 << j)) != 0 => changed(j) }.toSet
-            val sign = if (s.size % 2 == 1) 1L else -1L
-            // fact component: its own delta, or the head snapshot
-            // restricted to keys each in-term dim delta can match
-            val fact0 =
-              if (s(0)) dFact
-              else if (factTiny) fSnap
-              else s.toSeq.sorted.filter(_ > 0).foldLeft(fSnap) { (f, r) =>
-                val i = r - 1
-                val probe = dDims(i)
-                  .select(col(dimJoins(i).dimKey).as(s"_k$i")).distinct()
-                f.join(probe,
-                  col(dimJoins(i).factKey) === col(s"_k$i"), "left_semi")
-              }
-            // dim components: delta if in-term, else the snapshot
-            // restricted to the fact component's join keys
-            val dimDfs = dimJoins.indices.map { i =>
-              if (s(i + 1)) dDims(i)
-              else if (dimTiny(i)) dimSnap(i)
-              else {
-                val probe = fact0
-                  .select(col(dimJoins(i).factKey).as(s"_k$i")).distinct()
-                dimSnap(i).join(probe,
-                  col(dimJoins(i).dimKey) === col(s"_k$i"), "left_semi")
-              }
-            }
-            ctx.starJoin(fact0, dimDfs, sign)
-          }
-          terms.reduce(_.unionByName(_))
-        }
+      val weighted = MaterializedAggView.signedDelta(d, rels,
+        last +: lastDs, head +: headDs)
       // min/max and ndv columns all consume the NETTED per-(group,
       // value) multiplicities below
       val mmCols = (minCols ++ maxCols ++ ndvCols).distinct
@@ -562,17 +350,14 @@ final class MaterializedAggView private (
             .localCheckpoint()))
         else None
       val baseAggs: Seq[Column] =
-        sum(col("_w")).as("cnt") +:
-        sumCols.flatMap(c => Seq(
-          // cast-sandwich: input to the stored type (exact for both
-          // long and decimal(38,s)), the +/-1-weighted product back to
-          // it (Spark widens decimal*long precision), and the sum back
-          // to it (Sum re-caps precision) — the delta's sum_<c> lands
-          // EXACTLY as the view stores it
-          sum((col(c).cast(sumStore(c)) * col("_w")).cast(sumStore(c)))
-            .cast(sumStore(c)).as(s"sum_$c"),
-          sum(when(col(c).isNotNull, col("_w")).otherwise(lit(0L)))
-            .as(s"nn_$c")))
+        MaterializedAggView.signedPartials(sumCols, sumStore).map {
+          // Sum re-caps decimal precision: the group's sum_<c> goes
+          // back to the stored type, landing EXACTLY as the view
+          // stores it
+          case (n, e) if n.startsWith("sum_") =>
+            sum(e).cast(sumStore(n.stripPrefix("sum_"))).as(n)
+          case (n, e) => sum(e).as(n)
+        }
       val base = (sharedPerValue match {
         case Some(pv) => pv.groupBy(groupCols.map(col): _*)
           .agg(sum(col("_net")).as("cnt"))
@@ -726,12 +511,10 @@ final class MaterializedAggView private (
               // ONE bounded scan: head snapshot, the view's predicate,
               // restricted to dirty groups by hash (null group keys
               // hash like any value, so no null-join pitfalls)
-              val mmSel = (mNow ++ xNow ++ nNow).distinct
               val srcRows = where.fold(source.snapshot(head))(p =>
                 source.snapshot(head).filter(expr(p)))
-                .select((gNow.map { case (now, orig) =>
-                  col(now).as(orig) } ++
-                  mmSel.map { case (now, orig) => col(now).as(orig) }): _*)
+                .select((groupCols.map(atHead.col) ++
+                  (minCols ++ maxCols ++ ndvCols).distinct.map(atHead.col)): _*)
                 .withColumn("_sid", xxhash64(groupCols.map(col): _*))
                 .join(dirtyKeys, col("_sid") === col("_did"), "left_semi")
               val absAggs =
@@ -821,6 +604,189 @@ object MaterializedAggView {
     * answered from the sketches only when rsd >= this (the substitute
     * estimate is at least as accurate as requested). */
   val NdvRsd: Double = 1.04 / math.sqrt((1L << NdvLgK).toDouble)
+
+  /** Stored partial-sum type of summed column `c`, from the VIEW's own
+    * schema (fixed at create): LongType for integral sources,
+    * DECIMAL(38, s) for decimal ones — every fold, merge and
+    * compensation casts to exactly what the table stores. */
+  private[acid] def sumStore(viewSchema: StructType)(c: String): DataType =
+    viewSchema.find(_.name == s"sum_$c").fold(LongType: DataType)(_.dataType)
+
+  /** The partials one signed row of [[signedDelta]] adds to its group,
+    * by view column name: `cnt` (its weight `_w`) and, per summed
+    * column, `sum_<c>` and `nn_<c>`. `sum_<c>` is a cast sandwich — the
+    * addend cast to the stored type (exact for long and DECIMAL(38, s)),
+    * the ±1-weighted product cast back to it (Spark widens decimal ×
+    * long precision) — and `nn_<c>` the weight of a non-null addend.
+    * The refresh sums them per group; the stale rewrite unions them
+    * with the view's rows as they are. */
+  private[acid] def signedPartials(sumCols: Seq[String],
+      store: String => DataType): Seq[(String, Column)] =
+    ("cnt" -> col("_w")) +: sumCols.flatMap(c => Seq(
+      s"sum_$c" -> (col(c).cast(store(c)) * col("_w")).cast(store(c)),
+      s"nn_$c" -> when(col(c).isNotNull, col("_w")).otherwise(lit(0L))))
+
+  /** A view's columns and join keys resolved from their create-time
+    * PHYSICAL identity to each relation's logical names at the versions
+    * `at` (`at(0)` the fact, `at(i)` dimension `i - 1`) — a rename on
+    * any side is transparent and a dropped column fails loudly — plus
+    * the normalized per-relation inputs the signed delta and the
+    * snapshot fold share. */
+  private[acid] final class Binding(d: MvDef, rels: Seq[Instance],
+      at: Seq[Long]) {
+    private val byPhys: Seq[Map[String, String]] = rels.zip(at).map {
+      case (r, v) =>
+        val st = r.tableStateAt(v)
+        StructType.fromDDL(st.ddl).fields
+          .map(f => st.renames.getOrElse(f.name, f.name) -> f.name).toMap
+    }
+    // owning relation per view column; min/max/ndv columns exist on
+    // plain (fact-only) views only
+    private val relOf: Map[String, Int] =
+      (d.groupCols.zip(d.groupRels) ++ d.sumCols.zip(d.sumRels)).toMap
+        .withDefaultValue(0)
+    private val owned: Seq[String] =
+      (d.groupCols ++ d.sumCols ++ d.minCols ++ d.maxCols ++ d.ndvCols)
+        .distinct
+    private def keys(r: Int): Seq[String] =
+      if (r == 0) d.factKeys else Seq(d.dimKeys(r - 1))
+    // (relation, create-time name) -> logical name at `at`, for every
+    // view column and join key
+    private val now: Map[(Int, String), String] = {
+      val phys =
+        (d.groupCols.zip(d.groupPhys) ++ d.sumCols.zip(d.sumPhys) ++
+          d.minCols.zip(d.minPhys) ++ d.maxCols.zip(d.maxPhys) ++
+          d.ndvCols.zip(d.ndvPhys)).map { case (c, p) => (relOf(c), c, p) } ++
+        d.factKeys.zip(d.factKeyPhys).map { case (c, p) => (0, c, p) } ++
+        d.dimKeys.indices.map(i => (i + 1, d.dimKeys(i), d.dimKeyPhys(i)))
+      phys.map { case (r, c, p) =>
+        (r, c) -> byPhys(r).getOrElse(p, throw new IllegalStateException(
+          s"view column '$c' (physical '$p') no longer exists in " +
+          s"${if (r == 0) "the fact table" else s"dimension ${r - 1}"} " +
+          s"at v${at(r)}; drop and rebuild the view"))
+      }.toMap
+    }
+    private def colIn(r: Int, c: String): Column =
+      functions.col(now((r, c))).as(c)
+    /** View column `c` read from its owning relation, spelled with its
+      * create-time name. */
+    def col(c: String): Column = colIn(relOf(c), c)
+    /** Relation `r`'s owned view columns and join keys. */
+    def columns(r: Int): Seq[Column] =
+      (owned.filter(relOf(_) == r) ++ keys(r)).distinct.map(colIn(r, _))
+    /** Relation `r`'s rows as [[columns]] plus weight `_w<r>` (from
+      * `_w`, or the given literal). */
+    def normalized(df: DataFrame, r: Int, w: Option[Long]): DataFrame =
+      df.select((columns(r) :+
+        w.fold(functions.col("_w"))(lit(_)).as(s"_w$r")): _*)
+    /** Inner star join of normalized relation inputs: the view columns
+      * plus the signed weight product `_w`. */
+    def starJoin(fact: DataFrame, dims: Seq[DataFrame],
+        sign: Long): DataFrame = {
+      var j = fact.alias("R0")
+      d.factKeys.indices.foreach { i =>
+        j = j.join(dims(i).alias(s"R${i + 1}"),
+          functions.col(s"R0.${d.factKeys(i)}") ===
+            functions.col(s"R${i + 1}.${d.dimKeys(i)}"))
+      }
+      val outs = (d.groupCols ++ d.sumCols).distinct.map(c =>
+        functions.col(s"R${relOf(c)}.$c").as(c))
+      val w = rels.indices.map(r => functions.col(s"R$r._w$r"))
+        .reduce(_ * _) * lit(sign)
+      j.select((outs :+ w.as("_w")): _*)
+    }
+  }
+
+  /** The SIGNED rows a view's aggregate folds over the per-relation
+    * intervals `(from(r), to(r)]` (`r = 0` the fact, `r >= 1` dimension
+    * `r - 1`): the view's group/sum (and, for plain views, min/max/ndv)
+    * columns under their create-time names, plus the weight `_w` —
+    * rows visible after each commit +1, rows visible before it −1 —
+    * with the definition's WHERE applied to the fact. This is the one
+    * delta both [[MaterializedAggView.refresh]] (the view's log-tail
+    * replay) and the stale-view rewrite ([[MvRewriteRule]], the same
+    * replay applied read-side) fold.
+    *
+    * A plain view's rows are the fact's [[Instance.weightedDelta]]. A
+    * join/star view's are the SIGNED delta of F ⨝ D1 ⨝ … ⨝ Dk by
+    * inclusion–exclusion over the CHANGED relations: expanding
+    * Π r_new − Π (r_new − Δr) gives
+    *   Δ(Π r) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} · Π_{r∈S} Δr ⨝ Π_{r∉S} r_new
+    * Weights multiply through the join, so dim group moves, key
+    * retargets, deletes and duplicate keys all fall out of the algebra;
+    * QUIET relations never appear as deltas, so a fact-only interval
+    * costs exactly one term, and a single-dim view gets the classic
+    * ΔF⨝D_new + F_new⨝ΔD − ΔF⨝ΔD. Every snapshot in a term is SEMI-JOIN
+    * restricted to the keys the term's deltas can match — lossless for
+    * an inner join — so reads stay O(churn), unless the manifest's row
+    * counts bound the snapshot under [[Instance.MvSemiRestrictMinRows]].
+    * Every relation binds by create-time PHYSICAL identity at `to`
+    * ([[Binding]]), so renames on any side are transparent.
+    *
+    * With three or more changed relations each changed delta (it
+    * appears in 2^(k-1) terms) is materialized once with
+    * `localCheckpoint` — a Spark job. The stale rewrite runs inside the
+    * optimizer, where no job may start, so it never passes more than
+    * two changed relations. */
+  private[acid] def signedDelta(d: MvDef, rels: Seq[Instance],
+      from: Seq[Long], to: Seq[Long]): DataFrame = {
+    val b = new Binding(d, rels, to)
+    def whereF(df: DataFrame): DataFrame =
+      d.where.fold(df)(p => df.filter(expr(p)))
+    def delta(r: Int): DataFrame = {
+      val w = rels(r).weightedDelta(from(r), to(r), alignToHead = true)
+      if (r == 0) whereF(w) else w
+    }
+    if (rels.size == 1) return delta(0).select((b.columns(0) :+ col("_w")): _*)
+    val changed = rels.indices.filter(r => to(r) > from(r))
+    val deltas: Map[Int, DataFrame] = changed.map { r =>
+      val n = b.normalized(delta(r), r, None)
+      r -> (if (changed.size >= 3)
+        JobLabel(rels(r).spark, "mv:delta-ckpt")(n.localCheckpoint())
+      else n)
+    }.toMap
+    // memoized: a snapshot appears in up to 2^(k-1) terms — one shared
+    // DataFrame keeps the relations canonically identical, so the file
+    // listing happens once and exchange reuse can kick in across terms
+    val snapMemo = scala.collection.mutable.Map.empty[Int, DataFrame]
+    def snap(r: Int): DataFrame = snapMemo.getOrElseUpdate(r, {
+      val s = rels(r).snapshot(to(r))
+      b.normalized(if (r == 0) whereF(s) else s, r, Some(1L))
+    })
+    val tiny: Seq[Boolean] = rels.indices.map(r =>
+      rels(r).approxRowBound(to(r))
+        .exists(_ <= Instance.MvSemiRestrictMinRows))
+    val terms = (1 until (1 << changed.size)).map { m =>
+      val s = changed.indices.collect {
+        case j if (m & (1 << j)) != 0 => changed(j) }.toSet
+      val sign = if (s.size % 2 == 1) 1L else -1L
+      // fact component: its own delta, or the snapshot restricted to
+      // keys each in-term dim delta can match
+      val fact0 =
+        if (s(0)) deltas(0)
+        else if (tiny(0)) snap(0)
+        else s.toSeq.sorted.foldLeft(snap(0)) { (f, r) =>
+          val i = r - 1
+          val probe = deltas(r)
+            .select(col(d.dimKeys(i)).as(s"_k$i")).distinct()
+          f.join(probe, col(d.factKeys(i)) === col(s"_k$i"), "left_semi")
+        }
+      // dim components: delta if in-term, else the snapshot restricted
+      // to the fact component's join keys
+      val dims = d.dimKeys.indices.map { i =>
+        if (s(i + 1)) deltas(i + 1)
+        else if (tiny(i + 1)) snap(i + 1)
+        else {
+          val probe = fact0
+            .select(col(d.factKeys(i)).as(s"_k$i")).distinct()
+          snap(i + 1).join(probe,
+            col(d.dimKeys(i)) === col(s"_k$i"), "left_semi")
+        }
+      }
+      b.starJoin(fact0, dims, sign)
+    }
+    terms.reduce(_.unionByName(_))
+  }
 
   /** Does this failure chain bottom out in a missing input file — the
     * signature of a refresh interval whose pre-images vacuum already
@@ -1093,9 +1059,7 @@ object MaterializedAggView {
       DimJoin(VersionedTable.open(spark, d.dimPaths(i)),
         d.factKeys(i), d.dimKeys(i), d.dimSources(i)))
     new MaterializedAggView(VersionedTable.open(spark, d.sourcePath), view,
-      d.groupCols, d.sumCols, d.minCols, d.maxCols, dims, d.where,
-      d.groupPhys, d.sumPhys, d.minPhys, d.maxPhys, d.groupRels, d.sumRels,
-      d.factKeyPhys, d.dimKeyPhys, d.ndvCols, d.ndvPhys)
+      dims, d)
   }
 
   private def viewSchema(srcSchema: StructType, groupCols: Seq[String],
@@ -1198,9 +1162,9 @@ object MaterializedAggView {
       ndvCols: Seq[String] = Nil): MaterializedAggView = {
     val dims0 = dimJoin.toSeq ++ dimJoins
     val head = source.latestVersion
-    val factSchema = StructType.fromDDL(source.stateAt(head)._2)
+    val factSchema = StructType.fromDDL(source.tableStateAt(head).ddl)
     val dimSchemas = dims0.map(dj =>
-      StructType.fromDDL(dj.dim.stateAt(dj.dim.latestVersion)._2))
+      StructType.fromDDL(dj.dim.tableStateAt(dj.dim.latestVersion).ddl))
     // join views resolve each group/sum column against exactly ONE
     // relation (fact or one dim); ambiguous or missing names fail at
     // create — the owning relation is PERSISTED so refresh never has
@@ -1273,18 +1237,16 @@ object MaterializedAggView {
     val dims2 = dims0.map(dj => dj.copy(
       dimSpec = if (dj.dimSpec.nonEmpty) dj.dimSpec else dj.dim.root))
     val view = VersionedTable.create(spark, viewRoot, schema)
-    writeDef(view, MvDef(sourceSpec.getOrElse(source.root), source.root,
+    val d = MvDef(sourceSpec.getOrElse(source.root), source.root,
       groupCols, sumCols, minCols, maxCols, where,
       groupPhys, sumPhys, minPhys, maxPhys, ndvCols, ndvPhys,
       dims2.map(_.dimSpec), dims2.map(_.dim.root),
       dims2.map(_.factKey), dims2.map(_.dimKey),
-      groupRels, sumRels, factKeyPhys, dimKeyPhys))
+      groupRels, sumRels, factKeyPhys, dimKeyPhys)
+    writeDef(view, d)
     // discovery registry: every relation that feeds this view learns
     // about it (best-effort — see RegistryFile)
     (source +: dims2.map(_.dim)).foreach(t => registerView(t, viewRoot))
-    new MaterializedAggView(source, view, groupCols, sumCols,
-      minCols, maxCols, dims2, where,
-      groupPhys, sumPhys, minPhys, maxPhys, groupRels, sumRels,
-      factKeyPhys, dimKeyPhys, ndvCols, ndvPhys)
+    new MaterializedAggView(source, view, dims2, d)
   }
 }

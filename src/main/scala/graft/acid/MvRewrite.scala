@@ -5,13 +5,14 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.util.control.{ControlThrowable, NonFatal}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Session extension that installs [[MvRewriteRule]] — transparent
@@ -49,9 +50,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   *    query would scan; fresher disqualifies). A view staler by up to
   *    [[MvRewriteRule.MaxStalenessKey]] commits per relation is still
   *    used, compensated read-side with the refresh's own signed delta
-  *    fold (plain: one weighted delta; join/star: the
-  *    inclusion–exclusion union over up to TWO changed relations) —
-  *    see [[tryMatchStale]]; sum-shaped aggregates only;
+  *    ([[MaterializedAggView.signedDelta]]; join/star views over up to
+  *    TWO changed relations) — see [[tryMatch]]; sum-shaped aggregates
+  *    only;
   *  - for join views, the query's join graph matches the view's: the
   *    same set of relations (fact + every dim, each once) and a
   *    factKey = dimKey equi-conjunct per dimension — no extra
@@ -175,11 +176,55 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** Attempt the rewrite against one candidate; throws [[Bail]] on any
-    * disqualifier. */
+    * disqualifier. One matcher serves both answers; it aligns leaves,
+    * checks keys and WHERE and maps groups once, and forks only on the
+    * relation it reads and the translations it allows.
+    *
+    * An EXACTLY-FRESH view (every watermark equals its relation's
+    * pinned version) is read as it is. A STALE one — some watermark
+    * lags its pinned version by 0 < lag <=
+    * [[MvRewriteRule.MaxStalenessKey]] commits — is compensated
+    * READ-SIDE with the refresh's own signed delta
+    * ([[MaterializedAggView.signedDelta]]):
+    * `view(wm) ∪ partials(Δ(wm, pinned])`, so the rewrite stays
+    * RESULT-IDENTICAL: rows visible after each missed commit weigh +1,
+    * rows visible before it −1, and every sum-shaped aggregate nets out
+    * to the pinned snapshot's exact value. This is the read-side analog
+    * of checkpoint + WAL-tail recovery (reference: instance.rs:239-304,
+    * io.rs:260-289) — the view is the checkpoint, the weighted delta
+    * the log tail. A relation pinned BEFORE its watermark is
+    * unanswerable (the view is FRESHER than the query's snapshot — no
+    * signed fold can retract changes it already absorbed).
+    *
+    * Over the union only SUM-SHAPED translations are sound (signed
+    * weights cancel inside a Σ): `count(*)` → Σcnt, `count(c)` →
+    * Σnn_c, `count(g)` → Σ(g null ? 0 : cnt), `sum(c)` → Σsum_c and
+    * `avg(c)` → Σsum/Σnn, the last two gated on the Σnn_c witness (a
+    * cancelled-to-0 sum must read back as SQL NULL). MIN/MAX, sketch
+    * and DISTINCT translations are refused: a view group that died
+    * inside the missed interval still contributes its stored extremum /
+    * distinct tuple to the union, and no signed fold can retract it.
+    * Grouped queries get a `Σcnt > 0` liveness filter (net row count
+    * per group is always >= 0) so dead groups drop exactly like the
+    * refresh's merge-delete; global aggregates skip the filter — an
+    * emptied table still answers `count(*) = 0` / `sum = NULL`.
+    *
+    * Join/star views compensate over at most TWO changed relations
+    * (≤ 3 inclusion–exclusion terms): the shared delta materializes
+    * wider shapes with localCheckpoint, and the optimizer must never
+    * launch a job, so past the cap the rewrite falls back to the
+    * source join. Filtered join views are refused in both modes.
+    *
+    * Scale: the compensated plan costs the view scan + O(missed churn)
+    * delta files per changed relation — with the staleness bound it is
+    * strictly cheaper than the fact scan (or the fact ⨝ dims shuffle)
+    * it replaces whenever the view is, which is the same economics as
+    * the refresh itself. A vacuum that reclaims an interval's
+    * pre-images between candidate lookup and execution fails the read
+    * loudly (FileNotFound), never silently. */
   private def tryMatch(agg: Aggregate,
       leaves: Seq[(DataSourceV2Relation, GraftTable)],
       conds: Seq[Expression], cand: Candidate): LogicalPlan = {
-    if (cand.staleBy > 0) return tryMatchStale(agg, leaves, conds, cand)
     def fail(): Nothing =
       if (conf.getConfString("spark.graft.mv.rewrite.debugBail", "false")
           .toBoolean)
@@ -189,53 +234,52 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     val resolver = conf.resolver
     val d = cand.d
 
-    // ---- leaf alignment: fact + each dim, exactly once, versions
-    // matching the watermarks the view was pinned against -------------
+    // ---- leaf alignment: fact + each dim, exactly once ---------------
     val factLeaf = leaves.find(l => canon(l._2.tableRoot) == cand.srcRoot)
       .getOrElse(fail())
     val dimLeaves = cand.dims.map(db =>
       leaves.find(l => canon(l._2.tableRoot) == db.root).getOrElse(fail()))
     if ((factLeaf +: dimLeaves).distinct.size != leaves.size) fail()
-    cand.dims.zip(dimLeaves).foreach { case (db, dl) =>
-      // a dim pinned BEFORE the view's dim watermark is unanswerable
-      // (the view is FRESHER than the query's snapshot — no signed
-      // fold can retract changes it already absorbed); a dim pinned
-      // AFTER it routes to the stale-compensated path below
-      if (dl._2.tableVersion < db.wm) fail() }
-    if (cand.dims.zip(dimLeaves)
-        .exists { case (db, dl) => dl._2.tableVersion > db.wm })
-      return tryMatchStale(agg, leaves, conds, cand)
     def relLeaf(rel: Int): DataSourceV2Relation =
       if (rel == 0) factLeaf._1 else dimLeaves(rel - 1)._1
 
-
-    val vInst = VersionedTable.open(spark, cand.root)
-    val vTable = new GraftTable(vInst, vInst.tableStateAt(cand.version),
-      Some(cand.version), cand.schema, timeTraveled = true)
-    val vRel = DataSourceV2Relation.create(vTable, None, None)
-    def viewAttr(name: String): AttributeReference =
-      vRel.output.collectFirst {
-        case a: AttributeReference if resolver(a.name, name) => a
-      }.getOrElse(fail())
-
-    // def-column index of a query attribute, honoring the OWNING
-    // relation (two relations may both have a column of the name)
-    def colIdx(cols: Seq[String], rels: Seq[Int],
-        a: AttributeReference): Option[Int] =
-      cols.indices.find(j => resolver(cols(j), a.name) &&
-        relLeaf(rels(j)).outputSet.contains(a))
-    def groupIdx(a: AttributeReference) = colIdx(d.groupCols, d.groupRels, a)
-    def sumIdx(a: AttributeReference) = colIdx(d.sumCols, d.sumRels, a)
-    // min/max/ndv views are plain (fact-only) by construction
-    def minIdx(a: AttributeReference): Option[Int] =
-      d.minCols.indices.find(j => resolver(d.minCols(j), a.name) &&
-        factLeaf._1.outputSet.contains(a))
-    def maxIdx(a: AttributeReference): Option[Int] =
-      d.maxCols.indices.find(j => resolver(d.maxCols(j), a.name) &&
-        factLeaf._1.outputSet.contains(a))
-    def ndvIdx(a: AttributeReference): Option[Int] =
-      d.ndvCols.indices.find(j => resolver(d.ndvCols(j), a.name) &&
-        factLeaf._1.outputSet.contains(a))
+    // ---- per-relation staleness (0 = fact) ---------------------------
+    val pins: Seq[Long] = cand.srcVersion +: dimLeaves.map(_._2.tableVersion)
+    val wms: Seq[Long] = cand.wmLast +: cand.dims.map(_.wm)
+    if (pins.indices.exists(r => pins(r) < wms(r))) fail()
+    val changed: Seq[Int] = pins.indices.filter(r => pins(r) > wms(r))
+    val stale = changed.nonEmpty
+    if (stale) {
+      // the effective bound is CLAMPED to the delta's internal
+      // localCheckpoint batching threshold: weightedDelta folds up to
+      // ChangesBatchVersions manifests into ONE lazy union, so within
+      // the clamp candidate planning never launches a Spark job — a
+      // user raising the knob past it gets the largest job-free bound,
+      // not a job inside the optimizer
+      val maxStale = math.min(
+        try conf.getConfString(MaxStalenessKey, DefaultMaxStaleness.toString)
+          .toLong
+        catch { case NonFatal(_) => 0L },
+        Instance.ChangesBatchVersions.toLong)
+      // staler than the bound falls back to the source scan (refresh
+      // the view instead)
+      if (changed.exists(r => pins(r) - wms(r) > maxStale)) fail()
+      // read-side width cap: 2 changed relations = ≤ 3 union terms
+      if (changed.size > 2) fail()
+      // pre-screen BEFORE any manifest read or nested analyzer pass:
+      // untranslatable shapes (min/max/distinct/filter) over a stale
+      // candidate would otherwise pay the O(staleBy) delta-plan build
+      // on every optimizer fixed-point iteration just to bail later
+      def sumShaped(e: Expression): Boolean = e match {
+        case ae: AggregateExpression =>
+          !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
+            case _: Count | _: Sum | _: Average => true
+            case _ => false
+          })
+        case other => other.children.forall(sumShaped)
+      }
+      if (!agg.aggregateExpressions.forall(sumShaped)) fail()
+    }
 
     // ---- join-key conditions ------------------------------------------
     def attrIn(rel: DataSourceV2Relation, name: String): AttributeReference =
@@ -280,13 +324,75 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     if (!whereConjs.forall(wc => nonKey.exists(_.semanticEquals(wc)))) fail()
     // residual conjuncts must be deterministic and over group columns
     val residual = nonKey.filterNot(c => whereConjs.exists(_.semanticEquals(c)))
+    if (!residual.forall(_.deterministic)) fail()
+
+    // ---- the answer relation: the pinned view, or view ∪ Δ ------------
+    val vInst = VersionedTable.open(spark, cand.root)
+    val vTable = new GraftTable(vInst, vInst.tableStateAt(cand.version),
+      Some(cand.version), cand.schema, timeTraveled = true)
+    val answer: LogicalPlan =
+      if (!stale) DataSourceV2Relation.create(vTable, None, None)
+      else {
+        val insts: Seq[Instance] = (cand.srcRoot +: cand.dims.map(_.root))
+          .map(VersionedTable.open(spark, _))
+        // re-check the vacuum horizon at MATCH time (candidates are
+        // cached up to 10s): a vacuum that reclaimed a changed
+        // relation's (wm, pinned] pre-images after candidate compute
+        // must fall back to the source scan, not build a delta over
+        // missing files. The residual window (vacuum between here and
+        // execution) fails loudly with FileNotFound — and NOTE:
+        // spark.sql.files.ignoreMissingFiles=true would turn that loud
+        // failure into silently dropped compensation rows; compensated
+        // reads require it off (the default).
+        changed.foreach(r => if (wms(r) < insts(r).vacuumHorizon) fail())
+        import org.apache.spark.sql.functions.col
+        val partials = MaterializedAggView.signedPartials(d.sumCols,
+          MaterializedAggView.sumStore(cand.schema))
+        // the view snapshot is pinned at the candidate's view version
+        // and the delta at the watermarks THAT version recorded — a
+        // concurrent refresh between lookup and execution cannot skew
+        // the pair
+        val viewDf = PlanBridge.tableFrame(spark, vTable)
+          .select((d.groupCols.map(col) ++ partials.map(p => col(p._1))): _*)
+        val deltaDf = MaterializedAggView.signedDelta(d, insts, wms, pins)
+          .select((d.groupCols.map(col) ++
+            partials.map { case (n, e) => e.as(n) }): _*)
+        // the fragment splices into an ALREADY-OPTIMIZING plan, so the
+        // analysis-only nodes the DataFrame build leaves behind must go
+        // here: SubqueryAlias (the star join's R0/R1/… disambiguators)
+        // and Deduplicate (the semi-join key probes' distinct()) have no
+        // physical strategy — the optimizer batches that normally remove
+        // them ran before this rule fired
+        org.apache.spark.sql.catalyst.optimizer.ReplaceDeduplicateWithAggregate(
+          org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases(
+            viewDf.unionByName(deltaDf).queryExecution.analyzed))
+      }
+    def viewAttr(name: String): AttributeReference =
+      answer.output.collectFirst {
+        case a: AttributeReference if resolver(a.name, name) => a
+      }.getOrElse(fail())
+
+    // def-column index of a query attribute, honoring the OWNING
+    // relation (two relations may both have a column of the name)
+    def colIdx(cols: Seq[String], rels: Seq[Int],
+        a: AttributeReference): Option[Int] =
+      cols.indices.find(j => resolver(cols(j), a.name) &&
+        relLeaf(rels(j)).outputSet.contains(a))
+    def groupIdx(a: AttributeReference) = colIdx(d.groupCols, d.groupRels, a)
+    def sumIdx(a: AttributeReference) = colIdx(d.sumCols, d.sumRels, a)
+    // min/max/ndv views are plain (fact-only) by construction
+    def factIdx(cols: Seq[String], a: AttributeReference) =
+      colIdx(cols, cols.map(_ => 0), a)
+    def minIdx(a: AttributeReference) = factIdx(d.minCols, a)
+    def maxIdx(a: AttributeReference) = factIdx(d.maxCols, a)
+    def ndvIdx(a: AttributeReference) = factIdx(d.ndvCols, a)
+
     def remapGroupOnly(e: Expression): Expression = e.transformUp {
       case a: AttributeReference => groupIdx(a) match {
         case Some(j) => viewAttr(d.groupCols(j))
         case None => fail()
       }
     }
-    if (!residual.forall(_.deterministic)) fail()
     val remappedResidual = residual.map(remapGroupOnly)
 
     // ---- grouping -----------------------------------------------------
@@ -312,6 +418,14 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
+    // over the compensated union, cancellation can net a dead-value sum
+    // to 0 where SQL wants NULL: gate on the non-null witness, exactly
+    // the stored view's nn contract
+    def nnGate(n: String, dt: DataType, e: Expression): Expression =
+      if (!stale) e
+      else If(EqualTo(cntShape(aggE(new Sum(viewAttr("nn_" + n)))),
+          Literal(0L)),
+        Literal(null, dt), e)
     // estimate(union of stored per-group sketches) answers within the
     // sketches' rsd but is NOT bit-identical to the direct plan's
     // estimate: a DataSketches sketch built by streaming carries the
@@ -362,7 +476,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           // stored partial is lossless
           case a: AttributeReference if sumIdx(a).isDefined &&
               s.dataType == LongType =>
-            aggE(new Sum(viewAttr("sum_" + d.sumCols(sumIdx(a).get))))
+            val n = d.sumCols(sumIdx(a).get)
+            nnGate(n, LongType, aggE(new Sum(viewAttr("sum_" + n))))
           // decimal: the stored partial is the full-precision
           // DECIMAL(38, s) sum; re-summing and casting to the query's
           // Sum type (p+10 capped at 38) matches the direct plan,
@@ -370,8 +485,9 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           case a: AttributeReference if sumIdx(a).isDefined &&
               s.dataType.isInstanceOf[DecimalType] &&
               a.dataType.isInstanceOf[DecimalType] =>
-            Cast(aggE(new Sum(
-              viewAttr("sum_" + d.sumCols(sumIdx(a).get)))), s.dataType)
+            val n = d.sumCols(sumIdx(a).get)
+            nnGate(n, s.dataType,
+              Cast(aggE(new Sum(viewAttr("sum_" + n))), s.dataType))
           case _ => fail()
         }
         case av: Average => av.child match {
@@ -380,9 +496,9 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
             val n = d.sumCols(sumIdx(a).get)
             // avg(c) = sum(c) / count(NON-NULL c); null-safe division:
             // an all-null group sums to null -> null, never /0
-            new Divide(
+            nnGate(n, DoubleType, new Divide(
               Cast(aggE(new Sum(viewAttr("sum_" + n))), DoubleType),
-              Cast(aggE(new Sum(viewAttr("nn_" + n))), DoubleType))
+              Cast(aggE(new Sum(viewAttr("nn_" + n))), DoubleType)))
           case _ => fail()
         }
         case m: Min => m.child match {
@@ -475,8 +591,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       }
     }
     val child: LogicalPlan =
-      if (remappedResidual.isEmpty) vRel
-      else Filter(remappedResidual.reduce(And), vRel)
+      if (remappedResidual.isEmpty) answer
+      else Filter(remappedResidual.reduce(And), answer)
     val newGes = agg.groupingExpressions.map {
       case a: AttributeReference => groupMap(a.exprId)
       case _ => fail()
@@ -485,440 +601,25 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       s"${cand.srcVersion}" +
       (if (cand.dims.isEmpty) ""
        else s" ⨝ ${cand.dims.map(_.root).mkString(", ")}") +
-      s" now reads view ${cand.root}@v${cand.version}")
-    Aggregate(newGes, newAes, child)
-  }
-
-  /** STALE-TOLERANT rewrite: the view's watermark `wm` lags the
-    * query's pinned fact version by `staleBy` commits (0 < staleBy <=
-    * [[MvRewriteRule.MaxStalenessKey]]). The answer is compensated
-    * READ-SIDE with exactly the signed fold refresh would apply —
-    * `view(wm) ∪ shape(weightedDelta(wm, pinned))` — so the rewrite
-    * stays RESULT-IDENTICAL: rows visible after each missed commit
-    * weigh +1, rows visible before it −1, and every sum-shaped
-    * aggregate nets out to the pinned snapshot's exact value. This is
-    * the read-side analog of checkpoint + WAL-tail recovery
-    * (reference: instance.rs:239-304, io.rs:260-289) — the view is
-    * the checkpoint, the weighted delta the log tail.
-    *
-    * Only SUM-SHAPED translations are sound over the union (signed
-    * weights cancel inside a Σ): `count(*)` → Σcnt, `count(c)` →
-    * Σnn_c, `count(g)` → Σ(g null ? 0 : cnt), `sum(c)` → Σsum_c
-    * gated on the Σnn_c witness (a cancelled-to-0 sum must read back
-    * as SQL NULL), `avg(c)` → Σsum/Σnn. MIN/MAX, sketch and DISTINCT
-    * translations are refused: a view group that died inside the
-    * missed interval still contributes its stored extremum /
-    * distinct tuple to the union, and no signed fold can retract it.
-    * Grouped queries get a `Σcnt > 0` liveness filter (net row count
-    * per group is always >= 0) so dead groups drop exactly like the
-    * refresh's merge-delete; global aggregates skip the filter — an
-    * emptied table still answers `count(*) = 0` / `sum = NULL`.
-    *
-    * JOIN/STAR views compensate with the refresh's own
-    * inclusion–exclusion identity applied READ-SIDE over the missed
-    * interval per relation (MaterializedView.scala refresh():
-    * `Δ(Π r) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} Π_{r∈S} Δr ⨝ Π_{r∉S}
-    * r_pinned`, every not-in-term snapshot SEMI-JOIN restricted to the
-    * keys the term's deltas can match) — capped at TWO changed
-    * relations (≤ 3 union terms): the refresh materializes wider
-    * shapes with localCheckpoint, and the optimizer must never launch
-    * a job, so past the cap the rewrite falls back to the source join.
-    * Filtered join views stay refused (same as the exact path).
-    *
-    * Scale: the compensated plan costs the view scan + O(missed
-    * churn) delta files per changed relation — with the staleness
-    * bound it is strictly cheaper than the fact scan (or the fact ⨝
-    * dims shuffle) it replaces whenever the view is, which is the
-    * same economics as the refresh itself. A vacuum that reclaims an
-    * interval's pre-images between candidate lookup and execution
-    * fails the read loudly (FileNotFound), never silently. */
-  private def tryMatchStale(agg: Aggregate,
-      leaves: Seq[(DataSourceV2Relation, GraftTable)],
-      conds: Seq[Expression], cand: Candidate): LogicalPlan = {
-    def fail(): Nothing =
-      if (conf.getConfString("spark.graft.mv.rewrite.debugBail", "false")
-          .toBoolean)
-        throw new RuntimeException("stale bail at " +
-          Thread.currentThread.getStackTrace.drop(2).take(4).mkString(" <- "))
-      else throw Bail
-    // the effective bound is CLAMPED to the delta's internal
-    // localCheckpoint batching threshold: weightedDelta folds up to
-    // ChangesBatchVersions manifests into ONE lazy union, so within
-    // the clamp candidate planning never launches a Spark job — a
-    // user raising the knob past it gets the largest job-free bound,
-    // not a job inside the optimizer
-    val maxStale = math.min(
-      try conf.getConfString(MaxStalenessKey, DefaultMaxStaleness.toString)
-        .toLong
-      catch { case NonFatal(_) => 0L },
-      Instance.ChangesBatchVersions.toLong)
-    if (maxStale <= 0 || cand.staleBy > maxStale) fail()
-    val resolver = conf.resolver
-    val d = cand.d
-
-    // ---- leaf alignment (same as the exact path) ---------------------
-    val factLeaf = leaves.find(l => canon(l._2.tableRoot) == cand.srcRoot)
-      .getOrElse(fail())
-    val dimLeaves = cand.dims.map(db =>
-      leaves.find(l => canon(l._2.tableRoot) == db.root).getOrElse(fail()))
-    if ((factLeaf +: dimLeaves).distinct.size != leaves.size) fail()
-
-    // ---- per-relation staleness (0 = fact) ---------------------------
-    val pins: Seq[Long] =
-      cand.srcVersion +: dimLeaves.map(_._2.tableVersion)
-    val wms: Seq[Long] = cand.wmLast +: cand.dims.map(_.wm)
-    val stales = pins.lazyZip(wms).map(_ - _)
-    // fresher-than-pinned is unanswerable; staler than the bound falls
-    // back to the source scan (refresh the view instead)
-    if (stales.exists(s => s < 0 || s > maxStale)) fail()
-    val changed: Seq[Int] = stales.indices.filter(stales(_) > 0)
-    if (changed.isEmpty) fail() // exactly fresh — the exact path's job
-    // read-side width cap: 2 changed relations = ≤ 3 union terms. The
-    // refresh materializes wider inclusion–exclusion shapes with
-    // localCheckpoint; the optimizer must never launch a job, so past
-    // the cap the source join is the honest plan.
-    if (changed.size > 2) fail()
-
-    // pre-screen BEFORE any manifest read or nested analyzer pass:
-    // untranslatable shapes (min/max/distinct/filter) over a stale
-    // candidate would otherwise pay the O(staleBy) delta-plan build on
-    // every optimizer fixed-point iteration just to bail in translate()
-    def sumShaped(e: Expression): Boolean = e match {
-      case ae: AggregateExpression =>
-        !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
-          case _: Count | _: Sum | _: Average => true
-          case _ => false
-        })
-      case other => other.children.forall(sumShaped)
-    }
-    if (!agg.aggregateExpressions.forall(sumShaped)) fail()
-
-    // ---- join-key conditions (same contract as the exact path) -------
-    def attrIn(rel: DataSourceV2Relation, name: String): AttributeReference =
-      rel.output.collectFirst {
-        case a: AttributeReference if resolver(a.name, name) => a
-      }.getOrElse(fail())
-    val keyPairs = cand.dims.zip(dimLeaves).map { case (db, dl) =>
-      (attrIn(factLeaf._1, db.factKey), attrIn(dl._1, db.dimKey)) }
-    def isKeyCond(e: Expression): Boolean = e match {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        keyPairs.exists { case (fk, dk) =>
-          (a.exprId == fk.exprId && b.exprId == dk.exprId) ||
-          (a.exprId == dk.exprId && b.exprId == fk.exprId) }
-      case _ => false
-    }
-    keyPairs.foreach { case (fk, dk) =>
-      if (!conds.exists {
-        case EqualTo(a: AttributeReference, b: AttributeReference) =>
-          (a.exprId == fk.exprId && b.exprId == dk.exprId) ||
-          (a.exprId == dk.exprId && b.exprId == fk.exprId)
-        case _ => false
-      }) fail()
-    }
-    val nonKey = conds.filterNot(isKeyCond)
-
-    // ---- WHERE compatibility (same contract as the exact path) ------
-    if (cand.dims.nonEmpty && d.where.isDefined) fail()
-    val whereConjs: Seq[Expression] = d.where match {
-      case None => Nil
-      case Some(sql) =>
-        val parsed = spark.sessionState.sqlParser.parseExpression(sql)
-        val analyzed =
-          try spark.sessionState.analyzer.execute(Filter(parsed, factLeaf._1))
-          catch { case NonFatal(_) => fail() }
-        org.apache.spark.sql.catalyst.optimizer.ConstantFolding(analyzed) match {
-          case Filter(c, _) => splitConjunctivePredicates(c)
-          case _ => fail()
-        }
-    }
-    if (!whereConjs.forall(wc => nonKey.exists(_.semanticEquals(wc)))) fail()
-    val residual = nonKey.filterNot(c => whereConjs.exists(_.semanticEquals(c)))
-    if (!residual.forall(_.deterministic)) fail()
-
-    // ---- compensated child: view(wm) ∪ shape(Δ(wm, pinned]) ----------
-    // The view snapshot is pinned at the candidate's view version and
-    // the delta at the watermarks THAT version recorded — a concurrent
-    // refresh between lookup and execution cannot skew the pair.
-    import org.apache.spark.sql.functions.{col, expr => sqlExpr, lit, when}
-    val srcInst = VersionedTable.open(spark, cand.srcRoot)
-    val insts: Seq[Instance] =
-      srcInst +: cand.dims.map(db => VersionedTable.open(spark, db.root))
-    // re-check the vacuum horizon at MATCH time (candidates are cached
-    // up to 10s): a vacuum that reclaimed a changed relation's
-    // (wm, pinned] pre-images after candidate compute must fall back
-    // to the source scan, not build a delta over missing files. The
-    // residual window (vacuum between here and execution) fails loudly
-    // with FileNotFound — and NOTE:
-    // spark.sql.files.ignoreMissingFiles=true would turn that loud
-    // failure into silently dropped compensation rows; compensated
-    // reads require it off (the default).
-    changed.foreach(r => if (wms(r) < insts(r).vacuumHorizon) fail())
-    val partialCols: Seq[Column] =
-      d.groupCols.map(col) ++ (col("cnt") +:
-        d.sumCols.flatMap(c => Seq(col(s"sum_$c"), col(s"nn_$c"))))
-    // the view reads through the DSv2 provider (version-pinned) so the
-    // rewritten plan carries the view's identity — observable in
-    // explain output, and the same scan path the exact rewrite uses
-    val viewDf = spark.read.format("graft").option("path", cand.root)
-      .option("versionAsOf", cand.version).load().select(partialCols: _*)
-    // signed rows over the missed interval, view-named + weight `_w`.
-    // Column names here are the view's CREATE-TIME logical names —
-    // valid against each relation's pinned snapshot because the
-    // candidate passed renameStable (a renamed column disqualified it).
-    val relOfC: Map[String, Int] =
-      (d.groupCols.zip(d.groupRels) ++ d.sumCols.zip(d.sumRels)).toMap
-    val weightedRows: org.apache.spark.sql.DataFrame =
-      if (cand.dims.isEmpty) {
-        val delta0 = srcInst.weightedDelta(cand.wmLast, cand.srcVersion,
-          alignToHead = true)
-        d.where.fold(delta0)(p => delta0.filter(sqlExpr(p)))
-      } else {
-        // READ-SIDE inclusion–exclusion over the changed relations —
-        // the refresh's own identity (MaterializedView.scala refresh):
-        //   Δ(Π r) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
-        //            Π_{r∈S} Δr(wm_r, pin_r] ⨝ Π_{r∉S} r@pin_r
-        // with every snapshot factor SEMI-JOIN restricted to the keys
-        // the term's deltas can actually match (lossless for an inner
-        // join), so each term reads O(churn) + key-restricted
-        // snapshots, never a full star join.
-        def ownedCols(r: Int): Seq[String] =
-          (d.groupCols ++ d.sumCols).distinct.filter(relOfC(_) == r)
-        def keysOf(r: Int): Seq[String] =
-          if (r == 0) cand.dims.map(_.factKey)
-          else Seq(cand.dims(r - 1).dimKey)
-        def normalized(df: org.apache.spark.sql.DataFrame, r: Int,
-            w: Option[Column]): org.apache.spark.sql.DataFrame =
-          df.select(((ownedCols(r) ++ keysOf(r)).distinct.map(col) :+
-            w.getOrElse(col("_w")).as(s"_w$r")): _*)
-        def starJoin(fact: org.apache.spark.sql.DataFrame,
-            dims: Seq[org.apache.spark.sql.DataFrame],
-            sign: Long): org.apache.spark.sql.DataFrame = {
-          var j = fact.alias("R0")
-          cand.dims.zipWithIndex.foreach { case (db, i) =>
-            j = j.join(dims(i).alias(s"R${i + 1}"),
-              col(s"R0.${db.factKey}") === col(s"R${i + 1}.${db.dimKey}"))
-          }
-          val outs = (d.groupCols ++ d.sumCols).distinct.map(c =>
-            col(s"R${relOfC(c)}.$c").as(c))
-          val w = (0 to cand.dims.size).map(r => col(s"R$r._w$r"))
-            .reduce(_ * _) * lit(sign)
-          j.select((outs :+ w.as("_w")): _*)
-        }
-        val dRel: Map[Int, org.apache.spark.sql.DataFrame] =
-          changed.map(r => r -> normalized(
-            insts(r).weightedDelta(wms(r), pins(r), alignToHead = true),
-            r, None)).toMap
-        // memoized: a snapshot factor appears in up to 2^(k-1) terms —
-        // one shared relation (one file listing, reusable scan)
-        val snapMemo =
-          scala.collection.mutable.Map
-            .empty[Int, org.apache.spark.sql.DataFrame]
-        def snapOf(r: Int): org.apache.spark.sql.DataFrame =
-          snapMemo.getOrElseUpdate(r,
-            normalized(insts(r).snapshot(pins(r)), r, Some(lit(1L))))
-        // same stats-driven restriction floor as the refresh's own
-        // delta (MaterializedView.scala): a snapshot the manifest row
-        // counts bound under mvSemiRestrictMinRows skips the per-term
-        // key probe — lossless for an inner join, and the probe's
-        // distinct+exchange is pure overhead at that size. Hoisted out
-        // of the 2^k-term loop (each bound walks the state's file
-        // stats, and this runs inside the analyzer rule).
-        val tinySnapOf: Map[Int, Boolean] =
-          (0 to cand.dims.size).map(r => r ->
-            insts(r).approxRowBound(pins(r))
-              .exists(_ <= insts(r).conf.mvSemiRestrictMinRows)).toMap
-        def tinySnap(r: Int): Boolean = tinySnapOf(r)
-        val terms = (1 until (1 << changed.size)).map { m =>
-          val s = changed.indices.collect {
-            case j if (m & (1 << j)) != 0 => changed(j) }.toSet
-          val sign = if (s.size % 2 == 1) 1L else -1L
-          val fact0 =
-            if (s(0)) dRel(0)
-            else if (tinySnap(0)) snapOf(0)
-            else s.toSeq.sorted.filter(_ > 0).foldLeft(snapOf(0)) { (f, r) =>
-              val i = r - 1
-              val probe = dRel(r)
-                .select(col(cand.dims(i).dimKey).as(s"_k$i")).distinct()
-              f.join(probe,
-                col(cand.dims(i).factKey) === col(s"_k$i"), "left_semi")
-            }
-          val dimDfs = cand.dims.indices.map { i =>
-            if (s(i + 1)) dRel(i + 1)
-            else if (tinySnap(i + 1)) snapOf(i + 1)
-            else {
-              val probe = fact0
-                .select(col(cand.dims(i).factKey).as(s"_k$i")).distinct()
-              snapOf(i + 1).join(probe,
-                col(cand.dims(i).dimKey) === col(s"_k$i"), "left_semi")
-            }
-          }
-          starJoin(fact0, dimDfs, sign)
-        }
-        terms.reduce(_.unionByName(_))
-      }
-    // per-column STORED partial type (long, or DECIMAL(38, s) for
-    // decimal sources) from the view's own schema: the compensation
-    // partials must union against the view columns type-exactly
-    def sumStore(c: String): DataType =
-      cand.schema.fields.collectFirst {
-        case f if f.name == s"sum_$c" => f.dataType
-      }.getOrElse(LongType)
-    val deltaDf = weightedRows.select(
-      (d.groupCols.map(col) ++ (col("_w").as("cnt") +:
-        d.sumCols.flatMap(c => Seq(
-          (col(c).cast(sumStore(c)) * col("_w")).cast(sumStore(c))
-            .as(s"sum_$c"),
-          when(col(c).isNotNull, col("_w")).otherwise(lit(0L))
-            .as(s"nn_$c"))))): _*)
-    // the fragment splices into an ALREADY-OPTIMIZING plan, so the
-    // analysis-only nodes the DataFrame build leaves behind must go
-    // here: SubqueryAlias (the star join's R0/R1/… disambiguators) and
-    // Deduplicate (the semi-join key probes' distinct()) have no
-    // physical strategy — the optimizer batches that normally remove
-    // them ran before this rule fired
-    val unionPlan =
-      org.apache.spark.sql.catalyst.optimizer.ReplaceDeduplicateWithAggregate(
-        org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases(
-          viewDf.unionByName(deltaDf).queryExecution.analyzed))
-    def uAttr(name: String): AttributeReference =
-      unionPlan.output.collectFirst {
-        case a: AttributeReference if resolver(a.name, name) => a
-      }.getOrElse(fail())
-
-    // def-column index of a query attribute, honoring the OWNING
-    // relation (two relations may both have a column of the name)
-    def relLeaf(rel: Int): DataSourceV2Relation =
-      if (rel == 0) factLeaf._1 else dimLeaves(rel - 1)._1
-    def groupIdx(a: AttributeReference): Option[Int] =
-      d.groupCols.indices.find(j => resolver(d.groupCols(j), a.name) &&
-        relLeaf(d.groupRels(j)).outputSet.contains(a))
-    def sumIdx(a: AttributeReference): Option[Int] =
-      d.sumCols.indices.find(j => resolver(d.sumCols(j), a.name) &&
-        relLeaf(d.sumRels(j)).outputSet.contains(a))
-
-    def remapGroupOnly(e: Expression): Expression = e.transformUp {
-      case a: AttributeReference => groupIdx(a) match {
-        case Some(j) => uAttr(d.groupCols(j))
-        case None => fail()
-      }
-    }
-    val remappedResidual = residual.map(remapGroupOnly)
-
-    val groupMap: Map[ExprId, AttributeReference] =
-      agg.groupingExpressions.map {
-        case a: AttributeReference => groupIdx(a) match {
-          case Some(j) => a.exprId -> uAttr(d.groupCols(j))
-          case None => fail()
-        }
-        case _ => fail()
-      }.toMap
-
-    // ---- sum-shaped translations only ---------------------------------
-    def aggE(f: AggregateFunction): AggregateExpression =
-      AggregateExpression(f, Complete, isDistinct = false)
-    def cntShape(e: Expression): Expression =
-      Coalesce(Seq(e, Literal(0L)))
-    def integral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def translate(ae: AggregateExpression): Expression = {
-      if (ae.filter.isDefined || ae.isDistinct) fail()
-      ae.aggregateFunction match {
-        case c: Count
-            if c.children.forall(ch => ch.foldable && ch.eval(null) != null) =>
-          cntShape(aggE(new Sum(uAttr("cnt"))))
-        case c: Count => c.children match {
-          case Seq(a: AttributeReference) if sumIdx(a).isDefined =>
-            cntShape(aggE(new Sum(
-              uAttr("nn_" + d.sumCols(sumIdx(a).get)))))
-          case Seq(a: AttributeReference) if groupIdx(a).isDefined =>
-            val g = uAttr(d.groupCols(groupIdx(a).get))
-            cntShape(aggE(new Sum(
-              If(IsNull(g), Literal(0L), uAttr("cnt")))))
-          case _ => fail()
-        }
-        case s: Sum => s.child match {
-          case a: AttributeReference if sumIdx(a).isDefined &&
-              s.dataType == LongType =>
-            // cancellation can net a dead-value sum to 0 where SQL
-            // wants NULL — gate on the non-null witness, exactly the
-            // stored view's nn contract
-            val n = d.sumCols(sumIdx(a).get)
-            If(EqualTo(cntShape(aggE(new Sum(uAttr("nn_" + n)))),
-                Literal(0L)),
-              Literal(null, LongType),
-              aggE(new Sum(uAttr("sum_" + n))))
-          // decimal: same nn-gated shape over the DECIMAL(38, s)
-          // partials, cast to the query's Sum type (overflow-to-NULL
-          // matches the direct plan's narrower precision)
-          case a: AttributeReference if sumIdx(a).isDefined &&
-              s.dataType.isInstanceOf[DecimalType] &&
-              a.dataType.isInstanceOf[DecimalType] =>
-            val n = d.sumCols(sumIdx(a).get)
-            If(EqualTo(cntShape(aggE(new Sum(uAttr("nn_" + n)))),
-                Literal(0L)),
-              Literal(null, s.dataType),
-              Cast(aggE(new Sum(uAttr("sum_" + n))), s.dataType))
-          case _ => fail()
-        }
-        case av: Average => av.child match {
-          case a: AttributeReference if sumIdx(a).isDefined &&
-              av.dataType == DoubleType && integral(a.dataType) =>
-            val n = d.sumCols(sumIdx(a).get)
-            val nn = cntShape(aggE(new Sum(uAttr("nn_" + n))))
-            If(EqualTo(nn, Literal(0L)), Literal(null, DoubleType),
-              new Divide(
-                Cast(aggE(new Sum(uAttr("sum_" + n))), DoubleType),
-                Cast(nn, DoubleType)))
-          case _ => fail()
-        }
-        case _ => fail()
-      }
-    }
-    def tx(e: Expression): Expression = e match {
-      case ae: AggregateExpression => translate(ae)
-      case a: AttributeReference => groupMap.getOrElse(a.exprId, fail())
-      case other => other.mapChildren(tx)
-    }
-    val newAes: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case al: Alias =>
-        Alias(tx(al.child), al.name)(exprId = al.exprId,
-          qualifier = al.qualifier, explicitMetadata = al.explicitMetadata)
-      case a: AttributeReference =>
-        Alias(tx(a), a.name)(exprId = a.exprId, qualifier = a.qualifier)
-      case _ => fail()
-    }
-    agg.aggregateExpressions.zip(newAes).foreach { case (o, n) =>
-      if (o.name != n.name || o.dataType != n.dataType ||
-          (!o.nullable && n.nullable)) fail()
-    }
-    val child: LogicalPlan =
-      if (remappedResidual.isEmpty) unionPlan
-      else Filter(remappedResidual.reduce(And), unionPlan)
-    val newGes = agg.groupingExpressions.map {
-      case a: AttributeReference => groupMap(a.exprId)
-      case _ => fail()
-    }
-    logInfo(s"mv rewrite (stale by ${cand.staleBy}): aggregate over " +
-      s"${cand.srcRoot}@v${cand.srcVersion} now reads view " +
-      s"${cand.root}@v${cand.version} ⊕ Δ(${cand.wmLast}, " +
-      s"${cand.srcVersion}]")
-    if (agg.groupingExpressions.isEmpty) Aggregate(Nil, newAes, child)
+      s" now reads view ${cand.root}@v${cand.version}" +
+      (if (stale) s" ⊕ Δ(${wms.mkString(",")}; ${pins.mkString(",")}]"
+       else ""))
+    if (!stale || newGes.isEmpty) Aggregate(newGes, newAes, child)
     else {
       // liveness: a group whose rows all died inside the missed
       // interval nets Σcnt = 0 and must not surface (the refresh's
       // merge would have deleted it); Σcnt is never negative
-      val live = Alias(cntShape(aggE(new Sum(uAttr("cnt")))), "_live")()
+      val live = Alias(cntShape(aggE(new Sum(viewAttr("cnt")))), "_live")()
       Project(newAes.map(_.toAttribute),
         Filter(GreaterThan(live.toAttribute, Literal(0L)),
           Aggregate(newGes, newAes :+ live, child)))
     }
   }
 
-  /** Views of (root, pinned version) that are exactly fresh (fact
-    * watermark == version; join views additionally carry the per-dim
-    * watermarks the query's dim relations must be pinned at) and
+  /** Views of (root, pinned version) whose fact watermark is the
+    * version or, after at least one refresh, lags it inside the vacuum
+    * horizon (join views additionally carry the per-dim watermarks
+    * [[tryMatch]] checks the query's dim pins against) and that are
     * rename-stable — memoized for [[TtlNanos]]. */
   private def candidates(root: String, version: Long): Seq[Candidate] = {
     val key = (canon(root), version)
@@ -965,10 +666,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           val marks = vInst.appTxnsAt(vv)
           val app = "mv:" + canon(vr)
           val wm = marks.getOrElse(app, -1L)
-          // views may lag the pinned version: tryMatchStale compensates
-          // read-side with the refresh's own signed fold (plain:
-          // weightedDelta(wmLast, version]; join/star: the
-          // inclusion–exclusion union over the changed relations) —
+          // views may lag the pinned version: tryMatch compensates
+          // read-side with the refresh's own signed delta —
           // but only when the view has completed at least one refresh
           // (wm >= 0; a never-refreshed view would "compensate" an
           // empty scan with a full-history fold — result-correct but
@@ -992,7 +691,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
             if (dims.exists(_.wm < 0)) None
             else if (!renameStable(d, version, factRenames, dims)) None
             else {
-              val schema = StructType.fromDDL(vInst.stateAt(vv)._2)
+              val schema = StructType.fromDDL(vInst.tableStateAt(vv).ddl)
               Some(Candidate(canon(vr), vv, schema, d,
                 canon(root), version, dims,
                 staleBy = version - math.max(0L, wm),
@@ -1052,7 +751,7 @@ object MvRewriteRule {
   val NdvSubstituteKey = "spark.graft.mv.rewrite.ndvSubstitute"
 
   /** Bounded-staleness knob for the read-side-compensated rewrite
-    * ([[MvRewriteRule.tryMatchStale]]): a view whose watermark lags
+    * ([[MvRewriteRule.tryMatch]]): a view whose watermark lags
     * the query's pinned version by up to this many commits — PER
     * RELATION for join/star views, at most two relations changed — is
     * still used, compensated with `view ⊕ Δ(wm, pinned]` (the plain

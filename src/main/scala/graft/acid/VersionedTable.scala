@@ -305,7 +305,7 @@ object VersionedTable {
   /** Dotted PHYSICAL leaf paths to stat-index for file skipping:
     * either the explicit [[EngineConf.statsColumnList]] (logical
     * names; naming a struct indexes all its primitive leaves) or the
-    * first [[EngineConf.statsColumns]] top-level fields — in both
+    * first [[Instance.StatsColumns]] top-level fields — in both
     * cases RECURSING into struct leaves, so `props.country`-style
     * fields are skippable. Array/map internals are excluded (their
     * element stats cannot veto row-level predicates). `obj_id` (the
@@ -332,7 +332,7 @@ object VersionedTable {
           case Some(_) => Seq(e)
           case None => Nil
         })
-      else logical.fields.take(conf.statsColumns).toSeq
+      else logical.fields.take(Instance.StatsColumns).toSeq
         .flatMap(f => leaves(f.name, f.dataType))
     // column mapping applies to the TOP-LEVEL segment only (nested
     // fields keep their names; only roots get physical indirection).
@@ -621,6 +621,16 @@ object VersionedTable {
       }
     }
 
+  /** One commit's effect on a deletion-vector map: entries of `removed`
+    * files drop, then each `delta` entry REPLACES its file's sidecar
+    * list, and an empty list clears it. */
+  private[acid] def foldDvs(dvs: Map[String, Seq[String]],
+      removed: Iterable[String],
+      delta: Iterable[(String, Seq[String])]): Map[String, Seq[String]] =
+    delta.foldLeft(dvs -- removed) { case (acc, (f, list)) =>
+      if (list.isEmpty) acc - f else acc.updated(f, list)
+    }
+
   private[acid] def dvPosFromJson(s: String): Map[String, GraftBitmap] = {
     val n = MetaJson.parse(
       MetaJson.unseal(s, "positional deletion-vector sidecar"))
@@ -768,12 +778,6 @@ private[acid] object JobLabel {
   *                             lock-wait timeout (tran_mgr.rs:85-127)
   * @param conflictBackoffMs    base backoff between retry attempts
   *                             (linear: attempt * backoff)
-  * @param idBroadcastThreshold point-op id-set size above which
-  *                             delete/update switch from an `isin`
-  *                             literal predicate to a broadcast
-  *                             semi/anti join (literal lists expand
-  *                             into the plan; millions of ids would
-  *                             blow up compilation)
   * @param orphanGraceMs        vacuum's orphan sweep (on by default)
   *                             only deletes unreferenced staging files
   *                             older than this. HARD CONSTRAINT: no
@@ -814,14 +818,7 @@ private[acid] object JobLabel {
   *                             replay protection — size it above the
   *                             longest restart gap. Entries with no
   *                             stamp (legacy manifests) are never
-  *                             expired.
-  * @param statsColumns         leading schema columns for which every
-  *                             staged file records universal footer
-  *                             min/max/null-count stats in the manifest
-  *                             ([[VersionedTable.UStat]]) — Delta's
-  *                             dataSkippingNumIndexedCols analog; 0
-  *                             disables collection (obj_id's primary
-  *                             range index is always on) */
+  *                             expired. */
 final case class EngineConf(
     checkpointInterval: Int = 10,
     // live-file count past which checkpoints switch from the inline
@@ -914,21 +911,11 @@ final case class EngineConf(
     // rarely collide.
     commitLock: Boolean = false,
     commitLockTimeoutMs: Long = 30000L,
-    // tiny staged writes (a LOCAL relation of <= fastPathRows rows,
-    // unpartitioned) skip the Spark job entirely: the rows are written
-    // to ONE parquet file on the driver through Spark's own
-    // ParquetWriteSupport (identical schema, footer stats, and
-    // compression to the job path). Removes the ~150 ms per-commit
-    // job floor that dominates streaming epochs and single-row
-    // upserts. 0 = always use the job path.
-    fastPathRows: Int = 64,
-    idBroadcastThreshold: Int = 1000,
     orphanGraceMs: Long = 24L * 3600 * 1000,
     objectListThreshold: Int = 100000,
     bloomBits: Long = 1L << 23,
     claimer: ManifestClaimer = LinkRenameClaimer,
     appTxnRetentionMs: Long = Long.MaxValue,
-    statsColumns: Int = 32,
     // longest commit interval a materialized-view refresh folds
     // INCREMENTALLY: a view catching up over more versions than this
     // (e.g. after weeks offline) rebuilds from the head snapshot
@@ -948,31 +935,6 @@ final case class EngineConf(
     // falls back to the bounded snapshot rebuild (same fallback as
     // mvRebuildMaxInterval). Default 5 = at most 31 terms.
     mvMaxChangedSides: Int = 5,
-    // STATS-DRIVEN planner floor for the star-delta's quiet-side
-    // restriction: a quiet relation's snapshot in an incremental
-    // refresh term is SEMI-JOIN restricted to the keys the term's
-    // deltas can match — O(churn) reads at scale — but the probe
-    // (distinct + exchange + broadcast) costs 2-3 Spark stages per
-    // term, which is pure overhead when the whole snapshot is smaller
-    // than one shuffle partition. Below this row bound (from manifest
-    // footer counts, a driver-side metadata read; lossless either way
-    // for an inner join) the term scans the snapshot directly. Any
-    // production table exceeds this instantly, so at 100 TB every
-    // term stays key-restricted.
-    mvSemiRestrictMinRows: Long = 65536L,
-    // fused-bloom scale gate: a bloom-enabled staged batch whose exact
-    // footer row count is at or under this builds its per-file blooms
-    // on the bounded driver pool (one projected Group read per file,
-    // fused with the footer-stats pass — zero Spark jobs); bigger
-    // batches keep the distributed read-back pass, whose one extra
-    // read is amortized by the batch it covers. Bit-identical output
-    // either way.
-    fileBloomLocalRows: Long = 65536L,
-    // parsed-manifest cache admission bound: manifests carrying more
-    // file entries than this (large-table checkpoints) stay uncached
-    // so the 128-entry LRU can never pin hundreds of MB of parsed
-    // state on the driver; delta manifests always fit
-    manifestCacheMaxFiles: Int = 4096,
     // OPT-IN append-time id-uniqueness: plain INSERTs (batch and
     // streaming-append epochs) probe their staged ids against the
     // snapshot (candidate-file pruned) and within the batch, failing
@@ -993,7 +955,6 @@ final case class EngineConf(
   require(checkpointInlineFiles >= 0, s"checkpointInlineFiles must be >= 0")
   require(conflictMaxAttempts >= 1, s"conflictMaxAttempts must be >= 1")
   require(conflictBackoffMs >= 0, s"conflictBackoffMs must be >= 0")
-  require(idBroadcastThreshold >= 0, s"idBroadcastThreshold must be >= 0")
   require(orphanGraceMs >= 0, s"orphanGraceMs must be >= 0")
   require(objectListThreshold >= 1, s"objectListThreshold must be >= 1")
   require(bloomBits >= 64 && bloomBits % 64 == 0,
@@ -1004,15 +965,10 @@ final case class EngineConf(
   require(autoCompactFiles >= 0, s"autoCompactFiles must be >= 0")
   require(autoCompactTarget >= 1, s"autoCompactTarget must be >= 1")
   require(autoMaterializeDvs >= 0, s"autoMaterializeDvs must be >= 0")
-  require(statsColumns >= 0, s"statsColumns must be >= 0")
   require(multiGraceMs >= 0, s"multiGraceMs must be >= 0")
   require(commitLockTimeoutMs >= 1, s"commitLockTimeoutMs must be >= 1")
-  require(fastPathRows >= 0, s"fastPathRows must be >= 0")
   require(mvRebuildMaxInterval >= 1, s"mvRebuildMaxInterval must be >= 1")
   require(mvMaxChangedSides >= 1, s"mvMaxChangedSides must be >= 1")
-  require(mvSemiRestrictMinRows >= 0, s"mvSemiRestrictMinRows must be >= 0")
-  require(fileBloomLocalRows >= 0, s"fileBloomLocalRows must be >= 0")
-  require(manifestCacheMaxFiles >= 0, s"manifestCacheMaxFiles must be >= 0")
 }
 
 /** Conflict = another transaction committed the same objects after this
@@ -1060,6 +1016,48 @@ object Instance {
     * survivors, the heaviest point operation per byte). */
   val PointReadMaxFiles = 32
   val PointReadMaxBytes = 512L * 1024
+
+  /** Tiny staged writes (a LOCAL relation of at most this many rows,
+    * unpartitioned) skip the Spark job: the rows are written to ONE
+    * parquet file on the driver through Spark's own ParquetWriteSupport
+    * (identical schema, footer stats and compression to the job path).
+    * The same bound gates a small upsert and `Txn.merge`'s driver path. */
+  val FastPathRows = 64
+
+  /** Point-op id-set size above which delete/update/`changes` switch
+    * from an `isin` literal predicate to a broadcast semi/anti join
+    * (literal lists expand into the plan; millions of ids would blow up
+    * compilation). */
+  val IdBroadcastThreshold = 1000
+
+  /** Leading schema columns for which every staged file records
+    * universal footer min/max/null-count stats in the manifest
+    * ([[VersionedTable.UStat]]) unless [[EngineConf.statsColumnList]]
+    * names them — Delta's dataSkippingNumIndexedCols analog (obj_id's
+    * primary range index is always on). */
+  val StatsColumns = 32
+
+  /** Row floor for the star-delta's quiet-side restriction: a quiet
+    * relation's snapshot in an inclusion–exclusion term is SEMI-JOIN
+    * restricted to the keys the term's deltas can match — O(churn)
+    * reads at scale — but the probe (distinct + exchange + broadcast)
+    * costs 2-3 Spark stages per term, pure overhead when the manifest's
+    * footer row counts bound the whole snapshot under this (lossless
+    * either way for an inner join). */
+  val MvSemiRestrictMinRows = 65536L
+
+  /** A bloom-enabled staged batch whose exact footer row count is at
+    * most this builds its per-file blooms on the bounded driver pool
+    * (one projected Group read per file, fused with the footer-stats
+    * pass — zero Spark jobs); bigger batches keep the distributed
+    * read-back pass. Bit-identical output either way. */
+  val FileBloomLocalRows = 65536L
+
+  /** Parsed-manifest cache admission bound: manifests carrying more
+    * file entries than this (large-table checkpoints) stay uncached so
+    * the 128-entry LRU can never pin hundreds of MB of parsed state on
+    * the driver; delta manifests always fit. */
+  val ManifestCacheMaxFiles = 4096
 
   private[acid] val IdSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("obj_id", LongType)))
@@ -1140,7 +1138,7 @@ final class Instance(val spark: SparkSession, val root: String,
     // state fold memoizes the FOLDED TableState separately, so the
     // hot lifecycle paths lose nothing); delta manifests — the ones
     // re-read many times per commit window — always fit.
-    if (m.allFiles.size + m.added.size <= conf.manifestCacheMaxFiles)
+    if (m.allFiles.size + m.added.size <= Instance.ManifestCacheMaxFiles)
       manifestCache.put(java.lang.Long.valueOf(v), m)
     m
   }
@@ -1260,31 +1258,12 @@ final class Instance(val spark: SparkSession, val root: String,
     * the latest checkpoint <= v, so cost is O(checkpointInterval)
     * manifest reads, not O(v). */
   def stateAt(v: Long): (Seq[String], String) = {
-    val (files, ddl, _) = stateWithStatsAt(v)
-    (files, ddl)
-  }
-
-  /** [[stateAt]] plus the per-file obj-id range index used for point-op
-    * file pruning (reference: the ObjectId IS the address —
-    * instance.rs:126-134 resolves an id to its block directly; here the
-    * manifest stats resolve an id to the files whose range covers it). */
-  def stateWithStatsAt(v: Long): (Seq[String], String, Map[String, (Long, Long)]) = {
-    val (files, ddl, stats, _) = stateFullAt(v)
-    (files, ddl, stats)
-  }
-
-  /** [[stateWithStatsAt]] plus the per-column secondary cluster-stats
-    * index ([[VersionedTable.Manifest.colStats]]), rolled forward the
-    * same way: checkpoints carry the full map, deltas add their files,
-    * removal drops the file's entry. */
-  private[acid] def stateFullAt(v: Long): (Seq[String], String,
-      Map[String, (Long, Long)], Map[String, Map[String, (Long, Long)]]) = {
     val s = tableStateAt(v)
-    // the tuple's file list is the COMPLETE live set (this is the
-    // admin/test surface behind [[stateAt]]); on segmented snapshots
-    // that is a transient materialization — planner paths never come
-    // through here, they consult the sidecar distributedly
-    (liveNames(s), s.ddl, s.stats, s.colStats)
+    // the COMPLETE live set (an admin/test surface); on segmented
+    // snapshots that is a transient materialization — planner paths
+    // never come through here, they consult the sidecar distributedly,
+    // and a caller that needs only the schema reads tableStateAt(v).ddl
+    (liveNames(s), s.ddl)
   }
 
   // last-resolved snapshot state: committed state at a fixed version
@@ -1394,10 +1373,7 @@ final class Instance(val spark: SparkSession, val root: String,
       stats = stats -- m.removed ++ m.stats
       colStats = colStats -- m.removed ++ m.colStats
       fileStats = fileStats -- m.removed ++ m.fileStats
-      dvs = dvs -- m.removed
-      m.dvs.foreach { case (f, list) =>
-        dvs = if (list.isEmpty) dvs - f else dvs.updated(f, list)
-      }
+      dvs = foldDvs(dvs, m.removed, m.dvs)
       ddl = m.schemaDDL
       ren = m.renames
       tomb = m.tombstones
@@ -1421,7 +1397,7 @@ final class Instance(val spark: SparkSession, val root: String,
   }
 
   /** Streaming-epoch watermarks visible at version `v`: latest
-    * committed epoch per query id. Same walk shape as [[stateFullAt]]
+    * committed epoch per query id. Same walk shape as [[tableStateAt]]
     * — checkpoints carry the full fold, deltas override their entry —
     * so the lookup is O(commits-since-checkpoint) manifest reads, and
     * a watermark written 10k commits ago survives via the folds. */
@@ -2057,55 +2033,20 @@ final class Instance(val spark: SparkSession, val root: String,
   def changes(fromV: Long, toV: Long): DataFrame = {
     require(fromV >= 0 && fromV <= toV && toV <= latestVersion,
       s"invalid change interval ($fromV, $toV]")
-    // the pre-image schema ROLLS FORWARD across the interval: one
-    // O(checkpointInterval) replay seeds it at fromV, then each
-    // manifest (already read once for its deltas) advances it — total
-    // manifest reads are O(interval + range), where the per-version
-    // stateAt(v-1) this replaces cost O(interval) EACH (a 1000-commit
-    // CDC interval read ~10^4 manifests; on an object store that is
-    // the difference between a tail-read and a crawl)
-    val st0 = tableStateAt(fromV)
-    var prevDdl = st0.ddl
-    // the column mapping rolls forward beside the schema, so each
-    // version's rows read under ITS logical names (physical names are
-    // fixed, but a rename inside the interval changes the output
-    // columns exactly when the DDL does)
-    var prevRen = st0.renames
-    // the dv map rolls forward beside the schema: pre-images of a
-    // commit must subtract the masks that were ALREADY live at v-1
-    // (otherwise a rewrite of a masked file re-reports its dead rows),
-    // and a MoR delete commit's own rows surface as pre-vs-post mask
-    // differences on its target files
-    var prevDvs = st0.dvs
-    val perVersion = ((fromV + 1) to toV).flatMap { v =>
-      val m = readManifest(v)
-      val preDdl = prevDdl
-      val preDvs = prevDvs
-      val preRen = prevRen
-      prevDdl = m.schemaDDL
-      prevRen = m.renames
-      var rolled = prevDvs -- m.removed
-      m.dvs.foreach { case (f, l) =>
-        rolled = if (l.isEmpty) rolled - f else rolled.updated(f, l)
-      }
-      prevDvs = rolled
-      val curDvs = rolled
-      // a file the commit both staged and masked is post-only: it is
-      // read once, under its mask, with the commit's other added files
-      val dvTargets = m.dvs.keys.toSeq.filterNot((m.removed ++ m.added).toSet).sorted
-      val preFiles = m.removed ++ dvTargets
-      val postFiles = m.added ++ dvTargets
+    val perVersion = intervalSteps(fromV, toV).flatMap { step =>
+      val m = step.m
+      val v = step.v
       if (m.objects.nonEmpty) {
         val ids = m.objects
         def touched(df: DataFrame): DataFrame =
-          if (ids.size <= conf.idBroadcastThreshold)
+          if (ids.size <= Instance.IdBroadcastThreshold)
             df.filter(col("obj_id").isin(ids: _*))
           else {
             val s = spark; import s.implicits._
             df.join(broadcast(ids.toDF("obj_id")), Seq("obj_id"), "left_semi")
           }
-        val pre = touched(viewOf(preFiles, preDdl, preDvs, preRen))
-        val post = touched(viewOf(postFiles, m.schemaDDL, curDvs, m.renames))
+        val pre = touched(step.preView)
+        val post = touched(step.postView)
         val preIds = pre.select("obj_id").distinct()
         val postIds = post.select("obj_id").distinct()
         def tag(df: DataFrame, other: DataFrame, join: String,
@@ -2130,8 +2071,8 @@ final class Instance(val spark: SparkSession, val root: String,
         // values rewritten) is indistinguishable from a copy and is not
         // emitted; the feed assumes the layer's id contract (obj_id
         // unique per snapshot — guaranteed by the upsert/point-op API).
-        val pre = viewOf(preFiles, preDdl, preDvs, preRen)
-        val post = viewOf(postFiles, m.schemaDDL, curDvs, m.renames)
+        val pre = step.preView
+        val post = step.postView
         // one column layout across both sides (schema evolution within
         // the commit appears as typed nulls, same as the union path)
         val allCols: Seq[(String, DataType)] =
@@ -2173,19 +2114,70 @@ final class Instance(val spark: SparkSession, val root: String,
           .reduce(_.unionByName(_, allowMissingColumns = true)))
       } else None
     }
-    if (perVersion.isEmpty)
-      viewOf(Nil, stateAt(toV)._2)
+    unionBatched(perVersion, "graft:changes")(
+      viewOf(Nil, tableStateAt(toV).ddl)
         .withColumn("_version", lit(null).cast("long"))
         .withColumn("_change", lit(null).cast("string"))
-        .limit(0)
-    else {
-      val batches = perVersion.grouped(Instance.ChangesBatchVersions)
-        .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
-      if (batches.size == 1) batches.head
-      else JobLabel(spark, "graft:changes")(batches.map(_.localCheckpoint()))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .limit(0))
+  }
+
+  /** One commit of a `(fromV, toV]` roll-forward: the files whose rows
+    * it retired, read under the state just before it (`preView`), and
+    * the files whose rows it made visible, read under its own state
+    * (`postView`). A MoR delete's targets sit on both sides, under the
+    * pre- and post-commit masks. */
+  private final class IntervalStep(val v: Long, val m: Manifest,
+      preFiles: Seq[String], preDdl: String,
+      val preRen: Map[String, String], preDvs: Map[String, Seq[String]],
+      postFiles: Seq[String], postDvs: Map[String, Seq[String]]) {
+    def isEmpty: Boolean = preFiles.isEmpty && postFiles.isEmpty
+    def preView: DataFrame = viewOf(preFiles, preDdl, preDvs, preRen)
+    def postView: DataFrame = viewOf(postFiles, m.schemaDDL, postDvs, m.renames)
+  }
+
+  /** The commits of `(fromV, toV]`, with the schema, the column mapping
+    * and the dv map ROLLED FORWARD beside them: one
+    * O(checkpointInterval) replay seeds them at fromV, then each
+    * manifest (read once for its deltas) advances them — O(interval +
+    * range) manifest reads, where a per-version `tableStateAt(v-1)`
+    * would cost O(interval) each. Each version's rows read under ITS
+    * logical names, and a commit's pre-images subtract the masks
+    * ALREADY live before it (otherwise a rewrite of a masked file
+    * re-reports its dead rows). */
+  private def intervalSteps(fromV: Long, toV: Long): Seq[IntervalStep] = {
+    val st0 = tableStateAt(fromV)
+    var ddl = st0.ddl
+    var ren = st0.renames
+    var dvs = st0.dvs
+    ((fromV + 1) to toV).map { v =>
+      val m = readManifest(v)
+      val (preDdl, preRen, preDvs) = (ddl, ren, dvs)
+      ddl = m.schemaDDL
+      ren = m.renames
+      dvs = foldDvs(dvs, m.removed, m.dvs)
+      // a file the commit both staged and masked is post-only: it is
+      // read once, under its mask, with the commit's other added files
+      val dvTargets = m.dvs.keys.toSeq.filterNot((m.removed ++ m.added).toSet).sorted
+      new IntervalStep(v, m, m.removed ++ dvTargets, preDdl, preRen, preDvs,
+        m.added ++ dvTargets, dvs)
     }
   }
+
+  /** The per-version parts of an interval read as one frame. Plan width
+    * is BOUNDED: past [[Instance.ChangesBatchVersions]] versions every
+    * batch's union is materialized via `localCheckpoint` (eagerly, under
+    * `label`) into a single leaf; narrower intervals stay fully lazy.
+    * `empty` answers an interval with no part. */
+  private def unionBatched(parts: Seq[DataFrame], label: String)(
+      empty: => DataFrame): DataFrame =
+    if (parts.isEmpty) empty
+    else {
+      val batches = parts.grouped(Instance.ChangesBatchVersions)
+        .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
+      if (batches.size == 1) batches.head
+      else JobLabel(spark, label)(batches.map(_.localCheckpoint()))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    }
 
   /** Signed row delta of the interval `(fromV, toV]`: every row
     * visible AFTER a data commit weighted `_w` = +1, every row visible
@@ -2217,12 +2209,12 @@ final class Instance(val spark: SparkSession, val root: String,
       alignToHead: Boolean = false): DataFrame = {
     require(fromV >= 0 && fromV <= toV && toV <= latestVersion,
       s"invalid delta interval ($fromV, $toV]")
-    val st0 = tableStateAt(fromV)
+    val steps = intervalSteps(fromV, toV)
     // physical name -> toV logical name, the rename-proof join axis
     val physToHead: Map[String, String] =
       if (!alignToHead) Map.empty
       else {
-        val stH = if (toV == fromV) st0 else tableStateAt(toV)
+        val stH = tableStateAt(toV)
         org.apache.spark.sql.types.StructType.fromDDL(stH.ddl).fields
           .map(f => stH.renames.getOrElse(f.name, f.name) -> f.name).toMap
       }
@@ -2232,45 +2224,14 @@ final class Instance(val spark: SparkSession, val root: String,
         if (c == "_w") Some(col("_w"))
         else physToHead.get(ren.getOrElse(c, c)).map(h => col(c).as(h))
       }: _*)
-    var prevDdl = st0.ddl
-    var prevRen = st0.renames
-    var prevDvs = st0.dvs
-    val perVersion = ((fromV + 1) to toV).flatMap { v =>
-      val m = readManifest(v)
-      val preDdl = prevDdl
-      val preDvs = prevDvs
-      val preRen = prevRen
-      prevDdl = m.schemaDDL
-      prevRen = m.renames
-      var rolled = prevDvs -- m.removed
-      m.dvs.foreach { case (f, l) =>
-        rolled = if (l.isEmpty) rolled - f else rolled.updated(f, l)
-      }
-      prevDvs = rolled
-      val curDvs = rolled
-      // a file the commit both staged and masked is post-only: it is
-      // read once, under its mask, with the commit's other added files
-      val dvTargets = m.dvs.keys.toSeq.filterNot((m.removed ++ m.added).toSet).sorted
-      val preFiles = m.removed ++ dvTargets
-      val postFiles = m.added ++ dvTargets
-      if (preFiles.isEmpty && postFiles.isEmpty) None
-      else {
-        val pre = aligned(viewOf(preFiles, preDdl, preDvs, preRen)
-          .withColumn("_w", lit(-1L)), preRen)
-        val post = aligned(viewOf(postFiles, m.schemaDDL, curDvs, m.renames)
-          .withColumn("_w", lit(1L)), m.renames)
-        Some(post.unionByName(pre, allowMissingColumns = true))
-      }
+    val perVersion = steps.filterNot(_.isEmpty).map { step =>
+      val pre = aligned(step.preView.withColumn("_w", lit(-1L)), step.preRen)
+      val post = aligned(step.postView.withColumn("_w", lit(1L)),
+        step.m.renames)
+      post.unionByName(pre, allowMissingColumns = true)
     }
-    if (perVersion.isEmpty)
-      viewOf(Nil, stateAt(toV)._2).withColumn("_w", lit(1L)).limit(0)
-    else {
-      val batches = perVersion.grouped(Instance.ChangesBatchVersions)
-        .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
-      if (batches.size == 1) batches.head
-      else JobLabel(spark, "graft:weighted-delta")(batches.map(_.localCheckpoint()))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
+    unionBatched(perVersion, "graft:weighted-delta")(
+      viewOf(Nil, tableStateAt(toV).ddl).withColumn("_w", lit(1L)).limit(0))
   }
 
   /** Atomically publish a manifest: the version is claimed ONLY with its
@@ -2384,8 +2345,8 @@ final class Instance(val spark: SparkSession, val root: String,
     // checkpoint folds, DuckDB parity) sees exactly what the job path
     // writes.
     val localRows =
-      if (partitionBy.nonEmpty || conf.fastPathRows <= 0) None
-      else localRowsOf(df, if (driverRows) Int.MaxValue else conf.fastPathRows)
+      if (partitionBy.nonEmpty) None
+      else localRowsOf(df, if (driverRows) Int.MaxValue else Instance.FastPathRows)
     val staged0 = localRows match {
       case Some((rows, schema)) =>
         val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
@@ -2537,7 +2498,7 @@ final class Instance(val spark: SparkSession, val root: String,
     // pass; big batches always take it — at scale the read-back is
     // amortized by the batch it covers.
     val localBuilt: Option[(Seq[String], Map[String, Map[Int, IdBloom]])] =
-      if (totalRows.exists(_ <= conf.fileBloomLocalRows))
+      if (totalRows.exists(_ <= Instance.FileBloomLocalRows))
         localFileBlooms(staged, pcols0, mBits)
       else None
     localBuilt match {
@@ -2758,7 +2719,7 @@ final class Instance(val spark: SparkSession, val root: String,
     * — the job path's write support, invoked in-process: identical
     * physical types, logical annotations, footer statistics, and
     * session codec, with zero task dispatch. Bounded by
-    * [[EngineConf.fastPathRows]] rows, or for a point rewrite's
+    * [[Instance.FastPathRows]] rows, or for a point rewrite's
     * driver-resident rows by the [[pointRows]] byte gate. */
   private def writeLocalParquet(file: Path,
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
@@ -3746,20 +3707,13 @@ final class Instance(val spark: SparkSession, val root: String,
         // checkpoint allDvs is the FULL folded state (clear markers
         // resolve away: an empty list is simply absent); the manifest's
         // dvs field stays this txn's true delta in either case
-        var dvs = base.dvs -- txn.removed
-        txn.dvDelta.foreach { case (f, list) =>
-          dvs = if (list.isEmpty) dvs - f else dvs.updated(f, list)
-        }
         (liveAfter.toSeq.sorted,
           base.stats -- txn.removed ++ addedStats,
           base.colStats -- txn.removed ++ addedColStats,
-          dvs,
+          foldDvs(base.dvs, txn.removed, txn.dvDelta),
           base.fileStats -- txn.removed ++ addedFileStats)
       } else if (segmented) {
-        var dvs = ckptBase.dvs -- txn.removed
-        txn.dvDelta.foreach { case (f, list) =>
-          dvs = if (list.isEmpty) dvs - f else dvs.updated(f, list)
-        }
+        val dvs = foldDvs(ckptBase.dvs, txn.removed, txn.dvDelta)
         // unique per (attempt, tsn): a racing writer that loses the
         // publish deletes its own side files and retries fresh
         val ref = f"ckpt-v$attempt%020d-${txn.tsn}.parquet"
@@ -3946,10 +3900,7 @@ final class Instance(val spark: SparkSession, val root: String,
       tail.foreach { m =>
         m.removed.foreach(f => lastOp = lastOp.updated(f, false))
         m.added.foreach(f => lastOp = lastOp.updated(f, true))
-        horizonDvs = horizonDvs -- m.removed
-        m.dvs.foreach { case (f, l) =>
-          horizonDvs = if (l.isEmpty) horizonDvs - f else horizonDvs.updated(f, l)
-        }
+        horizonDvs = foldDvs(horizonDvs, m.removed, m.dvs)
       }
       // change-data side files referenced inside the bounded walk stay
       // readable (the stream's lag must fit the retention window — the
@@ -4730,12 +4681,6 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   // stale.
   @volatile private var baseCache: (Long, TableState) = null
 
-  private def cachedBase(): (Seq[String], String, Map[String, (Long, Long)],
-      Map[String, Map[String, (Long, Long)]]) = {
-    val s = cachedBaseState()
-    (s.inlineFiles, s.ddl, s.stats, s.colStats)
-  }
-
   private def cachedBaseState(): TableState = {
     var cached = baseCache
     if (cached == null || cached._1 != readVersion) {
@@ -4752,9 +4697,9 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   // files flow through the distributed side-file paths) minus this
   // txn's removals plus its staged files, with the matching ddl/stats.
   private def localState(): (Seq[String], String, Map[String, (Long, Long)]) = {
-    val (base, snapDdl, baseStats, _) = cachedBase()
-    val files = (base.toSet -- removed ++ added).toSeq.sorted
-    (files, schemaDDL.getOrElse(snapDdl), baseStats -- removed ++ addedStats)
+    val base = cachedBaseState()
+    val files = (base.inlineFiles.toSet -- removed ++ added).toSeq.sorted
+    (files, schemaDDL.getOrElse(base.ddl), base.stats -- removed ++ addedStats)
   }
 
   /** Txn-local column mapping (read-your-own-renames): this txn's
@@ -4778,13 +4723,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   /** Txn-local deletion-vector map: base state overridden by this
     * transaction's own dv writes (read-your-own-deletes), entries of
     * retired files dropped. */
-  private def localDvs(): Map[String, Seq[String]] = {
-    var dvs = cachedBaseState().dvs -- removed
-    dvDelta.foreach { case (f, list) =>
-      dvs = if (list.isEmpty) dvs - f else dvs.updated(f, list)
-    }
-    dvs
-  }
+  private def localDvs(): Map[String, Seq[String]] =
+    VersionedTable.foldDvs(cachedBaseState().dvs, removed, dvDelta)
 
   /** Resolved per-file masks for `files` under [[localDvs]]. */
   private def localMasks(files: Seq[String]): Map[String, GraftBitmap] =
@@ -4874,16 +4814,16 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
 
   /** Rows of `df` whose obj_id is in `ids`: an `isin` literal predicate
     * for small sets, a broadcast semi-join past
-    * [[EngineConf.idBroadcastThreshold]] (a literal list of millions of
+    * [[Instance.IdBroadcastThreshold]] (a literal list of millions of
     * ids would be expanded into the compiled plan). */
   private def idMatch(df: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= inst.conf.idBroadcastThreshold)
+    if (ids.size <= Instance.IdBroadcastThreshold)
       df.filter(col("obj_id").isin(ids: _*))
     else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_semi")
 
   /** Complement of [[idMatch]] (anti-join past the threshold). */
   private def idReject(df: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= inst.conf.idBroadcastThreshold)
+    if (ids.size <= Instance.IdBroadcastThreshold)
       df.filter(!col("obj_id").isin(ids: _*))
     else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_anti")
 
@@ -5353,7 +5293,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * manifest), so NOTHING here is O(batch) on the driver or in
     * metadata. Either way the delete side prunes to candidate files
     * via manifest id-range stats — an upsert never scans the table. A
-    * literal batch of at most [[EngineConf.fastPathRows]] rows takes its
+    * literal batch of at most [[Instance.FastPathRows]] rows takes its
     * ids straight from the plan, so with small candidate files the
     * whole upsert runs no Spark job (see [[Instance.pointRows]]). */
   def upsert(df: DataFrame): Unit = localIds(df) match {
@@ -5367,10 +5307,10 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   }
 
   /** The obj_ids of `df` when it is a local relation (or a union of
-    * them) of at most [[EngineConf.fastPathRows]] rows with non-null ids:
+    * them) of at most [[Instance.FastPathRows]] rows with non-null ids:
     * the batches writeStaged writes on the driver. */
   private def localIds(df: DataFrame): Option[Seq[Long]] =
-    localRowsOf(df, inst.conf.fastPathRows).flatMap { case (rows, schema) =>
+    localRowsOf(df, Instance.FastPathRows).flatMap { case (rows, schema) =>
       objIdsOf(rows, schema) }
 
   private def upsertPersisted(df: DataFrame): Unit = {
@@ -5411,7 +5351,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * target row would make the rewrite nondeterministic (the same
     * rule SQL MERGE enforces at runtime).
     *
-    * A source of at most [[EngineConf.fastPathRows]] rows, none with a
+    * A source of at most [[Instance.FastPathRows]] rows, none with a
     * null id, whose candidate files pass the [[Instance.pointRows]]
     * gate merges on the driver (the shape of every view refresh): after
     * the probe, one read of the source and no hit-file, rewrite or
@@ -5505,7 +5445,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // a source of at most fastPathRows rows, none with a null id, over
       // candidates below the pointRows gate merges on the driver
       val local =
-        if (probe.getLong(3) > 0L || probe.getLong(5) > inst.conf.fastPathRows) None
+        if (probe.getLong(3) > 0L || probe.getLong(5) > Instance.FastPathRows) None
         else inst.pointRows(cand, physSchema(schema, localRen), localMasks(cand))
       local match {
         case Some(files) =>
@@ -5571,7 +5511,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
 
   /** The body of [[merge]] below the [[Instance.pointRows]] gate:
     * `files` are the candidates read on the driver (logical `schema`),
-    * and the source has at most [[EngineConf.fastPathRows]] rows, none
+    * and the source has at most [[Instance.FastPathRows]] rows, none
     * with a null id. The persisted source is read once; the join by
     * obj_id runs here, `clauses` evaluate over a local relation (folded
     * at optimization, no job), and the rewritten and inserted rows take

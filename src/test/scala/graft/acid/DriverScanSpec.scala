@@ -5,7 +5,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan, SubqueryBroadcastExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -43,20 +42,8 @@ class DriverScanSpec extends AnyFunSuite {
     (0 until 4).map(i => (1L to 5L).map(j => (i * 100L + j, i * 100L + j)))
 
   /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      GraftTestBus.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    GraftTestBus.jobsDuring(spark.sparkContext)(body)
 
   /** Runs `body` with the driver-read gate at 1 byte: every scan takes
     * its job path. */

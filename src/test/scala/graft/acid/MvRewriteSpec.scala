@@ -3,6 +3,7 @@ package graft.acid
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -661,5 +662,54 @@ class MvRewriteSpec extends AnyFunSuite {
       assert(q.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
         Seq(("a", 30L), ("b", 5L)))
     }
+  }
+
+  test("planning a stale-compensated star query starts no Spark job") {
+    val factRoot = Files.createTempDirectory("graft_mvjf_f_").toUri.toString
+    val custRoot = Files.createTempDirectory("graft_mvjf_d_").toUri.toString
+    val viewRoot = Files.createTempDirectory("graft_mvjf_v_").toUri.toString
+    def mk(root: String, df: DataFrame): Instance = {
+      val i = VersionedTable.create(spark, root, df.schema)
+      i.withRetry() { t => t.insert(df) }; i
+    }
+    val fact = mk(factRoot, spark.createDataFrame(Seq(
+      (100L, 1L, 5L), (101L, 1L, 7L), (102L, 2L, 11L)))
+      .toDF("obj_id", "cust", "amount"))
+    val cust = mk(custRoot, spark.createDataFrame(Seq((1L, "east"),
+      (2L, "west"))).toDF("obj_id", "region"))
+    val mv = MaterializedAggView.create(spark, viewRoot, fact,
+      groupCols = Seq("region"), sumCols = Seq("amount"),
+      dimJoins = Seq(MaterializedAggView.DimJoin(cust, "cust", "obj_id")))
+    mv.refresh()
+    // the fact AND the dim move past the view's watermarks
+    fact.withRetry() { t =>
+      t.delete(Seq(101L))
+      t.insert(spark.createDataFrame(Seq((103L, 2L, 3L)))
+        .toDF("obj_id", "cust", "amount"))
+    }
+    cust.withRetry() { t =>
+      t.merge(spark.createDataFrame(Seq((1L, "west"))).toDF("obj_id", "nr"),
+        matchedUpdate = Map("region" -> col("s.nr")), insertUnmatched = false)
+    }
+    def q(): DataFrame = {
+      val fd = srcDf(factRoot); val cd = srcDf(custRoot)
+      fd.join(cd, fd("cust") === cd("obj_id")).groupBy("region")
+        .agg(count(lit(1)).as("cnt"), sum("amount").as("sa"))
+        .orderBy("region")
+    }
+    val expected = withRewrite(on = false)(q().collect().toSeq)
+    MvRewriteRule.invalidateCache()
+    // a bound past the delta's batching threshold (32): the clamp, not
+    // the knob, keeps the compensation a lazy plan
+    spark.conf.set(MvRewriteRule.MaxStalenessKey, "64")
+    try withRewrite(on = true) {
+      val df = q()
+      val (plan, jobs) = GraftTestBus.jobsDuring(spark.sparkContext)(
+        df.queryExecution.optimizedPlan.treeString)
+      assert(plan.contains(canon(viewRoot)) && plan.contains("Union"),
+        s"stale star rewrite did not fire with its compensation:\n$plan")
+      assert(jobs == 0, s"planning started $jobs Spark jobs")
+      assert(df.collect().toSeq == expected)
+    } finally spark.conf.unset(MvRewriteRule.MaxStalenessKey)
   }
 }

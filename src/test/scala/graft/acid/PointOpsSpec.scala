@@ -3,7 +3,6 @@ package graft.acid
 import java.nio.file.Files
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -39,20 +38,8 @@ class PointOpsSpec extends AnyFunSuite {
     (0 until 4).map(i => (1L to 5L).map(j => (i * 100L + j, i * 100L + j)))
 
   /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftTestBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      GraftTestBus.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    GraftTestBus.jobsDuring(spark.sparkContext)(body)
 
   /** Data files the executed scans of `df` read (after a collect). */
   private def filesScanned(df: DataFrame): Long = {

@@ -2,6 +2,7 @@ package graft.acid
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
@@ -344,5 +345,23 @@ class SegmentedCkptSpec extends AnyFunSuite {
     assert(inst.fs.exists(inst.sidecarPath(liveRef)),
       "referenced side files must survive")
     assert(inst.read().count() == 1)
+  }
+
+  test("an empty change interval reads the schema, not the live-file list") {
+    val inst = VersionedTable.create(spark, freshDir(), AcidQueries.schema,
+      segConf(interval = 2))
+    (1 to 3).foreach { i =>
+      val t = inst.begin()
+      t.insert(Seq((i.toLong, i * 10L)).toDF("obj_id", "value").coalesce(1))
+      inst.commit(t)
+    } // v2 is a segmented checkpoint
+    val h = inst.latestVersion
+    assert(inst.tableStateAt(h).sidecar.isDefined) // head state resolved
+    val ((feed, delta), jobs) = GraftTestBus.jobsDuring(spark.sparkContext)(
+      (inst.changes(h, h), inst.weightedDelta(h, h)))
+    assert(jobs == 0, s"an empty interval started $jobs Spark jobs")
+    assert(feed.columns.toSeq == Seq("obj_id", "value", "_version", "_change"))
+    assert(delta.columns.toSeq == Seq("obj_id", "value", "_w"))
+    assert(feed.count() == 0 && delta.count() == 0)
   }
 }
