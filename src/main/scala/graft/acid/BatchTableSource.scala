@@ -1114,8 +1114,6 @@ private[acid] final class GraftWriteBuilder(table: GraftTable,
         conf = EngineConf(
           autoCompactFiles = info.options().getInt("autoCompactFiles", 0),
           autoCompactTarget = info.options().getInt("autoCompactTarget", 4),
-          autoMaterializeDvs =
-            info.options().getInt("autoMaterializeDvs", 0),
           // append epochs probe staged ids like batch inserts do
           // (sink option, or the table's unique_ids catalog property)
           uniqueIds = info.options().getBoolean("uniqueIds", false) ||
@@ -1284,11 +1282,13 @@ private[acid] final class GraftAggScan(table: String,
 }
 
 /** One bin-packed input split: files (or file ranges) sharing one
-  * partition-column layout, plus the pre-decoded partition row and a
-  * per-file row-ordinal deletion mask (empty = no masked rows). */
+  * layout of constant columns, plus the pre-decoded constant row and a
+  * per-file row-ordinal mask (empty = no masked rows). A mask drops
+  * its rows, or with `keep` (a change feed's delete events) keeps only
+  * them. */
 private[acid] final case class GraftInputPartition(
     files: Seq[PartitionedFile], layout: Seq[String],
-    masks: Seq[GraftBitmap] = Nil) extends InputPartition
+    masks: Seq[GraftBitmap] = Nil, keep: Boolean = false) extends InputPartition
 
 /** Single-column top-n pushed into planning: prune files wholly past
   * the cutoff value that already covers `n` rows in sort order. */
@@ -1736,64 +1736,16 @@ private[graft] final class GraftScan(inst: Instance,
     f
   }
 
-  private def buildReaderFactory(): PartitionReaderFactory = {
-    val fmt = new ParquetFileFormat
-    // masks filter by the parquet-generated row index (requested via
-    // the reader's temporary metadata column — filled by both the
-    // vectorized and row-based readers, file-absolute even across
-    // splits)
-    val masked = dvMasks.nonEmpty
-    // read nullable, as Spark's file sources do: a column schema
-    // evolution added is absent from older files and reads as null
-    val req = PlanBridge.nullable(required)
-    val layouts = prunedFiles.map(r =>
-      GraftTableSource.partPairs(r).map(_._1)).distinct.map { layout =>
-      // the reader plans in PHYSICAL namespace end-to-end (file columns
-      // and k=v segments spell physical names); the required-order
-      // projection below restores logical positions, and readSchema()
-      // reports the logical names
-      def physF(f: StructField) = f.copy(name = phys(f.name))
-      val partFields = StructType(
-        req.filter(f => layout.contains(phys(f.name))).map(physF))
-      var fileSchema = StructType(
-        req.filterNot(f => layout.contains(phys(f.name))).map(physF))
-      if (masked)
-        fileSchema = StructType(fileSchema :+ StructField(
-          ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
-      val physical = StructType(fileSchema ++ partFields)
-      // row-wise mask filtering needs the row path; ColumnarBatch rows
-      // are iterated instead of handed through whole
-      val columnar = fmt.supportBatch(spark, physical) && !masked
-      // filters on physical columns reach the parquet reader for
-      // row-group skipping; partition-column filters were already
-      // applied file-level and must not be pushed into the file read.
-      // Filters on RENAMED columns are rewritten to the physical name
-      // first (renameFilter) so they keep row-group skipping too.
-      // A row-level-operation (CoW) scan must return WHOLE files — the
-      // unmatched rows are the copy-back side of the rewrite — so
-      // there skipping stops at file granularity and nothing reaches
-      // the reader (a skipped row group would silently DROP rows from
-      // the rewritten table)
-      val fileFilters =
-        if (wholeGroups) Nil
-        else filters.toSeq.flatMap { f =>
-          val c = f.references.head
-          val pc = phys(c)
-          if (!fileSchema.fieldNames.contains(pc)) None
-          else if (pc == c) Some(f)
-          else GraftTableSource.renameFilter(f, pc)
-        }
-      val reader = fmt.buildReaderWithPartitionValues(spark, fileSchema,
-        partFields, fileSchema, fileFilters,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
-        spark.sessionState.newHadoopConf())
-      val order = required.map(f => physical.fieldIndex(phys(f.name))).toArray
-      val riIdx = if (masked) physical.fieldIndex(
-        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME) else -1
-      layout -> GraftLayoutReader(reader, physical, order, columnar, riIdx)
-    }.toMap
-    new GraftReaderFactory(layouts)
-  }
+  private def buildReaderFactory(): PartitionReaderFactory =
+    GraftScan.readerFactory(spark, required,
+      prunedFiles.map(r => GraftTableSource.partPairs(r).map(_._1)).distinct,
+      phys, masked = dvMasks.nonEmpty,
+      // a row-level-operation (CoW) scan must return WHOLE files — the
+      // unmatched rows are the copy-back side of the rewrite — so there
+      // skipping stops at file granularity and nothing reaches the
+      // reader (a skipped row group would silently DROP rows from the
+      // rewritten table)
+      pushed = if (wholeGroups) Nil else filters.toSeq)
 }
 
 private[graft] object GraftScan {
@@ -1803,6 +1755,67 @@ private[graft] object GraftScan {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
       case d: GraftDriverScanExec => d.scan
     }.collect { case g: GraftScan => g }
+
+  /** Spark's prepared parquet reader of `fileSchema`, with the constant
+    * `partFields` appended to each row: the one place a data-file
+    * reader is built. A FRESH hadoop conf per reader: the builder
+    * writes its requested schema into the conf, so sharing one lets
+    * the last-built reader's schema clobber every earlier one's
+    * (misaligned rows at read time). */
+  private[acid] def prepare(spark: SparkSession, fileSchema: StructType,
+      partFields: StructType, filters: Seq[sources.Filter], columnar: Boolean)
+      : PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, fileSchema,
+      partFields, fileSchema, filters,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
+      spark.sessionState.newHadoopConf())
+
+  /** One prepared reader per layout for a read of `required` (logical
+    * names; `phys` maps them to the names files and layouts spell). A
+    * layout names the columns its partitions carry as constants —
+    * the hive `k=v` values of a file's path, and a change feed's
+    * `_version` and `_change_type` — and every other required column
+    * is read from the file. With `masked`, every layout also reads the
+    * parquet row index (filled by both the vectorized and row-based
+    * readers, file-absolute even across splits) and reads row-wise;
+    * `pushed` filters reach the file read for row-group skipping. */
+  private[acid] def readerFactory(spark: SparkSession, required: StructType,
+      layouts: Seq[Seq[String]], phys: String => String, masked: Boolean,
+      pushed: Seq[sources.Filter]): GraftReaderFactory = {
+    // read nullable, as Spark's file sources do: a column schema
+    // evolution added is absent from older files and reads as null
+    val req = PlanBridge.nullable(required)
+    def physF(f: StructField) = f.copy(name = phys(f.name))
+    new GraftReaderFactory(layouts.map { layout =>
+      val partFields = StructType(
+        req.filter(f => layout.contains(phys(f.name))).map(physF))
+      var fileSchema = StructType(
+        req.filterNot(f => layout.contains(phys(f.name))).map(physF))
+      if (masked)
+        fileSchema = StructType(fileSchema :+ StructField(
+          ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
+      val physical = StructType(fileSchema ++ partFields)
+      // row-wise mask filtering needs the row path
+      val columnar = new ParquetFileFormat().supportBatch(spark, physical) &&
+        !masked
+      // filters on file columns reach the reader, those on RENAMED
+      // columns rewritten to the physical name (renameFilter); filters
+      // on constant columns were applied file-level
+      val fileFilters = pushed.flatMap { f =>
+        val c = f.references.head
+        val pc = phys(c)
+        if (!fileSchema.fieldNames.contains(pc)) None
+        else if (pc == c) Some(f)
+        else GraftTableSource.renameFilter(f, pc)
+      }
+      val order = required.map(f => physical.fieldIndex(phys(f.name))).toArray
+      val riIdx = if (masked) physical.fieldIndex(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME) else -1
+      layout -> GraftLayoutReader(
+        prepare(spark, fileSchema, partFields, fileFilters, columnar),
+        physical, order, columnar, riIdx)
+    }.toMap)
+  }
 }
 
 private[acid] final case class GraftLayoutReader(
@@ -1840,11 +1853,11 @@ private[acid] final class GraftReaderFactory(
           case b: ColumnarBatch => b.rowIterator().asScala
           case row: InternalRow => Iterator.single(row)
         }
-        // merge-on-read mask: drop this file's deleted rows by row
-        // ordinal (bitmap word test — O(bitmap) shipped per task,
-        // never O(ids))
-        if (mask.isEmpty) fileRows
-        else fileRows.filter(r => !mask.contains(r.getLong(lr.riIdx)))
+        // row-ordinal mask (bitmap word test — O(bitmap) shipped per
+        // task, never O(ids)): merge-on-read deletes drop their rows, a
+        // keep mask keeps only its own
+        if (mask.isEmpty && !gp.keep) fileRows
+        else fileRows.filter(r => mask.contains(r.getLong(lr.riIdx)) == gp.keep)
       }.map(proj)
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _

@@ -1,22 +1,18 @@
 package graft.acid
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured-Streaming source over a [[VersionedTable]]'s commit log —
   * the Spark-native analog of tailing the reference's WAL for new data
@@ -63,11 +59,14 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * Scale: the driver reads ONE manifest per commit per batch (plus a
   * file-status per added file); rows never touch the driver. Each
-  * added file is one [[InputPartition]] read by Spark's own vectorized
-  * parquet reader on the executors ([[ParquetFileFormat
-  * .buildReaderWithPartitionValues]] — the exact machinery behind
-  * `FileSourceScanExec`), with hive-partition values (k=v staging
-  * segments) rebuilt as constant partition columns, never scanned. */
+  * file is one [[GraftInputPartition]] read on the executors by
+  * [[GraftScan]]'s own reader factory ([[GraftScan.readerFactory]]:
+  * Spark's prepared parquet reader, one per layout). Hive-partition
+  * values (k=v staging segments), `_version` and `_change_type` are
+  * constant columns of the partition's layout, never scanned; a cdc
+  * side file reads `_change_type` from the file. A batch with no
+  * delete events may read columnar; one with them reads row-wise,
+  * its delete partitions keeping only their newly-masked ordinals. */
 final class ChangeFeedProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cdf"
 
@@ -98,21 +97,20 @@ private[acid] object ChangeFeedSource {
     else base
   }
 
-  /** One [[CdfPartition]] per file appended by each data commit in
-    * `(lo, hi]` — shared by the micro-batch stream and the bounded
+  /** One [[GraftInputPartition]] per file appended by each data commit
+    * in `(lo, hi]` — shared by the micro-batch stream and the bounded
     * batch read; manifests are immutable, so planning the same range
     * twice is byte-identical (the replay guarantee). */
   def planRange(inst: Instance, schema: StructType, lo: Long, hi: Long,
       ignoreChanges: Boolean, changeFeed: Boolean = false,
       ren: Map[String, String] = Map.empty)
-      : Array[CdfPartition] = {
-    val out = Array.newBuilder[CdfPartition]
+      : Array[GraftInputPartition] = {
     // `schema` and `ren` are the logical schema and column mapping the
     // CALLER captured together (stream start / batch plan); files of
     // every version spell the fixed PHYSICAL names, so one mapping
     // translates for the whole range — passing them as a pair keeps
-    // the partition-type lookup below consistent with the reader
-    // factory's resolution even if a rename commits mid-plan
+    // the layouts below consistent with the reader factory's
+    // resolution even if a rename commits mid-plan
     // (file, version, change type, keep-mask) specs first; statuses
     // are then fetched on the bounded driver pool — each is a ~10ms
     // RPC on an object store, and a bursty commit range adds files ×
@@ -158,7 +156,7 @@ private[acid] object ChangeFeedSource {
             ".option(\"ignoreChanges\", true) to stream post-image rows, " +
             "or consume Instance.changes() for exact row-level CDC.")
         if (cdcServed)
-          m.cdc.foreach { rel => specs += ((rel, v, "__cdc__", None)) }
+          m.cdc.foreach { rel => specs += ((rel, v, CdcFile, None)) }
         else
           m.added.foreach { rel => specs += ((rel, v, "insert", None)) }
         if (changeFeed && m.dvs.nonEmpty) {
@@ -183,102 +181,41 @@ private[acid] object ChangeFeedSource {
     }
     val statuses = inst.pooledMap(specs.map(_._1).distinct.toSeq)(rel =>
       rel -> inst.fs.getFileStatus(new Path(inst.dataDir, rel))).toMap
-    specs.foreach { case (rel, v, changeType, keep) =>
-      val isCdc = changeType == "__cdc__"
-      val pairs = if (isCdc) Nil else GraftTableSource.partPairs(rel)
-      val status = statuses(rel)
-      // `k` spells the PHYSICAL column name
-      val consts = pairs.map { case (k, raw) =>
-        val dt = schema.find(f =>
-            ren.getOrElse(f.name, f.name) == k).map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        GraftTableSource.partValueInternal(raw, dt)
-      } :+ (v: Any)
-      // cdc side files carry _change_type IN-FILE; every other spec
-      // gets it as a per-partition constant
-      val partRow = new GenericInternalRow(
-        (if (changeFeed && !isCdc)
-          consts :+ org.apache.spark.unsafe.types.UTF8String
-            .fromString(changeType)
-        else consts).toArray)
-      out += CdfPartition(
-        PartitionedFile(partRow, SparkPath.fromPath(status.getPath),
-          0L, status.getLen, Array.empty, status.getModificationTime,
-          status.getLen),
-        pairs.map(_._1), keep, isCdc)
-    }
-    out.result()
-  }
-
-  /** Per-layout prepared parquet readers for a planned partition set
-    * (row-based: the DSv2 PartitionReader contract here is
-    * InternalRow). */
-  /** Synthetic output columns appended by the source (never read from
-    * files; carried as partition constants). */
-  private[acid] val MetaCols = Set("_version", "_change_type")
-
-  def readerFactory(spark: SparkSession, schema: StructType,
-      planned: Array[CdfPartition],
-      ren: Map[String, String] = Map.empty,
-      changeFeed: Boolean = false): CdfReaderFactory = {
-    val fmt = new ParquetFileFormat
-    // files + layouts spell PHYSICAL names; `schema` is logical — the
-    // reader plans physical and the order projection restores logical
-    // positions (names never reach the output rows)
     def phys(n: String) = ren.getOrElse(n, n)
-    val layouts = planned.map(p => (p.layout, p.keep.isDefined, p.cdc))
-      .distinct
-      .map { case (layout, ri, isCdc) =>
-        val partFields = (if (isCdc) Nil
-          else layout.map(k =>
-            schema.find(f => phys(f.name) == k)
-              .map(f => f.copy(name = k))
-              .getOrElse(StructField(k,
-                org.apache.spark.sql.types.StringType)))) ++
-          (StructField("_version", LongType, nullable = false) +:
-            (if (changeFeed && !isCdc)
-              Seq(StructField("_change_type",
-                org.apache.spark.sql.types.StringType, nullable = false))
-            else Nil))
-        // cdc side files physicalize EVERY table column and carry
-        // _change_type in-file; ordinary files drop layout columns
-        var fileSchema =
-          if (isCdc)
-            StructType(
-              schema.filterNot(f => MetaCols(f.name))
-                .map(f => f.copy(name = phys(f.name))) :+
-              StructField("_change_type",
-                org.apache.spark.sql.types.StringType, nullable = false))
-          else StructType(
-            schema.filterNot(f => layout.contains(phys(f.name)) ||
-                MetaCols(f.name))
-              .map(f => f.copy(name = phys(f.name))))
-        // delete partitions with a POSITIONAL mask filter by the
-        // parquet row index (requested via the temporary metadata
-        // column; file-absolute)
-        if (ri)
-          fileSchema = StructType(fileSchema :+ StructField(
-            ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
-        // a FRESH hadoop conf PER prepared reader: the builder writes
-        // its requested schema into the conf, so sharing one across
-        // layouts lets the last-built reader's schema clobber every
-        // earlier one's (misaligned rows at read time)
-        val reader = fmt.buildReaderWithPartitionValues(spark, fileSchema,
-          StructType(partFields), fileSchema, Nil,
-          Map(org.apache.spark.sql.execution.datasources.FileFormat
-            .OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf())
-        val physical = StructType(fileSchema ++ partFields)
-        val order = schema.map(f =>
-          if (MetaCols(f.name)) physical.fieldIndex(f.name)
-          else physical.fieldIndex(phys(f.name))).toArray
-        val riIdx = if (ri) physical.fieldIndex(
-          ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME) else -1
-        (layout, ri, isCdc) ->
-          CdfLayoutReader(reader, physical, order, riIdx)
-      }.toMap
-    new CdfReaderFactory(layouts)
+    specs.map { case (rel, v, changeType, keep) =>
+      // the layout's constants: the path's hive values (keyed by
+      // PHYSICAL name; a cdc side file holds every column in-file),
+      // `_version` and, except in a cdc side file, `_change_type`
+      val isCdc = changeType == CdcFile
+      val hive =
+        if (isCdc) Map.empty[String, String]
+        else GraftTableSource.partPairs(rel).toMap
+      val consts = schema.filter(f => f.name match {
+        case "_version" => true
+        case "_change_type" => !isCdc
+        case n => hive.contains(phys(n))
+      })
+      val partRow = new GenericInternalRow(consts.map(f => f.name match {
+        case "_version" => v
+        case "_change_type" => UTF8String.fromString(changeType)
+        case n => GraftTableSource.partValueInternal(hive(phys(n)), f.dataType)
+      }).toArray[Any])
+      val status = statuses(rel)
+      GraftInputPartition(
+        Seq(PartitionedFile(partRow, SparkPath.fromPath(status.getPath),
+          0L, status.getLen, Array.empty, status.getModificationTime,
+          status.getLen)),
+        consts.map(f => phys(f.name)),
+        keep.toSeq, keep = keep.isDefined)
+    }.toArray
   }
+
+  /** Change type of a cdc side file's spec: its rows carry their own. */
+  private val CdcFile = "__cdc__"
+
+  /** Synthetic output columns appended by the source (never read from
+    * data files). */
+  private[acid] val MetaCols = Set("_version", "_change_type")
 }
 
 private[acid] final class ChangeFeedTable(schema: StructType, root: String)
@@ -327,7 +264,8 @@ private[acid] final class ChangeFeedScan(schema: StructType, root: String,
     override def planInputPartitions(): Array[InputPartition] =
       planned.toArray[InputPartition]
     override def createReaderFactory(): PartitionReaderFactory =
-      ChangeFeedSource.readerFactory(spark, schema, planned, ren, changeFeed)
+      GraftScan.readerFactory(spark, schema, planned.map(_.layout).distinct.toSeq,
+        n => ren.getOrElse(n, n), masked = planned.exists(_.keep), pushed = Nil)
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new ChangeFeedStream(schema, root, startingVersion, ignoreChanges,
@@ -337,24 +275,6 @@ private[acid] final class ChangeFeedScan(schema: StructType, root: String,
 private[acid] final case class VersionOffset(v: Long) extends Offset {
   override def json(): String = v.toString
 }
-
-/** One data file of one commit: an ADDED file streamed whole
-  * (`keep` empty), or — readChangeFeed mode — a MASKED file whose
-  * newly-deleted rows stream as delete events (`keep` = the mask
-  * delta; only matching rows survive), or — `cdc` — a CHANGE-DATA
-  * side file written by the committing rewrite itself, whose rows
-  * already carry `_change_type` in-file (exact pre/post images of an
-  * UPDATE/MERGE/row-level/restore commit). `layout` is the hive `k=v`
-  * column sequence parsed from its staging path (always empty for
-  * cdc side files — they physicalize every column). */
-private[acid] final case class CdfPartition(
-    file: PartitionedFile, layout: Seq[String],
-    keep: Option[GraftBitmap] = None,
-    cdc: Boolean = false) extends InputPartition
-
-private[acid] final case class CdfLayoutReader(
-    reader: PartitionedFile => Iterator[InternalRow],
-    physical: StructType, order: Array[Int], riIdx: Int)
 
 private[acid] final class ChangeFeedStream(schema: StructType, root: String,
     startingVersion: Long, ignoreChanges: Boolean,
@@ -377,7 +297,8 @@ private[acid] final class ChangeFeedStream(schema: StructType, root: String,
   // planInputPartitions -> createReaderFactory run in sequence on the
   // driver for the same batch; the factory needs the batch's distinct
   // partition layouts to prepare one reader per layout
-  @transient @volatile private var planned: Array[CdfPartition] = Array.empty
+  @transient @volatile private var planned: Array[GraftInputPartition] =
+    Array.empty
   // Trigger.AvailableNow pins the head at trigger start so the run
   // terminates even while writers keep committing
   @transient @volatile private var availableNowCap: Long = -1L
@@ -437,45 +358,6 @@ private[acid] final class ChangeFeedStream(schema: StructType, root: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ChangeFeedSource.readerFactory(spark, schema, planned, ren0, changeFeed)
-}
-
-private[acid] final class CdfReaderFactory(
-    layouts: Map[(Seq[String], Boolean, Boolean), CdfLayoutReader])
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[CdfPartition]
-    val lr = layouts((cp.layout, cp.keep.isDefined, cp.cdc))
-    // the prepared reader may hand back vectorized ColumnarBatches
-    // disguised as InternalRow (the FileScanRDD contract) — unwrap;
-    // then reorder physical (file ++ partition) columns to the source
-    // schema with a codegen'd projection built HERE, on the executor
-    val proj = UnsafeProjection.create(lr.order.map(i =>
-      BoundReference(i, lr.physical(i).dataType, nullable = true)
-        .asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression]))
-    val raw: Iterator[InternalRow] = readerRows(lr, cp.file)
-    // delete partitions KEEP only the newly-masked row ordinals
-    val kept = cp.keep match {
-      case Some(mask) => raw.filter(r => mask.contains(r.getLong(lr.riIdx)))
-      case None => raw
-    }
-    val rows = kept.map(proj)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { cur = rows.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
-
-  private def readerRows(lr: CdfLayoutReader,
-      f: PartitionedFile): Iterator[InternalRow] =
-    lr.reader(f).flatMap { r =>
-      (r: Any) match {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case row: InternalRow => Iterator.single(row)
-      }
-    }
+    GraftScan.readerFactory(spark, schema, planned.map(_.layout).distinct.toSeq,
+      n => ren0.getOrElse(n, n), masked = planned.exists(_.keep), pushed = Nil)
 }

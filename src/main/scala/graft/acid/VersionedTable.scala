@@ -9,7 +9,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
@@ -885,16 +885,13 @@ final case class EngineConf(
     // analog): once a successful commit leaves the snapshot with >=
     // autoCompactFiles live files, the committer immediately folds
     // them to autoCompactTarget via the existing compact() as one
-    // extra layout-only commit; >= autoMaterializeDvs outstanding
-    // masked files likewise trigger materializeDvs(). Both are
-    // BEST-EFFORT: a conflict or failure in the maintenance commit
-    // never surfaces (the triggering commit is already durable), and
-    // a concurrent writer simply wins the race. 0 = off (default).
-    // Bounds the small-file growth of streaming sinks and MoR masks
-    // without an external maintenance job.
+    // extra layout-only commit. BEST-EFFORT: a conflict or failure in
+    // the maintenance commit never surfaces (the triggering commit is
+    // already durable), and a concurrent writer simply wins the race.
+    // 0 = off (default). Bounds the small-file growth of streaming
+    // sinks without an external maintenance job.
     autoCompactFiles: Int = 0,
     autoCompactTarget: Int = 4,
-    autoMaterializeDvs: Int = 0,
     conflictMaxAttempts: Int = 5,
     conflictBackoffMs: Long = 20L,
     // OPT-IN blocking commit lock for hot-key writers (the reference's
@@ -964,7 +961,6 @@ final case class EngineConf(
   require(appTxnRetentionMs >= 0, s"appTxnRetentionMs must be >= 0")
   require(autoCompactFiles >= 0, s"autoCompactFiles must be >= 0")
   require(autoCompactTarget >= 1, s"autoCompactTarget must be >= 1")
-  require(autoMaterializeDvs >= 0, s"autoMaterializeDvs must be >= 0")
   require(multiGraceMs >= 0, s"multiGraceMs must be >= 0")
   require(commitLockTimeoutMs >= 1, s"commitLockTimeoutMs must be >= 1")
   require(mvRebuildMaxInterval >= 1, s"mvRebuildMaxInterval must be >= 1")
@@ -1048,9 +1044,8 @@ object Instance {
 
   /** A bloom-enabled staged batch whose exact footer row count is at
     * most this builds its per-file blooms on the bounded driver pool
-    * (one projected Group read per file, fused with the footer-stats
-    * pass — zero Spark jobs); bigger batches keep the distributed
-    * read-back pass. Bit-identical output either way. */
+    * (zero Spark jobs); bigger batches read their files in one Spark
+    * job. Same per-file function, so the same output either way. */
   val FileBloomLocalRows = 65536L
 
   /** Parsed-manifest cache admission bound: manifests carrying more
@@ -1229,7 +1224,7 @@ final class Instance(val spark: SparkSession, val root: String,
   private[acid] def writeHead(v: Long): Unit =
     try {
       val body = v.toString
-      val out = fs.create(headPath, true)
+      val out = headFs.create(headPath, true)
       try out.write(s"$body ${crc32(body)}".getBytes("UTF-8"))
       finally out.close()
     } catch {
@@ -1241,8 +1236,16 @@ final class Instance(val spark: SparkSession, val root: String,
             s"listing-based head resolution): ${e.getMessage}")
     }
 
+  // the hint's own crc guards it, so it bypasses a checksummed store's
+  // `.crc` twin: read while a committer rewrites both, the twin made
+  // Hadoop log a checksum EOFException and read the hint unverified
+  private lazy val headFs: FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   private def readHeadHint(): Option[Long] =
-    try MetaJson.read(fs, headPath).flatMap { text =>
+    try MetaJson.read(headFs, headPath).flatMap { text =>
       val parts = text.trim.split(' ')
       if (parts.length == 2 && parts(0).nonEmpty &&
           parts(0).forall(_.isDigit) && crc32(parts(0)).toString == parts(1)) {
@@ -1523,10 +1526,8 @@ final class Instance(val spark: SparkSession, val root: String,
     readers.synchronized {
       var read = readers.get(key)
       if (read == null) {
-        read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
-          withRi, new StructType(), withRi, Nil,
-          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf())
+        read = GraftScan.prepare(spark, withRi, new StructType(), Nil,
+          columnar = false)
         readers.put(key, read)
       }
       read
@@ -2451,205 +2452,84 @@ final class Instance(val spark: SparkSession, val root: String,
     // table), landed as reserved `#fb:<physCol>` ustat entries so
     // they ride every stat surface unchanged (see
     // [[EngineConf.fileBloomCols]])
-    val bloomPcols = conf.fileBloomCols.map(c => ren.getOrElse(c, c))
-      .distinct
-      .filterNot(partitionBy.contains) // path values: already pruned
-      .filter(pc => df.schema.fields.exists(fd => fd.name == pc &&
-        (fd.dataType match {
-          case ByteType | ShortType | IntegerType | LongType |
-               StringType | BinaryType => true
-          case _ => false
-        })))
-    if (bloomPcols.nonEmpty && staged.nonEmpty) {
-      // exact batch row count from the footers just read — feeds the
-      // fused local bloom path's scale gate
-      val rowCounts = live.map(_._2.get(VersionedTable.RowsKey)
-        .flatMap(_.longRange).map(_._1))
-      val stagedRows =
-        if (rowCounts.forall(_.isDefined)) Some(rowCounts.flatten.sum)
-        else None
-      fileBlooms(staged, bloomPcols, conf.fileBloomBits, stagedRows)
-        .foreach { case (f, entries) =>
-          txn.addedFileStats(f) =
-            txn.addedFileStats.getOrElse(f, Map.empty) ++ entries
-        }
-    }
+    fileBlooms(live, conf.fileBloomCols.map(c => ren.getOrElse(c, c)).distinct)
+      .foreach { case (f, entries) =>
+        txn.addedFileStats(f) =
+          txn.addedFileStats.getOrElse(f, Map.empty) ++ entries
+      }
     staged
   }
 
-  /** Per-(staged file, declared column) bloom filters, built by one
-    * distributed pass over the staged files themselves (footers can't
-    * provide them). Partial per-partition filters union bitwise —
-    * [[IdBloom]] hashing is a pure function of (value, geometry), so
-    * a distributed build equals a serial one. Returned as `#fb:` ustat
-    * entries ready to merge into the txn's file stats. */
-  private[acid] def fileBlooms(staged: Seq[String], pcols0: Seq[String],
-      mBits: Int, totalRows: Option[Long] = None)
-      : Map[String, Map[String, UStat]] = {
-    // METADATA-LATENCY fused path: when the caller's footer stats
-    // bound the whole staged batch under fileBloomLocalRows, build the
-    // blooms on the SAME bounded driver pool that just read the
-    // footers — a projected parquet Group read per file, zero Spark
-    // jobs (previously every bloom-enabled write paid a read-back
-    // job over its own batch). Bit-identical to the distributed build:
-    // INT32/INT64 hash as their long value and BINARY as its bytes,
-    // exactly [[IdBloom.hashValue]]'s canonicalization. Any surprise
-    // (read error, non-primitive shape) falls back to the distributed
-    // pass; big batches always take it — at scale the read-back is
-    // amortized by the batch it covers.
-    val localBuilt: Option[(Seq[String], Map[String, Map[Int, IdBloom]])] =
-      if (totalRows.exists(_ <= Instance.FileBloomLocalRows))
-        localFileBlooms(staged, pcols0, mBits)
-      else None
-    localBuilt match {
-      case Some((pcolsL, byFileL)) =>
-        if (pcolsL.isEmpty) Map.empty
-        else fileBloomEntries(staged, pcolsL, byFileL, mBits)
-      case None => fileBloomsDistributed(staged, pcols0, mBits)
-    }
+  /** [[fileBlooms]] of files just staged, with their footer stats:
+    * the stats' row counts bound the batch for the local build. */
+  private[acid] def fileBlooms(staged: Seq[(String, Map[String, UStat])],
+      cols: Seq[String]): Map[String, Map[String, UStat]] = {
+    val rows = staged.map(_._2.get(VersionedTable.RowsKey)
+      .flatMap(_.longRange).map(_._1))
+    fileBlooms(staged.map(_._1), cols, conf.fileBloomBits,
+      if (rows.forall(_.isDefined)) Some(rows.flatten.sum) else None)
   }
 
-  /** Driver-pooled bloom build for metadata-small batches: per file, a
-    * projected Group read of the declared columns. Returns the present
-    * column list (union across footers, order of `pcols0`) and per-file
-    * blooms indexed by position in that list — the exact shape the
-    * distributed pass produces — or None to fall back. */
-  private def localFileBlooms(staged: Seq[String], pcols0: Seq[String],
-      mBits: Int): Option[(Seq[String], Map[String, Map[Int, IdBloom]])] = try {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-    val k = IdBloom.DefaultK
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // ONE footer read serves the whole batch: files staged by a single
-    // write share the written schema, so the projection is computed
-    // once (a divergent file would fail GroupReadSupport's
-    // compatibility check and land in the NonFatal fallback below —
-    // the distributed pass, which handles mixed schemas)
-    val p0 = new Path(dataDir, staged.head)
-    val fr = openParquet(p0)
-    val schema = try fr.getFooter.getFileMetaData.getSchema
+  /** Per-(staged file, declared column) bloom filters over the columns
+    * of `cols` (PHYSICAL names) the files hold with a hashable type,
+    * as `#fb:` ustat entries ready to merge into the txn's file stats
+    * (footers can't provide them). Each file is read by one call of a
+    * per-file function, with [[rowIndexReader]], hashing each non-null
+    * value through [[IdBloom.hashValue]]: on the driver pool when
+    * `totalRows` bounds the batch at [[Instance.FileBloomLocalRows]]
+    * (a Spark job's dispatch costs more than reading a small batch),
+    * else in one Spark job over the files. */
+  private[acid] def fileBlooms(staged: Seq[String], cols: Seq[String],
+      mBits: Int, totalRows: Option[Long]): Map[String, Map[String, UStat]] = {
+    if (staged.isEmpty || cols.isEmpty) return Map.empty
+    // files staged by one write share its schema: one footer gives it.
+    // Partition-path columns, and columns added after a file was
+    // written, are not in the file: absence is always just "no veto"
+    val fileSchema = {
+      val fr = openParquet(new Path(dataDir, staged.head))
+      try new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(fr.getFooter.getFileMetaData.getSchema)
       finally fr.close()
-    val cols: Seq[(String,
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName)] =
-      pcols0.filter(schema.containsField).flatMap { c =>
-        val t = schema.getType(schema.getFieldIndex(c))
-        if (!t.isPrimitive) None
-        else t.asPrimitiveType.getPrimitiveTypeName match {
-          case INT32 | INT64 | BINARY =>
-            Some(c -> t.asPrimitiveType.getPrimitiveTypeName)
-          case _ => None
-        }
-      }
-    if (cols.isEmpty) return Some((Nil, Map.empty))
-    val proj = new org.apache.parquet.schema.MessageType(
-      "graft_bloom_projection",
-      cols.map { case (c, _) =>
-        schema.getType(schema.getFieldIndex(c)) }: _*)
-    val rconf = new org.apache.hadoop.conf.Configuration(hconf)
-    rconf.set(
-      org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      proj.toString)
-    val perFile: Seq[(String, Map[String, IdBloom])] =
-      pooledMap(staged) { rel =>
-        val p = new Path(dataDir, rel)
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(
-            new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-          .withConf(rconf).build()
-        val acc = scala.collection.mutable.HashMap.empty[String, IdBloom]
-        try {
-          var g = reader.read()
-          while (g != null) {
-            var i = 0
-            while (i < cols.length) {
-              if (g.getFieldRepetitionCount(i) > 0) {
-                val h = cols(i)._2 match {
-                  case INT64 => g.getLong(i, 0)
-                  case INT32 => g.getInteger(i, 0).toLong
-                  case _ => IdBloom.hashBytes(g.getBinary(i, 0).getBytes)
-                }
-                acc.getOrElseUpdate(cols(i)._1,
-                  IdBloom.empty(mBits.toLong, k)).add(h)
-              }
-              i += 1
-            }
-            g = reader.read()
-          }
-        } finally reader.close()
-        (rel, acc.toMap)
-      }
-    val pcols = pcols0.filter(cols.map(_._1).toSet)
-    val byFile: Map[String, Map[Int, IdBloom]] = perFile.map {
-      case (rel, m) =>
-        rel -> pcols.zipWithIndex.flatMap { case (c, i) =>
-          m.get(c).map(i -> _) }.toMap
-    }.toMap
-    Some((pcols, byFile))
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def fileBloomsDistributed(staged: Seq[String],
-      pcols0: Seq[String], mBits: Int): Map[String, Map[String, UStat]] = {
-    val paths = staged.map(f => new Path(dataDir, f).toString)
+    }
+    val schema = StructType(cols.flatMap(c =>
+      fileSchema.find(_.name == c).filter(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType |
+             StringType | BinaryType => true
+        case _ => false
+      })))
+    if (schema.isEmpty) return Map.empty
+    val read = rowIndexReader(schema)
+    val types = schema.fields.map(_.dataType)
     val k = IdBloom.DefaultK
-    val raw = spark.read.parquet(paths: _*)
-    // partition-path columns (and legacy files from before a column
-    // was added) are not IN the files: bloom only what's present —
-    // absence is always just "no veto"
-    val present = raw.columns.toSet
-    val pcols = pcols0.filter(present)
-    if (pcols.isEmpty) return Map.empty
-    val nCols = pcols.length
-    // resolve input_file_name() back to the dataDir-RELATIVE staged
-    // path, not the basename: Spark's dynamic-partition writer reuses
-    // the same part-file name across partition directories within one
-    // task, and basename keying would union colliding files' blooms —
-    // sound, but it silently degrades point pruning exactly on
-    // partitioned tables. Basename stays the fallback when the suffix
-    // match fails (URI-encoding surprises), preserving the old sound
-    // over-approximation rather than dropping the entry.
-    val relsByName: Map[String, Seq[String]] =
-      staged.groupBy(r => r.substring(r.lastIndexOf('/') + 1))
-    val built = raw
-      .select(input_file_name() +: pcols.map(col): _*)
-      .rdd.mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap
-          .empty[(String, Int), IdBloom]
-        val resolved = scala.collection.mutable.HashMap.empty[String, String]
-        def keyOf(p: String): String = resolved.getOrElseUpdate(p, {
-          val name = p.substring(p.lastIndexOf('/') + 1)
-          relsByName.get(name) match {
-            case Some(Seq(only)) => only
-            case Some(many) =>
-              val decoded =
-                try new java.net.URI(p).getPath catch { case _: Exception => p }
-              many.find(r => decoded.endsWith("/" + r) || p.endsWith("/" + r))
-                .getOrElse(name)
-            case None => name
-          }
-        })
-        it.foreach { r =>
-          val key = keyOf(r.getString(0))
-          var i = 0
-          while (i < nCols) {
-            if (!r.isNullAt(i + 1))
-              IdBloom.hashValue(r.get(i + 1)).foreach { h =>
-                acc.getOrElseUpdate((key, i),
-                  IdBloom.empty(mBits.toLong, k)).add(h)
-              }
-            i += 1
-          }
+    val build = (f: PartitionedFile) => Instance.readFile(read, f) { rows =>
+      val blooms = new Array[IdBloom](types.length)
+      rows.foreach { r =>
+        var i = 0
+        while (i < types.length) {
+          if (!r.isNullAt(i))
+            IdBloom.hashValue(r.get(i, types(i))).foreach { h =>
+              if (blooms(i) == null) blooms(i) = IdBloom.empty(mBits.toLong, k)
+              blooms(i).add(h)
+            }
+          i += 1
         }
-        acc.iterator
       }
-      .reduceByKey(_.unionInPlace(_))
-      .collect()
-    val byFile: Map[String, Map[Int, IdBloom]] = built
-      .groupBy(_._1._1)
-      .map { case (n, es) => n -> es.map { case ((_, i), b) => i -> b }.toMap }
-    fileBloomEntries(staged, pcols, byFile, mBits)
+      blooms.indices.filter(blooms(_) != null).map(i => i -> blooms(i)).toMap
+    }
+    val files = pooledMap(staged)(f =>
+      Instance.wholeFile(fs.getFileStatus(new Path(dataDir, f))))
+    val built =
+      if (totalRows.exists(_ <= Instance.FileBloomLocalRows)) pooledMap(files)(build)
+      else spark.sparkContext.parallelize(files, math.max(1,
+        math.min(files.size, spark.sparkContext.defaultParallelism)))
+        .map(build).collect().toSeq
+    fileBloomEntries(staged, schema.fieldNames.toSeq, staged.zip(built).toMap,
+      mBits)
   }
 
-  /** Shared tail of both bloom builds: per-(file, column) `#fb:` ustat
-    * entries, with the inline-cap sidecar spill. */
+  /** Tail of [[fileBlooms]]: per-(file, column) `#fb:` ustat entries,
+    * with the inline-cap sidecar spill. */
   private def fileBloomEntries(staged: Seq[String], pcols: Seq[String],
       byFile: Map[String, Map[Int, IdBloom]], mBits: Int)
       : Map[String, Map[String, UStat]] = {
@@ -2662,10 +2542,7 @@ final class Instance(val spark: SparkSession, val root: String,
     // predicate forever (no entry = no veto).
     val sharedEmpty = IdBloom.empty(mBits.toLong, k).toBase64
     val inline: Map[String, Map[String, UStat]] = staged.map { rel =>
-      val name = rel.substring(rel.lastIndexOf('/') + 1)
-      // rel-path key first; basename only as the executor's own
-      // fallback key (suffix match failed there — union semantics)
-      val found = byFile.getOrElse(rel, byFile.getOrElse(name, Map.empty))
+      val found = byFile.getOrElse(rel, Map.empty)
       rel -> pcols.indices.map { i =>
         (BloomKeyPrefix + pcols(i)) -> UStat('F',
           found.get(i).map(_.toBase64).getOrElse(sharedEmpty),
@@ -3802,22 +3679,14 @@ final class Instance(val spark: SparkSession, val root: String,
   // reentrant monitor) and must not re-trigger
   @volatile private var autoMaintainActive = false
 
-  /** Post-commit auto-maintenance ([[EngineConf.autoCompactFiles]] /
-    * [[EngineConf.autoMaterializeDvs]]): best-effort, conflict-safe —
-    * a losing race just means another writer (or the next trigger)
-    * does the folding. */
+  /** Post-commit auto-maintenance ([[EngineConf.autoCompactFiles]]):
+    * best-effort, conflict-safe — a losing race just means another
+    * writer (or the next trigger) does the folding. */
   private def maybeAutoMaintain(version: Long): Unit = {
-    if ((conf.autoCompactFiles <= 0 && conf.autoMaterializeDvs <= 0) ||
-        autoMaintainActive) return
+    if (conf.autoCompactFiles <= 0 || autoMaintainActive) return
     autoMaintainActive = true
     try {
-      val st = tableStateAt(version)
-      if (conf.autoMaterializeDvs > 0 &&
-          st.dvs.size >= conf.autoMaterializeDvs)
-        try materializeDvs()
-        catch { case scala.util.control.NonFatal(_) => () }
-      if (conf.autoCompactFiles > 0 &&
-          st.numFiles >= conf.autoCompactFiles)
+      if (tableStateAt(version).numFiles >= conf.autoCompactFiles)
         try compact(targetFiles = conf.autoCompactTarget)
         catch { case scala.util.control.NonFatal(_) => () }
     } finally autoMaintainActive = false
@@ -5833,28 +5702,11 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     // through here, and a rewritten file silently dropping out of the
     // bloom index would erode point-predicate skipping commit by
     // commit (same reasoning as the footer stats above)
-    val bloomPcols = inst.conf.fileBloomCols.distinct.flatMap { c =>
-      StructType.fromDDL(ddl).fields.find(_.name == c)
-        .filter(_.dataType match {
-          case ByteType | ShortType | IntegerType | LongType |
-               StringType | BinaryType => true
-          case _ => false
-        })
-        .map(_ => ren.getOrElse(c, c))
-    }
-    if (bloomPcols.nonEmpty && staged.nonEmpty) {
-      val rowCounts = stagedStats.map(_._2.get(VersionedTable.RowsKey)
-        .flatMap(_.longRange).map(_._1))
-      val stagedRows =
-        if (rowCounts.forall(_.isDefined)) Some(rowCounts.flatten.sum)
-        else None
-      inst.fileBlooms(staged, bloomPcols, inst.conf.fileBloomBits,
-          stagedRows)
-        .foreach { case (f, entries) =>
-          addedFileStats(f) = addedFileStats.getOrElse(f, Map.empty) ++
-            entries
-        }
-    }
+    inst.fileBlooms(stagedStats,
+        inst.conf.fileBloomCols.map(c => ren.getOrElse(c, c)).distinct)
+      .foreach { case (f, entries) =>
+        addedFileStats(f) = addedFileStats.getOrElse(f, Map.empty) ++ entries
+      }
     retire(scanned)
     added ++= staged
     // segmented snapshot: scanned checkpoint-covered files' id ranges

@@ -376,4 +376,54 @@ class CdfStreamSpec extends AnyFunSuite {
       (2L, 20L, "update_postimage"), (2L, 25L, "update_preimage")),
       s"restore must stream its inverse images: ${got2.toSeq}")
   }
+
+  test("readChangeFeed batch: hive layouts, a rename, MoR deletes and cdc images") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val root = freshDir()
+    val inst = VersionedTable.create(spark, root, StructType(Seq(
+      StructField("obj_id", LongType, nullable = false),
+      StructField("lang", StringType),
+      StructField("value", LongType))))
+    inst.withRetry() { t => t.insertPartitioned(
+      Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "en", 30L), (4L, "de", 40L))
+        .toDF("obj_id", "lang", "value").repartition(1), Seq("lang")) } // v1
+    // the partition column is renamed: later k=v segments and every
+    // earlier one keep spelling the physical `lang`
+    inst.withRetry() { t => t.renameColumn("lang", "locale") } // v2
+    inst.withRetry() { t => t.insertPartitioned(
+      Seq((5L, "en", 50L)).toDF("obj_id", "locale", "value"),
+      Seq("locale")) } // v3: insert
+    inst.withRetry() { t => t.deleteMoR(Seq(1L, 4L)) } // v4: a mask per layout
+    VersionedTable.open(spark, root, EngineConf(changeDataFeed = true))
+      .withRetry() { t =>
+        t.update(Seq(2L), df => df.withColumn("value", col("value") * 10))
+      } // v5: cdc side files carry the images
+    assert(inst.readManifest(4L).dvs.size == 2)
+    assert(inst.readManifest(5L).cdcExact && inst.readManifest(5L).cdc.nonEmpty)
+
+    val expected = Seq(
+      (1L, "en", 10L, 1L, "insert"), (2L, "de", 20L, 1L, "insert"),
+      (3L, "en", 30L, 1L, "insert"), (4L, "de", 40L, 1L, "insert"),
+      (5L, "en", 50L, 3L, "insert"),
+      (1L, "en", 10L, 4L, "delete"), (4L, "de", 40L, 4L, "delete"),
+      (2L, "de", 200L, 5L, "update_postimage"),
+      (2L, "de", 20L, 5L, "update_preimage"))
+    def rows(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getAs[Long]("obj_id"), r.getAs[String]("locale"),
+        r.getAs[Long]("value"), r.getAs[Long]("_version"),
+        r.getAs[String]("_change_type")))
+      .sortBy(r => (r._4, r._5, r._1))
+    val batch = spark.read.format("graft-cdf").option("path", root)
+      .option("readChangeFeed", true).option("startingVersion", 1L)
+      .option("endingVersion", 5L).load()
+    assert(batch.columns.toSeq ==
+      Seq("obj_id", "locale", "value", "_version", "_change_type"))
+    assert(rows(batch) == expected.sortBy(r => (r._4, r._5, r._1)),
+      s"got ${rows(batch)}")
+    // the same range drained as one micro-batch
+    val name = "cdf_mix_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    drain(inst.readChangesStream(readChangeFeed = true), name,
+      Files.createTempDirectory("graft_cdf_mix_ckpt_").toString)
+    assert(rows(spark.table(name)) == rows(batch))
+  }
 }

@@ -92,6 +92,31 @@ class FileBloomSpec extends AnyFunSuite {
       inst32.conf.fileBloomBits, totalRows = None)
     assert(local32.nonEmpty)
     assert(local32 == dist32)
+
+    // partition files colliding on basename (one task writes both
+    // lang= dirs): each build keys every file by its dataDir-relative
+    // path, so the two files keep two different blooms
+    val dirP = Files.createTempDirectory("graft_fbloompl_").toUri.toString
+    val instP = VersionedTable.create(spark, dirP, StructType(Seq(
+      StructField("obj_id", LongType, nullable = false),
+      StructField("lang", StringType),
+      StructField("uname", StringType))),
+      EngineConf(fileBloomCols = Seq("uname")))
+    val rowsP = (0 until 80).map { i =>
+      (i.toLong, if (i % 2 == 0) "en" else "de", s"user_${i * 2654435761L}")
+    }
+    instP.withRetry() { t => t.insertPartitioned(
+      rowsP.toDF("obj_id", "lang", "uname").repartition(1), Seq("lang")) }
+    val filesP = instP.tableStateAt(instP.latestVersion).inlineFiles
+    assert(filesP.size == 2 &&
+      filesP.map(f => f.substring(f.lastIndexOf('/') + 1)).distinct.size == 1)
+    val localP = instP.fileBlooms(filesP, Seq("uname"),
+      instP.conf.fileBloomBits, totalRows = Some(80L))
+    val distP = instP.fileBlooms(filesP, Seq("uname"),
+      instP.conf.fileBloomBits, totalRows = None)
+    assert(localP.keySet == filesP.toSet)
+    assert(localP.values.map(_.values.head.min).toSet.size == 2)
+    assert(localP == distP)
   }
 
   test("point predicates on a bloom column prune >90% of files") {
