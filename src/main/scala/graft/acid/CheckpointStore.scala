@@ -87,22 +87,15 @@ private[acid] object CheckpointStore {
   def readRows(spark: SparkSession, path: String): Dataset[CkptRow] =
     spark.read.schema(ckptRowEncoder.schema).parquet(path).as[CkptRow]
 
-  /** True when [lo, hi] intersects the sorted probe array. */
-  private def anyIn(sorted: Array[Long], lo: Long, hi: Long): Boolean = {
-    var i = java.util.Arrays.binarySearch(sorted, lo)
+  /** Executor-safe test for a candidate screen: may an obj-id range
+    * [lo, hi] contain one of the (sorted) probe ids? Built HERE (object
+    * member) so the returned closure captures only the array — never a
+    * Txn/Instance. */
+  def holdsAnyOf(sortedIds: Array[Long]): (Long, Long) => Boolean = (lo, hi) => {
+    var i = java.util.Arrays.binarySearch(sortedIds, lo)
     if (i < 0) i = -i - 1
-    i < sorted.length && sorted(i) <= hi
+    i < sortedIds.length && sortedIds(i) <= hi
   }
-
-  /** Executor-safe conservative veto: may the row's obj-id range
-    * contain one of the (sorted) probe ids? Rangeless rows are always
-    * candidates. Built HERE (object member) so the returned closure
-    * captures only the array — never a Txn/Instance. */
-  def mayContainId(sortedIds: Array[Long]): CkptRow => Boolean = r =>
-    (r.idMin, r.idMax) match {
-      case (Some(lo), Some(hi)) => anyIn(sortedIds, lo, hi)
-      case _ => true
-    }
 
   /** Running cross-file merge of one column's [[UStat]]s — the shape
     * metadata-only aggregate pushdown folds over every live file.

@@ -240,6 +240,33 @@ final class MaterializedAggView private (
           dimJoins.indices.forall(i => headDs(i) <= lastDs(i))) {
         lastRefreshMode = "noop"; return head
       }
+      // a fold (snapshot or incremental) is valid ONLY against the
+      // watermarks it was derived from: if a rival refresher advanced
+      // one (visible in this snapshot, or surfaced as a fence conflict
+      // that re-ran the commit body), the overlap of the two intervals
+      // must not fold twice — restart from the new watermarks (one walk
+      // for all sides). Each watermark MOVES only when its side
+      // advanced (a re-mark at the SAME epoch would read as
+      // already-committed and silently skip the fold), but a join view
+      // FENCES every side regardless: the delta was derived from ALL
+      // the watermarks, so two refreshers that each observed only one
+      // side's churn must still collide — otherwise both merges land on
+      // disjoint appIds and the cross terms are never applied
+      // (fenceEpoch watches without moving)
+      def fence(t: Txn): Unit = {
+        val wmNow = view.appTxnsAt(t.readVersion)
+        if (wmNow.get(appId).exists(w => math.max(0L, w) != last) ||
+            dimJoins.indices.exists(i => wmNow.get(appIdDim(i))
+              .exists(w => math.max(0L, w) != lastDs(i))))
+          throw new StaleWatermark
+        if (head > last) t.markEpoch(appId, head, fence = true)
+        else if (dimJoins.nonEmpty) t.fenceEpoch(appId)
+        dimJoins.indices.foreach { i =>
+          if (headDs(i) > lastDs(i))
+            t.markEpoch(appIdDim(i), headDs(i), fence = true)
+          else t.fenceEpoch(appIdDim(i))
+        }
+      }
       // the view columns' fixed physical names resolved to each
       // relation's HEAD logical names: the deltas are head-aligned, so
       // a rename mid-interval is transparent — unless the column was
@@ -274,24 +301,7 @@ final class MaterializedAggView private (
         try {
           JobLabel(view.spark, "mv:snapshot-fold") {
           view.withRetry() { t =>
-            // same stale-watermark + fence discipline as the
-            // incremental path: the fold is valid only against the
-            // watermarks it was derived from (one walk for all sides)
-            val wmNow = view.appTxnsAt(t.readVersion)
-            if (wmNow.get(appId).exists(w => math.max(0L, w) != last))
-              throw new StaleWatermark
-            dimJoins.indices.foreach { i =>
-              if (wmNow.get(appIdDim(i))
-                  .exists(w => math.max(0L, w) != lastDs(i)))
-                throw new StaleWatermark
-            }
-            if (head > last) t.markEpoch(appId, head, fence = true)
-            else if (dimJoins.nonEmpty) t.fenceEpoch(appId)
-            dimJoins.indices.foreach { i =>
-              if (headDs(i) > lastDs(i))
-                t.markEpoch(appIdDim(i), headDs(i), fence = true)
-              else t.fenceEpoch(appIdDim(i))
-            }
+            fence(t)
             // truncate + insert in ONE commit: stale groups (dead in
             // the lost interval) must not linger, and the saturated
             // truncate summary conflicts with any rival merge.
@@ -438,35 +448,7 @@ final class MaterializedAggView private (
            ndvCols.flatMap(c => Seq(s"ndv_$c", s"del_ndv_$c"))))
           .map(col): _*)
         view.withRetry() { t =>
-          // the delta above is valid ONLY against watermark `last`; if
-          // a rival refresher advanced it (visible in this snapshot, or
-          // surfaced as a fence conflict that re-ran this body), the
-          // overlap of the two intervals must not fold twice — restart
-          // from the new watermark with a fresh delta (one walk for
-          // all sides)
-          val wmNow = view.appTxnsAt(t.readVersion)
-          if (wmNow.get(appId).exists(w => math.max(0L, w) != last))
-            throw new StaleWatermark
-          dimJoins.indices.foreach { i =>
-            if (wmNow.get(appIdDim(i))
-                .exists(w => math.max(0L, w) != lastDs(i)))
-              throw new StaleWatermark
-          }
-          // each watermark MOVES only when its side advanced (a
-          // re-mark at the SAME epoch would read as already-committed
-          // and silently skip the fold), but a join view FENCES every
-          // side regardless: the delta was derived from ALL the
-          // watermarks, so two refreshers that each observed only one
-          // side's churn must still collide — otherwise both merges
-          // land on disjoint appIds and the cross terms are never
-          // applied (fenceEpoch watches without moving)
-          if (head > last) t.markEpoch(appId, head, fence = true)
-          else if (dimJoins.nonEmpty) t.fenceEpoch(appId)
-          dimJoins.indices.foreach { i =>
-            if (headDs(i) > lastDs(i))
-              t.markEpoch(appIdDim(i), headDs(i), fence = true)
-            else t.fenceEpoch(appIdDim(i))
-          }
+          fence(t)
           // min/max death repair: groups whose stored extremum the
           // interval deleted without covering (see class doc) get
           // ABSOLUTE recomputed values from the head snapshot, scanned

@@ -225,12 +225,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def tryMatch(agg: Aggregate,
       leaves: Seq[(DataSourceV2Relation, GraftTable)],
       conds: Seq[Expression], cand: Candidate): LogicalPlan = {
-    def fail(): Nothing =
-      if (conf.getConfString("spark.graft.mv.rewrite.debugBail", "false")
-          .toBoolean)
-        throw new RuntimeException("bail at " +
-          Thread.currentThread.getStackTrace.drop(2).take(4).mkString(" <- "))
-      else throw Bail
+    def fail(): Nothing = throw Bail
     val resolver = conf.resolver
     val d = cand.d
 
@@ -581,14 +576,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     // output contract: same names and types, nullability may not narrow
     agg.aggregateExpressions.zip(newAes).foreach { case (o, n) =>
       if (o.name != n.name || o.dataType != n.dataType ||
-          (!o.nullable && n.nullable)) {
-        if (conf.getConfString("spark.graft.mv.rewrite.debugBail", "false")
-            .toBoolean)
-          throw new RuntimeException(s"contract mismatch: o=${o.name}:" +
-            s"${o.dataType}:${o.nullable} n=${n.name}:${n.dataType}:" +
-            s"${n.nullable} (${n.asInstanceOf[Alias].child})")
-        fail()
-      }
+          (!o.nullable && n.nullable)) fail()
     }
     val child: LogicalPlan =
       if (remappedResidual.isEmpty) answer

@@ -1720,18 +1720,6 @@ final class Instance(val spark: SparkSession, val root: String,
     commit(txn)
   }
 
-  /** The commit log as a queryable table — one row per version with
-    * its transaction id, file/object deltas, and checkpoint flag (the
-    * reference's log inspection surface; SURVEY §2.1 R21–R24). Driver
-    * metadata only: O(versions) manifest reads, and vacuum never
-    * deletes manifests, so the full history stays readable.
-    *
-    * Manifests are immutable once published, so the reads are issued
-    * CONCURRENTLY on a bounded driver pool ([[pooledMap]]) — on an
-    * object store each read is a ~10ms RPC and the serial walk was the
-    * latency bottleneck (100 commits = 1s, 10⁴ = 100s); 16-way overlap
-    * makes history an admin-interactive surface again, with
-    * deterministic version-ascending output. */
   /** Streaming tail of this table's commit log — appended rows per
     * data commit, tagged `_version` (see [[ChangeFeedProvider]] for
     * the full semantics: layout commits silent, update/delete commits
@@ -1765,6 +1753,18 @@ final class Instance(val spark: SparkSession, val root: String,
     (if (toV > 0L) r.option("endingVersion", toV) else r).load()
   }
 
+  /** The commit log as a queryable table — one row per version with
+    * its transaction id, file/object deltas, and checkpoint flag (the
+    * reference's log inspection surface; SURVEY §2.1 R21–R24). Driver
+    * metadata only: O(versions) manifest reads, and vacuum never
+    * deletes manifests, so the full history stays readable.
+    *
+    * Manifests are immutable once published, so the reads are issued
+    * CONCURRENTLY on a bounded driver pool ([[pooledMap]]) — on an
+    * object store each read is a ~10ms RPC and the serial walk was the
+    * latency bottleneck (100 commits = 1s, 10⁴ = 100s); 16-way overlap
+    * makes history an admin-interactive surface again, with
+    * deterministic version-ascending output. */
   def history(): DataFrame = history(0L, latestVersion)
 
   /** [[history]] over the version interval [fromV, toV] only — the
@@ -2001,6 +2001,71 @@ final class Instance(val spark: SparkSession, val root: String,
       s"(${readManifest(0L).tsMillis}) at $root")
   }
 
+  /** Rows of `df` whose obj_id is in `ids`: an `isin` literal predicate
+    * for small sets, a broadcast semi-join past
+    * [[Instance.IdBroadcastThreshold]] (a literal list of millions of
+    * ids would be expanded into the compiled plan). */
+  private[acid] def idMatch(df: DataFrame, ids: Seq[Long]): DataFrame =
+    if (ids.size <= Instance.IdBroadcastThreshold)
+      df.filter(col("obj_id").isin(ids: _*))
+    else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_semi")
+
+  /** Complement of [[idMatch]] (anti-join past the threshold). */
+  private[acid] def idReject(df: DataFrame, ids: Seq[Long]): DataFrame =
+    if (ids.size <= Instance.IdBroadcastThreshold)
+      df.filter(!col("obj_id").isin(ids: _*))
+    else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_anti")
+
+  private def idsDf(ids: Seq[Long]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ids.toDF("obj_id")
+  }
+
+  /** The row diff of `pre` against `post`, keyed by obj_id: ids only
+    * in `post` are inserts, only in `pre` deletes, and rows on both
+    * sides that differ are an update pre/post image pair; identical
+    * rows are CoW copies and emit nothing. One column layout serves both
+    * sides (a column one side lacks reads as typed nulls, as schema
+    * evolution within a commit does). `tag` adds the change columns to
+    * each event set, given its change name. */
+  private[acid] def rowDiff(pre: DataFrame, post: DataFrame)(
+      tag: (DataFrame, String) => DataFrame): DataFrame = {
+    val allCols: Seq[(String, DataType)] =
+      (post.schema ++ pre.schema.filterNot(f => post.columns.contains(f.name)))
+        .filterNot(_.name == "obj_id").map(f => f.name -> f.dataType).toSeq
+    // maps are not orderable, so <=> rejects structs containing them:
+    // the COMPARISON struct carries map columns as key-sorted entry
+    // arrays while the output struct keeps the original types. (Maps
+    // nested inside other types remain unsupported — same limitation as
+    // every sort-based operator.)
+    def comparable(c: Column, dt: DataType): Column = dt match {
+      case _: MapType => array_sort(map_entries(c))
+      case _ => c
+    }
+    def keyed(df: DataFrame, as: String): DataFrame = {
+      def field(n: String, dt: DataType) =
+        if (df.columns.contains(n)) col(n) else lit(null).cast(dt)
+      df.select(col("obj_id"),
+        struct(allCols.map { case (n, dt) => field(n, dt).as(n) }: _*).as(as),
+        struct(allCols.map { case (n, dt) =>
+          comparable(field(n, dt), dt).as(n) }: _*).as(as + "C"))
+    }
+    val joined = keyed(pre, "_pre")
+      .join(keyed(post, "_post"), Seq("obj_id"), "full_outer")
+    def unpack(side: String, rows: DataFrame, change: String): DataFrame =
+      tag(rows.select(col("obj_id") +: allCols.map { case (n, _) =>
+        col(s"$side.$n").as(n) }: _*), change)
+    val updated = joined.filter(col("_pre").isNotNull &&
+      col("_post").isNotNull && !(col("_preC") <=> col("_postC")))
+    Seq(
+      unpack("_post", joined.filter(col("_pre").isNull), "insert"),
+      unpack("_pre", joined.filter(col("_post").isNull), "delete"),
+      unpack("_pre", updated, "update_preimage"),
+      unpack("_post", updated, "update_postimage"))
+      .reduce(_.unionByName(_))
+  }
+
   /** Row-level change data feed for the commit interval `(fromV, toV]`
     * — the lakehouse analog of tailing the reference's WAL/commit log
     * (log records are read back by LSN for replay and downstream
@@ -2038,16 +2103,8 @@ final class Instance(val spark: SparkSession, val root: String,
       val m = step.m
       val v = step.v
       if (m.objects.nonEmpty) {
-        val ids = m.objects
-        def touched(df: DataFrame): DataFrame =
-          if (ids.size <= Instance.IdBroadcastThreshold)
-            df.filter(col("obj_id").isin(ids: _*))
-          else {
-            val s = spark; import s.implicits._
-            df.join(broadcast(ids.toDF("obj_id")), Seq("obj_id"), "left_semi")
-          }
-        val pre = touched(step.preView)
-        val post = touched(step.postView)
+        val pre = idMatch(step.preView, m.objects)
+        val post = idMatch(step.postView, m.objects)
         val preIds = pre.select("obj_id").distinct()
         val postIds = post.select("obj_id").distinct()
         def tag(df: DataFrame, other: DataFrame, join: String,
@@ -2072,47 +2129,8 @@ final class Instance(val spark: SparkSession, val root: String,
         // values rewritten) is indistinguishable from a copy and is not
         // emitted; the feed assumes the layer's id contract (obj_id
         // unique per snapshot — guaranteed by the upsert/point-op API).
-        val pre = step.preView
-        val post = step.postView
-        // one column layout across both sides (schema evolution within
-        // the commit appears as typed nulls, same as the union path)
-        val allCols: Seq[(String, DataType)] =
-          (post.schema ++ pre.schema.filterNot(f =>
-            post.columns.contains(f.name)))
-            .filterNot(_.name == "obj_id").map(f => f.name -> f.dataType).toSeq
-        // maps are not orderable, so <=> rejects structs containing
-        // them: the COMPARISON struct carries map columns as key-sorted
-        // entry arrays while the output struct keeps the original
-        // types. (Maps nested inside other types remain unsupported —
-        // same limitation as every sort-based operator.)
-        def comparable(c: Column, dt: DataType): Column = dt match {
-          case _: MapType => array_sort(map_entries(c))
-          case _ => c
-        }
-        def keyed(df: DataFrame, as: String): DataFrame = {
-          def field(n: String, dt: DataType) =
-            if (df.columns.contains(n)) col(n) else lit(null).cast(dt)
-          df.select(col("obj_id"),
-            struct(allCols.map { case (n, dt) => field(n, dt).as(n) }: _*)
-              .as(as),
-            struct(allCols.map { case (n, dt) =>
-              comparable(field(n, dt), dt).as(n) }: _*).as(as + "C"))
-        }
-        val joined = keyed(pre, "_pre")
-          .join(keyed(post, "_post"), Seq("obj_id"), "full_outer")
-        def unpack(side: String, rows: DataFrame, change: String): DataFrame =
-          rows.select(col("obj_id") +: allCols.map { case (n, _) =>
-            col(s"$side.$n").as(n) }: _*)
-            .withColumn("_version", lit(v))
-            .withColumn("_change", lit(change))
-        val updated = joined.filter(col("_pre").isNotNull &&
-          col("_post").isNotNull && !(col("_preC") <=> col("_postC")))
-        Some(Seq(
-          unpack("_post", joined.filter(col("_pre").isNull), "insert"),
-          unpack("_pre", joined.filter(col("_post").isNull), "delete"),
-          unpack("_pre", updated, "update_preimage"),
-          unpack("_post", updated, "update_postimage"))
-          .reduce(_.unionByName(_, allowMissingColumns = true)))
+        Some(rowDiff(step.preView, step.postView)((df, change) =>
+          df.withColumn("_version", lit(v)).withColumn("_change", lit(change))))
       } else None
     }
     unionBatched(perVersion, "graft:changes")(
@@ -3081,12 +3099,6 @@ final class Instance(val spark: SparkSession, val root: String,
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf),
       org.apache.parquet.HadoopReadOptions.builder(hconf).build())
   }
-
-  /** (min, max) of the obj_id column from a parquet file's footer
-    * statistics; None when the column is absent or stats are missing
-    * (the file is then never pruned — conservative). */
-  private[acid] def footerIdRange(p: Path): Option[(Long, Long)] =
-    footerLongRange(p, "obj_id")
 
   /** (min, max) of any INT64 `column` from a parquet footer — obj_id
     * for the primary pruning index, secondary cluster columns for
@@ -4623,83 +4635,27 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   /** Files whose manifest obj-id range can contain one of `ids` — the
     * point-op pruning step (reference: open_read resolves the id
     * directly to its block, instance.rs:126-134; here the manifest
-    * stats bound the files a delete/update must even open). Files with
-    * no recorded range are always candidates.
-    *
-    * Segmented snapshot: checkpoint-covered files are screened by a
-    * DISTRIBUTED filter over the side files (the skip loop never runs
-    * on the driver); only the O(tail) inline files screen locally. */
-  private[graft] def candidateFiles(ids: Seq[Long]): Seq[String] = {
+    * stats bound the files a delete/update must even open). */
+  private[graft] def candidateFiles(ids: Seq[Long]): Seq[String] =
+    candidates(CheckpointStore.holdsAnyOf(ids.distinct.sorted.toArray))
+
+  /** Files whose manifest obj-id range `[lo, hi]` passes `mayHold`;
+    * files with no recorded range are always candidates. A segmented
+    * snapshot screens its checkpoint-covered files with a DISTRIBUTED
+    * filter over the side files (the skip loop never runs on the
+    * driver); only the O(tail) inline files screen locally. `mayHold`
+    * runs on executors, so it must capture no Txn or Instance. */
+  private def candidates(mayHold: (Long, Long) => Boolean): Seq[String] = {
     val (files, _, stats) = localState()
-    val sorted = ids.distinct.sorted.toArray
-    def anyIn(lo: Long, hi: Long): Boolean = {
-      var i = java.util.Arrays.binarySearch(sorted, lo)
-      if (i < 0) i = -i - 1
-      i < sorted.length && sorted(i) <= hi
-    }
+    def pass(f: String) = stats.get(f).forall(mayHold.tupled)
     cachedBaseState().sidecar match {
       case Some(sc) =>
         val localOnly = (sc.tailLive ++ added) -- removed
-        val driverPart = files.filter(f => localOnly(f) && (stats.get(f) match {
-          case Some((lo, hi)) => anyIn(lo, hi)
-          case None => true
-        }))
         val scX = sc.copy(excluded = sc.excluded ++ removed ++ added)
-        val distPart =
-          inst.sidecarSurvivors(scX)(CheckpointStore.mayContainId(sorted))
-        (driverPart ++ distPart).sorted
-      case None =>
-        files.filter(f => stats.get(f) match {
-          case Some((lo, hi)) => anyIn(lo, hi)
-          case None => true
-        })
+        (files.filter(f => localOnly(f) && pass(f)) ++ inst.sidecarSurvivors(scX)(
+          r => CheckpointStore.statsOf(r).forall(mayHold.tupled))).sorted
+      case None => files.filter(pass)
     }
-  }
-
-  /** Files whose manifest obj-id range can OVERLAP `[lo, hi]` — the
-    * interval twin of [[candidateFiles]], pruning bulk merge/delete
-    * scans by the key batch's global span. Same segmented split:
-    * O(tail) screens locally, checkpoint-covered files as one
-    * distributed side-file filter. Files with no recorded range are
-    * always candidates. */
-  private def candidateFilesRange(lo: Long, hi: Long): Seq[String] = {
-    val (files, _, stats) = localState()
-    def overlap(f: String): Boolean = stats.get(f) match {
-      case Some((mn, mx)) => mn <= hi && lo <= mx
-      case None => true
-    }
-    cachedBaseState().sidecar match {
-      case Some(sc) =>
-        val localOnly = (sc.tailLive ++ added) -- removed
-        val driverPart = files.filter(f => localOnly(f) && overlap(f))
-        val scX = sc.copy(excluded = sc.excluded ++ removed ++ added)
-        val distPart = inst.sidecarSurvivors(scX)(r =>
-          (for (mn <- r.idMin; mx <- r.idMax) yield mn <= hi && lo <= mx)
-            .getOrElse(true))
-        (driverPart ++ distPart).sorted
-      case None => files.filter(overlap)
-    }
-  }
-
-  /** Rows of `df` whose obj_id is in `ids`: an `isin` literal predicate
-    * for small sets, a broadcast semi-join past
-    * [[Instance.IdBroadcastThreshold]] (a literal list of millions of
-    * ids would be expanded into the compiled plan). */
-  private def idMatch(df: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= Instance.IdBroadcastThreshold)
-      df.filter(col("obj_id").isin(ids: _*))
-    else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_semi")
-
-  /** Complement of [[idMatch]] (anti-join past the threshold). */
-  private def idReject(df: DataFrame, ids: Seq[Long]): DataFrame =
-    if (ids.size <= Instance.IdBroadcastThreshold)
-      df.filter(!col("obj_id").isin(ids: _*))
-    else df.join(broadcast(idsDf(ids)), Seq("obj_id"), "left_anti")
-
-  private def idsDf(ids: Seq[Long]): DataFrame = {
-    val s = inst.spark
-    import s.implicits._
-    ids.toDF("obj_id")
   }
 
   /** Allocate a globally-unique object id: (tsn << SeqBits) | seq — the
@@ -4780,7 +4736,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
         if (b.isNullAt(0)) return // empty batch
         (b.getLong(0), b.getLong(1))
       }
-    val cand = candidateFilesRange(lo, hi)
+    val cand = candidates((mn, mx) => mn <= hi && lo <= mx)
     if (cand.nonEmpty) {
       val (_, ddl, _) = localState()
       val existing = inst.viewOf(cand, ddl, localDvs(), localRen)
@@ -5188,7 +5144,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     // from the inserted rows
     df.persist()
     try {
-      val keys = df.select("obj_id").distinct()
+      // a null id matches nothing: its row is only inserted
+      val keys = df.select("obj_id").where(col("obj_id").isNotNull).distinct()
       val th = inst.conf.objectListThreshold
       val probe = keys.limit(th + 1).collect().map(_.getLong(0))
       if (probe.length <= th) delete(probe.toSeq)
@@ -5210,11 +5167,11 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * `matchedUpdate = Map("value" -> (col("t.value") + col("s.value")))`,
     * `matchedDelete = Some(col("s.value") < 0)`.
     *
-    * Same CoW + pruning shape as [[deleteMatching]]: candidate files
-    * by the source keys' [min, max] against manifest ranges, hit
-    * files via a semi join, one rewrite per hit file set — a merge
-    * never scans files outside the key span, and no id lands on the
-    * driver past [[EngineConf.objectListThreshold]]. A NULL condition
+    * Candidate files by the source keys' [min, max] against manifest
+    * ranges, hit files via a semi join, one rewrite per hit file set
+    * ([[rewriteJob]]) — a merge never scans files outside the key span,
+    * and no id lands on the driver past
+    * [[EngineConf.objectListThreshold]]. A NULL condition
     * value counts as not-matched-by-the-clause (SQL semantics).
     * Duplicate source keys are rejected: two source rows matching one
     * target row would make the rewrite nondeterministic (the same
@@ -5294,7 +5251,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       val (_, ddl, _) = localState()
       val schema = nullable(StructType.fromDDL(ddl))
       val tCols = schema.fieldNames.toSeq
-      val cand = candidateFilesRange(lo, hi)
+      val cand = candidates((mn, mx) => mn <= hi && lo <= mx)
       val mutates = matchedDelete.isDefined || matchedUpdate.nonEmpty
       // the matched rows after the clauses, over `joined`: each matched
       // target row (alias t) beside its source row (alias s)
@@ -5318,35 +5275,25 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
         else inst.pointRows(cand, physSchema(schema, localRen), localMasks(cand))
       local match {
         case Some(files) =>
-          mergeLocal(src, schema, files, mutates, insertUnmatched, applyClauses)
+          mergeLocal(src, srcIds, schema, files, mutates, insertUnmatched,
+            applyClauses)
         case None =>
           // base∩src rows live only in candidate files (a pruned file's id
           // range misses the whole source span), so this snapshot is the
           // exact match side for both the rewrite and the insert anti join
-          val masks = localDvs()
           val snap = if (cand.isEmpty) null
-            else inst.viewOf(cand, ddl, masks, localRen)
+            else inst.viewOf(cand, ddl, localDvs(), localRen)
               .withColumn("_file", input_file_name())
           if (snap != null && mutates) {
             val hit = JobLabel(inst.spark, "graft:merge-hit-files") {
               snap.join(keys, Seq("obj_id"), "left_semi")
                 .select("_file").distinct().collect().map(_.getString(0))
             }
-            if (hit.nonEmpty) {
-              val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
-              val kept = touched.join(keys, Seq("obj_id"), "left_anti")
-                .select(tCols.map(col): _*)
-              val joined = touched.alias("t")
-                .join(src.alias("s"), col("t.obj_id") === col("s.obj_id"))
-              val rewrite = kept.unionByName(applyClauses(joined))
-              // no isEmpty pre-probe: the join/union executes ONCE, in
-              // the write job — writeStaged drops zero-row part files
-              val rewritten = JobLabel(inst.spark, "graft:merge-rewrite") {
-                inst.writeStaged(rewrite, this)
-              }
-              retire(hit.toSeq.map(relativize))
-              added ++= rewritten
-            }
+            if (hit.nonEmpty) JobLabel(inst.spark, "graft:merge-rewrite")(
+              rewriteJob(hit.toSeq.map(relativize),
+                _.join(keys, Seq("obj_id"), "left_anti"),
+                Some(touched => applyClauses(touched.alias("t")
+                  .join(src.alias("s"), col("t.obj_id") === col("s.obj_id"))))))
           }
           if (insertUnmatched) {
             val unmatched = if (snap == null) src
@@ -5381,50 +5328,38 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   /** The body of [[merge]] below the [[Instance.pointRows]] gate:
     * `files` are the candidates read on the driver (logical `schema`),
     * and the source has at most [[Instance.FastPathRows]] rows, none
-    * with a null id. The persisted source is read once; the join by
-    * obj_id runs here, `clauses` evaluate over a local relation (folded
-    * at optimization, no job), and the rewritten and inserted rows take
-    * writeStaged's driver-side write. Hit files, kept rows and unmatched
-    * inserts are those of the job path. */
-  private def mergeLocal(src: DataFrame, schema: StructType,
+    * with a null id, whose ids the probe listed in `srcIds` (null past
+    * the threshold). The persisted source is read once — not at all when
+    * it holds only obj_id ([[deleteMatching]]'s keys): its rows are then
+    * `srcIds`. The join by obj_id runs here, `clauses` evaluate over a
+    * local relation (folded at optimization, no job), and the rewritten
+    * and inserted rows take writeStaged's driver-side write. Hit files,
+    * kept rows and unmatched inserts are those of the job path. */
+  private def mergeLocal(src: DataFrame, srcIds: Array[Long], schema: StructType,
       files: Seq[(String, IndexedSeq[(Long, InternalRow)])],
       mutates: Boolean, insertUnmatched: Boolean,
       clauses: DataFrame => DataFrame): Unit = {
-    val srcRows = JobLabel(inst.spark, "graft:merge-local")(collectRows(src))
-    val sIdx = src.schema.fieldIndex("obj_id")
+    val srcSchema = src.schema
+    val srcRows =
+      if (srcIds != null && src.columns.sameElements(Array("obj_id")))
+        srcIds.toSeq.map(id => InternalRow(id))
+      else JobLabel(inst.spark, "graft:merge-local")(collectRows(src))
+    val sIdx = srcSchema.fieldIndex("obj_id")
     val bySrcId = srcRows.map(r => r.getLong(sIdx) -> r).toMap
     val tIdx = schema.fieldIndex("obj_id")
     // a null target id matches no source row, as in the job path's join
     def matchOf(r: InternalRow): Option[InternalRow] =
       if (r.isNullAt(tIdx)) None else bySrcId.get(r.getLong(tIdx))
-    if (mutates) {
-      val hit = files.filter(_._2.exists(r => matchOf(r._2).isDefined))
-      if (hit.nonEmpty) {
-        val (matched, kept) =
-          hit.flatMap(_._2.map(_._2)).partition(matchOf(_).isDefined)
-        val joined = qualifiedLocalFrame(inst.spark,
-          Seq("t" -> schema, "s" -> src.schema), matched.map(t =>
-            InternalRow.fromSeq(t.toSeq(schema) ++ matchOf(t).get.toSeq(src.schema))))
-        val updated = clauses(joined)
-        val rewrite =
-          if (kept.isEmpty) updated
-          else localFrame(inst.spark, schema, kept).unionByName(updated)
-        // the clauses evaluate once, here: the write takes their rows
-        val rewritten = localRowsOf(rewrite, Int.MaxValue) match {
-          case Some((rows, sch)) =>
-            inst.writeStaged(localFrame(inst.spark, sch, rows), this, driverRows = true)
-          case None if isEmptyLocal(rewrite) => Nil
-          case None => inst.writeStaged(rewrite, this, driverRows = true)
-        }
-        retire(hit.map(_._1))
-        added ++= rewritten
-      }
-    }
+    if (mutates)
+      rewriteLocal(schema, files, matchOf(_).isDefined, Some(matched =>
+        clauses(qualifiedLocalFrame(inst.spark,
+          Seq("t" -> schema, "s" -> srcSchema), matched.map(t =>
+            InternalRow.fromSeq(t.toSeq(schema) ++ matchOf(t).get.toSeq(srcSchema)))))))
     if (insertUnmatched) {
       val present = files.iterator.flatMap(_._2).map(_._2)
         .filterNot(_.isNullAt(tIdx)).map(_.getLong(tIdx)).toSet
       val unmatched = srcRows.filterNot(r => present(r.getLong(sIdx)))
-      val inserts = localFrame(inst.spark, src.schema, unmatched)
+      val inserts = localFrame(inst.spark, srcSchema, unmatched)
         .select(schema.fieldNames.toSeq.map(col): _*)
       // nothing to stage; the schema check still applies, as on the
       // job path's empty insert
@@ -5434,44 +5369,14 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
   }
 
   /** Distributed DELETE by key DataFrame — the unbounded-batch twin of
-    * [[delete]]: no id ever lands on the driver. Candidate files are
-    * pruned by the keys' global [min, max] against the manifest ranges
-    * (coarser than the per-id check, still skips every file outside
-    * the batch's id span); hit files resolve via a semi join, survivor
-    * rows via an anti join, and conflict tracking records the keys'
-    * bloom summary. */
-  def deleteMatching(keys0: DataFrame): Unit = {
-    // consumed four times (bounds, hit files, survivors, summary):
-    // persist so a nondeterministic input can't delete one key set
-    // while the conflict summary records another
-    val keys = keys0.select("obj_id").persist()
-    try {
-      val (_, ddl, _) = localState()
-      val bounds = keys.agg(
-        org.apache.spark.sql.functions.min(col("obj_id")),
-        org.apache.spark.sql.functions.max(col("obj_id"))).collect()(0)
-      if (bounds.isNullAt(0)) return // empty key set
-      val lo = bounds.getLong(0); val hi = bounds.getLong(1)
-      val cand = candidateFilesRange(lo, hi)
-      if (cand.nonEmpty) {
-        val masks = localDvs()
-        val snap = inst.viewOf(cand, ddl, masks, localRen)
-          .withColumn("_file", input_file_name())
-        val hit = snap.join(keys, Seq("obj_id"), "left_semi")
-          .select("_file").distinct().collect().map(_.getString(0))
-        if (hit.nonEmpty) {
-          val touched = inst.viewOf(hit.toSeq.map(relativize), ddl, masks, localRen)
-          val survivors = touched.join(keys, Seq("obj_id"), "left_anti")
-          // no isEmpty pre-probe: the anti join executes ONCE, in
-          // the write job — writeStaged drops zero-row part files
-          val rewritten = inst.writeStaged(survivors, this)
-          retire(hit.toSeq.map(relativize))
-          added ++= rewritten
-        }
-      }
-      mergeSummary(inst.buildSummary(keys))
-    } finally keys.unpersist()
-  }
+    * [[delete]]: a [[merge]] of the distinct non-null keys whose matched
+    * rows are deleted and whose unmatched keys insert nothing. Candidate
+    * files are pruned by the keys' [min, max]. Up to
+    * [[EngineConf.objectListThreshold]] keys are recorded exactly; past
+    * it, as a bloom summary, with no id list on the driver. */
+  def deleteMatching(keys: DataFrame): Unit =
+    merge(keys.select("obj_id").where(col("obj_id").isNotNull).distinct(),
+      matchedDelete = Some(lit(true)), insertUnmatched = false)
 
   /** Delete objects by id: copy-on-write rewrite of only the files that
     * contain them (reference: delete chain tombstoning,
@@ -5480,61 +5385,80 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * million-file table opens the few files whose range covers the ids,
     * not the whole snapshot. Reads the txn-local view, so repeated
     * mutations in one transaction compose (read-your-own-writes). */
-  def delete(ids: Seq[Long]): Unit = {
+  def delete(ids: Seq[Long]): Unit = rewriteHits(ids, None)
+
+  /** Copy-on-write core of [[delete]] and [[update]]: rewrite the
+    * candidate files of `ids` that hold an unmasked row of them — their
+    * other rows, plus `transform` of the matched rows for an update —
+    * and retire them. Below the [[Instance.pointRows]] gate the
+    * candidates are read on the driver ([[rewriteLocal]]), so the whole
+    * operation runs no Spark job; above it one scan finds the hit files
+    * and the rewrite is a write job ([[rewriteJob]]). */
+  private def rewriteHits(ids: Seq[Long],
+      transform: Option[DataFrame => DataFrame]): Unit = {
     val cand = candidateFiles(ids)
-    if (cand.nonEmpty) rewriteHits(cand, ids, None)
+    if (cand.nonEmpty) {
+      val (_, ddl, _) = localState()
+      val schema = nullable(StructType.fromDDL(ddl))
+      val masks = localMasks(cand)
+      inst.pointRows(cand, physSchema(schema, localRen), masks) match {
+        case Some(files) =>
+          val want = ids.toSet
+          val idIdx = schema.fieldIndex("obj_id")
+          // a null id is no id: the job path's isin never matches it
+          rewriteLocal(schema, files,
+            r => !r.isNullAt(idIdx) && want(r.getLong(idIdx)),
+            transform.map(t => matched => t(localFrame(inst.spark, schema, matched))))
+        case None =>
+          val hit = inst.hitOrdinalsJob(cand, ids, masks).keys.toSeq.sorted
+          if (hit.nonEmpty) rewriteJob(hit, inst.idReject(_, ids),
+            transform.map(t => touched => t(inst.idMatch(touched, ids))))
+      }
+    }
     objects ++= ids
     spillObjectsIfNeeded()
   }
 
-  /** Copy-on-write core of [[delete]] and [[update]]: rewrite the files
-    * among `cand` that hold an unmasked row of `ids` — their other rows,
-    * plus `transform` of the matched rows for an update — and retire
-    * them. Below the [[Instance.pointRows]] gate the candidates are read
-    * on the driver and the rewrite takes writeStaged's driver-side
-    * write, so the whole operation runs no Spark job; a hit file left
-    * with no row is retired and nothing is staged for it. Above the
-    * gate one scan finds the hit files and the rewrite is a write job. */
-  private def rewriteHits(cand: Seq[String], ids: Seq[Long],
-      transform: Option[DataFrame => DataFrame]): Unit = {
-    val (_, ddl, _) = localState()
-    val schema = nullable(StructType.fromDDL(ddl))
-    val masks = localMasks(cand)
-    inst.pointRows(cand, physSchema(schema, localRen), masks) match {
-      case Some(files) =>
-        val want = ids.toSet
-        val idIdx = schema.fieldIndex("obj_id")
-        // a null id is no id: the job path's isin never matches it
-        def isHit(r: InternalRow) = !r.isNullAt(idIdx) && want(r.getLong(idIdx))
-        val hit = files.filter(_._2.exists(r => isHit(r._2)))
-        if (hit.nonEmpty) {
-          val (matched, kept) = hit.flatMap(_._2.map(_._2)).partition(isHit)
-          val rows = transform match {
-            case None if kept.isEmpty => None
-            case None => Some(localFrame(inst.spark, schema, kept))
-            case Some(t) => Some(localFrame(inst.spark, schema, kept)
-              .unionByName(t(localFrame(inst.spark, schema, matched))))
-          }
-          val rewritten = rows.fold(Seq.empty[String])(
-            inst.writeStaged(_, this, driverRows = true))
-          retire(hit.map(_._1))
-          added ++= rewritten
-        }
-      case None =>
-        val hit = inst.hitOrdinalsJob(cand, ids, masks).keys.toSeq.sorted
-        if (hit.nonEmpty) {
-          val touched = inst.viewOf(hit, ddl, localDvs(), localRen)
-          val rows = transform match {
-            case None => idReject(touched, ids)
-            case Some(t) =>
-              idReject(touched, ids).unionByName(t(idMatch(touched, ids)))
-          }
-          // no isEmpty pre-probe — writeStaged drops zero-row parts
-          val rewritten = inst.writeStaged(rows, this)
-          retire(hit)
-          added ++= rewritten
-        }
+  /** The driver half of a keyed copy-on-write rewrite, over candidates
+    * read on the driver (logical `schema`): every file holding a row
+    * `isHit` matches is retired, and its other rows plus `changed` of
+    * its matched rows (none when `changed` is None) are staged with
+    * writeStaged's driver-side write. A hit file left with no row
+    * stages nothing. */
+  private def rewriteLocal(schema: StructType,
+      files: Seq[(String, IndexedSeq[(Long, InternalRow)])],
+      isHit: InternalRow => Boolean,
+      changed: Option[Seq[InternalRow] => DataFrame]): Unit = {
+    val hit = files.filter(_._2.exists(r => isHit(r._2)))
+    if (hit.nonEmpty) {
+      val (matched, kept) = hit.flatMap(_._2.map(_._2)).partition(isHit)
+      val keptFrame = localFrame(inst.spark, schema, kept)
+      val rewrite = changed.fold(keptFrame)(c => keptFrame.unionByName(c(matched)))
+      // the changed rows evaluate once, here: the write takes their rows
+      val rewritten = localRowsOf(rewrite, Int.MaxValue) match {
+        case Some((rows, sch)) =>
+          inst.writeStaged(localFrame(inst.spark, sch, rows), this, driverRows = true)
+        case None if isEmptyLocal(rewrite) => Nil
+        case None => inst.writeStaged(rewrite, this, driverRows = true)
+      }
+      retire(hit.map(_._1))
+      added ++= rewritten
     }
+  }
+
+  /** The job half of a keyed copy-on-write rewrite: retire the `hit`
+    * files and stage, in one write job, their rows `kept` keeps plus
+    * `changed` of them (none when `changed` is None). Both see the hit
+    * files' txn-local view. No isEmpty pre-probe: the rewrite executes
+    * once, in the write job, and writeStaged drops zero-row parts. */
+  private def rewriteJob(hit: Seq[String], kept: DataFrame => DataFrame,
+      changed: Option[DataFrame => DataFrame]): Unit = {
+    val (_, ddl, _) = localState()
+    val touched = inst.viewOf(hit, ddl, localDvs(), localRen)
+    val rows = changed.fold(kept(touched))(c => kept(touched).unionByName(c(touched)))
+    val rewritten = inst.writeStaged(rows, this)
+    retire(hit)
+    added ++= rewritten
   }
 
   /** Row ordinals, per file, of the unmasked rows of `cand` whose obj_id
@@ -5613,7 +5537,7 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
       // masks are resolved into the plan as literal arrays at
       // construction, so this view keeps reading PRE-mask rows even
       // after deleteMoR below registers the new vector
-      val current = idMatch(inst.viewOf(cand, ddl, localDvs(), localRen), ids)
+      val current = inst.idMatch(inst.viewOf(cand, ddl, localDvs(), localRen), ids)
       val updated = transform(current)
         .select(StructType.fromDDL(ddl).fieldNames.map(col).toIndexedSeq: _*)
       deleteMoR(ids)
@@ -5627,12 +5551,8 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     * (reference: open_write under object lock, instance.rs:141-168;
     * blocking lock replaced by commit-time conflict detection). Same
     * stats-pruned candidate scan as [[delete]]. */
-  def update(ids: Seq[Long], transform: DataFrame => DataFrame): Unit = {
-    val cand = candidateFiles(ids)
-    if (cand.nonEmpty) rewriteHits(cand, ids, Some(transform))
-    objects ++= ids
-    spillObjectsIfNeeded()
-  }
+  def update(ids: Seq[Long], transform: DataFrame => DataFrame): Unit =
+    rewriteHits(ids, Some(transform))
 
   /** Row-level SQL rewrite (DELETE/UPDATE/MERGE through ReplaceData):
     * adopt externally staged replacement files for the `scanned` base
@@ -5751,43 +5671,11 @@ final class Txn private[acid] (inst: Instance, val tsn: Long,
     val ren = localRen
     val pre = inst.viewOf(removedFiles, base.ddl, base.dvs, base.renames)
     val post = inst.viewOf(addedFiles, ddl, localDvs(), ren)
-    val allCols: Seq[(String, DataType)] =
-      (post.schema ++ pre.schema.filterNot(f =>
-        post.columns.contains(f.name)))
-        .filterNot(_.name == "obj_id").map(f => f.name -> f.dataType).toSeq
-    // maps are not orderable: compare key-sorted entry arrays, keep
-    // the original type in the output (same trick as Instance.changes)
-    def comparable(c: Column, dt: DataType): Column = dt match {
-      case _: MapType => array_sort(map_entries(c))
-      case _ => c
-    }
-    def keyed(df: DataFrame, as: String): DataFrame = {
-      def field(n: String, dt: DataType) =
-        if (df.columns.contains(n)) col(n) else lit(null).cast(dt)
-      df.select(col("obj_id"),
-        struct(allCols.map { case (n, dt) => field(n, dt).as(n) }: _*)
-          .as(as),
-        struct(allCols.map { case (n, dt) =>
-          comparable(field(n, dt), dt).as(n) }: _*).as(as + "C"))
-    }
-    val joined = keyed(pre, "_pre")
-      .join(keyed(post, "_post"), Seq("obj_id"), "full_outer")
-    def unpack(side: String, rows: DataFrame, change: String): DataFrame =
-      rows.select(col("obj_id") +: allCols.map { case (n, _) =>
-        col(s"$side.$n").as(n) }: _*)
-        .withColumn("_change_type", lit(change))
-    val updated = joined.filter(col("_pre").isNotNull &&
-      col("_post").isNotNull && !(col("_preC") <=> col("_postC")))
-    val events = Seq(
-      unpack("_post", joined.filter(col("_pre").isNull), "insert"),
-      unpack("_pre", joined.filter(col("_post").isNull), "delete"),
-      unpack("_pre", updated, "update_preimage"),
-      unpack("_post", updated, "update_postimage"))
-      .reduce(_.unionByName(_))
+    val events = inst.rowDiff(pre, post)((df, change) =>
+      df.withColumn("_change_type", lit(change)))
     // side files spell the fixed PHYSICAL names, like every data file
-    val physNamed = events.select(
-      (col("obj_id") +: allCols.map { case (n, _) =>
-        col(n).as(ren.getOrElse(n, n)) }) :+ col("_change_type"): _*)
+    val physNamed = events.select(events.columns.toSeq.map(n =>
+      col(n).as(ren.getOrElse(n, n))): _*)
     val sub = s"cdc-${java.util.UUID.randomUUID().toString.take(12)}"
     physNamed.write.parquet(new Path(inst.dataDir, sub).toString)
     val names = inst.fs.listStatus(new Path(inst.dataDir, sub))

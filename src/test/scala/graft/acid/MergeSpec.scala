@@ -98,7 +98,13 @@ class MergeSpec extends AnyFunSuite {
         matchedDelete = Some(col("s.value") < 0),
         matchedUpdate = Map("value" -> (col("t.value") + col("s.value")))))
       inst.commit(t)
-      descs
+      // deleteMatching is a merge: its jobs carry the merge labels, and
+      // on the driver path its key-only source is not read again
+      val d = inst.begin()
+      val ((), delDescs) = jobsDuring(d.deleteMatching(Seq(3L, 3L, 103L, 999L)
+        .toDF("obj_id")))
+      inst.commit(d)
+      descs ++ delDescs
     }
     val driver = run()
     assert(driver.nonEmpty && driver.forall(Set(
@@ -209,13 +215,35 @@ class MergeSpec extends AnyFunSuite {
         Map("amount" -> -col("t.amount")))
       val byInsert = refused(Seq((700L, -7L, 0L)).toDF("obj_id", "amount", "extra"),
         Map("amount" -> col("s.amount")))
+      // deleteMatching over the renamed column: a masked id (2) and an
+      // absent one (999) delete nothing, a duplicate key (5) deletes once
+      val dm = inst.begin()
+      dm.deleteMatching(Seq(2L, 5L, 5L, 103L, 999L).toDF("obj_id"))
+      inst.commit(dm)
       (rows(inst.read().select("obj_id", "amount", "extra")), byUpdate, byInsert)
     }
     val (all, byUpdate, byInsert) = out
+    assert(all.size == 19 && !all.exists(r => r.startsWith("[5,") ||
+      r.startsWith("[103,") || r.startsWith("[999,")))
     assert(byUpdate && byInsert)
     assert(all.contains("[1,100,null]") && !all.exists(_.startsWith("[2,")))
     assert(all.contains("[3,303,1]") && all.contains("[4,4,null]"))
     assert(all.contains("[500,55,7]") && all.contains("[600,60,6]"))
+  }
+
+  test("deleteMatching's change feed: the rows and columns of a summary diff") {
+    val out = bothPaths { () =>
+      val inst = mk(batches)
+      val t = inst.begin()
+      t.deleteMatching(Seq(2L, 3L, 3L, 102L, 999L).toDF("obj_id"))
+      inst.commit(t)
+      val feed = inst.changes(inst.latestVersion - 1, inst.latestVersion)
+      (feed.columns.toSeq, rows(feed), rows(inst.read()))
+    }
+    val (cols, feed, all) = out
+    assert(cols == Seq("obj_id", "value", "_version", "_change"))
+    assert(feed == Seq("[2,2,5,delete]", "[3,3,5,delete]", "[102,102,5,delete]"))
+    assert(all.size == 17)
   }
 
   private val mvSchema = StructType(Seq(

@@ -272,6 +272,20 @@ class PointOpsSpec extends AnyFunSuite {
     assert(!driver.contains("[0,0]") && driver.contains("[1,10]"))
   }
 
+  test("an upsert batch holding a null obj_id inserts it, on both paths") {
+    def scenario(): Seq[String] = {
+      val inst = mk(batches.take(1))
+      val t = inst.begin()
+      t.upsert(Seq((None, 7L), (Some(1L), 10L)).toDF("obj_id", "value"))
+      inst.commit(t)
+      inst.read().orderBy(col("obj_id").asc_nulls_first).collect()
+        .map(_.toString).toSeq
+    }
+    val driver = scenario()
+    assert(driver == jobPath(scenario()))
+    assert(driver == Seq("[null,7]", "[1,10]", "[2,2]", "[3,3]", "[4,4]", "[5,5]"))
+  }
+
   test("partitioned candidates fall back to the job path with equal results") {
     val schema = StructType(Seq(
       StructField("obj_id", LongType, nullable = false),
